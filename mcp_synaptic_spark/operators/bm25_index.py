@@ -350,7 +350,6 @@ def bm25_index_append(
     path: str,
     *,
     content_col: str = "text",
-    merge: str = "exact",
 ) -> dict:
     """Append a batch of documents into a persisted BM25 index — the third
     and last persisted index gains incremental growth (VERDICT r14
@@ -371,14 +370,13 @@ def bm25_index_append(
 
     A batch that re-adds an ALREADY-INDEXED doc id would double that id's
     postings and silently inflate every shared term's probe-time df, so
-    merge="exact" (default) drops those ids first via one scan of the
-    doc-grain `docs/` sidecar (n_docs rows of (id, dl) — never the
-    postings table; the bounded batch id set broadcasts into the
-    semi-join). Re-adding an id with CHANGED content is an update, which
-    this index does not support incrementally — rebuild via
+    the append drops those ids first via one scan of the doc-grain
+    `docs/` sidecar (n_docs rows of (id, dl) — never the postings table;
+    the bounded batch id set broadcasts into the semi-join). Re-adding an
+    id with CHANGED content is an update, which this index does not
+    support incrementally — rebuild via
     ``bm25_index_write(..., overwrite=True)``, which is also the
-    compaction path for small append-generation files. merge="none" skips
-    the guard under a hard caller contract of id-disjoint batches.
+    compaction path for small append-generation files.
 
     Idempotent via the bounded batch fingerprint (`appended_fps`, last 64)
     shared with the ANN appends; the write guard's subset compare means a
@@ -409,7 +407,7 @@ def bm25_index_append(
     # matches one an exact batch-fingerprint check already certified as
     # applied is a repeat — skip without the content scan. Mismatch or
     # uncertifiable frame falls through to the exact fingerprint.
-    snap = _source_snapshot(new_docs, salt=f"{id_col}|{content_col}|{merge}")
+    snap = _source_snapshot(new_docs, salt=f"{id_col}|{content_col}")
     if snap is not None:
         for rec in meta.get("appended_src_snapshots", []):
             if rec.get("snap") == snap:
@@ -442,24 +440,20 @@ def bm25_index_append(
         return {"skipped": True, "n_batch": n_batch, "n_appended": 0, "n_overlap": 0}
 
     batch = new_docs
-    n_overlap = 0
-    if merge == "exact":
-        indexed_ids = _union_roots(spark, _gen_roots(path, "docs", meta)).select("id")
-        batch_ids = new_docs.select(F.col(id_col).alias("id")).distinct()
-        overlap = (
-            indexed_ids.join(F.broadcast(batch_ids), "id", "left_semi")
-            .distinct()
-            .localCheckpoint(eager=True)
+    indexed_ids = _union_roots(spark, _gen_roots(path, "docs", meta)).select("id")
+    batch_ids = new_docs.select(F.col(id_col).alias("id")).distinct()
+    overlap = (
+        indexed_ids.join(F.broadcast(batch_ids), "id", "left_semi")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    n_overlap = overlap.count()
+    if n_overlap:
+        batch = new_docs.join(
+            F.broadcast(overlap.withColumnRenamed("id", id_col)),
+            id_col,
+            "left_anti",
         )
-        n_overlap = overlap.count()
-        if n_overlap:
-            batch = new_docs.join(
-                F.broadcast(overlap.withColumnRenamed("id", id_col)),
-                id_col,
-                "left_anti",
-            )
-    elif merge != "none":
-        raise ValueError(f"merge must be 'exact' or 'none', got {merge!r}")
 
     # r16 examined-and-rejected (VERDICT r15 #7): the narrow (id, dl)-only
     # checkpoint + postings re-tokenize A/B'd a WASH at the 10× batch

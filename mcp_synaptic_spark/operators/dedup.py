@@ -212,11 +212,17 @@ def _cap_bucket_occupancy(
 COLLAPSE_MIN_DUP_FRAC = 0.05
 
 
+def _collapse_stat_cols(key: str | Column) -> list[Column]:
+    """The collapse gate's two aggregate expressions, ``n`` (row count) and
+    ``d`` (approx distinct keys). Every probe that feeds the gate, inline or
+    merged into a caller's own aggregate via stats=, builds them here so
+    the threaded and inline decisions cannot drift apart."""
+    return [F.count(F.lit(1)).alias("n"), F.approx_count_distinct(key).alias("d")]
+
+
 def _collapse_stats(base: DataFrame, key: str) -> tuple[int, int]:
     """(n_rows, approx distinct keys) in ONE aggregate job."""
-    r = base.agg(
-        F.count(F.lit(1)).alias("n"), F.approx_count_distinct(key).alias("d")
-    ).first()
+    r = base.agg(*_collapse_stat_cols(key)).first()
     return int(r["n"]), int(r["d"])
 
 
@@ -1615,9 +1621,8 @@ def dedup_index_write(
         # hand a concurrent dedup_index_load an empty/partial file. The
         # overwrite-mode write goes through temp + os.replace for the same
         # reason (ADVICE r8). A crash between the three parquet appends
-        # still leaves the index parts ahead of each other — the TxnTable-
-        # arbitrated path (dedup_index_append_txn) narrows that to the
-        # documented ledger-ahead-of-artifacts window.
+        # still leaves the index parts ahead of each other until the batch
+        # is re-appended (dedup_index_append_txn's retry does exactly that).
         meta_path = os.path.join(path, "_meta.json")
         tmp = meta_path + f".tmp-{os.getpid()}"
         with open(tmp, "w") as f:
@@ -1639,19 +1644,21 @@ def dedup_index_append(
     *,
     content_col: str = "text",
     id_col: str = "doc_id",
-) -> None:
+) -> bool:
     """Grow a persisted dedup index with ADMITTED documents — the third step
     of the ingestion lifecycle (screen → admit → append), so the next
     arriving batch is screened against yesterday's admissions too. Builds
     the same three artifacts for just the admitted rows, with the INDEX's
     OWN parameters (read from its manifest — an append with different
     banding would silently poison every later probe), and appends plain
-    parquet. SINGLE-WRITER contract: a crash between the three parquet
-    appends leaves the parts mutually inconsistent until the next
-    successful append of the same docs (hashes land first, so the exact
-    screen stays sound; a torn append can only under-report near-dups),
-    and racing appenders can both land the same document — use
-    `dedup_index_append_txn` when admitters race.
+    parquet. This is the artifact step only: it neither arbitrates racing
+    appenders nor knows which contents are already admitted, so the
+    streaming admit paths call it through `dedup_index_append_txn`, which
+    serializes appenders and keys the append off the admissions ledger. A
+    crash between the three parquet appends leaves the parts mutually
+    inconsistent until the batch is re-appended (hashes land first, so the
+    exact screen stays sound; a torn append can only under-report
+    near-dups). Returns True when it appended, False on a no-op.
 
     Replay-idempotent (r14, the ivf_index_append fingerprint pattern):
     foreachBatch delivery is at-least-once, so the streaming admit path
@@ -1676,15 +1683,14 @@ def dedup_index_append(
     # manifest format) are unchanged; count and HLL are partitioning-
     # independent, so the gate decision is bit-identical.
     probe = admitted.agg(
-        F.count(F.lit(1)).alias("n"),
+        *_collapse_stat_cols(F.sha2(F.col(content_col), 256)),
         F.sum(
             F.xxhash64(F.col(id_col), F.col(content_col)).cast("decimal(38,0)")
         ).alias("fp"),
-        F.approx_count_distinct(F.sha2(F.col(content_col), 256)).alias("d"),
     ).first()
     batch_fp = f"{int(probe['n'])}:{int(probe['fp'] or 0)}"
     if int(probe["n"]) == 0 or batch_fp in meta.get("appended_fps", []):
-        return
+        return False
     dedup_index_write(
         admitted,
         path,
@@ -1702,6 +1708,7 @@ def dedup_index_append(
     with open(tmp, "w") as f:
         json.dump(meta, f)
     os.replace(tmp, meta_path)  # atomic: loads see the old or new manifest, whole
+    return True
 
 
 def dedup_index_append_txn(
@@ -1711,27 +1718,36 @@ def dedup_index_append_txn(
     content_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Multi-writer-safe index append (r9, VERDICT r8 next-round #3): an
-    admissions LEDGER — a TxnTable keyed on content hash at
-    {path}/_admissions — arbitrates racing admitters, so two streaming
-    queries screening overlapping batches against the same index cannot
-    both admit the same content: `put_if_absent` commits each hash exactly
-    once, and only the docs whose hashes THIS writer inserted get their
-    artifacts appended. Returns the winning (id, ch) rows as a DataFrame
-    (read back from the committed ledger directory — distributed, no
-    driver materialization); a caller semi-joins it to learn its losers.
+    """Multi-writer-safe, crash-retryable index append: an admissions
+    LEDGER — a TxnTable keyed on content hash at {path}/_admissions —
+    arbitrates racing admitters, so two streaming queries screening
+    overlapping batches against the same index cannot both admit the same
+    content: `put_if_absent` commits each hash exactly once, to the first
+    (ch, id) pair that claims it.
 
-    Batch-internal duplicate contents collapse arbitrarily in the ledger
-    (the dedup_incremental contract: pre-dedup the batch with exact_dedup
-    when which-copy-wins matters). Crash window, documented: the ledger
-    commit lands BEFORE the parquet artifact appends, so a crash between
-    them leaves hashes admitted but unindexed — near-dup probes under-
-    report those docs until the writer retries the same batch (the append
-    is then keyed off the ledger rows it already owns, making the retry
-    idempotent at the ledger and additive at the artifacts). The reverse
-    order would be worse: artifacts landing before arbitration means a
-    RACE loser has already poisoned the index with duplicate rows.
+    The docs this batch OWNS are its (ch, id) pairs present in the ledger
+    after the insert, whether this call or an earlier run of the same batch
+    committed them; their artifacts go through `dedup_index_append`. So a
+    crash between the ledger commit and the artifact append is repaired by
+    retrying the batch (the retry owns the rows the crashed run committed),
+    and a replay of a fully appended batch is a no-op through the append's
+    batch fingerprint (a different batch that re-submits already appended
+    docs re-appends them: duplicate index rows are verdict-benign, see
+    dedup_index_append). An exclusive flock on {path}/_admissions.lock spans
+    the commit and the append, so a racing caller submitting the same pairs
+    waits for the first to finish and then finds its fingerprint recorded.
+    The kernel drops the lock when its holder dies, so a crash never wedges
+    the index; the lock needs the POSIX filesystem the ledger already
+    requires.
+
+    Returns the owned (id, ch) rows this call appended — empty for a race
+    loser and for a replay — read back from the committed ledger
+    (distributed, no driver materialization); a caller semi-joins it to
+    learn its losers. Batch-internal duplicate contents collapse
+    arbitrarily in the ledger (the dedup_incremental contract: pre-dedup
+    the batch with exact_dedup when which-copy-wins matters).
     """
+    import fcntl
     import os
 
     from ..functions.text import content_hash
@@ -1742,18 +1758,21 @@ def dedup_index_append_txn(
     pairs = admitted.select(
         content_hash(F.col(content_col)).alias("ch"), F.col(id_col).alias("id")
     )
+    fd = os.open(os.path.join(path, "_admissions.lock"), os.O_RDWR | os.O_CREAT, 0o644)
     try:
-        ledger = TxnTable.create(spark, ledger_path, pairs.limit(0), key_col="ch")
-    except FileExistsError:
-        ledger = TxnTable(spark, ledger_path, key_col="ch")
-    _, won = ledger.put_if_absent(pairs)
-    winners = won.select("id", "ch")
-    if not winners.rdd.isEmpty():
-        to_append = admitted.join(
-            winners.select(F.col("id").alias(id_col)), id_col, "semi"
-        )
-        dedup_index_append(to_append, path, content_col=content_col, id_col=id_col)
-    return winners
+        fcntl.flock(fd, fcntl.LOCK_EX)  # released by the close below
+        try:
+            ledger = TxnTable.create(spark, ledger_path, pairs.limit(0), key_col="ch")
+        except FileExistsError:
+            ledger = TxnTable(spark, ledger_path, key_col="ch")
+        ledger.put_if_absent(pairs)
+        owned = ledger.read().join(pairs, ["ch", "id"], "semi").select("id", "ch")
+        to_append = admitted.join(owned.select(F.col("id").alias(id_col)), id_col, "semi")
+        if dedup_index_append(to_append, path, content_col=content_col, id_col=id_col):
+            return owned
+        return owned.limit(0)
+    finally:
+        os.close(fd)
 
 
 def dedup_index_load(spark, path: str):

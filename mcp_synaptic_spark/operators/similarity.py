@@ -490,7 +490,6 @@ def mllib_lsh_index_append(
     *,
     id_col: str = "id",
     vec_col: str = "embedding",
-    merge: str = "exact",
 ) -> dict:
     """Append a batch into a persisted BRP-LSH index — the second half of
     the incremental-growth story beside `ivf_index_append`. STRICTLY
@@ -512,14 +511,10 @@ def mllib_lsh_index_append(
     the whole-batch fingerprint only catches exact replays) would violate
     it: the same id lands in two rep rows, explodes into two identical
     (qid, id, score) rows, and occupies two top-k slots (ADVICE r14). So
-    merge="exact" (the default) drops those pairs before writing: one
-    NARROW index scan (ids + vn, never shuffled — the bounded batch key
-    set broadcasts into a semi-join and the resulting overlap set, ⊆
-    batch, broadcasts back into the anti-join). merge="none" restores the
-    pure O(batch) path — collapse, normalize, hash, ONE plain parquet
-    append, no index scan — under a HARD caller contract that the batch's
-    (id, vector) pairs are disjoint from everything already indexed
-    (streaming admits that dedup upstream satisfy this for free).
+    the append drops those pairs before writing: one NARROW index scan
+    (ids + vn, never shuffled — the bounded batch key set broadcasts into
+    a semi-join and the resulting overlap set, ⊆ batch, broadcasts back
+    into the anti-join).
 
     Idempotent via the same bounded batch fingerprint as ivf_index_append;
     the sidecar gains `appended_rows`/`appended_reps`/`appended_fps`
@@ -535,9 +530,9 @@ def mllib_lsh_index_append(
     import json
     import os
 
-    from ..util import ensure_parallelism
+    from ..util import ensure_parallelism, sized_for_write
 
-    from .dedup import _should_collapse
+    from .dedup import _collapse_stat_cols, _should_collapse
 
     sidecar = os.path.join(path, "_planes.json")
     with open(sidecar) as f:
@@ -550,8 +545,7 @@ def mllib_lsh_index_append(
         _id_as_long(new_corpus, id_col).alias("_mid"), F.col(vec_col).alias("v")
     )
     probe = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct("v").alias("d"),
+        *_collapse_stat_cols("v"),
         F.sum(F.xxhash64(F.col("_mid"), F.col("v")).cast("decimal(38,0)")).alias("fp"),
     ).first()
     n_batch, fp = int(probe["n"]), int(probe["fp"] or 0)
@@ -571,41 +565,33 @@ def mllib_lsh_index_append(
         "vn",
         *[_brp_hash_expr("vn", p, bucket_length).alias(f"h{i}") for i, p in enumerate(planes)],
     )
-    n_overlap = 0
-    if merge == "exact":
-        spark = new_corpus.sparkSession
-        members = hashed.select(F.explode("ids").alias("_mid"), "vn", *h_cols)
-        batch_keys = members.select("_mid", "vn").distinct()
-        # vn is the SAME l2_normalize expression the index writer ran, so an
-        # identical input vector reproduces bit-identical doubles and the
-        # equality join is exact; the index side is scanned narrow and never
-        # shuffled (broadcast semi, then broadcast anti on the overlap set)
-        idx_members = spark.read.parquet(path).select(
-            F.explode("ids").alias("_mid"), "vn"
-        )
-        overlaps = (
-            idx_members.join(F.broadcast(batch_keys), ["_mid", "vn"], "left_semi")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n_overlap = overlaps.count()
-        if n_overlap:
-            from ..util import sized_for_write
-
-            # sized BEFORE the checkpoint (r16 file sizing): the checkpoint
-            # materializes the write layout, so this is what lands on disk
-            hashed = sized_for_write(
-                members.join(F.broadcast(overlaps), ["_mid", "vn"], "left_anti")
-                .groupBy("vn", *h_cols)
-                .agg(F.sort_array(F.collect_list("_mid")).alias("ids"))
-                .select("ids", "vn", *h_cols)
-            ).localCheckpoint(eager=True)
-    elif merge != "none":
-        raise ValueError(f"merge must be 'exact' or 'none', got {merge!r}")
+    spark = new_corpus.sparkSession
+    members = hashed.select(F.explode("ids").alias("_mid"), "vn", *h_cols)
+    batch_keys = members.select("_mid", "vn").distinct()
+    # vn is the SAME l2_normalize expression the index writer ran, so an
+    # identical input vector reproduces bit-identical doubles and the
+    # equality join is exact; the index side is scanned narrow and never
+    # shuffled (broadcast semi, then broadcast anti on the overlap set)
+    idx_members = spark.read.parquet(path).select(
+        F.explode("ids").alias("_mid"), "vn"
+    )
+    overlaps = (
+        idx_members.join(F.broadcast(batch_keys), ["_mid", "vn"], "left_semi")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    n_overlap = overlaps.count()
+    if n_overlap:
+        # sized BEFORE the checkpoint (r16 file sizing): the checkpoint
+        # materializes the write layout, so this is what lands on disk
+        hashed = sized_for_write(
+            members.join(F.broadcast(overlaps), ["_mid", "vn"], "left_anti")
+            .groupBy("vn", *h_cols)
+            .agg(F.sort_array(F.collect_list("_mid")).alias("ids"))
+            .select("ids", "vn", *h_cols)
+        ).localCheckpoint(eager=True)
     appended_reps = hashed.count()
     if appended_reps:
-        from ..util import sized_for_write
-
         # file sizing (r16, guide §6): an O(batch) append must not add one
         # tiny file per compute task to the index every call
         sized_for_write(hashed).write.mode("append").parquet(path)
@@ -1089,7 +1075,7 @@ def ivf_index_append(
 
     from ..util import ensure_parallelism
 
-    from .dedup import _should_collapse
+    from .dedup import _collapse_stat_cols, _should_collapse
 
     spark = new_corpus.sparkSession
     fmt_path = os.path.join(path, "_index_meta.json")
@@ -1105,8 +1091,7 @@ def ivf_index_append(
         F.col(id_col).alias("_mid"), F.col(vec_col).alias("v")
     )
     probe = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct("v").alias("d"),
+        *_collapse_stat_cols("v"),
         F.sum(F.xxhash64(F.col("_mid"), F.col("v")).cast("decimal(38,0)")).alias("fp"),
     ).first()
     n_batch, fp = int(probe["n"]), int(probe["fp"] or 0)

@@ -1,12 +1,12 @@
 """Transactional parquet table with a Delta-style commit log.
 
 The reference gets atomic upsert/delete from SQLite transactions
-(reference memory/storage/sqlite.py:75-108). The plain-parquet
-write-audit-publish dance in streaming/expiry.py is correct for a SINGLE
-writer; this module closes the multi-writer gap with the publicly-documented
-lakehouse commit protocol (Delta's optimistic concurrency / Iceberg's
-atomic metadata swap — no Delta jars exist in this environment, so the
-protocol is implemented directly on POSIX):
+(reference memory/storage/sqlite.py:75-108). This module is the one
+persistence protocol for mutable state here — the memory table, the
+expiry sweep (streaming/expiry.py) and the dedup admissions ledger — built
+on the publicly-documented lakehouse commit protocol (Delta's optimistic
+concurrency / Iceberg's atomic metadata swap — no Delta jars exist in this
+environment, so the protocol is implemented directly on POSIX):
 
 - Data lives in immutable uuid-named directories of parquet part files;
   a table VERSION is a JSON commit file listing its live directories.
@@ -902,15 +902,43 @@ def _overlaps(d: dict, u_lo: str | None, u_hi: str | None) -> bool:
     return not (d["hi"] < u_lo or u_hi < d["lo"])
 
 
+def _require_same_filesystem(table_path: str, events_dir: str) -> None:
+    """Fail fast if the table and events_dir live on different filesystems.
+
+    The exactly-once event drain relies on os.rename being atomic, which only
+    holds within one filesystem; a cross-device rename raises EXDEV mid-drain,
+    and a copy fallback would silently break the atomicity guarantee. Better
+    to refuse before anything moves (or, in the expiry sweep, before its
+    delete commits) with an actionable message.
+    """
+
+    def dev_of(path: str) -> int:
+        p = os.path.abspath(path)
+        while not os.path.exists(p):
+            parent = os.path.dirname(p)
+            if parent == p:
+                break
+            p = parent
+        return os.stat(p).st_dev
+
+    if dev_of(table_path) != dev_of(events_dir):
+        raise ValueError(
+            f"table ({table_path}) and events_dir ({events_dir}) must be on "
+            "the same filesystem: the exactly-once event drain moves staged "
+            "part-files with atomic os.rename, which cannot cross devices"
+        )
+
+
 def drain_events(table: TxnTable, events_dir: str, *, up_to_version: int | None = None) -> int:
     """Deliver committed event directories into ``events_dir`` exactly once.
 
     Each commit's events move part-file-by-part-file with atomic renames
-    (same filesystem required, as in streaming/expiry.py), then the version
-    is sealed with a ``NNNNNN.drained`` marker published via the same
-    atomic-link primitive — a crash mid-drain re-runs only unsealed
-    versions, and part names embed uuids so re-renaming is collision-free.
+    (same filesystem required — checked first), then the version is sealed
+    with a ``NNNNNN.drained`` marker published via the same atomic-link
+    primitive — a crash mid-drain re-runs only unsealed versions, and part
+    names embed uuids so re-renaming is collision-free.
     Returns the number of versions drained."""
+    _require_same_filesystem(table.path, events_dir)
     latest = table.version() if up_to_version is None else up_to_version
     drained = 0
     for v in range(latest + 1):

@@ -3,220 +3,65 @@
 Reference behavior re-expressed:
 - periodic cleanup loop (core/server.py:86-98, every
   MEMORY_CLEANUP_INTERVAL_SECONDS=300): here a Structured Streaming query
-  with trigger(processingTime=...) whose foreachBatch applies
-  operators.memory.cleanup_expired to the state table and rewrites it;
+  with trigger(processingTime=...) whose foreachBatch runs sweep_once_txn
+  over the memory TxnTable (state/txn.py);
 - SSE events memory_expired / document_added (README.md:196-205): here the
-  expired rows of each sweep are appended to an events sink table — a
-  change feed any downstream reader can readStream.
+  expired rows of each sweep ride the same commit that deletes them and
+  drain into an events sink table — a change feed any downstream reader
+  can readStream.
 
-State lives in parquet; sweep_once(backend="txn") runs the same sweep over
-a state/txn.py TxnTable for multi-writer ACID (swap for Delta on a cluster —
-the
-transforms are identical). The sweep is driven by a rate-source tick; each
-tick is one sweep.
+The reference gets this atomicity from SQLite transactions
+(memory/storage/sqlite.py:75-108); the TxnTable commit log is the one
+persistence protocol here (swap for Delta on a cluster — the transforms
+are identical). The sweep is driven by a rate-source tick; each tick is one
+sweep.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..operators.memory import cleanup_expired
 
 
 def run_expiry_sweep(
-    spark: SparkSession,
-    state_dir: str,
+    table,
     events_dir: str,
     *,
     interval_seconds: int = 300,
     now_fn=None,
     checkpoint_dir: str | None = None,
-    backend: str = "parquet",
 ):
-    """Start the periodic sweep as a streaming query; returns the handle.
+    """Start the periodic sweep over a TxnTable handle as a streaming query;
+    returns the handle. Each tick runs sweep_once_txn with the caller's
+    handle, so its stat_cols (e.g. expires_at zone maps) prune every sweep
+    and survive every rewrite.
 
     now_fn() -> datetime lets tests pin the clock (defaults to wall clock,
-    matching the reference's behavior). ``backend`` passes through to
-    sweep_once — "txn" drives the ACID TxnTable sweep on each tick.
-
-    The default checkpoint is a SIBLING of state_dir, never inside it: the
-    parquet sweep's write-audit-publish renames state_dir away and deletes
-    the old snapshot, which would destroy an in-dir checkpoint on the first
-    successful publish and kill the streaming query (the txn backend never
-    renames the root, but the sibling default stays uniform).
+    matching the reference's behavior). The default checkpoint is a
+    SIBLING of the table root, never inside it, so the checkpoint files
+    stay out of the table's directory listing and vacuum.
     """
+    spark = table.spark
     ticks = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
 
     def sweep(batch_df: DataFrame, batch_id: int) -> None:
-        sweep_once(spark, state_dir, events_dir, now=(now_fn() if now_fn else None), backend=backend)
+        sweep_once_txn(table, events_dir, now=(now_fn() if now_fn else None))
 
     return (
         ticks.writeStream.trigger(processingTime=f"{interval_seconds} seconds")
-        .option("checkpointLocation", checkpoint_dir or state_dir.rstrip("/") + "_checkpoint")
+        .option("checkpointLocation", checkpoint_dir or table.path.rstrip("/") + "_checkpoint")
         .foreachBatch(sweep)
         .start()
     )
 
 
-#: staging subdir for the sweep's memory_expired events. Underscore-prefixed
-#: so Spark's parquet reader treats it as hidden metadata — a state snapshot
-#: containing it is still readable as a plain parquet directory.
-_PENDING_EVENTS = "_pending_events"
-
-
-def _recover_state_dir(state_dir: str) -> None:
-    """Heal an interrupted publish (see _publish_state_dir) and clear litter.
-
-    Invariant at every crash point: at least one of state_dir / state_dir_next
-    holds a complete state snapshot. If state_dir is missing (crash between the
-    two renames), promote the fully-written _next; otherwise _next/_old are
-    stale leftovers and are removed.
-    """
-    nxt = state_dir.rstrip("/") + "_next"
-    old = state_dir.rstrip("/") + "_old"
-    if not os.path.isdir(state_dir) and os.path.isdir(nxt):
-        os.rename(nxt, state_dir)
-    shutil.rmtree(nxt, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _require_same_filesystem(state_dir: str, events_dir: str) -> None:
-    """Fail fast if state_dir and events_dir live on different filesystems.
-
-    The exactly-once event drain relies on os.rename being atomic, which only
-    holds within one filesystem; a cross-device rename raises EXDEV mid-drain,
-    and a copy fallback would silently break the atomicity guarantee. Better
-    to refuse at sweep start with an actionable message.
-    """
-
-    def dev_of(path: str) -> int:
-        p = os.path.abspath(path)
-        while not os.path.exists(p):
-            parent = os.path.dirname(p)
-            if parent == p:
-                break
-            p = parent
-        return os.stat(p).st_dev
-
-    if dev_of(state_dir) != dev_of(events_dir):
-        raise ValueError(
-            f"state_dir ({state_dir}) and events_dir ({events_dir}) must be on "
-            "the same filesystem: the exactly-once event drain moves staged "
-            "part-files with atomic os.rename, which cannot cross devices"
-        )
-
-
-def _drain_pending_events(state_dir: str, events_dir: str) -> None:
-    """Move staged event part-files out of the published state snapshot into
-    the events sink. Idempotent and crash-safe: each part-file move is one
-    atomic rename (Spark part names embed a UUID, so no collisions), so a
-    crash mid-drain leaves every event in exactly one of the two places —
-    never both, never neither. Completes the previous sweep's publish when
-    called at the top of the next sweep.
-    """
-    pending = os.path.join(state_dir, _PENDING_EVENTS)
-    if not os.path.isdir(pending):
-        return
-    os.makedirs(events_dir, exist_ok=True)
-    for name in os.listdir(pending):
-        if name.endswith(".parquet") and not name.startswith((".", "_")):
-            os.rename(os.path.join(pending, name), os.path.join(events_dir, name))
-    shutil.rmtree(pending, ignore_errors=True)
-
-
-def _publish_state_dir(state_dir: str, next_dir: str) -> None:
-    """Atomically swap next_dir into place as state_dir (write-audit-publish).
-
-    Two POSIX renames: state→_old, _next→state. Each rename is atomic; a crash
-    between them leaves state_dir absent but _next complete, which
-    _recover_state_dir promotes on the next sweep. On a cluster the Delta
-    substitution (DELETE WHERE, transactional) replaces this whole dance —
-    documented in the module docstring; this is the plain-parquet local path.
-    """
-    old = state_dir.rstrip("/") + "_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(state_dir, old)
-    os.rename(next_dir, state_dir)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def sweep_once(
-    spark: SparkSession,
-    state_dir: str,
-    events_dir: str,
-    now: datetime | None = None,
-    *,
-    backend: str = "parquet",
-) -> int:
-    """Dispatch: ``backend="parquet"`` (default) runs the single-writer
-    write-audit-publish sweep below; ``backend="txn"`` treats state_dir as a
-    state/txn.py TxnTable root and runs the multi-writer ACID variant
-    (sweep_once_txn) — the flag-gated transactional story matching the
-    reference's SQLite atomicity (VERDICT r6 item 3)."""
-    if backend == "txn":
-        from ..state.txn import TxnTable
-
-        return sweep_once_txn(TxnTable(spark, state_dir), events_dir, now=now)
-    if backend != "parquet":
-        raise ValueError(f"unknown backend {backend!r}: expected 'parquet' or 'txn'")
-    return _sweep_once_parquet(spark, state_dir, events_dir, now)
-
-
-def _sweep_once_parquet(spark: SparkSession, state_dir: str, events_dir: str, now: datetime | None = None) -> int:
-    """One expiry sweep: drop expired rows from the state table, append
-    memory_expired events. Returns the number of rows expired (the
-    reference's cleanup return value, memory/manager/queries.py:32-44).
-
-    The expired set is computed ONCE (cached before count) so the count and
-    the event write don't re-run the expiry filter; the state rewrite is
-    write-audit-publish so a crash mid-sweep leaves a readable state dir.
-
-    Events are exactly-once with respect to the state publish: the event
-    part-files are STAGED inside the _next snapshot (hidden `_pending_events`
-    subdir) and ride the atomic publish rename, then drain into events_dir —
-    a crash before the publish re-runs an identical sweep (no events emitted,
-    no state change); a crash after it leaves the already-expired rows out of
-    the state AND the staged events inside it, which the next sweep's drain
-    delivers (each part-file move is one atomic rename, so no duplicates).
-    """
-    now = now or datetime.now(timezone.utc)
-    now_col = F.to_timestamp(F.lit(now.strftime("%Y-%m-%d %H:%M:%S")))
-    _require_same_filesystem(state_dir, events_dir)
-    _recover_state_dir(state_dir)
-    _drain_pending_events(state_dir, events_dir)  # complete an interrupted publish
-    state = spark.read.parquet(state_dir)
-    survivors, expired = cleanup_expired(state, now_col)
-
-    events = expired.select(
-        F.lit("memory_expired").alias("event_type"),
-        F.col("key"),
-        now_col.alias("ts"),
-    ).persist()
-    try:
-        n = events.count()  # materializes the cache; the write below reuses it
-        if n:
-            # rewrite state without the expired rows (Delta: DELETE WHERE +
-            # an events-table INSERT in one transaction instead)
-            nxt = state_dir.rstrip("/") + "_next"
-            survivors.write.mode("overwrite").parquet(nxt)
-            events.write.mode("overwrite").parquet(os.path.join(nxt, _PENDING_EVENTS))
-            spark.read.parquet(nxt).count()  # audit: the snapshot is readable
-            _publish_state_dir(state_dir, nxt)
-            _drain_pending_events(state_dir, events_dir)
-    finally:
-        events.unpersist()
-    return n
-
-
 def sweep_once_txn(table, events_dir: str, now: datetime | None = None) -> int:
-    """The expiry sweep over a transactional TxnTable (state/txn.py) — the
-    flag-gated ACID variant of sweep_once (VERDICT r5/r6: the reference gets
-    this atomicity from SQLite transactions, memory/storage/sqlite.py:75-108).
+    """One expiry sweep over a transactional TxnTable (state/txn.py): drop
+    expired rows, emit memory_expired events, return the number of rows
+    expired (the reference's cleanup return value,
+    memory/manager/queries.py:32-44).
 
     One commit deletes the expired rows AND carries their memory_expired
     events; drain_events then delivers them exactly-once. No write-audit-
@@ -225,8 +70,6 @@ def sweep_once_txn(table, events_dir: str, now: datetime | None = None) -> int:
     after it leaves the events inside the committed version for the next
     drain. Multi-writer safe — a concurrent upsert between read and publish
     just forces the delete's optimistic retry.
-
-    Same count-of-expired return as sweep_once.
     """
     now = now or datetime.now(timezone.utc)
     now_col = F.to_timestamp(F.lit(now.strftime("%Y-%m-%d %H:%M:%S")))

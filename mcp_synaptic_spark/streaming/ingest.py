@@ -20,7 +20,11 @@ dedup stage's state is bounded by (arrival rate × watermark horizon) when
 sit in this chain — it aggregates, so it runs per micro-batch via
 foreachBatch against the static corpus (see
 tests/test_streaming.py::test_streaming_incremental_dedup_screen_foreachbatch);
-`admit_stream` wires that shape.
+`admit_stream` wires that shape. Both admit streams grow the persisted
+dedup index through one write path, `dedup.dedup_index_append_txn`: its
+admissions ledger (a state/txn.py TxnTable) arbitrates racing admitters,
+and its ownership rule plus the append's batch fingerprint make
+foreachBatch's at-least-once replays and crash retries safe.
 """
 
 from __future__ import annotations
@@ -114,7 +118,6 @@ def admit_stream(
     max_bucket: int | None = None,
     index_path: str | None = None,
     append_admitted: bool = False,
-    txn_admission: bool = False,
     id_col: str = "doc_id",
 ):
     """The near-dup half of the front door: screen each arriving
@@ -131,14 +134,12 @@ def admit_stream(
     batches are visible. With ``append_admitted=True`` every batch's
     admitted documents are appended to the index before the next batch is
     screened — the complete incremental service: a document admitted in
-    batch N is an exact_dup in batch N+1. availableNow micro-batches run
-    sequentially, so the read-screen-append cycle is race-free within one
-    query; ``txn_admission=True`` (r9, VERDICT r8 #3) additionally routes
-    the append through the TxnTable admissions ledger
-    (dedup.dedup_index_append_txn), so RACING admitters across queries
-    cannot both admit the same content — the ledger's put_if_absent lands
-    each hash exactly once and this query's losers simply skip the
-    artifact append.
+    batch N is an exact_dup in batch N+1. The append goes through the
+    TxnTable admissions ledger (dedup.dedup_index_append_txn), so RACING
+    admitters across queries cannot both admit the same content — the
+    ledger's put_if_absent lands each hash exactly once and this query's
+    losers simply skip the artifact append — and a replayed or crashed
+    micro-batch re-runs to the same index state.
 
     Per-batch verdicts are materialized to a scratch parquet directory
     under the checkpoint (sink and append must agree even though the index
@@ -149,7 +150,6 @@ def admit_stream(
 
     from ..operators.dedup import (
         dedup_incremental,
-        dedup_index_append,
         dedup_index_append_txn,
         dedup_index_load,
     )
@@ -158,8 +158,6 @@ def admit_stream(
         raise ValueError("pass a corpus DataFrame or index_path")
     if append_admitted and index_path is None:
         raise ValueError("append_admitted requires index_path (there is nothing to grow)")
-    if txn_admission and not append_admitted:
-        raise ValueError("txn_admission only arbitrates appends — set append_admitted=True")
 
     def _screen(batch_df: DataFrame, batch_id: int):
         spark = batch_df.sparkSession
@@ -180,10 +178,7 @@ def admit_stream(
                 vd.where(F.col("verdict") == "admitted").select(id_col), id_col, "semi"
             )
             if vd.where(F.col("verdict") == "admitted").limit(1).count():
-                if txn_admission:
-                    dedup_index_append_txn(admitted_docs, index_path, id_col=id_col)
-                else:
-                    dedup_index_append(admitted_docs, index_path, id_col=id_col)
+                dedup_index_append_txn(admitted_docs, index_path, id_col=id_col)
             sink(vd, batch_id)
         else:
             sink(verdicts, batch_id)
@@ -353,11 +348,12 @@ def quality_admit_stream(
     quality_admit_verdicts (stream==batch is pinned over that exact
     function). append semantics mirror admit_stream: with
     ``append_admitted=True`` each batch's admitted docs are appended to
-    the index before the next batch screens, so an admitted doc is an
-    exact_dup one trigger later."""
+    the index through the admissions ledger
+    (dedup.dedup_index_append_txn) before the next batch screens, so an
+    admitted doc is an exact_dup one trigger later."""
     import os
 
-    from ..operators.dedup import dedup_index_append, dedup_index_load
+    from ..operators.dedup import dedup_index_append_txn, dedup_index_load
 
     def _screen(batch_df: DataFrame, batch_id: int):
         spark = batch_df.sparkSession
@@ -383,7 +379,7 @@ def quality_admit_stream(
                 vd.where(F.col("verdict") == "admitted").select(id_col), id_col, "semi"
             )
             if vd.where(F.col("verdict") == "admitted").limit(1).count():
-                dedup_index_append(
+                dedup_index_append_txn(
                     admitted_docs, index_path, content_col=text_col, id_col=id_col
                 )
             sink(vd, batch_id)

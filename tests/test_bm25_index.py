@@ -219,7 +219,7 @@ def test_append_probe_equals_rebuild(spark, docs, tmp_path):
 def test_append_overlap_drops_readded_ids(spark, docs, tmp_path):
     """A batch that re-adds already-indexed doc ids must not double their
     postings (which would silently inflate probe-time df for every shared
-    term): merge="exact" drops them and reports n_overlap; the probe still
+    term): the append drops them and reports n_overlap; the probe still
     equals a set-union rebuild."""
     from mcp_synaptic_spark.operators.bm25_index import bm25_index_append
 

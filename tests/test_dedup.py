@@ -640,9 +640,10 @@ def test_index_append_merged_probe_gate_matches_inline(spark, tmp_path):
     """r16: dedup_index_append threads (n, approx-distinct) from its replay-
     fingerprint aggregate into _exact_collapse via stats= — one batch pass
     instead of two. The gate decision must be IDENTICAL to the inline probe
-    on both sides of the collapse threshold, and a high-duplication append
-    (gate fires → rep-grain rows with grp_n>1) must still produce the same
-    probe verdicts as a full rebuild over the union corpus."""
+    on both sides of the collapse threshold: a high-duplication append
+    (gate fires → rep-grain rows with grp_n>1) and a low-duplication one
+    (gate skipped → document-grain rows with grp_n=1) must each produce
+    the same probe verdicts as a full rebuild over the union corpus."""
     from pyspark.sql import functions as F
 
     from mcp_synaptic_spark.operators.dedup import (
@@ -658,41 +659,49 @@ def test_index_append_merged_probe_gate_matches_inline(spark, tmp_path):
         [(i, f"base document number {i} entirely distinct words") for i in range(50)],
         "doc_id LONG, text STRING",
     )
-    path = str(tmp_path / "idx")
-    dedup_index_write(base, path)
+    cases = [
+        # high-dup batch: 40 rows, 4 distinct texts -> the auto gate FIRES
+        ("fired", [(1000 + i, f"novel duplicated arrival text {i % 4}") for i in range(40)], True),
+        # low-dup batch: 20 distinct texts -> the auto gate is SKIPPED
+        ("skipped", [(2000 + i, f"singular fresh arrival number {i} of its kind") for i in range(20)], False),
+    ]
+    for name, rows, fires in cases:
+        path = str(tmp_path / f"idx_{name}")
+        dedup_index_write(base, path)
+        batch = spark.createDataFrame(rows, "doc_id LONG, text STRING")
+        stats_inline = _collapse_stats(
+            batch.select(F.sha2(F.col("text"), 256).alias("_ch")), "_ch"
+        )
+        assert _should_collapse(*stats_inline) is fires, name
+        dedup_index_append(batch, path)
+        # the threaded gate made the inline decision: grp_n on the appended rows
+        grp_n = {
+            r.grp_n
+            for r in spark.read.parquet(f"{path}/buckets").where(F.col("cid") >= 1000).collect()
+        }
+        assert (max(grp_n) > 1) if fires else (grp_n == {1}), (name, grp_n)
 
-    # high-dup batch: 40 rows, 4 distinct texts -> the auto gate FIRES
-    dup_batch = spark.createDataFrame(
-        [(1000 + i, f"novel duplicated arrival text {i % 4}") for i in range(40)],
-        "doc_id LONG, text STRING",
-    )
-    stats_inline = _collapse_stats(
-        dup_batch.select(F.sha2(F.col("text"), 256).alias("_ch")), "_ch"
-    )
-    assert _should_collapse(*stats_inline)  # the scenario exercises the fired gate
-    dedup_index_append(dup_batch, path)
-
-    rebuilt = str(tmp_path / "rebuilt")
-    dedup_index_write(base.unionByName(dup_batch), rebuilt)
-    probe = spark.createDataFrame(
-        [(5000, "novel duplicated arrival text 2"), (5001, "base document number 7 entirely distinct words"), (5002, "nothing like anything")],
-        "doc_id LONG, text STRING",
-    )
-    via_append = sorted(
-        tuple(r)
-        for r in dedup_incremental(None, probe, index=dedup_index_load(spark, path)).collect()
-    )
-    via_rebuild = sorted(
-        tuple(r)
-        for r in dedup_incremental(None, probe, index=dedup_index_load(spark, rebuilt)).collect()
-    )
-    assert via_append == via_rebuild
-    # verdicts: the duplicated text matches its min appended id, the base
-    # text its base id, the novel text admits
-    by_id = {r[0]: r[1:] for r in via_append}
-    assert by_id[5000][0] == "exact_dup" and by_id[5000][1] == 1002
-    assert by_id[5001][0] == "exact_dup" and by_id[5001][1] == 7
-    assert by_id[5002][0] == "admitted"
+        rebuilt = str(tmp_path / f"rebuilt_{name}")
+        dedup_index_write(base.unionByName(batch), rebuilt)
+        probe = spark.createDataFrame(
+            [(5000, rows[2][1]), (5001, "base document number 7 entirely distinct words"), (5002, "nothing like anything")],
+            "doc_id LONG, text STRING",
+        )
+        via_append = sorted(
+            tuple(r)
+            for r in dedup_incremental(None, probe, index=dedup_index_load(spark, path)).collect()
+        )
+        via_rebuild = sorted(
+            tuple(r)
+            for r in dedup_incremental(None, probe, index=dedup_index_load(spark, rebuilt)).collect()
+        )
+        assert via_append == via_rebuild, name
+        # verdicts: the batch text matches its min appended id (1002 for the
+        # duplicated text), the base text its base id, the novel text admits
+        by_id = {r[0]: r[1:] for r in via_append}
+        assert by_id[5000][0] == "exact_dup" and by_id[5000][1] == rows[2][0], name
+        assert by_id[5001][0] == "exact_dup" and by_id[5001][1] == 7
+        assert by_id[5002][0] == "admitted"
 
 
 def test_dedup_index_legacy_layout_rejected(spark, tmp_path):
@@ -871,6 +880,56 @@ def test_index_append_txn_race_exactly_one_admission(spark, tmp_path):
     hashes = spark.read.parquet(f"{path}/hashes")
     assert hashes.where(F.col("cid") == 100).count() == 1
     assert hashes.count() == 2  # corpus doc + exactly one admitted copy
+
+
+def test_index_append_txn_retry_after_crash_indexes_batch(spark, tmp_path, monkeypatch):
+    """A crash between the admissions-ledger commit and the artifact append
+    must not strand the batch: the retry owns the ledger rows the crashed
+    run committed and appends their artifacts, so the docs screen as
+    exact_dup afterwards; replaying the repaired batch appends nothing."""
+    from mcp_synaptic_spark.state.txn import TxnTable
+
+    corpus = spark.createDataFrame(
+        [(1, "an old corpus document about spark shuffles"), (2, "another old corpus text on joins")],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "idx")
+    D.dedup_index_write(corpus, path)
+    batch = spark.createDataFrame(
+        [(10, "a brand new arrival that nothing in the corpus matches"),
+         (11, "a second fresh arrival about streaming triggers")],
+        "doc_id long, text string",
+    )
+
+    real_append = D.dedup_index_append
+    calls = []
+
+    def crash_once(*a, **kw):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("simulated crash after the ledger commit")
+        return real_append(*a, **kw)
+
+    monkeypatch.setattr(D, "dedup_index_append", crash_once)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        D.dedup_index_append_txn(batch, path)
+    # the ledger is ahead of the artifacts
+    assert TxnTable(spark, f"{path}/_admissions", key_col="ch").read().count() == 2
+    assert sorted(r.cid for r in spark.read.parquet(f"{path}/hashes").collect()) == [1, 2]
+
+    won = {r.id for r in D.dedup_index_append_txn(batch, path).collect()}
+    assert won == {10, 11}
+    assert sorted(r.cid for r in spark.read.parquet(f"{path}/hashes").collect()) == [1, 2, 10, 11]
+    again = batch.select((F.col("doc_id") + 100).alias("doc_id"), "text")
+    verdicts = {
+        r.doc_id: (r.verdict, r.match_id)
+        for r in D.dedup_incremental(None, again, index=D.dedup_index_load(spark, path)).collect()
+    }
+    assert verdicts == {110: ("exact_dup", 10), 111: ("exact_dup", 11)}
+
+    # a replay of the repaired batch is a no-op
+    assert D.dedup_index_append_txn(batch, path).count() == 0
+    assert spark.read.parquet(f"{path}/hashes").count() == 4
 
 
 def test_dedup_rate_by_group(spark):

@@ -902,8 +902,8 @@ def test_mllib_lsh_index_append_overlap_merge(spark, sf_dir, tmp_path):
     """ADVICE r14: a batch that PARTIALLY re-ingests already-indexed
     (id, vector) pairs (a re-crawl — the whole-batch fingerprint only
     catches exact replays) must not duplicate an id across rep rows, or
-    the same id occupies two top-k slots after explode. merge="exact"
-    (default) anti-joins those pairs out: the appended index probes
+    the same id occupies two top-k slots after explode. The append
+    anti-joins those pairs out: the appended index probes
     byte-identical to a rebuild over the SET-union corpus, n_overlap
     reports what was dropped, and the sidecar's appended_reps occupancy
     gauge tracks accretion."""
@@ -956,13 +956,6 @@ def test_mllib_lsh_index_append_overlap_merge(spark, sf_dir, tmp_path):
     with open(f"{path}/_planes.json") as f:
         meta = json.load(f)
     assert meta["appended_reps"] == info["appended_reps"] > 0
-
-    # merge="none" is the O(batch) fast path under a disjointness contract:
-    # it performs no index scan and reports no overlap
-    path2 = str(tmp_path / "brp_none")
-    S.mllib_lsh_index_write(base, path2, planes, id_col="vec_id")
-    info2 = S.mllib_lsh_index_append(fresh, path2, id_col="vec_id", merge="none")
-    assert info2["n_overlap"] == 0 and info2["appended_reps"] > 0
 
 
 def test_ann_id_dtype_validation(spark):

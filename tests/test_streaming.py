@@ -72,16 +72,13 @@ def test_session_windows_batch_semantics(spark):
     assert s3.user_id == 2 and s3.n_events == 1
 
 
-def test_expiry_sweep_once(spark, tmp_path):
-    state_dir = str(tmp_path / "memories")
-    events_dir = str(tmp_path / "expiry_events")
+def _memory_rows(spark):
+    """One memory expired by 2024-01-15 ("a") and one permanent ("b")."""
+    t0 = datetime.fromisoformat("2024-01-14 00:00:00")
     rows = [
-        ("id-a", "a", "{}", "short_term", "absolute",
-         datetime.fromisoformat("2024-01-14 00:00:00"), datetime.fromisoformat("2024-01-14 00:00:00"),
-         None, datetime.fromisoformat("2024-01-14 01:00:00"), 3600, 0, None, None),
-        ("id-b", "b", "{}", "permanent", "never",
-         datetime.fromisoformat("2024-01-14 00:00:00"), datetime.fromisoformat("2024-01-14 00:00:00"),
-         None, None, 0, 0, None, None),
+        ("id-a", "a", "{}", "short_term", "absolute", t0, t0, None,
+         datetime.fromisoformat("2024-01-14 01:00:00"), 3600, 0, None, None),
+        ("id-b", "b", "{}", "permanent", "never", t0, t0, None, None, 0, 0, None, None),
     ]
     schema = (
         "id string, key string, data string, memory_type string, expiration_policy string, "
@@ -89,147 +86,29 @@ def test_expiry_sweep_once(spark, tmp_path):
         "expires_at timestamp, ttl_seconds int, access_count int, "
         "tags map<string,string>, metadata string"
     )
-    spark.createDataFrame(rows, schema).write.parquet(state_dir)
+    return spark.createDataFrame(rows, schema)
 
-    n = expiry.sweep_once(spark, state_dir, events_dir, now=datetime.fromisoformat("2024-01-15 00:00:00"))
+
+def test_expiry_sweep_once(spark, tmp_path):
+    from mcp_synaptic_spark.state.txn import TxnTable
+
+    events_dir = str(tmp_path / "expiry_events")
+    table = TxnTable.create(
+        spark, str(tmp_path / "memories"), _memory_rows(spark), stat_cols=("expires_at",)
+    )
+
+    n = expiry.sweep_once_txn(table, events_dir, now=datetime.fromisoformat("2024-01-15 00:00:00"))
     assert n == 1
-    survivors = [r.key for r in spark.read.parquet(state_dir).collect()]
+    survivors = [r.key for r in table.read().collect()]
     assert survivors == ["b"]
     ev = spark.read.parquet(events_dir).collect()
     assert len(ev) == 1 and ev[0].event_type == "memory_expired" and ev[0].key == "a"
 
-    # idempotent second sweep: nothing left to expire, no new events
-    assert expiry.sweep_once(spark, state_dir, events_dir, now=datetime.fromisoformat("2024-01-16 00:00:00")) == 0
-    # publish leaves no litter
-    assert not os.path.exists(state_dir + "_next") and not os.path.exists(state_dir + "_old")
-
-
-def test_expiry_sweep_crash_recovery(spark, tmp_path):
-    """A sweep killed between the two publish renames (state gone, _next
-    complete) must heal on the next sweep: _next is promoted, no rows lost."""
-    import shutil
-
-    state_dir = str(tmp_path / "memories")
-    events_dir = str(tmp_path / "expiry_events")
-    t0 = datetime.fromisoformat("2024-01-14 00:00:00")
-    rows = [
-        ("id-a", "a", "{}", "short_term", "absolute", t0, t0, None,
-         datetime.fromisoformat("2024-01-14 01:00:00"), 3600, 0, None, None),
-        ("id-b", "b", "{}", "permanent", "never", t0, t0, None, None, 0, 0, None, None),
-    ]
-    schema = (
-        "id string, key string, data string, memory_type string, expiration_policy string, "
-        "created_at timestamp, updated_at timestamp, last_accessed_at timestamp, "
-        "expires_at timestamp, ttl_seconds int, access_count int, "
-        "tags map<string,string>, metadata string"
-    )
-    spark.createDataFrame(rows, schema).write.parquet(state_dir)
-
-    # simulate the crash window: survivors fully written to _next, state
-    # renamed away to _old, process dies before the second rename
-    spark.read.parquet(state_dir).where("key = 'b'").write.parquet(state_dir + "_next")
-    os.rename(state_dir, state_dir + "_old")
-
-    n = expiry.sweep_once(spark, state_dir, events_dir, now=datetime.fromisoformat("2024-01-16 00:00:00"))
-    assert n == 0  # the promoted snapshot has no expired rows left
-    assert [r.key for r in spark.read.parquet(state_dir).collect()] == ["b"]
-    assert not os.path.exists(state_dir + "_next") and not os.path.exists(state_dir + "_old")
-
-    # stale litter (crash BEFORE the first rename: state intact, _next stale)
-    spark.read.parquet(state_dir).write.parquet(state_dir + "_next")
-    shutil.rmtree(events_dir, ignore_errors=True)
-    assert expiry.sweep_once(spark, state_dir, events_dir, now=datetime.fromisoformat("2024-01-17 00:00:00")) == 0
-    assert [r.key for r in spark.read.parquet(state_dir).collect()] == ["b"]
-    assert not os.path.exists(state_dir + "_next")
-
-
-def test_run_expiry_sweep_streaming_query(spark, tmp_path):
-    """End-to-end streaming sweep (rate tick → foreachBatch → sweep_once):
-    the query must survive its own first PUBLISH — the publish renames
-    state_dir away, so a checkpoint defaulted INSIDE state_dir would be
-    destroyed mid-flight (the bug this test pins) — and later ticks must be
-    idempotent (no duplicate events)."""
-    import time
-
-    state_dir = str(tmp_path / "memories")
-    events_dir = str(tmp_path / "expiry_events")
-    t0 = datetime.fromisoformat("2024-01-14 00:00:00")
-    rows = [
-        ("id-a", "a", "{}", "short_term", "absolute", t0, t0, None,
-         datetime.fromisoformat("2024-01-14 01:00:00"), 3600, 0, None, None),
-        ("id-b", "b", "{}", "permanent", "never", t0, t0, None, None, 0, 0, None, None),
-    ]
-    schema = (
-        "id string, key string, data string, memory_type string, expiration_policy string, "
-        "created_at timestamp, updated_at timestamp, last_accessed_at timestamp, "
-        "expires_at timestamp, ttl_seconds int, access_count int, "
-        "tags map<string,string>, metadata string"
-    )
-    spark.createDataFrame(rows, schema).write.parquet(state_dir)
-
-    q = expiry.run_expiry_sweep(
-        spark, state_dir, events_dir, interval_seconds=1,
-        now_fn=lambda: datetime.fromisoformat("2024-01-15 00:00:00"),
-    )
-    try:
-        deadline = time.time() + 90
-        ticks_after_publish = 0
-        while time.time() < deadline and ticks_after_publish < 3:
-            if q.exception() is not None:
-                raise AssertionError(f"streaming sweep died: {q.exception()}")
-            if os.path.isdir(events_dir) and any(
-                f.endswith(".parquet") for f in os.listdir(events_dir)
-            ):
-                ticks_after_publish += 1  # ~1 extra second per loop pass
-            time.sleep(1.0)
-        assert ticks_after_publish >= 3, "sweep never published within 90s"
-        assert q.isActive  # survived the publish + subsequent idempotent ticks
-    finally:
-        q.stop()
-
-    assert [r.key for r in spark.read.parquet(state_dir).collect()] == ["b"]
-    ev = spark.read.parquet(events_dir).collect()
-    assert len(ev) == 1 and ev[0].event_type == "memory_expired" and ev[0].key == "a"
-
-
-def test_expiry_sweep_events_exactly_once_across_crash(spark, tmp_path):
-    """Events are staged inside the published snapshot and drained after the
-    publish; a crash in between (state updated, events not yet delivered)
-    must deliver each staged event exactly once on the next sweep — never
-    re-expire (the state no longer holds the row) and never duplicate (each
-    part-file drain is one atomic rename)."""
-    state_dir = str(tmp_path / "memories")
-    events_dir = str(tmp_path / "expiry_events")
-    t0 = datetime.fromisoformat("2024-01-14 00:00:00")
-    rows = [
-        ("id-a", "a", "{}", "short_term", "absolute", t0, t0, None,
-         datetime.fromisoformat("2024-01-14 01:00:00"), 3600, 0, None, None),
-        ("id-b", "b", "{}", "permanent", "never", t0, t0, None, None, 0, 0, None, None),
-    ]
-    schema = (
-        "id string, key string, data string, memory_type string, expiration_policy string, "
-        "created_at timestamp, updated_at timestamp, last_accessed_at timestamp, "
-        "expires_at timestamp, ttl_seconds int, access_count int, "
-        "tags map<string,string>, metadata string"
-    )
-    spark.createDataFrame(rows, schema).write.parquet(state_dir)
-
-    # run a real sweep, then simulate "crash after publish, before drain" by
-    # moving the delivered events BACK into the snapshot's staging dir
-    n = expiry.sweep_once(spark, state_dir, events_dir, now=datetime.fromisoformat("2024-01-15 00:00:00"))
-    assert n == 1
-    pending = os.path.join(state_dir, "_pending_events")
-    os.makedirs(pending)
-    for name in os.listdir(events_dir):
-        if name.endswith(".parquet"):
-            os.rename(os.path.join(events_dir, name), os.path.join(pending, name))
-    # next sweep: drains the staged events exactly once, expires nothing new
-    assert expiry.sweep_once(spark, state_dir, events_dir, now=datetime.fromisoformat("2024-01-16 00:00:00")) == 0
-    ev = spark.read.parquet(events_dir).collect()
-    assert len(ev) == 1 and ev[0].event_type == "memory_expired" and ev[0].key == "a"
-    assert not os.path.exists(pending)
-    # the staged dir is invisible to state reads (underscore-prefixed)
-    assert [r.key for r in spark.read.parquet(state_dir).collect()] == ["b"]
+    # idempotent second sweep: nothing left to expire, no commit, no new events
+    v = table.version()
+    assert expiry.sweep_once_txn(table, events_dir, now=datetime.fromisoformat("2024-01-16 00:00:00")) == 0
+    assert table.version() == v
+    assert spark.read.parquet(events_dir).count() == 1
 
 
 def test_access_log_stream_equals_batch(spark, sf_dir, tmp_path):
@@ -389,12 +268,13 @@ def test_replay_access_stream_equals_batch(spark, sf_dir, tmp_path):
 
 def test_sweep_rejects_cross_filesystem_dirs(spark, tmp_path, monkeypatch):
     # ADVICE r6: the exactly-once drain relies on same-filesystem os.rename;
-    # a cross-device pair must fail fast at sweep start, not EXDEV mid-drain.
+    # a cross-device pair must fail fast before the sweep's delete commits,
+    # not EXDEV mid-drain after it.
     import os as _os
 
     import pytest
 
-    from mcp_synaptic_spark.streaming import expiry as E
+    from mcp_synaptic_spark.state import txn as T
 
     state = str(tmp_path / "state")
     events = str(tmp_path / "events")
@@ -408,57 +288,118 @@ def test_sweep_rejects_cross_filesystem_dirs(spark, tmp_path, monkeypatch):
         dev = 1 if _os.path.abspath(str(path)).startswith(_os.path.abspath(events)) else 0
         return FakeStatResult(dev)
 
-    monkeypatch.setattr(E.os, "stat", stat_with_devs)
+    monkeypatch.setattr(T.os, "stat", stat_with_devs)
     with pytest.raises(ValueError, match="same filesystem"):
-        E._require_same_filesystem(state, events)
+        T._require_same_filesystem(state, events)
     # same-device pair passes (restore real stat)
     monkeypatch.undo()
-    E._require_same_filesystem(state, events)
+    T._require_same_filesystem(state, events)
+
+    # the sweep refuses before its delete commits: events_dir on "another
+    # device" (real stat results, st_dev swapped) leaves the table untouched
+    table = T.TxnTable.create(spark, state, _memory_rows(spark))
+    _os.makedirs(events)
+    real_stat = _os.stat
+
+    def stat_events_elsewhere(path, *a, **kw):
+        st = real_stat(path, *a, **kw)
+        if _os.path.abspath(str(path)).startswith(_os.path.abspath(events)):
+            fields = list(st)
+            fields[2] = st.st_dev + 1  # st_dev
+            return _os.stat_result(fields)
+        return st
+
+    monkeypatch.setattr(T.os, "stat", stat_events_elsewhere)
+    with pytest.raises(ValueError, match="same filesystem"):
+        expiry.sweep_once_txn(table, events, now=datetime.fromisoformat("2024-01-15 00:00:00"))
+    monkeypatch.undo()
+    assert table.version() == 0
+    assert sorted(r.key for r in table.read().collect()) == ["a", "b"]
+
+
+def test_run_expiry_sweep_streaming_query(spark, tmp_path):
+    """End-to-end streaming sweep with the DEFAULT checkpoint location: the
+    checkpoint must land beside the table root, never inside it (where it
+    would mix with the table's directory listing and vacuum), the query
+    must survive its committing tick, and later ticks must be idempotent
+    (no new commit, no duplicate events)."""
+    import time
+
+    from mcp_synaptic_spark.state.txn import TxnTable
+
+    state_dir = str(tmp_path / "memories")
+    events_dir = str(tmp_path / "expiry_events")
+    table = TxnTable.create(spark, state_dir, _memory_rows(spark))
+    table_entries = set(os.listdir(state_dir))
+
+    q = expiry.run_expiry_sweep(
+        table, events_dir, interval_seconds=1,
+        now_fn=lambda: datetime.fromisoformat("2024-01-15 00:00:00"),
+    )
+    try:
+        deadline = time.time() + 90
+        ticks_after_commit = 0
+        while time.time() < deadline and ticks_after_commit < 3:
+            if q.exception() is not None:
+                raise AssertionError(f"streaming sweep died: {q.exception()}")
+            if table.version() >= 1 and os.path.isdir(events_dir):
+                ticks_after_commit += 1  # ~1 extra second per loop pass
+            time.sleep(1.0)
+        assert ticks_after_commit >= 3, "sweep never committed within 90s"
+        assert q.isActive  # survived the commit + subsequent idempotent ticks
+    finally:
+        q.stop()
+
+    assert os.path.isdir(state_dir + "_checkpoint")
+    new_entries = set(os.listdir(state_dir)) - table_entries
+    assert not any("checkpoint" in e or e in ("commits", "offsets", "sources") for e in new_entries)
+    fresh = TxnTable(spark, state_dir)
+    assert fresh.version() == 1  # one committing tick, the rest were no-ops
+    assert [r.key for r in fresh.read().collect()] == ["b"]
+    ev = spark.read.parquet(events_dir).collect()
+    assert len(ev) == 1 and ev[0].event_type == "memory_expired" and ev[0].key == "a"
 
 
 def test_run_expiry_sweep_streaming_txn_backend(spark, tmp_path):
-    """The streaming driver ticks the ACID sweep: expired rows leave the
-    TxnTable as commits and events land exactly-once — same harness as the
-    parquet-backend streaming test, different state machinery."""
-    from datetime import datetime, timezone
+    """End-to-end streaming sweep (rate tick → foreachBatch → sweep_once_txn):
+    expired rows leave the TxnTable as one commit, the query survives its
+    first committing tick and the later no-op ticks, events land exactly
+    once, and the rewritten directories keep the handle's expires_at zone
+    maps (the ticks sweep with the caller's handle, stat_cols included)."""
+    import time
 
     from mcp_synaptic_spark.state.txn import TxnTable
     from mcp_synaptic_spark.streaming.expiry import run_expiry_sweep
 
     state, events_dir = str(tmp_path / "t"), str(tmp_path / "events")
-    past = datetime(2024, 1, 1, tzinfo=timezone.utc)
-    rows = [
-        ("live", datetime(2025, 1, 1, tzinfo=timezone.utc), None, "1"),
-        ("dead", datetime(2025, 1, 1, tzinfo=timezone.utc), past, "2"),
-    ]
-    TxnTable.create(
-        spark,
-        state,
-        spark.createDataFrame(rows, "key string, updated_at timestamp, expires_at timestamp, payload string"),
-    )
+    table = TxnTable.create(spark, state, _memory_rows(spark), stat_cols=("expires_at",))
     q = run_expiry_sweep(
-        spark,
-        state,
+        table,
         events_dir,
         interval_seconds=1,
-        now_fn=lambda: datetime(2025, 6, 1, tzinfo=timezone.utc),
+        now_fn=lambda: datetime.fromisoformat("2024-01-15 00:00:00"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        backend="txn",
     )
     try:
-        import time
-
-        deadline = time.time() + 60
-        t = TxnTable(spark, state)
-        while time.time() < deadline:
-            if t.version() >= 1 and os.path.isdir(events_dir):
-                break
-            time.sleep(1)
+        deadline = time.time() + 90
+        ticks_after_commit = 0
+        while time.time() < deadline and ticks_after_commit < 3:
+            if q.exception() is not None:
+                raise AssertionError(f"streaming sweep died: {q.exception()}")
+            if table.version() >= 1 and os.path.isdir(events_dir):
+                ticks_after_commit += 1  # ~1 extra second per loop pass
+            time.sleep(1.0)
+        assert ticks_after_commit >= 3, "sweep never committed within 90s"
+        assert q.isActive  # survived the commit + subsequent idempotent ticks
     finally:
         q.stop()
-    t = TxnTable(spark, state)
-    assert {r.key for r in t.read().collect()} == {"live"}
-    assert [r.key for r in spark.read.parquet(events_dir).collect()] == ["dead"]
+
+    fresh = TxnTable(spark, state)
+    assert [r.key for r in fresh.read().collect()] == ["b"]
+    ev = spark.read.parquet(events_dir).collect()
+    assert len(ev) == 1 and ev[0].event_type == "memory_expired" and ev[0].key == "a"
+    live = fresh._read_commit(fresh.version())["live"]
+    assert live and all("expires_at" in d.get("stats", {}) for d in live)
 
 
 def test_streaming_exact_dedup_equals_batch(spark, sf_dir, tmp_path):
@@ -798,14 +739,12 @@ def test_ingest_pipeline_threads_non_default_id_col(spark, sf_dir):
 
 
 def test_admit_stream_txn_admission_same_service_plus_ledger(spark, sf_dir, tmp_path):
-    """txn_admission=True (r9, VERDICT r8 #3): the cross-micro-batch service
-    behaves identically (batch-N admit flags exact_dup in batch N+1) while
-    every admission also lands in the TxnTable ledger — the arbitration
-    that stops racing admitters across queries (the race itself is pinned
-    in test_dedup.py::test_index_append_txn_race_exactly_one_admission)."""
-    import pytest
-    from pyspark.sql import functions as F
-
+    """The admit stream appends through the admissions ledger: the
+    cross-micro-batch service holds (batch-N admit flags exact_dup in
+    batch N+1) and every admission lands in the TxnTable ledger — the
+    arbitration that stops racing admitters across queries (the race
+    itself is pinned in
+    test_dedup.py::test_index_append_txn_race_exactly_one_admission)."""
     from mcp_synaptic_spark.operators.dedup import dedup_index_write
     from mcp_synaptic_spark.state.txn import TxnTable
     from mcp_synaptic_spark.streaming.ingest import admit_stream
@@ -829,7 +768,6 @@ def test_admit_stream_txn_admission_same_service_plus_ledger(spark, sf_dir, tmp_
         checkpoint=str(tmp_path / "ckpt"),
         index_path=index_path,
         append_admitted=True,
-        txn_admission=True,
     )
     q.awaitTermination(180)
 
@@ -839,12 +777,6 @@ def test_admit_stream_txn_admission_same_service_plus_ledger(spark, sf_dir, tmp_
     ledger = TxnTable(spark, f"{index_path}/_admissions", key_col="ch")
     rows = ledger.read().collect()
     assert len(rows) == 1 and rows[0].id in by_doc
-    # misuse guard: arbitration without an append is meaningless
-    with pytest.raises(ValueError, match="append_admitted"):
-        admit_stream(
-            spark.readStream.schema(b1.schema).parquet(src), None, lambda df, bid: None,
-            checkpoint=str(tmp_path / "ckpt2"), index_path=index_path, txn_admission=True,
-        )
 
 
 def test_quality_admit_stream_composed_front_door(spark, sf_dir, tmp_path):

@@ -185,9 +185,8 @@ def test_sweep_once_txn_counts_and_events_exactly_once(spark, tmp_path):
 
 def test_sweep_once_txn_crash_between_commit_and_drain(spark, tmp_path):
     """Crash AFTER the delete commit but BEFORE the drain: the next sweep
-    delivers the stranded events exactly once — the txn twin of
-    test_expiry_sweep_events_exactly_once_across_crash, with no rename
-    dance and no recovery path to run."""
+    delivers the stranded events exactly once, with no rename dance and no
+    recovery path to run."""
     path, events_dir = str(tmp_path / "t"), str(tmp_path / "events")
     past = datetime(2024, 1, 1, tzinfo=timezone.utc)
     t = TxnTable.create(spark, path, _rows(spark, ("live", None, "1"), ("dead", past, "2")))
@@ -226,36 +225,30 @@ def test_vacuum_reclaims_superseded_versions(spark, tmp_path):
     assert [r.payload for r in t.read().collect()] == ["3"]
 
 
-def test_sweep_backend_flag_dispatch(spark, tmp_path):
-    """sweep_once(backend='txn') over a TxnTable root must agree with the
-    default parquet backend on the same rows: same expired count, same
-    surviving keys, same delivered events."""
-    from mcp_synaptic_spark.streaming.expiry import sweep_once
+def test_sweep_once_txn_matches_cleanup_expired(spark, tmp_path):
+    """sweep_once_txn over a TxnTable must agree with the pure
+    operators.memory.cleanup_expired transform on the same rows: same
+    expired count, same surviving keys, same delivered events."""
+    from mcp_synaptic_spark.operators.memory import cleanup_expired
 
     past = datetime(2024, 1, 1, tzinfo=timezone.utc)
-    rows = [("live", None, "1"), ("dead1", past, "2"), ("dead2", past, "3")]
+    future = datetime(2030, 1, 1, tzinfo=timezone.utc)
+    rows = [("live", None, "1"), ("later", future, "2"), ("dead1", past, "3"), ("dead2", past, "4")]
     now = datetime(2025, 6, 1, tzinfo=timezone.utc)
+    now_col = F.to_timestamp(F.lit(now.strftime("%Y-%m-%d %H:%M:%S")))
+    survivors, expired = cleanup_expired(_rows(spark, *rows), now_col)
 
-    pq_state, pq_events = str(tmp_path / "pq"), str(tmp_path / "pq_events")
-    _rows(spark, *rows).write.parquet(pq_state)
-    n_pq = sweep_once(spark, pq_state, pq_events, now=now)
+    path, events_dir = str(tmp_path / "tx"), str(tmp_path / "tx_events")
+    t = TxnTable.create(spark, path, _rows(spark, *rows), stat_cols=("expires_at",))
+    n = sweep_once_txn(t, events_dir, now=now)
 
-    tx_state, tx_events = str(tmp_path / "tx"), str(tmp_path / "tx_events")
-    TxnTable.create(spark, tx_state, _rows(spark, *rows))
-    n_tx = sweep_once(spark, tx_state, tx_events, now=now, backend="txn")
-
-    assert n_pq == n_tx == 2
-    assert {r.key for r in spark.read.parquet(pq_state).collect()} == {
-        r.key for r in TxnTable(spark, tx_state).read().collect()
-    } == {"live"}
-    assert sorted(r.key for r in spark.read.parquet(pq_events).collect()) == sorted(
-        r.key for r in spark.read.parquet(tx_events).collect()
+    assert n == expired.count() == 2
+    assert {r.key for r in t.read().collect()} == {
+        r.key for r in survivors.collect()
+    } == {"live", "later"}
+    assert sorted(r.key for r in spark.read.parquet(events_dir).collect()) == sorted(
+        r.key for r in expired.collect()
     ) == ["dead1", "dead2"]
-
-    import pytest
-
-    with pytest.raises(ValueError, match="unknown backend"):
-        sweep_once(spark, pq_state, pq_events, backend="nope")
 
 
 @pytest.mark.volume

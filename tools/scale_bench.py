@@ -723,7 +723,8 @@ def main() -> None:
     for q in bm_queries:
         bm25_search_indexed(spark, bm25_path, q, k=10).collect()
     t_probe_w = (time.perf_counter() - t0) / len(bm_queries)
-    timings["bm25_probe_per_query_warm"] = round(min(t_probe, t_probe_w), 3)
+    timings["bm25_probe_per_query_warm"] = round(t_probe_w, 3)
+    timings["bm25_probe_per_query_min2"] = round(min(t_probe, t_probe_w), 3)
     if rep <= 10:
         # audit arm: the direct per-query corpus scan, plus the equality and
         # speedup checks against it (the note-126 interleaved A/B pinned the
@@ -737,7 +738,8 @@ def main() -> None:
         for q in bm_queries:
             bm25_search(docs, q, k=10).collect()
         t_direct_w = (time.perf_counter() - t0) / len(bm_queries)
-        timings["bm25_search_per_query_warm"] = round(min(t_direct, t_direct_w), 3)
+        timings["bm25_search_per_query_warm"] = round(t_direct_w, 3)
+        timings["bm25_search_per_query_min2"] = round(min(t_direct, t_direct_w), 3)
         checks["bm25_probe_equals_direct"] = bool(
             all(
                 [tuple(r) for r in p] == [tuple(r) for r in d]
