@@ -14,7 +14,9 @@ oracle):
 3. IVF (inverted file): KMeans coarse quantizer; queries probe the nprobe
    nearest centroids and re-rank exactly within those cells. The classic
    billion-scale layout: cells are Parquet partitions ⇒ partition pruning
-   turns a corpus scan into an nprobe-cell scan.
+   turns a corpus scan into an nprobe-cell scan. A probe is one broadcast
+   (each query's cells, chosen by one expression over the centroid literal)
+   and one shuffle (the rank window); SQ8 reuses it over dequantized codes.
 
 At 100 TB: tier 1/3 candidate generation shuffles only (bucket_key, id)
 pairs; vectors are re-read only for the candidate set (semi-join pushdown).
@@ -110,7 +112,7 @@ def _collapse_to_reps(
 def _collapse_query_side(
     queries: DataFrame, query_id_col: str, query_vec_col: str
 ) -> tuple[DataFrame, DataFrame | None]:
-    """Distinct-vector grain for the QUERY side of the ANN probes (r13):
+    """Distinct-vector grain for the QUERY side of the LSH probes (r13):
     batch ANN query sets are themselves corpus slices, so at crawl
     duplication the same query vector arrives under many qids — and every
     probe's per-query work (centroid assignment explode, bucket hashing,
@@ -135,7 +137,8 @@ def _collapse_query_side(
     dedup for replayed query rows. One qid bound to TWO DISTINCT vectors
     remains a caller contract violation — a query id names one vector, as
     in the brute-force rag.py baseline — and would merge both vectors'
-    ranked lists under that qid after expansion."""
+    ranked lists under that qid after expansion. `ivf_topk` does not
+    collapse: its per-query work costs less than the collapse's jobs."""
     reps, _n, did = _collapse_to_reps(
         queries.select(query_id_col, query_vec_col).dropDuplicates(),
         query_id_col,
@@ -962,6 +965,18 @@ def ivf_index_load(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
     return frame, centroids
 
 
+def _centroid_literal_sql(centroids: Sequence[Sequence[float]]) -> str:
+    """SQL text of the centroid matrix as ONE constant: a JSON string that
+    `from_json` parses and the optimizer folds to the same array<array<double>>
+    literal that k·d nested literals give, at the analysis cost of one
+    string node. JSON carries each double's round-trip repr, so values are
+    exact."""
+    import json
+
+    matrix = json.dumps([[float(x) for x in c] for c in centroids])
+    return f"from_json('{matrix}', 'array<array<double>>')"
+
+
 #: centroid-matrix size (k·d doubles) above which _argmin_cell switches from
 #: the inline SQL-literal fold to a broadcast centroid-frame join: the
 #: literal is O(k·d) characters of SQL text built and parsed on the driver,
@@ -990,14 +1005,7 @@ def _argmin_cell(frame: DataFrame, centroids: Sequence[Sequence[float]], vec_nam
     k = len(centroids)
     dim = len(centroids[0]) if k else 0
     if k * dim <= _ARGMIN_LITERAL_MAX_TERMS:
-        cent = (
-            "array("
-            + ", ".join(
-                "array(" + ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in c) + ")"
-                for c in centroids
-            )
-            + ")"
-        )
+        cent = _centroid_literal_sql(centroids)
         d2 = (
             f"transform({cent}, c -> aggregate(zip_with(transform(`{vec_name}`, "
             "e -> CAST(e AS DOUBLE)), c, (x, y) -> (x - y) * (x - y)), 0.0D, "
@@ -1190,6 +1198,24 @@ def ivf_index_append(
     }
 
 
+def _cosine_sql(a: str, b: str) -> str:
+    """SQL text of `functions.vector.cosine_similarity(a, b)` as ONE HOF
+    fold: the dot product and both squared norms accumulate in one pass,
+    each as the same sequential fold from 0.0 that `dot` runs, so the value
+    is bit-identical. One parsed string replaces ~20 py4j Column calls per
+    cosine. Lambda variables start with `_` so they do not shadow columns."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (_x, _y) -> named_struct("
+        "'ab', CAST(_x AS DOUBLE) * CAST(_y AS DOUBLE), "
+        "'aa', CAST(_x AS DOUBLE) * CAST(_x AS DOUBLE), "
+        "'bb', CAST(_y AS DOUBLE) * CAST(_y AS DOUBLE))), "
+        "named_struct('ab', 0.0D, 'aa', 0.0D, 'bb', 0.0D), "
+        "(_s, _p) -> named_struct('ab', _s.ab + _p.ab, 'aa', _s.aa + _p.aa, 'bb', _s.bb + _p.bb), "
+        "_s -> CASE WHEN sqrt(_s.aa) = 0.0D OR sqrt(_s.bb) = 0.0D THEN 0.0D "
+        "ELSE _s.ab / (sqrt(_s.aa) * sqrt(_s.bb)) END)"
+    )
+
+
 def ivf_topk(
     queries: DataFrame,
     indexed_corpus: DataFrame,
@@ -1204,45 +1230,50 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF query: probe the nprobe nearest cells, exact cosine re-rank inside.
 
-    The (qid, cell) probe list is tiny and broadcast; with the corpus
-    partitioned by cell the join is a partition-pruned scan. The query side
-    runs at distinct-vector grain (r13, `_collapse_query_side`): the
-    centroid-assignment explode — |queries| × n_cells cosines, the probe's
-    dominant cost on a replicated query slice — and the in-cell verify pay
-    once per distinct query vector.
+    Each query row picks its cells with one expression: sort the (1 − cos,
+    cell) structs over the constant centroid literal, keep the first
+    nprobe. The (qid, cell) list is the one broadcast, and on a persisted
+    index it prunes the scan to the probed cell directories; the per-qid
+    rank window is the one shuffle. Qids sharing a vector get identical
+    rows by construction; a replayed (qid, vector) row scores each member
+    once per copy, so `dense_rank` ties the copies and `DISTINCT` keeps
+    one, on the window's qid partitioning (no exchange).
     """
-    queries, q_expand = _collapse_query_side(queries, query_id_col, query_vec_col)
-    cent = F.array(*[F.array(*[F.lit(x) for x in c]) for c in centroids])
-    qcells = (
-        queries.select(query_id_col, query_vec_col)
-        .select(query_id_col, query_vec_col, F.posexplode(cent).alias("cell", "cellvec"))
-        .withColumn("cdist", F.lit(1.0) - cosine_similarity(F.col(query_vec_col), F.col("cellvec")))
+    nearest = (
+        f"transform(slice(array_sort(transform({_centroid_literal_sql(centroids)}, (_c, _i) -> "
+        f"named_struct('d', 1.0D - {_cosine_sql(f'`{query_vec_col}`', '_c')}, 'cell', _i))), "
+        f"1, {int(nprobe)}), _p -> _p.cell)"
     )
-    wq = Window.partitionBy(query_id_col).orderBy(F.col("cdist").asc(), F.col("cell").asc())
-    probes = qcells.withColumn("rn", F.row_number().over(wq)).where(F.col("rn") <= nprobe).select(
-        query_id_col, query_vec_col, "cell"
-    )
-
-    sim = cosine_similarity(F.col(vec_col), F.col(query_vec_col))
+    q, i = f"`{query_id_col}`", f"`{id_col}`"
+    cos = _cosine_sql(f"c.`{vec_col}`", f"p.`{query_vec_col}`")
     # r13 rep grain: a persisted index carries `ids array<long>` per distinct
     # vector — the cosine runs once per (distinct vector × probe) and member
     # ids explode back in before the rank window (identical vectors score
     # identically, so the exploded (id, score) set matches the per-id pass).
-    # A per-id frame (ivf_build output / legacy callers) takes the old path.
-    rep_grain = "ids" in indexed_corpus.columns
-    scored = (
-        indexed_corpus.join(F.broadcast(probes), "cell")
-        .select(
-            F.col(query_id_col),
-            F.col("ids") if rep_grain else F.col(id_col),
-            F.round(F.greatest(F.lit(0.0), F.least(F.lit(1.0), sim)), ROUND_DP).alias("score"),
-        )
+    # A per-id frame (ivf_build output / legacy callers) scores its id column.
+    members = "ids" if "ids" in indexed_corpus.columns else i
+    member = "explode(ids)" if members == "ids" else i
+    # One SQL statement: the plan is analyzed once, not once per DataFrame
+    # step. The `cell < k` bound holds for every row; it is there because
+    # dynamic partition pruning only pushes the broadcast probe list into
+    # the index scan when the probe side carries a comparison filter.
+    return indexed_corpus.sparkSession.sql(
+        f"""
+        SELECT DISTINCT {q}, {i}, score, rank FROM (
+          SELECT *, dense_rank() OVER (
+            PARTITION BY {q} ORDER BY round(score, {ORDER_DP}) DESC, {i}) AS rank
+          FROM (SELECT {q}, {member} AS {i}, score FROM (
+            SELECT /*+ BROADCAST(p) */ p.{q}, c.{members},
+              round(greatest(0.0D, least(1.0D, {cos})), {ROUND_DP}) AS score
+            FROM {{corpus}} c JOIN (
+              SELECT * FROM (
+                SELECT {q}, `{query_vec_col}`, explode({nearest}) AS cell FROM {{queries}})
+              WHERE cell < {len(centroids)}) p ON c.cell = p.cell)))
+        WHERE rank <= {k}
+        """,
+        corpus=indexed_corpus,
+        queries=queries,
     )
-    if rep_grain:
-        scored = scored.select(query_id_col, F.explode("ids").alias(id_col), "score")
-    w = Window.partitionBy(query_id_col).orderBy(F.round(F.col("score"), ORDER_DP).desc(), F.col(id_col).asc())
-    out = scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-    return _expand_query_side(out, q_expand, query_id_col)
 
 
 def semantic_dedup(
@@ -1322,15 +1353,10 @@ def semantic_dedup(
         )
         rep_input = False
     clamp6 = lambda c: F.round(F.greatest(F.lit(-1.0), F.least(F.lit(1.0), c)), ROUND_DP)  # noqa: E731
-    # centroid matrix as ONE parsed SQL literal — the 16x64 F.lit() version
+    # centroid matrix as ONE folded constant — the 16x64 F.lit() version
     # cost ~1-2 s of py4j round-trips per query construction (the note-9
-    # build-cost lesson); the parsed tree is identical
-    cent = F.expr(
-        "array(" + ", ".join(
-            "array(" + ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in c) + ")"
-            for c in centroids
-        ) + ")"
-    )
+    # build-cost lesson)
+    cent = F.expr(_centroid_literal_sql(centroids))
     # per-vector work (N rows): centroid sim via the HOF fold is fine; the
     # norm is precomputed HERE so the within-cell pair join below runs the
     # unrolled dot_fixed codegen path (the N²-within-cell hot loop) instead
@@ -1580,49 +1606,19 @@ def ivf_quantized_topk(
     layout (FAISS IVF-SQ8): the coarse quantizer prunes the scan to nprobe
     cells (partition pruning when cells are the parquet partitions) and the
     in-cell re-rank reads 4×-smaller codes with asymmetric distance (exact
-    float query vs dequantized corpus). Identical probe logic to ivf_topk —
-    cell choice uses the EXACT query vector, so pruning quality is
-    unaffected by quantization; only the re-rank pays the (bounded) code
-    error. Output: (qid, id, score, rank), score = clamped cosine vs the
-    dequantized vector at the shared 6-dp rounding.
+    float query vs dequantized corpus). The probe is ivf_topk over the
+    dequantized vectors — cell choice uses the EXACT query vector, so
+    pruning quality is unaffected by quantization; only the re-rank pays
+    the (bounded) code error. Output: (qid, id, score, rank), score = clamped
+    cosine vs the dequantized vector at the shared 6-dp rounding.
     """
-    # the code column is renamed away from quantize's default "qvec" — the
-    # conventional QUERY vector column shares that name (ambiguous post-join)
-    # r13 rep grain: quantization + dequantized cosine run per distinct
-    # vector when the index carries `ids`; members explode in pre-rank.
-    # The query side collapses the same way (see ivf_topk).
-    queries, q_expand = _collapse_query_side(queries, query_id_col, query_vec_col)
-    rep_grain = "ids" in indexed_corpus.columns
-    qemb = quantize_embeddings(
-        indexed_corpus,
-        id_col="ids" if rep_grain else id_col,
-        vec_col=vec_col,
-        keep_cols=("cell",),
-    ).withColumnRenamed("qvec", "_codes")
-    cent = F.array(*[F.array(*[F.lit(x) for x in c]) for c in centroids])
-    qcells = (
-        queries.select(query_id_col, query_vec_col)
-        .select(query_id_col, query_vec_col, F.posexplode(cent).alias("cell", "cellvec"))
-        .withColumn(
-            "cdist", F.lit(1.0) - cosine_similarity(F.col(query_vec_col), F.col("cellvec"))
-        )
+    # rep grain: quantization + dequantization run per distinct vector when
+    # the index carries `ids`; ivf_topk explodes the members before ranking
+    member = "ids" if "ids" in indexed_corpus.columns else id_col
+    dequantized = quantize_embeddings(
+        indexed_corpus, id_col=member, vec_col=vec_col, keep_cols=("cell",)
+    ).select(member, "cell", dequantize_expr().alias(vec_col))
+    return ivf_topk(
+        queries, dequantized, centroids, k=k, nprobe=nprobe, query_id_col=query_id_col,
+        query_vec_col=query_vec_col, id_col=id_col, vec_col=vec_col,
     )
-    wq = Window.partitionBy(query_id_col).orderBy(F.col("cdist").asc(), F.col("cell").asc())
-    probes = (
-        qcells.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select(query_id_col, query_vec_col, "cell")
-    )
-    sim = cosine_similarity(dequantize_expr("_codes"), F.col(query_vec_col))
-    scored = qemb.join(F.broadcast(probes), "cell").select(
-        F.col(query_id_col),
-        F.col("ids") if rep_grain else F.col(id_col),
-        F.round(F.greatest(F.lit(0.0), F.least(F.lit(1.0), sim)), ROUND_DP).alias("score"),
-    )
-    if rep_grain:
-        scored = scored.select(query_id_col, F.explode("ids").alias(id_col), "score")
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.round(F.col("score"), ORDER_DP).desc(), F.col(id_col).asc()
-    )
-    out = scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-    return _expand_query_side(out, q_expand, query_id_col)

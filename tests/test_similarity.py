@@ -550,6 +550,92 @@ def test_ivf_sq8_probe_matches_float_probe_cells_and_recall(spark, sf_dir):
         assert min(ex[qid])[1] == min(qz[qid])[1] == qid
 
 
+def test_ivf_probes_replayed_and_shared_query_vectors(spark, sf_dir, tmp_path):
+    """Degenerate query frames on the persisted IVF index, for both IVF
+    probes: (a) every (qid, qvec) row replayed 3× returns exactly the rows
+    of the unreplayed frame, one per (qid, id); (b) distinct qids carrying
+    one vector each get the single-qid run's rows."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    path = str(tmp_path / "ivf")
+    S.ivf_index_write(emb, path, n_cells=8, id_col="vec_id")
+    indexed, cents = S.ivf_index_load(spark, path)
+    queries = emb.where(F.col("vec_id").isin(0, 50, 100)).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    replayed = queries.selectExpr("explode(sequence(1, 3)) AS copy", "qid", "qvec").drop("copy")
+    shared = queries.selectExpr(
+        "explode(sequence(0, 2)) AS copy", "qid", "qvec"
+    ).select((F.col("qid") * 100 + F.col("copy")).alias("qid"), "qvec")
+    for fn in (S.ivf_topk, S.ivf_quantized_topk):
+        run = lambda q: [  # noqa: E731
+            (r.qid, r.vec_id, r.score, r.rank)
+            for r in fn(q, indexed, cents, k=7, nprobe=3, id_col="vec_id").collect()
+        ]
+        single = sorted(run(queries))
+        assert len({q for q, *_ in single}) == 3 and len(single) == 21, fn.__name__
+        again = run(replayed)
+        assert sorted(again) == single, fn.__name__
+        assert len({(q, i) for q, i, *_ in again}) == len(again), fn.__name__
+        by_qid = {}
+        for q, i, s, r in run(shared):
+            by_qid.setdefault(q, []).append((q // 100, i, s, r))
+        assert set(by_qid) == {q * 100 + c for q, *_ in single for c in range(3)}
+        for qid, rows in by_qid.items():
+            assert sorted(rows) == [row for row in single if row[0] == qid // 100], qid
+
+
+def test_ivf_probe_plan_shape_and_cells_match_numpy_oracle(spark, tmp_path):
+    """The IVF probe picks each query's nprobe cells by ascending (1 − cos,
+    cell) against the centroids, checked against numpy for nprobe 1, 4 and
+    every cell. A zero query vector has cos 0 to every centroid (the
+    zero-norm guard), so all distances tie and the lowest cell ids win;
+    centroid 5 repeats centroid 2, so those two always tie too. The corpus
+    holds one row per cell (id = cell), so the returned ids are exactly the
+    probed cells. The executed plan of a one-query probe on a persisted
+    index has one broadcast (the probe list, which also prunes the cell
+    partitions), one hash exchange (the rank window) and no posexplode."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    n_cells, dim = 8, 16
+    cents = rng.normal(size=(n_cells, dim))
+    cents[5] = cents[2]
+    cents = [[float(x) for x in c] for c in cents]
+    corpus = spark.createDataFrame(
+        [(c, [float(x) for x in rng.normal(size=dim)], c) for c in range(n_cells)],
+        "id long, embedding array<double>, cell int",
+    )
+    qvecs = [rng.normal(size=dim) for _ in range(5)] + [np.zeros(dim), np.asarray(cents[2])]
+    queries = spark.createDataFrame(
+        [(q, [float(x) for x in v]) for q, v in enumerate(qvecs)], "qid long, qvec array<double>"
+    )
+    c_np = np.asarray(cents)
+    for nprobe in (1, 4, n_cells):
+        got = {}
+        for r in S.ivf_topk(queries, corpus, cents, k=n_cells, nprobe=nprobe).collect():
+            got.setdefault(r.qid, set()).add(r.id)
+        for q, v in enumerate(qvecs):
+            nq = np.linalg.norm(v)
+            cos = np.array([
+                0.0 if nq == 0 or np.linalg.norm(c) == 0
+                else float(np.dot(c, v)) / (np.linalg.norm(c) * nq)
+                for c in c_np
+            ])
+            want = {int(c) for c in np.lexsort((np.arange(n_cells), 1.0 - cos))[:nprobe]}
+            assert got[q] == want, (q, nprobe)
+        assert got[5] == set(range(nprobe))  # zero query: every d is 1
+
+    S.ivf_index_write(corpus.drop("cell"), str(tmp_path / "ivf"), n_cells=4)
+    indexed, icents = S.ivf_index_load(spark, str(tmp_path / "ivf"))
+    one = spark.createDataFrame([(0, cents[0])], "qid long, qvec array<double>")
+    probe = S.ivf_topk(one, indexed, icents, k=3, nprobe=2)
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert "posexplode" not in plan, plan
+    assert "dynamicpruningexpression(cell" in plan, plan
+
+
 def test_mllib_lsh_indexed_probe_plan_is_pruned_single_scan(spark, sf_dir, tmp_path):
     """r9 probe rewrite (VERDICT r8 #6): the plan must show the new shape —
     no corpus explode (Generate), no candidate distinct, and zero data
