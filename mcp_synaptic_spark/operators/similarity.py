@@ -137,8 +137,15 @@ def _collapse_query_side(
     dedup for replayed query rows. One qid bound to TWO DISTINCT vectors
     remains a caller contract violation — a query id names one vector, as
     in the brute-force rag.py baseline — and would merge both vectors'
-    ranked lists under that qid after expansion. `ivf_topk` does not
-    collapse: its per-query work costs less than the collapse's jobs."""
+    ranked lists under that qid after expansion.
+
+    `ivf_topk` does not collapse: without the collapse's five jobs it ran
+    faster on single queries and on duplicated batches alike. Measured on
+    a 4-core VM, 5 alternating process pairs, min of passes, median: the
+    `tools/scale_bench.py` arm `ann_ivf_probe` at 100× (400 qids carrying 4
+    distinct vectors, 447 cells, nprobe 8) 13.0 → 7.3 s; the sf0.1 board
+    queries `ann_ivf_topk` 2.00 → 1.06 s, `ann_ivf_sq8_topk` 2.01 → 1.11 s,
+    `ann_ivf_append` 2.70 → 1.69 s (every pair won)."""
     reps, _n, did = _collapse_to_reps(
         queries.select(query_id_col, query_vec_col).dropDuplicates(),
         query_id_col,
@@ -1199,21 +1206,15 @@ def ivf_index_append(
 
 
 def _cosine_sql(a: str, b: str) -> str:
-    """SQL text of `functions.vector.cosine_similarity(a, b)` as ONE HOF
-    fold: the dot product and both squared norms accumulate in one pass,
-    each as the same sequential fold from 0.0 that `dot` runs, so the value
-    is bit-identical. One parsed string replaces ~20 py4j Column calls per
-    cosine. Lambda variables start with `_` so they do not shadow columns."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (_x, _y) -> named_struct("
-        "'ab', CAST(_x AS DOUBLE) * CAST(_y AS DOUBLE), "
-        "'aa', CAST(_x AS DOUBLE) * CAST(_x AS DOUBLE), "
-        "'bb', CAST(_y AS DOUBLE) * CAST(_y AS DOUBLE))), "
-        "named_struct('ab', 0.0D, 'aa', 0.0D, 'bb', 0.0D), "
-        "(_s, _p) -> named_struct('ab', _s.ab + _p.ab, 'aa', _s.aa + _p.aa, 'bb', _s.bb + _p.bb), "
-        "_s -> CASE WHEN sqrt(_s.aa) = 0.0D OR sqrt(_s.bb) = 0.0D THEN 0.0D "
-        "ELSE _s.ab / (sqrt(_s.aa) * sqrt(_s.bb)) END)"
-    )
+    """SQL text of `functions.vector.cosine_similarity(a, b)` term for term,
+    so the two agree on every input, null included (a test pins them),
+    built as one parsed string instead of ~20 py4j Column calls. Lambda
+    variables start with `_` so they do not shadow columns."""
+    def dot(x: str, y: str) -> str:
+        return f"aggregate(zip_with({x}, {y}, (_x, _y) -> CAST(_x AS DOUBLE) * CAST(_y AS DOUBLE)), 0.0D, (_s, _v) -> _s + _v)"
+
+    na, nb = f"sqrt({dot(a, a)})", f"sqrt({dot(b, b)})"
+    return f"CASE WHEN {na} = 0.0D OR {nb} = 0.0D THEN 0.0D ELSE {dot(a, b)} / ({na} * {nb}) END"
 
 
 def ivf_topk(

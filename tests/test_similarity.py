@@ -592,8 +592,9 @@ def test_ivf_probe_plan_shape_and_cells_match_numpy_oracle(spark, tmp_path):
     centroid 5 repeats centroid 2, so those two always tie too. The corpus
     holds one row per cell (id = cell), so the returned ids are exactly the
     probed cells. The executed plan of a one-query probe on a persisted
-    index has one broadcast (the probe list, which also prunes the cell
-    partitions), one hash exchange (the rank window) and no posexplode."""
+    index, float and SQ8 alike, has one broadcast (the probe list, which
+    also prunes the cell partitions), one hash exchange (the rank window)
+    and no posexplode."""
     import numpy as np
 
     rng = np.random.default_rng(11)
@@ -628,12 +629,40 @@ def test_ivf_probe_plan_shape_and_cells_match_numpy_oracle(spark, tmp_path):
     S.ivf_index_write(corpus.drop("cell"), str(tmp_path / "ivf"), n_cells=4)
     indexed, icents = S.ivf_index_load(spark, str(tmp_path / "ivf"))
     one = spark.createDataFrame([(0, cents[0])], "qid long, qvec array<double>")
-    probe = S.ivf_topk(one, indexed, icents, k=3, nprobe=2)
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert plan.count("BroadcastExchange") == 1, plan
-    assert "posexplode" not in plan, plan
-    assert "dynamicpruningexpression(cell" in plan, plan
+    for fn in (S.ivf_topk, S.ivf_quantized_topk):
+        probe = fn(one, indexed, icents, k=3, nprobe=2)
+        plan = probe._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange hashpartitioning") == 1, (fn.__name__, plan)
+        assert plan.count("BroadcastExchange") == 1, (fn.__name__, plan)
+        assert "posexplode" not in plan, (fn.__name__, plan)
+        assert "dynamicpruningexpression(cell" in plan, (fn.__name__, plan)
+
+
+def test_ivf_cosine_sql_equals_cosine_similarity(spark):
+    """The IVF probe's SQL-text cosine returns exactly what
+    `functions.vector.cosine_similarity` returns, null included: random
+    float and double vectors, duplicated vectors, zero vectors on either
+    side, a zero vector against a longer or shorter one, and null
+    elements."""
+    import numpy as np
+
+    from mcp_synaptic_spark.functions.vector import cosine_similarity
+
+    rng = np.random.default_rng(5)
+    rand = lambda n: [float(x) for x in rng.normal(size=n)]  # noqa: E731
+    pairs = [(rand(64), rand(64)) for _ in range(40)]
+    pairs += [(v, v) for v in (rand(64), rand(3), [1e-300, 2e-300])]
+    pairs += [([0.0] * 4, rand(4)), (rand(4), [0.0] * 4), ([0.0] * 4, [0.0] * 4)]
+    pairs += [([0.0] * 2, rand(4)), (rand(4), [0.0] * 2), (rand(2), rand(4))]
+    pairs += [([1.0, None], [1.0, 2.0]), ([0.0, None], [0.0, 0.0]), ([], [])]
+    for dtype in ("float", "double"):
+        df = spark.createDataFrame(pairs, f"a array<{dtype}>, b array<{dtype}>")
+        rows = df.select(
+            F.expr(S._cosine_sql("a", "b")).alias("sql"),
+            cosine_similarity(F.col("a"), F.col("b")).alias("ref"),
+        ).collect()
+        assert [r.sql for r in rows] == [r.ref for r in rows], dtype
+        assert sum(r.ref is None for r in rows) >= 2, dtype  # the null cases ran
 
 
 def test_mllib_lsh_indexed_probe_plan_is_pruned_single_scan(spark, sf_dir, tmp_path):
