@@ -55,17 +55,32 @@ O(versions). Readers of cleaned versions fall back to that version's
 checkpoint when one exists; older snapshots are gone — the documented
 log-retention trade every lakehouse makes. Versions with UNdrained events
 are never cleaned (exactly-once delivery survives compaction).
+
+Per-call cost: a handle does each call's discovery work once (a Delta
+snapshot fixes a version's files and schema the same way). ``read()``
+memoizes its frame keyed by the live set's directory names — never the
+version: a table re-created at the same path has new uuid dirs — so a
+repeat read of an unchanged live set lists no files and runs no job. Every
+parquet read takes the schema the handle recorded when it wrote or first
+inferred the directory, so only a directory written through another handle
+costs an inference job; the schema never enters the commit JSON. ``upsert``
+persists the caller's batch and evaluates it once (MERGE's materialized
+source), not once each for the lo/hi agg, the routing groupBy and the write.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
+import functools
 import json
 import os
+import shutil
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampNTZType, TimestampType
+from pyspark.sql.types import StructType, TimestampNTZType, TimestampType
 
 _LOG_DIR = "_txn"
 
@@ -117,6 +132,9 @@ class TxnTable:
         self.key_col = key_col
         self.stat_cols = tuple(stat_cols)
         self.checkpoint_interval = checkpoint_interval
+        #: (live dir names, frame) of the last read(); parquet schema per dir
+        self._snap: tuple[tuple[str, ...], DataFrame] | None = None
+        self._schemas: dict[str, StructType] = {}
 
     # ---------------------------------------------------------------- log
 
@@ -142,6 +160,13 @@ class TxnTable:
         except (FileNotFoundError, ValueError, KeyError, json.JSONDecodeError):
             return -1
 
+    def _live(self, version: int) -> list[dict]:
+        """Live entries of ``version``; the schema record keeps only these."""
+        live = self._read_commit(version)["live"]
+        names = {d["dir"] for d in live}
+        self._schemas = {n: s for n, s in self._schemas.items() if n in names}
+        return live
+
     def _read_commit(self, version: int) -> dict:
         """Commit content for ``version`` — from its commit file, or from its
         checkpoint when clean_log() has truncated the commit away. A version
@@ -160,25 +185,15 @@ class TxnTable:
                 ) from None
 
     def _try_publish(self, version: int, commit: dict) -> bool:
-        """Atomically publish ``commit`` as ``version``. True on win, False
-        if a concurrent writer owns this version. The temp file is fully
-        written and fsynced BEFORE the link, so a reader can never observe a
-        partial commit. The winner also writes the version's checkpoint when
-        the interval divides it — checkpointing is single-writer by
-        construction (only the publish winner does it), so no second
-        put-if-absent dance is needed."""
+        """Atomically publish ``commit`` as ``version`` (see _link_once).
+        True on win, False if a concurrent writer owns this version. The
+        winner also writes the version's checkpoint when the interval
+        divides it — checkpointing is single-writer by construction (only
+        the publish winner does it), so no second put-if-absent dance is
+        needed."""
         os.makedirs(os.path.join(self.path, _LOG_DIR), exist_ok=True)
-        tmp = os.path.join(self.path, _LOG_DIR, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(commit, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, _commit_path(self.path, version))
-        except FileExistsError:
+        if not _link_once(_commit_path(self.path, version), json.dumps(commit)):
             return False
-        finally:
-            os.unlink(tmp)
         if version > 0 and version % self.checkpoint_interval == 0:
             self._write_checkpoint(version, commit)
         return True
@@ -189,17 +204,7 @@ class TxnTable:
         (idempotent — EEXIST means an earlier attempt finished), the hint
         through write-then-os.replace (atomic on POSIX; a stale hint is
         harmless — version() max-es it with the listing)."""
-        tmp = os.path.join(self.path, _LOG_DIR, f".ckpt-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(commit, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, _checkpoint_path(self.path, version))
-        except FileExistsError:
-            pass
-        finally:
-            os.unlink(tmp)
+        _link_once(_checkpoint_path(self.path, version), json.dumps(commit))
         hint_tmp = os.path.join(self.path, _LOG_DIR, f".hint-{uuid.uuid4().hex}.json")
         with open(hint_tmp, "w") as f:
             json.dump({"version": version}, f)
@@ -237,19 +242,22 @@ class TxnTable:
     # --------------------------------------------------------------- data
 
     def _write_data_dir(self, df: DataFrame) -> tuple[str, dict]:
-        """Write one immutable data directory; returns (dir_name, stats).
-        Stats carry the key range for upsert pruning (None when the range
-        isn't driver-comparable, e.g. non-ASCII strings — see _overlaps) and
-        a min/max zone map per configured stat column — all from ONE agg
-        pass over the freshly-written files."""
+        """Write one immutable data directory; returns (dir_name, stats)
+        from one agg pass over the freshly-written files (see _dir_stats)."""
         name = f"d-{uuid.uuid4().hex}"
         df.write.parquet(os.path.join(self.path, name))
-        written = self.spark.read.parquet(os.path.join(self.path, name))
-        aggs = [
-            F.min(self.key_col).alias("lo"),
-            F.max(self.key_col).alias("hi"),
-            F.count("*").alias("n"),
-        ]
+        self._schemas[name] = df.schema
+        [(_, stats)] = self._dir_stats(self._read_dirs([name]))
+        return name, stats
+
+    def _dir_stats(self, written: DataFrame, *group: str) -> list[tuple[Row, dict]]:
+        """Commit stats of freshly-written files, one agg pass per ``group``
+        value (one row when ungrouped): the key range for upsert pruning
+        (None when the range isn't driver-comparable, e.g. non-ASCII
+        strings — see _overlaps), the row count, and a min/max zone map per
+        configured stat column. Returns (agg row, stats) pairs."""
+        key = F.col(self.key_col)
+        aggs = [F.min(key).alias("lo"), F.max(key).alias("hi"), F.count("*").alias("n")]
         for c in self.stat_cols:
             # Timestamp stats are recorded as EPOCH MICROS, not datetimes:
             # driver-side collection converts TimestampType through the
@@ -264,19 +272,17 @@ class TxnTable:
                 col = F.unix_micros(col.cast("timestamp"))
             elif isinstance(dt, TimestampType):
                 col = F.unix_micros(col)
-            aggs.append(F.min(col).alias(f"_lo_{c}"))
-            aggs.append(F.max(col).alias(f"_hi_{c}"))
-        row = written.agg(*aggs).first()
-        stats = {"lo": _portable(row["lo"]), "hi": _portable(row["hi"]), "n": row["n"]}
-        if self.stat_cols:
-            stats["stats"] = {
-                c: {
-                    "lo": _portable_stat(row[f"_lo_{c}"]),
-                    "hi": _portable_stat(row[f"_hi_{c}"]),
+            aggs += [F.min(col).alias(f"_lo_{c}"), F.max(col).alias(f"_hi_{c}")]
+        out = []
+        for row in written.groupBy(*group).agg(*aggs).collect():
+            stats = {"lo": _portable(row["lo"]), "hi": _portable(row["hi"]), "n": row["n"]}
+            if self.stat_cols:
+                stats["stats"] = {
+                    c: {"lo": _portable_stat(row[f"_lo_{c}"]), "hi": _portable_stat(row[f"_hi_{c}"])}
+                    for c in self.stat_cols
                 }
-                for c in self.stat_cols
-            }
-        return name, stats
+            out.append((row, stats))
+        return out
 
     def _write_range_dirs(self, df: DataFrame, n_dirs: int) -> list[dict]:
         """Write ``df`` as ``n_dirs`` RANGE-PARTITIONED data directories —
@@ -291,11 +297,9 @@ class TxnTable:
         One shuffle (repartitionByRange on the key — AQE never coalesces an
         explicit partition count, so spark_partition_id() is the stable
         range ordinal), one write, and ONE read-back agg grouped by ``_rb``
-        for every subdirectory's stats. The ``_rb`` column lives only in
-        the directory LAYOUT (partitionBy), never in the parquet files, so
-        reading a leaf subdir directly yields the plain table schema.
-        Returns the commit ``live`` entries (possibly fewer than n_dirs if
-        range partitions came out empty)."""
+        for every subdirectory's stats; reading a leaf subdir directly yields
+        the plain table schema. Returns the commit ``live`` entries (possibly
+        fewer than n_dirs if range partitions came out empty)."""
         tagged = df.repartitionByRange(n_dirs, F.col(self.key_col)).withColumn(
             "_rb", F.spark_partition_id()
         )
@@ -312,39 +316,18 @@ class TxnTable:
         if not any(e.startswith("_rb=") for e in os.listdir(container)):
             # empty frame: partitionBy produced no range subdirs — fall back
             # to one flat (schema-bearing) dir so read() can still bind
-            import shutil
-
             shutil.rmtree(container, ignore_errors=True)
             flat_name, flat_stats = self._write_data_dir(untagged)
             return [{"dir": flat_name, **flat_stats}]
-        written = self.spark.read.parquet(container)  # _rb inferred from layout
-        aggs = [
-            F.min(self.key_col).alias("lo"),
-            F.max(self.key_col).alias("hi"),
-            F.count("*").alias("n"),
-        ]
-        for c in self.stat_cols:
-            col = F.col(c)
-            dt = written.schema[c].dataType
-            if isinstance(dt, TimestampNTZType):
-                col = F.unix_micros(col.cast("timestamp"))
-            elif isinstance(dt, TimestampType):
-                col = F.unix_micros(col)
-            aggs.append(F.min(col).alias(f"_lo_{c}"))
-            aggs.append(F.max(col).alias(f"_hi_{c}"))
-        rows = written.groupBy("_rb").agg(*aggs).collect()
+        # the files hold every column but _rb; the layout holds _rb
+        data = StructType([f for f in tagged.schema.fields if f.name != "_rb"])
+        written = self.spark.read.schema(
+            StructType(data.fields + [tagged.schema["_rb"]])
+        ).parquet(container)
         entries = []
-        for row in sorted(rows, key=lambda r: r["_rb"]):
-            stats = {"lo": _portable(row["lo"]), "hi": _portable(row["hi"]), "n": row["n"]}
-            if self.stat_cols:
-                stats["stats"] = {
-                    c: {
-                        "lo": _portable_stat(row[f"_lo_{c}"]),
-                        "hi": _portable_stat(row[f"_hi_{c}"]),
-                    }
-                    for c in self.stat_cols
-                }
+        for row, stats in sorted(self._dir_stats(written, "_rb"), key=lambda rs: rs[0]["_rb"]):
             entries.append({"dir": f"{name}/_rb={row['_rb']}", **stats})
+            self._schemas[entries[-1]["dir"]] = data
         return entries
 
     @staticmethod
@@ -370,15 +353,38 @@ class TxnTable:
         return max(1, min(256, (n_rows + _TARGET_DIR_ROWS - 1) // _TARGET_DIR_ROWS))
 
     def _read_dirs(self, dirs: list[str]) -> DataFrame:
-        return self.spark.read.parquet(*[os.path.join(self.path, d) for d in dirs])
+        """Read data directories under the first one's parquet schema. Only
+        a directory new to this handle (written through another one) costs
+        Spark's footer-inference job, whose result is then recorded."""
+        paths = [os.path.join(self.path, d) for d in dirs]
+        schema = self._schemas.get(dirs[0])
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(*paths)
+        df = self.spark.read.parquet(*paths)
+        for d in dirs:
+            self._schemas.setdefault(d, df.schema)
+        return df
+
+    def _read_each(self, tags: dict[str, int], col: str) -> DataFrame:
+        """Union of the ``tags`` directories, each read alone and tagged in ``col``."""
+        parts = [self._read_dirs([d]).withColumn(col, F.lit(x)) for d, x in tags.items()]
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def read(self, version: int | None = None) -> DataFrame:
+        """Snapshot of ``version`` (default: latest). An unchanged live set
+        returns the previous call's frame: same files, no listing, no job."""
         v = self.version() if version is None else version
         if v < 0:
             raise FileNotFoundError(f"no committed version at {self.path}")
-        live = self._read_commit(v)["live"]
+        live = self._live(v)
         if not live:
             raise ValueError(f"version {v} of {self.path} has no data directories")
+        names, snap = tuple(d["dir"] for d in live), self._snap
+        if snap is None or snap[0] != names:
+            snap = self._snap = (names, self._resolve(live))
+        return snap[1]
+
+    def _resolve(self, live: list[dict]) -> DataFrame:
         delta_dirs = [d for d in live if d.get("delta")]
         if not delta_dirs:
             return self._read_dirs([d["dir"] for d in live])
@@ -394,12 +400,7 @@ class TxnTable:
         # only when the accumulated deltas are too big to broadcast —
         # which is the signal to compact() anyway.
         cow = self._read_dirs([d["dir"] for d in live if not d.get("delta")])
-        dx = None
-        for d in delta_dirs:
-            part = self._read_dirs([d["dir"]]).withColumn(
-                "_seq", F.lit(int(d.get("v", 0)))
-            )
-            dx = part if dx is None else dx.unionByName(part)
+        dx = self._read_each({d["dir"]: int(d.get("v", 0)) for d in delta_dirs}, "_seq")
         w = Window.partitionBy(self.key_col).orderBy(F.col("_seq").desc())
         latest = (
             dx.withColumn("_rn", F.row_number().over(w))
@@ -409,12 +410,8 @@ class TxnTable:
         n_delta = sum(int(d.get("n", 0)) for d in delta_dirs)
         if n_delta <= _MOR_BROADCAST_MAX_KEYS:
             dkeys = dx.select(self.key_col).distinct()
-            return cow.join(
-                F.broadcast(dkeys), self.key_col, "left_anti"
-            ).unionByName(latest)
-        base = cow.withColumn("_seq", F.lit(-1)).unionByName(
-            dx
-        )
+            return cow.join(F.broadcast(dkeys), self.key_col, "left_anti").unionByName(latest)
+        base = cow.withColumn("_seq", F.lit(-1)).unionByName(dx)
         return (
             base.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
@@ -491,6 +488,14 @@ class TxnTable:
 
         if mode not in ("cow", "mor"):
             raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
+        if updates.storageLevel == StorageLevel.NONE:
+            # evaluate the batch once (MERGE's materialized source): the
+            # lo/hi agg fills the cache the routing groupBy and write read
+            updates.persist()
+            try:
+                return self.upsert(updates, mode=mode)
+            finally:
+                updates.unpersist()
         u_row = updates.agg(
             F.min(self.key_col).alias("lo"), F.max(self.key_col).alias("hi")
         ).first()
@@ -499,7 +504,7 @@ class TxnTable:
             return self.version()  # empty update batch: nothing to commit
         while True:
             v = self.version()
-            live = self._read_commit(v)["live"]
+            live = self._live(v)
             if mode == "mor":
                 fresh = updates.where(
                     F.col(self.key_col).isNotNull()
@@ -561,12 +566,7 @@ class TxnTable:
                 carry = [d for d in live if d not in hit]
                 entries = []
                 if hit_rbs:
-                    base = None
-                    for i in hit_rbs:
-                        part = self._read_dirs([ordered[i]["dir"]]).withColumn(
-                            "_rb", F.lit(i)
-                        )
-                        base = part if base is None else base.unionByName(part)
+                    base = self._read_each({ordered[i]["dir"]: i for i in hit_rbs}, "_rb")
                     merged = upsert_by_key(
                         base,
                         tagged_updates.where(F.col("_rb").isin(hit_rbs)).drop("_inr"),
@@ -624,15 +624,13 @@ class TxnTable:
         matches it, so it would re-insert on every call). No directory is rewritten: the insert is
         a pure live-set append, so concurrent put_if_absent writers never
         invalidate each other's data files, only force a re-filter."""
-        import shutil
-
         while True:
             v = self.version()
             if v < 0:
                 raise FileNotFoundError(
                     f"no committed version at {self.path} — create() the table first"
                 )
-            live = self._read_commit(v)["live"]
+            live = self._live(v)
             existing = self._read_dirs([d["dir"] for d in live])
             # NULL keys are rejected outright: the left_anti existence check
             # can never match a NULL (SQL null equality), so a NULL-key row
@@ -686,7 +684,7 @@ class TxnTable:
         cond = F.expr(condition) if isinstance(condition, str) else condition
         while True:
             v = self.version()
-            live = self._read_commit(v)["live"]
+            live = self._live(v)
             if any(d.get("delta") for d in live):
                 # deleting from shadowed copies would RESURRECT older
                 # values (dropping the newest copy of a key re-exposes the
@@ -715,10 +713,7 @@ class TxnTable:
                 # dir (note 136); empty survivors simply drop out of the
                 # container, and the all-empty case falls back to one flat
                 # schema-bearing dir inside _write_tagged_dirs
-                base = None
-                for i, d in enumerate(hit):
-                    part = self._read_dirs([d["dir"]]).withColumn("_rb", F.lit(i))
-                    base = part if base is None else base.unionByName(part)
+                base = self._read_each({d["dir"]: i for i, d in enumerate(hit)}, "_rb")
                 remaining = base.where(~cond)
                 entries = self._write_tagged_dirs(
                     remaining.repartition(len(hit), F.col("_rb")),
@@ -744,9 +739,10 @@ class TxnTable:
                 return v + 1, n_deleted
 
     def compact(self) -> int:
-        """Merge all live data directories into one — the OPTIMIZE step of
-        the lifecycle. Every upsert adds a directory, and at scale the
-        accumulation IS the small-file problem: each write's range-stat scan
+        """Rewrite the live data directories as the ``_auto_n_dirs`` range
+        layout (one directory under ~1M rows) with merge-on-read deltas
+        resolved — the OPTIMIZE step of the lifecycle. Every upsert adds a
+        directory, and at scale the accumulation IS the small-file problem: each write's range-stat scan
         and each read's file listing grow with dir count. Compaction is an
         ordinary commit (op="compact", same optimistic publish), so it
         coexists safely with concurrent writers — a conflict just retries —
@@ -754,12 +750,12 @@ class TxnTable:
         vacuum(keep_from_version=...) reclaims them. No-op at ≤1 live dir.
 
         Production note: Delta's OPTIMIZE bin-packs to a target file size
-        instead of one-dir-total and can run incrementally; same commit
+        instead of splitting by row count and can run incrementally; same commit
         mechanics, finer packing policy.
         """
         while True:
             v = self.version()
-            live = self._read_commit(v)["live"]
+            live = self._live(v)
             if len(live) <= 1 and not any(d.get("delta") for d in live):
                 return v
             # read(v) resolves merge-on-read deltas (per-key latest by
@@ -793,8 +789,6 @@ class TxnTable:
         Production note: Delta gates this on a retention window (time since
         supersession) rather than a version floor; the reclamation logic is
         the same."""
-        import shutil
-
         latest = self.version()
         if latest < 0:
             return []
@@ -828,6 +822,26 @@ class TxnTable:
         return removed
 
 
+def _link_once(dst: str, text: str) -> bool:
+    """Create ``dst`` holding ``text`` unless it exists (False then): a
+    fully-written, fsynced temp file is os.link-ed into place, so a reader
+    never observes a partial file and of racing writers exactly one wins.
+    The temp name is unique per call — a SHARED one would let one writer's
+    unlink yank the file from under another's link."""
+    tmp = os.path.join(os.path.dirname(dst), f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, dst)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
 def _portable(value) -> str | None:
     """Key-range stat safe to compare in the driver: ASCII strings compare
     identically in Python and the JVM; anything else → None (assume
@@ -842,8 +856,6 @@ def _portable_stat(value):
     numbers as-is, datetimes/dates as ISO strings (lexicographic order ==
     temporal order for a uniform UTC layout), ASCII strings as-is; anything
     else → None (the skipper must then refuse to prune)."""
-    import datetime as _dt
-
     if isinstance(value, bool):
         return None
     if isinstance(value, (int, float)):
@@ -871,8 +883,6 @@ def expired_skipper(col: str, now):
     writing driver's local timezone, and comparing them against a UTC now
     is the mixed-timezone bug this function refuses to reintroduce; the
     directory simply gets scanned (correctness over pruning)."""
-    import datetime as _dt
-
     if isinstance(now, _dt.datetime):
         aware = now if now.tzinfo is not None else now.replace(tzinfo=_dt.timezone.utc)
         now_us = int(aware.timestamp() * 1_000_000)
@@ -966,17 +976,5 @@ def drain_events(table: TxnTable, events_dir: str, *, up_to_version: int | None 
                             # identical, so exactly-once delivery holds; skip
                             pass
             drained += 1
-        # unique tmp per caller (like _try_publish): a SHARED tmp path would
-        # let one drainer's unlink yank the file from under another's link
-        tmp = f"{marker}.{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            f.write("")
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, marker)
-        except FileExistsError:
-            pass
-        finally:
-            os.unlink(tmp)
+        _link_once(marker, "")  # a concurrent drainer may have sealed it
     return drained

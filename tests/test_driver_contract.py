@@ -7,9 +7,11 @@ round's verdict."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry
 
@@ -88,7 +90,7 @@ def test_no_query_left_ungraded_behind_the_window():
 
     names = list(entry.queries())
     window = set(names[:50])
-    with open("/root/repo/EVIDENCE.json") as f:
+    with open(os.path.join(REPO, "EVIDENCE.json")) as f:
         ledger = json.load(f)
     pending = [q for q, row in ledger.items() if row.get("window_round") is None]
     # The r8 escape hatch, used once per round at most: queries born AFTER
@@ -112,7 +114,7 @@ def test_bench_sets_pin_is_consistent():
     write-path skip list."""
     import json
 
-    with open("/root/repo/bench_sets.json") as f:
+    with open(os.path.join(REPO, "bench_sets.json")) as f:
         sets = json.load(f)
     qs = set(entry.queries())
     comparable = set(sets["comparable_queries"])
@@ -166,16 +168,15 @@ def test_evidence_stamps_match_actual_driver_grades():
     The current round's stamp is exempt only until its correctness file
     lands; the next round's run of this test retro-checks it."""
     import json
-    import os
 
-    with open("/root/repo/EVIDENCE.json") as f:
+    with open(os.path.join(REPO, "EVIDENCE.json")) as f:
         ledger = json.load(f)
     phantom = []
     for q, row in ledger.items():
         r = row.get("window_round")
         if r is None:
             continue
-        path = f"/root/repo/CORRECTNESS_r{r:02d}.json"
+        path = os.path.join(REPO, f"CORRECTNESS_r{r:02d}.json")
         if not os.path.exists(path):
             continue  # the in-flight round: driver hasn't graded yet
         with open(path) as f:

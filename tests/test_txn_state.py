@@ -7,8 +7,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
 from datetime import datetime, timezone
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from mcp_synaptic_spark.state.txn import TxnTable, drain_events
@@ -767,3 +770,84 @@ def test_mor_read_uses_broadcast_fast_path(spark, tmp_path):
     t.upsert(_mkrows(spark, ["k1"], payload="m"), mode="mor")
     plan = t.read()._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+
+
+def _jobs_of(spark, fn):
+    """fn()'s result and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"txn-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are posted async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_reuses_snapshot_frame_until_live_set_changes(spark, tmp_path):
+    """read() memoizes its frame by the live set's directory names: a repeat
+    read of an unchanged table is the same frame and launches no job, and a
+    keyed exists over a fresh read runs one job (no schema inference, also
+    right after this handle's own commit). Another handle's commit, a
+    re-created table at the same path and an old version all read fresh."""
+    from mcp_synaptic_spark.operators.memory import memory_exists
+
+    path = str(tmp_path / "t")
+    now = F.lit(datetime(2026, 1, 1))
+    t = TxnTable.create(spark, path, _mkrows(spark, ["a", "b", "c"]))
+    first = t.read()
+    second, n = _jobs_of(spark, t.read)
+    assert second is first and n == 0
+    t.upsert(_mkrows(spark, ["b"], payload="u"))
+    rows, n = _jobs_of(spark, lambda: memory_exists(t.read(), "b", now).collect())
+    assert [r.key for r in rows] == ["b"] and n == 1
+
+    TxnTable(spark, path).upsert(_mkrows(spark, ["d"], payload="other"))
+    got = {r.key: r.payload for r in t.read().collect()}
+    assert got == {"a": "p", "b": "u", "c": "p", "d": "other"}
+    assert {r.key: r.payload for r in t.read(0).collect()} == {"a": "p", "b": "p", "c": "p"}
+
+    t.upsert(_mkrows(spark, ["a"], payload="m"), mode="mor")
+    mor, _ = _jobs_of(spark, t.read)
+    again, n = _jobs_of(spark, t.read)
+    assert again is mor and n == 0
+    assert {r.key: r.payload for r in mor.collect()}["a"] == "m"
+
+    # same path, same version number, different rows and schema
+    shutil.rmtree(path)
+    TxnTable.create(spark, path, spark.createDataFrame([("z", 7)], "key string, extra int"))
+    assert [tuple(r) for r in t.read().collect()] == [("z", 7)]
+
+
+def test_upsert_evaluates_its_batch_once(spark, tmp_path):
+    """upsert persists the caller's batch, so its plan runs once per call —
+    not once each for the lo/hi agg, the routing groupBy and the write —
+    on the range layout, a single-directory table and merge-on-read. A
+    batch the caller cached stays cached; upsert's own cache is dropped."""
+    evals = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(key):
+        evals.add(1)
+        return key
+
+    def one_row(key):
+        return _mkrows(spark, [key], payload="u").withColumn("key", counted("key"))
+
+    ranged = TxnTable.create(
+        spark, str(tmp_path / "r"), _mkrows(spark, [f"k{i:04d}" for i in range(400)]), n_dirs=4
+    )
+    flat = TxnTable.create(spark, str(tmp_path / "f"), _mkrows(spark, ["a", "b"]))
+    for table, key, mode in ((ranged, "k0001", "cow"), (flat, "b", "cow"), (flat, "c", "mor")):
+        batch = one_row(key)
+        before = evals.value
+        table.upsert(batch, mode=mode)
+        assert evals.value - before == 1, (key, mode)
+        assert batch.storageLevel == StorageLevel.NONE
+        assert {r.key: r.payload for r in table.read().collect()}[key] == "u"
+
+    cached = one_row("e").cache()
+    flat.upsert(cached)
+    assert cached.storageLevel != StorageLevel.NONE
+    cached.unpersist()
