@@ -658,8 +658,8 @@ def _q_memory_upsert_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     update batch as memory_upsert, but executed as real table commits —
     create (version 0), one optimistic upsert commit (version 1), read the
     committed state back from disk. Graded against the SAME pure-transform
-    oracle (_ORACLE_MEMORY_UPSERT): the commit protocol, copy-on-write
-    rewrite, and parquet round-trip may not change a single row. The table
+    oracle (_ORACLE_MEMORY_UPSERT): the commit protocol, the delta and its
+    key-set resolution, and parquet round-trip may not change a single row. The table
     root is recreated per call (deterministic, idempotent; temp-dir ETL —
     bench.py skips write-path queries, see its SKIP note)."""
     import shutil
@@ -685,16 +685,18 @@ def _q_memory_upsert_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_memory_upsert_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """memory_upsert through the r15 MERGE-ON-READ tier (state/txn.py):
-    create forces the range-partitioned layout (n_dirs=4), then TWO
-    mode="mor" upserts land as delta generations — the first updates every
-    key ending in 7, the second SHADOWS the subset ending in 77 with newer
-    data — and the returned frame is the resolved read: base rows screened
-    against the broadcast delta key set, per-key latest delta by commit
-    sequence. A hash-green row certifies commit-order LWW across
-    generations and the O(delta) resolution path end-to-end (the oracle is
-    the pure prio-windowed transform — no row may differ). Table root
-    recreated per call (temp-dir ETL; bench.py skips write-path queries)."""
+    """memory_upsert through two merge-on-read generations (state/txn.py):
+    TWO upserts land as deltas — the first updates every key ending in 7,
+    the second SHADOWS the subset ending in 77 with newer data — and the
+    returned frame is the resolved read: base rows screened by the delta
+    key-set literal, each delta row kept only from its key's latest delta
+    (the 77 keys repeat, so the read matches rows to their directory; from
+    sf0.01 up the second batch passes the 1,000-key bound and its commit
+    compacts, writing that resolved read as the new base). A hash-green
+    row certifies commit-order LWW across generations end-to-end
+    (the oracle is the pure prio-windowed transform — no row may differ).
+    Table root recreated per call (temp-dir ETL; bench.py skips write-path
+    queries)."""
     import shutil
     import tempfile
 
@@ -715,9 +717,9 @@ def _q_memory_upsert_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.gettempdir(), "spark_graft_txn_mor_" + sf_dir.strip("/").replace("/", "_")
     )
     shutil.rmtree(path, ignore_errors=True)
-    t = TxnTable.create(spark, path, mem, n_dirs=4)
-    t.upsert(u1, mode="mor")
-    t.upsert(u2, mode="mor")
+    t = TxnTable.create(spark, path, mem)
+    t.upsert(u1)
+    t.upsert(u2)
     return t.read().where(F.col("key").endswith("7") | F.col("key").endswith("1")).select(
         "key", "data", "updated_at"
     )
@@ -773,11 +775,12 @@ def _q_memory_upsert_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = TxnTable.create(spark, path, mem, checkpoint_interval=1)
     t.upsert(updates)        # v1 (+ checkpoint 1)
     # the same batch again: last-writer-wins over identical rows is a state
-    # no-op but advances the log — v2 (+ checkpoint 2). (compact() would be
-    # a no-op commit-wise here: v1 already merged everything into one dir.)
+    # no-op but advances the log — v2 (+ checkpoint 2). Both upserts are
+    # deltas; a batch past the compaction threshold (10k keys, sf0.1 and
+    # up) also makes the second one compact them into one base as v3.
     t.upsert(updates)
-    cleaned = t.clean_log()  # truncates commits 0..1; reads serve v2
-    assert cleaned == [0, 1], cleaned
+    cleaned = t.clean_log()  # truncates every commit before the latest
+    assert cleaned == list(range(t.version())), cleaned
     t.vacuum(keep_from_version=t.version())
     return t.read().where(F.col("key").endswith("7") | F.col("key").endswith("1")).select(
         "key", "data", "updated_at"
@@ -3142,9 +3145,10 @@ _ORACLE_DEDUP_SIMHASH_CAPPED = _mk_oracle_dedup_simhash_capped()
 
 def _q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup with the r8 auto-switch default: exact N² below
-    AUTO_EXACT_MAX_PAIRS candidate pairs (all graded SFs — bit-exact vs the
-    N² oracle), the measured LSH twin above it (sf0.1 bench and the 10×
-    scale runs). tests/test_dedup.py pins the switch-over."""
+    AUTO_EXACT_MAX_PAIRS candidate pairs (all graded SFs and the sf0.1
+    bench, whose 2,000 vectors make 4M pairs — bit-exact vs the N² oracle),
+    the measured LSH twin above it (the 10× scale runs). tests/test_dedup.py
+    pins the switch-over."""
     return D.embedding_near_dup_pairs(_t(spark, sf_dir, "embeddings"), threshold=0.45)
 
 

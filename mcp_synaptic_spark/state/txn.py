@@ -9,15 +9,14 @@ concurrency / Iceberg's atomic metadata swap — no Delta jars exist in this
 environment, so the protocol is implemented directly on POSIX):
 
 - Data lives in immutable uuid-named directories of parquet part files;
-  a table VERSION is a JSON commit file listing its live directories.
+  a table VERSION is a JSON commit file listing its live entries.
 - Commits are numbered ``_txn/NNNNNN.json`` and published with an atomic
   ``os.link`` of a fully-written temp file — creation either wins or raises
   EEXIST, so exactly one writer owns each version (the same
   put-if-absent primitive Delta requires of its log store).
-- Writers are optimistic: read latest version → write NEW data dirs
-  (copy-on-write; unaffected dirs carry over untouched) → try to publish
-  version+1 → on conflict, recompute against the winner's state and retry.
-  Lost updates are impossible; writers never block readers.
+- Writers are optimistic: read latest version → write NEW data dirs →
+  try to publish version+1 → on conflict, recompute against the winner's
+  state and retry. Lost updates are impossible; writers never block readers.
 - Readers are snapshot-isolated for free: a version's file set is immutable,
   so a reader holding version N is unaffected by later commits (until
   vacuum drops superseded dirs).
@@ -25,23 +24,23 @@ environment, so the protocol is implemented directly on POSIX):
   ``vacuum()`` removes anything no commit references. No rename dance, no
   recovery step on the read path.
 
-Scale notes (100 TB): tables are RANGE-PARTITIONED into ~1M-row key-range
-directories at create()/compact() (r15, note 136), and upsert prunes the
-rewrite set by exact key OWNERSHIP — updates route to the directory whose
-recorded range holds them and only directories with a non-empty routed slice
-rewrite, each as its own slice, so the layout survives and keeps pruning
-(min/max-interval pruning alone collapses under scattered batches). For
-write-heavy workloads whose batches scatter across every range — where even
-exact CoW routing rewrites most of the table — ``upsert(mode="mor")`` is
-merge-on-read: the batch lands as one O(batch) delta directory and ``read()``
-resolves last-writer-wins through a per-key window over commit sequence
-numbers (the Hudi MoR / Delta deletion-vector trade: cheap writes, one
-window on reads, ``compact()`` folds back to window-free storage). Extra
-``stat_cols`` (e.g. expires_at) record per-directory min/max so
-``delete_where`` can skip directories a range predicate provably misses
-(zone maps on the sweep column); ``delete_where`` otherwise locates affected
-directories with one predicate scan (what Delta does absent stats on the
-predicate columns) and rewrites them per-directory.
+Write path (merge-on-read, the Hudi MoR / Delta deletion-vector shape): a
+table is ONE base directory plus an ordered list of deltas, each carrying
+its key set in the commit entry. ``upsert`` and ``put_if_absent`` append a
+delta directory holding only the batch (O(batch) bytes, no base read);
+``delete_where`` appends a TOMBSTONE, the matched keys with no directory.
+``read()`` resolves last-writer-wins from the commit alone, in one scan
+of the base and delta directories: a row is kept when no delta names its
+key, or when its file lies in the delta that last wrote its key. The key
+sets are JSON string literals the optimizer folds to constants, so plan
+building stays cheap as they grow and a commit never changes the plan's
+shape; no broadcast, no window, no per-directory union. Once the deltas
+pass ``_MAX_DELTAS`` entries or ``_MAX_DELTA_KEYS`` keys the winning writer
+``compact()``s them into a new base. Extra ``stat_cols`` (e.g. expires_at)
+record per-directory min/max so ``delete_where`` can skip directories a
+range predicate provably misses (zone maps on the sweep column); the skip
+stays exact on deltas because key exclusion comes from the commit, not
+from the directories scanned.
 
 Log compaction (new r8): every ``checkpoint_interval`` commits the winning
 writer also publishes ``_txn/NNNNNN.checkpoint.json`` — the full table
@@ -58,42 +57,40 @@ are never cleaned (exactly-once delivery survives compaction).
 
 Per-call cost: a handle does each call's discovery work once (a Delta
 snapshot fixes a version's files and schema the same way). ``read()``
-memoizes its frame keyed by the live set's directory names — never the
-version: a table re-created at the same path has new uuid dirs — so a
-repeat read of an unchanged live set lists no files and runs no job. Every
-parquet read takes the schema the handle recorded when it wrote or first
-inferred the directory, so only a directory written through another handle
-costs an inference job; the schema never enters the commit JSON. ``upsert``
-persists the caller's batch and evaluates it once (MERGE's materialized
-source), not once each for the lo/hi agg, the routing groupBy and the write.
+memoizes its frame keyed by the live entries' identities (directory names,
+and the version of each tombstone) — never the version number alone: a
+table re-created at the same path has new uuid dirs — so a repeat read of
+an unchanged table lists no files and runs no job. Every parquet read
+takes the schema the handle recorded when it wrote or first inferred the
+directory, so only a directory written through another handle costs an
+inference job; the schema never enters the commit JSON. A write evaluates
+its batch once: one write job, then one aggregate over the written files
+for the entry's row count, zone maps and keys.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
-import functools
 import json
 import os
 import shutil
 import uuid
 
-from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, TimestampNTZType, TimestampType
 
 _LOG_DIR = "_txn"
 
-#: copy-on-write rewrite quantum: tables are range-split into directories of
-#: ~this many rows at create()/compact() so upserts rewrite key-range slices,
-#: not the table (note 136: create() wrote ONE dir, so every upsert batch
-#: overlapped it and rewrote all 10M rows — 4 full rewrites per bench arm)
-_TARGET_DIR_ROWS = 1_000_000
-
-#: above this many accumulated delta rows the MoR read's broadcast anti-join
-#: would ship too large a key set to every executor — fall back to the full
-#: union window (and compact() soon: deltas that size have outgrown the tier)
-_MOR_BROADCAST_MAX_KEYS = 5_000_000
+#: compaction thresholds: a commit that leaves more delta entries or more
+#: delta keys than these live makes its writer compact(). Measured on the
+#: 20k-row memory table (4-core VM, medians of interleaved reads; see
+#: CHANGES.md): a compaction costs about 1 s, and a get at 3-6 deltas costs
+#: within about 12 ms of the 100-130 ms it costs compacted, each delta
+#: adding a file to the scan; every commit carries the delta keys, so the
+#: key bound also caps the commit JSON.
+_MAX_DELTAS = 8
+_MAX_DELTA_KEYS = 1_000
 
 
 def _commit_path(table_path: str, version: int) -> str:
@@ -104,12 +101,22 @@ def _checkpoint_path(table_path: str, version: int) -> str:
     return os.path.join(table_path, _LOG_DIR, f"{version:06d}.checkpoint.json")
 
 
+def _commit_versions(names) -> list[int]:
+    """Versions of the ``NNNNNN.json`` commit files among ``names``."""
+    out = []
+    for name in names:
+        stem, _, ext = name.partition(".")
+        if ext == "json" and stem.isdigit():
+            out.append(int(stem))
+    return out
+
+
 class TxnTable:
     """Handle to a transactional table rooted at ``path``.
 
-    ``key_col`` is the upsert identity column (string-typed in the memory
-    store; any orderable type works — range pruning falls back to
-    assume-overlap when values aren't safely comparable driver-side).
+    ``key_col`` is the upsert identity column, string- or integer-typed;
+    rows with a NULL key are dropped by every write (a keyed table has no
+    meaningful NULL key, and a NULL can't be named in a key set).
     ``stat_cols`` are extra columns whose per-directory min/max ride each
     commit (zone maps); ``delete_where(..., skip_dir=...)`` prunes on them.
     ``checkpoint_interval`` controls how often a winning writer also
@@ -132,8 +139,8 @@ class TxnTable:
         self.key_col = key_col
         self.stat_cols = tuple(stat_cols)
         self.checkpoint_interval = checkpoint_interval
-        #: (live dir names, frame) of the last read(); parquet schema per dir
-        self._snap: tuple[tuple[str, ...], DataFrame] | None = None
+        #: (live entry identities, frame) of the last read(); parquet schema per dir
+        self._snap: tuple[tuple, DataFrame] | None = None
         self._schemas: dict[str, StructType] = {}
 
     # ---------------------------------------------------------------- log
@@ -146,12 +153,7 @@ class TxnTable:
         log = os.path.join(self.path, _LOG_DIR)
         if not os.path.isdir(log):
             return -1
-        versions = [
-            int(name[:6])
-            for name in os.listdir(log)
-            if name.endswith(".json") and name[:6].isdigit()
-        ]
-        return max(max(versions, default=-1), self._checkpoint_hint())
+        return max(max(_commit_versions(os.listdir(log)), default=-1), self._checkpoint_hint())
 
     def _checkpoint_hint(self) -> int:
         try:
@@ -161,11 +163,7 @@ class TxnTable:
             return -1
 
     def _live(self, version: int) -> list[dict]:
-        """Live entries of ``version``; the schema record keeps only these."""
-        live = self._read_commit(version)["live"]
-        names = {d["dir"] for d in live}
-        self._schemas = {n: s for n, s in self._schemas.items() if n in names}
-        return live
+        return self._read_commit(version)["live"]
 
     def _read_commit(self, version: int) -> dict:
         """Commit content for ``version`` — from its commit file, or from its
@@ -241,23 +239,15 @@ class TxnTable:
 
     # --------------------------------------------------------------- data
 
-    def _write_data_dir(self, df: DataFrame) -> tuple[str, dict]:
-        """Write one immutable data directory; returns (dir_name, stats)
-        from one agg pass over the freshly-written files (see _dir_stats)."""
+    def _write_data_dir(self, df: DataFrame, *, keys: bool = False) -> tuple[str, dict]:
+        """Write one immutable data directory; returns (dir_name, stats):
+        row count ``n``, a min/max zone map per configured stat column and,
+        with ``keys``, the key list of a delta — all from one agg over the
+        freshly-written files."""
         name = f"d-{uuid.uuid4().hex}"
         df.write.parquet(os.path.join(self.path, name))
         self._schemas[name] = df.schema
-        [(_, stats)] = self._dir_stats(self._read_dirs([name]))
-        return name, stats
-
-    def _dir_stats(self, written: DataFrame, *group: str) -> list[tuple[Row, dict]]:
-        """Commit stats of freshly-written files, one agg pass per ``group``
-        value (one row when ungrouped): the key range for upsert pruning
-        (None when the range isn't driver-comparable, e.g. non-ASCII
-        strings — see _overlaps), the row count, and a min/max zone map per
-        configured stat column. Returns (agg row, stats) pairs."""
-        key = F.col(self.key_col)
-        aggs = [F.min(key).alias("lo"), F.max(key).alias("hi"), F.count("*").alias("n")]
+        aggs = [F.count("*").alias("n")]
         for c in self.stat_cols:
             # Timestamp stats are recorded as EPOCH MICROS, not datetimes:
             # driver-side collection converts TimestampType through the
@@ -267,90 +257,33 @@ class TxnTable:
             # unix_micros is computed JVM-side from the internal epoch value
             # — no conversion anywhere, comparable against any wall clock.
             col = F.col(c)
-            dt = written.schema[c].dataType
+            dt = df.schema[c].dataType
             if isinstance(dt, TimestampNTZType):
                 col = F.unix_micros(col.cast("timestamp"))
             elif isinstance(dt, TimestampType):
                 col = F.unix_micros(col)
             aggs += [F.min(col).alias(f"_lo_{c}"), F.max(col).alias(f"_hi_{c}")]
-        out = []
-        for row in written.groupBy(*group).agg(*aggs).collect():
-            stats = {"lo": _portable(row["lo"]), "hi": _portable(row["hi"]), "n": row["n"]}
-            if self.stat_cols:
-                stats["stats"] = {
-                    c: {"lo": _portable_stat(row[f"_lo_{c}"]), "hi": _portable_stat(row[f"_hi_{c}"])}
-                    for c in self.stat_cols
-                }
-            out.append((row, stats))
-        return out
-
-    def _write_range_dirs(self, df: DataFrame, n_dirs: int) -> list[dict]:
-        """Write ``df`` as ``n_dirs`` RANGE-PARTITIONED data directories —
-        the structural fix for note 136's full-table copy-on-write
-        (VERDICT r14 next-round #4, the Delta file-pruning shape): one
-        container ``d-<uuid>`` holding ``_rb=K`` subdirectories, each a
-        contiguous key range, each committed as its OWN live entry with its
-        own key-range stats. A later upsert whose batch spans a narrow key
-        range then overlaps (and rewrites) only the matching range dirs
-        instead of one table-spanning directory.
-
-        One shuffle (repartitionByRange on the key — AQE never coalesces an
-        explicit partition count, so spark_partition_id() is the stable
-        range ordinal), one write, and ONE read-back agg grouped by ``_rb``
-        for every subdirectory's stats; reading a leaf subdir directly yields
-        the plain table schema. Returns the commit ``live`` entries (possibly
-        fewer than n_dirs if range partitions came out empty)."""
-        tagged = df.repartitionByRange(n_dirs, F.col(self.key_col)).withColumn(
-            "_rb", F.spark_partition_id()
-        )
-        return self._write_tagged_dirs(tagged, df)
-
-    def _write_tagged_dirs(self, tagged: DataFrame, untagged: DataFrame) -> list[dict]:
-        """Write an ``_rb``-tagged frame as one container of per-tag
-        subdirectory entries (see _write_range_dirs; ``untagged`` is the
-        schema-bearing fallback frame for the all-empty case). The tag
-        column lands in the directory layout only, never the files."""
-        name = f"d-{uuid.uuid4().hex}"
-        container = os.path.join(self.path, name)
-        tagged.write.partitionBy("_rb").parquet(container)
-        if not any(e.startswith("_rb=") for e in os.listdir(container)):
-            # empty frame: partitionBy produced no range subdirs — fall back
-            # to one flat (schema-bearing) dir so read() can still bind
-            shutil.rmtree(container, ignore_errors=True)
-            flat_name, flat_stats = self._write_data_dir(untagged)
-            return [{"dir": flat_name, **flat_stats}]
-        # the files hold every column but _rb; the layout holds _rb
-        data = StructType([f for f in tagged.schema.fields if f.name != "_rb"])
-        written = self.spark.read.schema(
-            StructType(data.fields + [tagged.schema["_rb"]])
-        ).parquet(container)
-        entries = []
-        for row, stats in sorted(self._dir_stats(written, "_rb"), key=lambda rs: rs[0]["_rb"]):
-            entries.append({"dir": f"{name}/_rb={row['_rb']}", **stats})
-            self._schemas[entries[-1]["dir"]] = data
-        return entries
-
-    @staticmethod
-    def _disjoint_ranges(dirs: list[dict]) -> bool:
-        """True when every entry has a driver-comparable key range and the
-        ranges are pairwise disjoint — the precondition for per-directory
-        slice rewrites (a key must be routable to exactly ONE directory).
-        put_if_absent appends arbitrary-range dirs, so the layout can lose
-        this property between compactions; callers fall back to the
-        merge-into-one path then."""
-        if any(d.get("lo") is None or d.get("hi") is None for d in dirs):
-            return False
-        ordered = sorted(dirs, key=lambda d: d["lo"])
-        return all(
-            ordered[i]["hi"] < ordered[i + 1]["lo"] for i in range(len(ordered) - 1)
-        )
-
-    @staticmethod
-    def _auto_n_dirs(n_rows: int) -> int:
-        """Range-dir count from table size: ~1M rows per directory (the
-        copy-on-write rewrite quantum), capped so the per-commit stats list
-        stays a trivially small JSON."""
-        return max(1, min(256, (n_rows + _TARGET_DIR_ROWS - 1) // _TARGET_DIR_ROWS))
+        if keys:
+            aggs.append(F.collect_list(self.key_col).alias("keys"))
+        aggs.append(F.collect_set("_metadata.file_name").alias("_files"))
+        row = self._read_dirs([name]).agg(*aggs).first()
+        if row["_files"]:
+            # partition 0 always writes a file, empty or not: drop empty
+            # files, which every later scan of the directory would open
+            for f in os.listdir(os.path.join(self.path, name)):
+                if f.startswith("part-") and f not in row["_files"]:
+                    for junk in (f, f".{f}.crc"):
+                        if os.path.exists(os.path.join(self.path, name, junk)):
+                            os.remove(os.path.join(self.path, name, junk))
+        stats = {"n": row["n"]}
+        if self.stat_cols:
+            stats["stats"] = {
+                c: {"lo": _portable_stat(row[f"_lo_{c}"]), "hi": _portable_stat(row[f"_hi_{c}"])}
+                for c in self.stat_cols
+            }
+        if keys:
+            stats["keys"] = list(row["keys"])
+        return name, stats
 
     def _read_dirs(self, dirs: list[str]) -> DataFrame:
         """Read data directories under the first one's parquet schema. Only
@@ -365,58 +298,62 @@ class TxnTable:
             self._schemas.setdefault(d, df.schema)
         return df
 
-    def _read_each(self, tags: dict[str, int], col: str) -> DataFrame:
-        """Union of the ``tags`` directories, each read alone and tagged in ``col``."""
-        parts = [self._read_dirs([d]).withColumn(col, F.lit(x)) for d, x in tags.items()]
-        return functools.reduce(DataFrame.unionByName, parts)
-
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot of ``version`` (default: latest). An unchanged live set
         returns the previous call's frame: same files, no listing, no job."""
         v = self.version() if version is None else version
         if v < 0:
             raise FileNotFoundError(f"no committed version at {self.path}")
-        live = self._live(v)
-        if not live:
-            raise ValueError(f"version {v} of {self.path} has no data directories")
-        names, snap = tuple(d["dir"] for d in live), self._snap
-        if snap is None or snap[0] != names:
-            snap = self._snap = (names, self._resolve(live))
+        return self._snapshot(self._live(v))
+
+    def _snapshot(self, live: list[dict]) -> DataFrame:
+        # a tombstone adds no directory, so it is identified by its version
+        ids, snap = tuple(d.get("dir", d.get("v")) for d in live), self._snap
+        if snap is None or snap[0] != ids:
+            snap = self._snap = (ids, self._resolve(live))
         return snap[1]
 
-    def _resolve(self, live: list[dict]) -> DataFrame:
-        delta_dirs = [d for d in live if d.get("delta")]
-        if not delta_dirs:
-            return self._read_dirs([d["dir"] for d in live])
-        # Merge-on-read resolution, O(delta) not O(table): while delta dirs
-        # exist, every non-delta copy of a delta key is provably OLDER than
-        # every delta copy (cow upserts and deletes absorb deltas before
-        # touching base dirs; put_if_absent only inserts keys absent from
-        # EVERY dir), and non-delta dirs never share a key among
-        # themselves. So the snapshot is: base rows whose key is NOT in the
-        # delta key set (a broadcast anti-join — the 10M-row side never
-        # shuffles), plus the per-key latest delta row by commit sequence
-        # (a window over only the delta rows). The full-union window runs
-        # only when the accumulated deltas are too big to broadcast —
-        # which is the signal to compact() anyway.
-        cow = self._read_dirs([d["dir"] for d in live if not d.get("delta")])
-        dx = self._read_each({d["dir"]: int(d.get("v", 0)) for d in delta_dirs}, "_seq")
-        w = Window.partitionBy(self.key_col).orderBy(F.col("_seq").desc())
-        latest = (
-            dx.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "_seq")
-        )
-        n_delta = sum(int(d.get("n", 0)) for d in delta_dirs)
-        if n_delta <= _MOR_BROADCAST_MAX_KEYS:
-            dkeys = dx.select(self.key_col).distinct()
-            return cow.join(F.broadcast(dkeys), self.key_col, "left_anti").unionByName(latest)
-        base = cow.withColumn("_seq", F.lit(-1)).unionByName(dx)
-        return (
-            base.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "_seq")
-        )
+    def _resolve(self, live: list[dict], skip_dir=None) -> DataFrame | None:
+        """Last-writer-wins frame of ``live``, from the commit alone, in ONE
+        scan of the base and the delta directories still holding some key's
+        latest write: a row is kept when no delta names its key, or when
+        its file lies in the directory that last wrote its key.
+
+        ``skip_dir`` leaves out directories whose stats prove no row
+        matches the caller's predicate (None when nothing is left to scan).
+        The key exclusion still comes from every delta, so a skipped
+        directory never re-exposes an older copy. The schema record keeps
+        only ``live``'s directories."""
+        names = {d["dir"] for d in live if "dir" in d}
+        self._schemas = {n: s for n, s in self._schemas.items() if n in names}
+        skip = skip_dir or (lambda d: False)
+        deltas = [d for d in live if "keys" in d]
+        latest = {k: i for i, d in enumerate(deltas) for k in d["keys"]}
+        owned = {}
+        for i, d in enumerate(deltas):
+            if "dir" in d and not skip(d):
+                ks = [k for k in d["keys"] if latest[k] == i]
+                if ks:
+                    owned[d["dir"]] = ks
+        base = [d["dir"] for d in live if "keys" not in d and not skip(d)]
+        if not base and not owned:
+            return None
+        rows = self._read_dirs(base + list(owned))
+        if not latest:
+            return rows
+        # The key sets are two JSON string literals that the optimizer folds
+        # to constants: parsing stays cheap however many keys there are (a
+        # Column.isin tree holds one node per key), and a commit changes
+        # only literal values, never the plan's shape, so its generated
+        # code is compiled once and reused by every later snapshot.
+        key, kt = f"`{self.key_col}`", rows.schema[self.key_col].dataType.simpleString()
+        named = f"from_json({_sql_string(json.dumps(list(latest)))}, 'array<{kt}>')"
+        won = f"from_json({_sql_string(json.dumps(owned))}, 'map<string,array<{kt}>>')"
+        own_dir = "element_at(split(_metadata.file_path, '/'), -2)"
+        return rows.where(F.expr(
+            f"NOT array_contains({named}, {key}) "
+            f"OR array_contains(try_element_at({won}, {own_dir}), {key})"
+        ))
 
     # ------------------------------------------------------------- writes
 
@@ -430,179 +367,60 @@ class TxnTable:
         *,
         stat_cols: tuple[str, ...] = (),
         checkpoint_interval: int = 10,
-        n_dirs: int | None = None,
     ) -> "TxnTable":
-        """Create the table as version 0. Fails if version 0 already exists.
-
-        ``n_dirs=None`` (default) sizes the range-directory count from the
-        row count (~1M rows per dir — see _write_range_dirs); pass an
-        explicit count to override, or 1 to force the legacy single-dir
-        layout. The sizing count is one extra job at create time — ETL,
-        paid once."""
+        """Create the table as version 0: one base directory. Fails if
+        version 0 already exists."""
         t = cls(spark, path, key_col, stat_cols=stat_cols, checkpoint_interval=checkpoint_interval)
         os.makedirs(path, exist_ok=True)
-        k = t._auto_n_dirs(df.count()) if n_dirs is None else max(1, n_dirs)
-        if k == 1:
-            name, stats = t._write_data_dir(df)
-            live = [{"dir": name, **stats}]
-        else:
-            live = t._write_range_dirs(df, k)
-        if not t._try_publish(0, {"version": 0, "op": "create", "live": live}):
+        name, stats = t._write_data_dir(df.where(F.col(key_col).isNotNull()))
+        if not t._try_publish(0, {"version": 0, "op": "create", "live": [{"dir": name, **stats}]}):
             raise FileExistsError(f"table already created at {path}")
         return t
 
-    def upsert(self, updates: DataFrame, *, mode: str = "cow") -> int:
-        """Last-writer-wins keyed upsert (the MERGE substitution for
-        operators/memory.py:upsert_by_key) as one ACID commit.
+    def _commit_delta(self, v: int, live: list[dict], entry: dict, op: str, **extra) -> bool:
+        """Publish ``entry`` as the newest delta of version ``v + 1``; the
+        winner compacts when the deltas now pass a threshold. False when a
+        concurrent writer owns ``v + 1``."""
+        live = live + [dict(entry, v=v + 1)]
+        if not self._try_publish(v + 1, {"version": v + 1, "op": op, "live": live, **extra}):
+            return False
+        deltas = [d for d in live if "keys" in d]
+        if len(deltas) > _MAX_DELTAS or sum(len(d["keys"]) for d in deltas) > _MAX_DELTA_KEYS:
+            self.compact()
+        return True
 
-        mode="cow" (default) is copy-on-write: only directories that
-        actually OWN an update key are rewritten; everything else carries
-        over by reference. When the live directories' ranges are pairwise
-        DISJOINT (the _write_range_dirs layout), ownership is exact — each
-        update routes to the directory whose key range holds it
-        (gap/out-of-range keys, provably absent from every live dir, go to
-        the nearest range) and only directories with a NON-EMPTY routed
-        slice rewrite, each as its own slice, so the range structure
-        SURVIVES the upsert and keeps pruning (note 136: one merged dir
-        would re-coalesce the table after the first wide batch; and
-        min/max-interval pruning alone collapses under a batch with
-        scattered keys, whose [lo, hi] envelope covers everything).
-        Overlapping-range layouts (e.g. after put_if_absent appends) fall
-        back to interval pruning + merge-into-one; compact() restores the
-        range layout. Optimistic retry on version conflict — the retry
-        recomputes against the winner's live set, so no update is lost.
+    def upsert(self, updates: DataFrame) -> int:
+        """Last-writer-wins keyed upsert as one ACID commit; returns its
+        version. The batch lands as ONE delta directory — O(batch) bytes,
+        no base read, no rewrite — whose keys ride the commit entry. When
+        a key repeats inside the batch, the copy with the latest
+        ``updated_at`` wins (operators/memory.py:upsert_by_key's rule).
 
-        mode="mor" is merge-on-read (the Hudi/Delta-deletion-vector shape
-        for write-heavy key-scattered workloads, where even exact CoW
-        routing rewrites most of the table): the deduped batch lands as ONE
-        new delta directory — O(batch), no base read, no rewrite — and
-        ``read()`` resolves last-writer-wins lazily via a per-key window
-        over the commit sequence number each directory carries. Reads pay
-        one extra window while deltas exist; ``compact()`` resolves them
-        back to pure range-partitioned storage, and ``delete_where``
-        auto-compacts first (a delete against shadowed copies would
-        otherwise resurrect older values — correctness over speed on the
-        rare path).
-        """
-        from ..operators.memory import upsert_by_key
-
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
-        if updates.storageLevel == StorageLevel.NONE:
-            # evaluate the batch once (MERGE's materialized source): the
-            # lo/hi agg fills the cache the routing groupBy and write read
-            updates.persist()
-            try:
-                return self.upsert(updates, mode=mode)
-            finally:
-                updates.unpersist()
-        u_row = updates.agg(
-            F.min(self.key_col).alias("lo"), F.max(self.key_col).alias("hi")
-        ).first()
-        u_lo, u_hi = _portable(u_row["lo"]), _portable(u_row["hi"])
-        if u_lo is None and u_row["lo"] is None:
-            return self.version()  # empty update batch: nothing to commit
+        The directory is written once, before the publish loop: a conflict
+        retries at the next version with the same directory, so no update
+        is lost and nothing is rewritten. An empty batch commits nothing."""
+        name, stats = self._write_data_dir(updates, keys=True)
+        if len(set(stats["keys"])) < stats["n"]:
+            # a NULL key (collect_list skips it) or a repeated one: rewrite
+            # from the written files, so the batch is still evaluated once
+            dup = name
+            order = F.col("updated_at").desc() if "updated_at" in updates.columns else F.lit(0)
+            w = Window.partitionBy(self.key_col).orderBy(order)
+            latest = (
+                self._read_dirs([dup]).where(F.col(self.key_col).isNotNull())
+                .withColumn("_rn", F.row_number().over(w))
+                .where(F.col("_rn") == 1).drop("_rn")
+            )
+            name, stats = self._write_data_dir(latest, keys=True)
+            shutil.rmtree(os.path.join(self.path, dup), ignore_errors=True)
+        if not stats["keys"]:
+            shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+            return self.version()
         while True:
             v = self.version()
-            live = self._live(v)
-            if mode == "mor":
-                fresh = updates.where(
-                    F.col(self.key_col).isNotNull()
-                ).dropDuplicates([self.key_col])
-                name, stats = self._write_data_dir(fresh)
-                commit = {
-                    "version": v + 1,
-                    "op": "upsert_mor",
-                    "live": live + [{"dir": name, **stats, "v": v + 1, "delta": True}],
-                }
-                if self._try_publish(v + 1, commit):
-                    return v + 1
-                continue  # conflict: orphan dir (vacuum reclaims); retry
-            if any(d.get("delta") for d in live):
-                # a CoW merge resolves copies with upsert_by_key's
-                # (_prio, updated_at) ordering, which need not match commit
-                # order for shadowed delta keys — absorb the deltas first
-                # (compact folds them via the seq-ordered read window) so
-                # commit-order LWW is exact, then rewrite pure-CoW dirs.
-                # This is also what keeps the O(delta) read fast path's
-                # older-than-every-delta invariant true.
-                self.compact()
-                continue
-            if len(live) > 1 and self._disjoint_ranges(live):
-                ordered = sorted(live, key=lambda d: d["lo"])
-                # rb = index of the greatest range-lo ≤ key (-1 below every
-                # range): an existing key lands on its owning dir exactly
-                # (disjoint sorted ranges). Exact OWNERSHIP pruning: only
-                # dirs whose routed slice contains an IN-RANGE key (lo_i ≤
-                # key ≤ hi_i — a true update) are rewritten, each merged
-                # with its full slice; a scattered batch whose [u_lo, u_hi]
-                # interval spans the table still rewrites only the dirs
-                # holding one of its keys. Slices made ONLY of gap /
-                # out-of-range keys (pure inserts, provably absent from
-                # every live dir) append as their OWN new dirs — no read,
-                # no rewrite — and stay disjoint by construction: an rb=i
-                # gap slice lies strictly inside (hi_i, lo_{i+1}), and the
-                # rb=-1 slice strictly below lo_0. A mixed slice rides the
-                # rewrite and extends its dir's range without crossing the
-                # next lo, so disjointness survives every shape.
-                key = F.col(self.key_col)
-                rb = F.when(key < F.lit(ordered[0]["lo"]), F.lit(-1)).otherwise(F.lit(0))
-                for i, d in enumerate(ordered[1:], start=1):
-                    rb = F.when(key >= F.lit(d["lo"]), F.lit(i)).otherwise(rb)
-                inr = F.lit(False)
-                for i, d in enumerate(ordered):
-                    inr = F.when(
-                        F.col("_rb") == i, key <= F.lit(d["hi"])
-                    ).otherwise(inr)
-                tagged_updates = updates.withColumn("_rb", rb).withColumn("_inr", inr)
-                slice_rows = (
-                    tagged_updates.groupBy("_rb")
-                    .agg(F.max("_inr").alias("any_inr"))
-                    .collect()
-                )
-                hit_rbs = sorted(r["_rb"] for r in slice_rows if r["any_inr"])
-                gap_rbs = sorted(r["_rb"] for r in slice_rows if not r["any_inr"])
-                hit = [ordered[i] for i in hit_rbs]
-                carry = [d for d in live if d not in hit]
-                entries = []
-                if hit_rbs:
-                    base = self._read_each({ordered[i]["dir"]: i for i in hit_rbs}, "_rb")
-                    merged = upsert_by_key(
-                        base,
-                        tagged_updates.where(F.col("_rb").isin(hit_rbs)).drop("_inr"),
-                    )
-                    entries += self._write_tagged_dirs(
-                        merged.repartition(len(hit_rbs), F.col("_rb")),
-                        merged.drop("_rb"),
-                    )
-                if gap_rbs:
-                    inserts = (
-                        tagged_updates.where(F.col("_rb").isin(gap_rbs))
-                        .drop("_inr")
-                        .dropDuplicates([self.key_col])
-                    )
-                    entries += self._write_tagged_dirs(
-                        inserts.repartition(len(gap_rbs), F.col("_rb")),
-                        inserts.drop("_rb"),
-                    )
-            else:
-                hit = [d for d in live if _overlaps(d, u_lo, u_hi)]
-                carry = [d for d in live if d not in hit]
-                base = self._read_dirs([d["dir"] for d in hit]) if hit else updates.limit(0)
-                merged = upsert_by_key(base, updates)
-                name, stats = self._write_data_dir(merged)
-                entries = [{"dir": name, **stats}]
-            for e in entries:
-                e["v"] = v + 1
-            commit = {
-                "version": v + 1,
-                "op": "upsert",
-                "live": carry + entries,
-            }
-            if self._try_publish(v + 1, commit):
+            if self._commit_delta(v, self._live(v), {"dir": name, **stats}, "upsert"):
                 return v + 1
-            # conflict: a concurrent writer won this version — the new data
-            # dir is now an orphan (vacuum reclaims it); recompute and retry
+            # conflict: a concurrent writer won this version; append again
 
     def put_if_absent(self, updates: DataFrame) -> tuple[int, DataFrame]:
         """First-writer-wins keyed insert as one ACID commit: only rows whose
@@ -615,15 +433,16 @@ class TxnTable:
         the loser thereby LEARNS the key was taken, which last-writer-wins
         `upsert` cannot tell it.
 
-        Optimistic retry on version conflict, same as upsert: the retry
-        re-filters against the winner's live set, so the check-then-insert
-        is atomic at commit granularity. Batch-internal duplicate keys are
-        collapsed arbitrarily (dropDuplicates) — pre-dedup the batch when
-        which-copy-wins matters. NULL-key rows are DROPPED, never inserted
-        (a NULL can't be arbitrated: the anti-join existence check never
-        matches it, so it would re-insert on every call). No directory is rewritten: the insert is
-        a pure live-set append, so concurrent put_if_absent writers never
-        invalidate each other's data files, only force a re-filter."""
+        Existence is checked against the RESOLVED keys: a key a tombstone
+        deleted can be inserted again, a shadowed one is still taken. The
+        insert is a delta like an upsert's. Optimistic retry on version
+        conflict: the retry re-filters against the winner's state, so the
+        check-then-insert is atomic at commit granularity. Batch-internal
+        duplicate keys are collapsed arbitrarily (dropDuplicates) — pre-dedup
+        the batch when which-copy-wins matters. NULL-key rows are DROPPED,
+        never inserted (a NULL can't be arbitrated: the anti-join existence
+        check never matches it, so it would re-insert on every call)."""
+        fresh = updates.where(F.col(self.key_col).isNotNull()).dropDuplicates([self.key_col])
         while True:
             v = self.version()
             if v < 0:
@@ -631,29 +450,14 @@ class TxnTable:
                     f"no committed version at {self.path} — create() the table first"
                 )
             live = self._live(v)
-            existing = self._read_dirs([d["dir"] for d in live])
-            # NULL keys are rejected outright: the left_anti existence check
-            # can never match a NULL (SQL null equality), so a NULL-key row
-            # would be treated as fresh and re-inserted on EVERY call —
-            # breaking the exactly-one-insertion arbitration contract
-            # (ADVICE r9). A keyed table has no meaningful NULL key anyway.
-            fresh = (
-                updates.where(F.col(self.key_col).isNotNull())
-                .dropDuplicates([self.key_col])
-                .join(existing.select(self.key_col), self.key_col, "left_anti")
-            )
-            name, stats = self._write_data_dir(fresh)
-            if stats["n"] == 0:
+            taken = self._snapshot(live).select(self.key_col)
+            name, stats = self._write_data_dir(fresh.join(taken, self.key_col, "left_anti"), keys=True)
+            if not stats["keys"]:
                 # nothing new to insert — drop the empty uncommitted dir
                 # (ours alone, never referenced) and report version v
                 shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
                 return v, updates.limit(0)
-            commit = {
-                "version": v + 1,
-                "op": "insert_if_absent",
-                "live": live + [{"dir": name, **stats, "v": v + 1}],
-            }
-            if self._try_publish(v + 1, commit):
+            if self._commit_delta(v, live, {"dir": name, **stats}, "insert_if_absent"):
                 return v + 1, self._read_dirs([name])
             # conflict: orphan dir (vacuum reclaims); recompute and retry
 
@@ -662,9 +466,11 @@ class TxnTable:
         substitution for the expiry sweep). Returns (new_version, n_deleted);
         commits nothing when no row matches.
 
-        Only directories that actually CONTAIN matching rows are rewritten
-        (one predicate scan locates them — what Delta does when file stats
-        can't answer the predicate); the rest carry over by reference.
+        One scan of the resolved snapshot finds the matching keys, and the
+        commit appends them as a TOMBSTONE: a delta with keys and no data
+        directory. No directory is rewritten, and a shadowed older copy of a
+        deleted key stays hidden, because the base filter excludes every
+        delta key.
 
         ``events_of`` (optional, ``matching_rows_df -> events_df``) builds an
         events frame that rides the SAME commit in an events directory — the
@@ -677,105 +483,49 @@ class TxnTable:
 
         ``skip_dir`` (optional, ``dir_commit_entry -> bool``) is the zone-map
         fast path: return True when the directory's recorded stats PROVE no
-        row matches — that directory is neither scanned nor rewritten. The
-        callable must be conservative (missing stats ⇒ False);
-        ``expired_skipper`` builds the one the TTL sweep needs.
+        row matches — that directory is not scanned. The callable must be
+        conservative (missing stats ⇒ False); ``expired_skipper`` builds the
+        one the TTL sweep needs.
         """
         cond = F.expr(condition) if isinstance(condition, str) else condition
         while True:
             v = self.version()
             live = self._live(v)
-            if any(d.get("delta") for d in live):
-                # deleting from shadowed copies would RESURRECT older
-                # values (dropping the newest copy of a key re-exposes the
-                # CoW row beneath it in the read window), so merge-on-read
-                # deltas are compacted away first and the delete proceeds
-                # on pure-CoW dirs — correctness over speed on the rarer
-                # path (the MoR trade: cheap upserts, deferred resolution)
-                self.compact()
-                continue
-            hit, n_deleted = [], 0
-            for d in live:
-                if skip_dir is not None and skip_dir(d):
-                    continue
-                n = self._read_dirs([d["dir"]]).where(cond).count()
-                if n:
-                    hit.append(d)
-                    n_deleted += n
-            if not hit:
+            snap = self._snapshot(live) if skip_dir is None else self._resolve(live, skip_dir)
+            if snap is None:
                 return v, 0
-            carry = [d for d in live if d not in hit]
-            hit_df = self._read_dirs([d["dir"] for d in hit])
-            if len(hit) > 1:
-                # per-dir rewrite (no key routing needed — a delete never
-                # moves rows between dirs), so the range layout survives
-                # the sweep instead of coalescing into one table-spanning
-                # dir (note 136); empty survivors simply drop out of the
-                # container, and the all-empty case falls back to one flat
-                # schema-bearing dir inside _write_tagged_dirs
-                base = self._read_each({d["dir"]: i for i, d in enumerate(hit)}, "_rb")
-                remaining = base.where(~cond)
-                entries = self._write_tagged_dirs(
-                    remaining.repartition(len(hit), F.col("_rb")),
-                    remaining.drop("_rb"),
-                )
-            else:
-                name, stats = self._write_data_dir(hit_df.where(~cond))
-                entries = [{"dir": name, **stats}]
-            for e in entries:
-                e["v"] = v + 1
-            commit = {
-                "version": v + 1,
-                "op": "delete",
-                # the (possibly empty) rewrite dir always stays live so
-                # read() of this version still has a schema to bind to
-                "live": carry + entries,
-            }
+            matched = snap.where(cond)
+            keys = [r[0] for r in matched.select(self.key_col).collect()]
+            if not keys:
+                return v, 0
+            extra = {}
             if events_of is not None:
-                ename = f"e-{uuid.uuid4().hex}"
-                events_of(hit_df.where(cond)).write.parquet(os.path.join(self.path, ename))
-                commit["events"] = ename
-            if self._try_publish(v + 1, commit):
-                return v + 1, n_deleted
+                extra["events"] = f"e-{uuid.uuid4().hex}"
+                events_of(matched).write.parquet(os.path.join(self.path, extra["events"]))
+            if self._commit_delta(v, live, {"keys": keys}, "delete", **extra):
+                return v + 1, len(keys)
 
     def compact(self) -> int:
-        """Rewrite the live data directories as the ``_auto_n_dirs`` range
-        layout (one directory under ~1M rows) with merge-on-read deltas
-        resolved — the OPTIMIZE step of the lifecycle. Every upsert adds a
-        directory, and at scale the accumulation IS the small-file problem: each write's range-stat scan
-        and each read's file listing grow with dir count. Compaction is an
-        ordinary commit (op="compact", same optimistic publish), so it
-        coexists safely with concurrent writers — a conflict just retries —
-        and superseded dirs stay on disk for snapshot readers until
-        vacuum(keep_from_version=...) reclaims them. No-op at ≤1 live dir.
-
-        Production note: Delta's OPTIMIZE bin-packs to a target file size
-        instead of splitting by row count and can run incrementally; same commit
-        mechanics, finer packing policy.
+        """Fold the deltas into ONE plain base directory — the OPTIMIZE step
+        of the lifecycle, which the winning writer of a commit runs once the
+        deltas pass ``_MAX_DELTAS`` or ``_MAX_DELTA_KEYS``. It writes the
+        resolved snapshot, so reads of the result filter nothing and the
+        base's zone maps describe only live rows. Compaction is an ordinary
+        commit (op="compact", same optimistic publish), so it coexists
+        safely with concurrent writers — a conflict just retries — and
+        superseded dirs stay on disk for snapshot readers until
+        vacuum(keep_from_version=...) reclaims them. No-op on a table that
+        is already one directory.
         """
         while True:
             v = self.version()
             live = self._live(v)
-            if len(live) <= 1 and not any(d.get("delta") for d in live):
+            if len(live) <= 1:
                 return v
-            # read(v) resolves merge-on-read deltas (per-key latest by
-            # commit seq), so compacting a delta-bearing table folds the
-            # shadowed copies away and returns it to window-free reads
-            merged = self.read(v)
-            # re-split to the auto range layout (sized from the commit's own
-            # per-dir counts — no extra job), restoring per-range pruning
-            # that put_if_absent appends / wide upserts may have degraded
-            k = self._auto_n_dirs(sum(d.get("n", 0) for d in live))
-            if k == 1:
-                name, stats = self._write_data_dir(merged)
-                entries = [{"dir": name, **stats}]
-            else:
-                entries = self._write_range_dirs(merged, k)
-            for e in entries:
-                e["v"] = v + 1
-            if self._try_publish(
-                v + 1, {"version": v + 1, "op": "compact", "live": entries}
-            ):
+            # rebalance: AQE sizes the output files, so the union of base
+            # and delta scans does not leave one small file per partition
+            name, stats = self._write_data_dir(self.read(v).hint("rebalance"))
+            if self._try_publish(v + 1, {"version": v + 1, "op": "compact", "live": [{"dir": name, **stats}]}):
                 return v + 1
 
     # ------------------------------------------------------------ hygiene
@@ -803,12 +553,9 @@ class TxnTable:
                 # cleaned version: its live dirs either carry over into newer
                 # commits (full-state "live" lists) or are legitimately dead
                 continue
-            # range-layout entries are container subpaths (d-xxx/_rb=K):
-            # reference the top-level container — removal is all-or-nothing
-            # per container, so a container with ANY live subdir survives
-            # (its superseded sibling subdirs are reclaimed at the next
-            # compact+vacuum cycle)
-            referenced.update(d["dir"].split("/", 1)[0] for d in c["live"])
+            # an entry may name a subdirectory (d-xxx/_rb=K in tables written
+            # with range directories): keep its whole top-level directory
+            referenced.update(d["dir"].split("/", 1)[0] for d in c["live"] if "dir" in d)
             if c.get("events"):
                 referenced.add(c["events"])
         removed = []
@@ -842,13 +589,11 @@ def _link_once(dst: str, text: str) -> bool:
         os.unlink(tmp)
 
 
-def _portable(value) -> str | None:
-    """Key-range stat safe to compare in the driver: ASCII strings compare
-    identically in Python and the JVM; anything else → None (assume
-    overlap — correctness over pruning)."""
-    if isinstance(value, str) and value.isascii():
-        return value
-    return None
+def _sql_string(text: str) -> str:
+    """SQL string literal holding ``text``, escaped for Spark's default
+    literal syntax (backslash escapes): keys inside it come from callers, so
+    every backslash and quote is backslash-escaped, anything else is kept."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _portable_stat(value):
@@ -904,14 +649,6 @@ def expired_skipper(col: str, now):
     return skip
 
 
-def _overlaps(d: dict, u_lo: str | None, u_hi: str | None) -> bool:
-    """Conservative range overlap: any missing bound ⇒ overlap (a wrongly
-    pruned directory would leave a stale duplicate key — never acceptable)."""
-    if None in (d.get("lo"), d.get("hi"), u_lo, u_hi):
-        return True
-    return not (d["hi"] < u_lo or u_hi < d["lo"])
-
-
 def _require_same_filesystem(table_path: str, events_dir: str) -> None:
     """Fail fast if the table and events_dir live on different filesystems.
 
@@ -947,21 +684,25 @@ def drain_events(table: TxnTable, events_dir: str, *, up_to_version: int | None 
     with a ``NNNNNN.drained`` marker published via the same atomic-link
     primitive — a crash mid-drain re-runs only unsealed versions, and part
     names embed uuids so re-renaming is collision-free.
+
+    One listing of the log finds the work: the commit files present and not
+    yet sealed. clean_log() only removes versions that are drained or carry
+    no events, so a version without a commit file has nothing to deliver,
+    and the cost does not grow with the table's history.
     Returns the number of versions drained."""
     _require_same_filesystem(table.path, events_dir)
     latest = table.version() if up_to_version is None else up_to_version
+    log = os.path.join(table.path, _LOG_DIR)
+    names = set(os.listdir(log)) if os.path.isdir(log) else set()
     drained = 0
-    for v in range(latest + 1):
-        marker = os.path.join(table.path, _LOG_DIR, f"{v:06d}.drained")
-        if os.path.exists(marker):
+    for v in sorted(_commit_versions(names)):
+        if v > latest or f"{v:06d}.drained" in names:
             continue
         try:
-            c = table._read_commit(v)
+            with open(_commit_path(table.path, v)) as f:
+                ename = json.load(f).get("events")
         except FileNotFoundError:
-            # clean_log() only removes drained-or-eventless versions, so a
-            # missing commit has nothing left to deliver
-            continue
-        ename = c.get("events")
+            continue  # cleaned since the listing: drained or eventless
         if ename:
             pending = os.path.join(table.path, ename)
             os.makedirs(events_dir, exist_ok=True)
@@ -976,5 +717,5 @@ def drain_events(table: TxnTable, events_dir: str, *, up_to_version: int | None 
                             # identical, so exactly-once delivery holds; skip
                             pass
             drained += 1
-        _link_once(marker, "")  # a concurrent drainer may have sealed it
+        _link_once(os.path.join(log, f"{v:06d}.drained"), "")  # a concurrent drainer may have sealed it
     return drained

@@ -364,8 +364,9 @@ def test_run_expiry_sweep_streaming_txn_backend(spark, tmp_path):
     """End-to-end streaming sweep (rate tick → foreachBatch → sweep_once_txn):
     expired rows leave the TxnTable as one commit, the query survives its
     first committing tick and the later no-op ticks, events land exactly
-    once, and the rewritten directories keep the handle's expires_at zone
-    maps (the ticks sweep with the caller's handle, stat_cols included)."""
+    once, and every live directory keeps the handle's expires_at zone maps
+    (the ticks sweep with the caller's handle, stat_cols included; the
+    sweep's tombstone names keys and has no directory to describe)."""
     import time
 
     from mcp_synaptic_spark.state.txn import TxnTable
@@ -399,7 +400,8 @@ def test_run_expiry_sweep_streaming_txn_backend(spark, tmp_path):
     ev = spark.read.parquet(events_dir).collect()
     assert len(ev) == 1 and ev[0].event_type == "memory_expired" and ev[0].key == "a"
     live = fresh._read_commit(fresh.version())["live"]
-    assert live and all("expires_at" in d.get("stats", {}) for d in live)
+    dirs = [d for d in live if "dir" in d]
+    assert dirs and all("expires_at" in d.get("stats", {}) for d in dirs)
 
 
 def test_streaming_exact_dedup_equals_batch(spark, sf_dir, tmp_path):

@@ -1,6 +1,7 @@
 """TxnTable (state/txn.py): the Delta-protocol ACID backend for the memory
 store — commit atomicity, optimistic concurrency (no lost updates),
-copy-on-write pruning, crash/orphan behavior, snapshot isolation, and the
+merge-on-read deltas and tombstones resolved through key-set literals,
+threshold compaction, crash/orphan behavior, snapshot isolation, and the
 transactional expiry sweep twin (no rename dance, exactly-once events)."""
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from datetime import datetime, timezone
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from mcp_synaptic_spark.state import txn
 from mcp_synaptic_spark.state.txn import TxnTable, drain_events
 from mcp_synaptic_spark.streaming.expiry import sweep_once_txn
 import pytest
@@ -121,24 +123,21 @@ def test_partial_commit_file_never_visible(spark, tmp_path):
 
 
 def test_upsert_rewrites_only_overlapping_dirs(spark, tmp_path):
-    """Copy-on-write pruning: an upsert whose key range misses a directory
-    carries that directory over by reference (same dir name stays live)."""
+    """An upsert rewrites no directory at all: every live directory carries
+    over by reference and the batch lands as one delta whose keys ride the
+    commit entry. Last-writer-wins holds across deltas."""
     path = str(tmp_path / "t")
     t = TxnTable.create(spark, path, _rows(spark, ("a1", None, "1"), ("a2", None, "2")))
-    t.upsert(_rows(spark, ("z1", None, "26")))  # disjoint range → new dir
-    live_before = {d["dir"] for d in t._read_commit(t.version())["live"]}
-    assert len(live_before) == 2
+    t.upsert(_rows(spark, ("z1", None, "26")))
+    live_before = t._read_commit(t.version())["live"]
+    assert len(live_before) == 2 and live_before[1]["keys"] == ["z1"]
 
-    t.upsert(_rows(spark, ("z1", None, "26x")))  # hits only the z-dir range
+    t.upsert(_rows(spark, ("z1", None, "26x")))
     live_after = t._read_commit(t.version())["live"]
-    carried = {d["dir"] for d in live_after} & live_before
-    # the a-range dir survived untouched; the z-range dir was rewritten
-    assert len(carried) == 1
-    a_dir = next(d for d in live_after if d["dir"] in carried)
-    assert a_dir["hi"] < "z"
+    assert live_after[:2] == live_before and live_after[2]["keys"] == ["z1"]
     got = {r.key: r.payload for r in t.read().collect()}
     assert got == {"a1": "1", "a2": "2", "z1": "26x"}
-    assert t.read().count() == 3  # the rewrite didn't duplicate z1
+    assert t.read().count() == 3  # the older delta's z1 stays shadowed
 
 
 def test_delete_where_with_events_single_commit(spark, tmp_path):
@@ -222,8 +221,12 @@ def test_vacuum_reclaims_superseded_versions(spark, tmp_path):
     t.upsert(_rows(spark, ("a", None, "3")))
     all_dirs = [n for n in os.listdir(path) if n.startswith("d-")]
     assert len(all_dirs) == 3
+    # every directory is still live (base + two deltas) until a compaction
+    # supersedes them
+    assert t.vacuum(keep_from_version=t.version()) == []
+    t.compact()
     removed = t.vacuum(keep_from_version=t.version())
-    assert len(removed) == 2
+    assert sorted(removed) == sorted(all_dirs)
     # latest version still reads fine
     assert [r.payload for r in t.read().collect()] == ["3"]
 
@@ -255,13 +258,18 @@ def test_sweep_once_txn_matches_cleanup_expired(spark, tmp_path):
 
 
 @pytest.mark.volume
-def test_txn_random_op_sequences_match_dict_model(spark, tmp_path):
-    """Model-based check: random interleaved upsert/delete sequences applied
-    to a TxnTable must match a plain dict model applying the same ops — the
-    commit log, COW pruning, and range stats may not change keyed-store
-    semantics. Deterministic seed; ~40 commits across 4 scenarios."""
+@pytest.mark.parametrize("max_deltas", [None, 2])
+def test_txn_random_op_sequences_match_dict_model(spark, tmp_path, monkeypatch, max_deltas):
+    """Model-based check: random interleaved upsert/put_if_absent/delete
+    sequences applied to a TxnTable must match a plain dict model applying
+    the same ops — deltas, tombstones and compaction may not change
+    keyed-store semantics. Runs at the default compaction threshold and at
+    one low enough to compact mid-sequence. Deterministic seed; ~40 commits
+    across 4 scenarios."""
     import random
 
+    if max_deltas is not None:
+        monkeypatch.setattr(txn, "_MAX_DELTAS", max_deltas)
     rng = random.Random(1234)
     keyspace = [f"k{i:02d}" for i in range(30)]
 
@@ -273,11 +281,19 @@ def test_txn_random_op_sequences_match_dict_model(spark, tmp_path):
             spark, path, _rows(spark, *[(k, None, model[k]) for k in seed_keys])
         )
         for step in range(10):
-            if rng.random() < 0.7:
+            roll = rng.random()
+            if roll < 0.5:
                 batch_keys = rng.sample(keyspace, rng.randint(1, 5))
                 batch = {k: f"v{step + 1}-{k}" for k in batch_keys}
                 t.upsert(_rows(spark, *[(k, None, v) for k, v in batch.items()]))
                 model.update(batch)
+            elif roll < 0.7:
+                batch_keys = rng.sample(keyspace, rng.randint(1, 5))
+                batch = {k: f"p{step + 1}-{k}" for k in batch_keys}
+                _, ins = t.put_if_absent(_rows(spark, *[(k, None, v) for k, v in batch.items()]))
+                fresh = {k: v for k, v in batch.items() if k not in model}
+                assert {r.key: r.payload for r in ins.collect()} == fresh
+                model.update(fresh)
             else:
                 victim = rng.choice(keyspace)
                 t.delete_where(F.col("key") == victim)
@@ -286,6 +302,9 @@ def test_txn_random_op_sequences_match_dict_model(spark, tmp_path):
                     break  # table read() needs >=0 rows; empty dir is fine but stop early
             got = {r.key: r.payload for r in t.read().collect()}
             assert got == model, f"scenario {scenario} diverged at step {step}"
+            if max_deltas is not None:
+                live = t._read_commit(t.version())["live"]
+                assert sum("keys" in d for d in live) <= max_deltas
         # final state survives vacuum of superseded versions
         t.vacuum(keep_from_version=t.version())
         got = {r.key: r.payload for r in t.read().collect()}
@@ -571,205 +590,12 @@ def _mkrows(spark, keys, payload="p"):
     return _rows(spark, *[(k, None, payload) for k in keys])
 
 
-def test_range_layout_narrow_upsert_prunes(spark, tmp_path):
-    """r15 (VERDICT r14 #4 / note 136): create() range-splits the table into
-    per-key-range directories, and a NARROW upsert batch rewrites only the
-    overlapping range dirs — untouched range dirs carry over by reference
-    (same entry, same files on disk). The old single-dir layout rewrote the
-    whole table on every upsert."""
-    path = str(tmp_path / "t")
-    keys = [f"k{i:04d}" for i in range(400)]
-    t = TxnTable.create(spark, path, _mkrows(spark, keys), n_dirs=4)
-    live0 = t._read_commit(0)["live"]
-    assert len(live0) == 4
-    assert t._disjoint_ranges(live0)
-    assert sum(d["n"] for d in live0) == 400
-    # all entries are subdirs of one container
-    assert all("/" in d["dir"] for d in live0)
-
-    # narrow batch: keys entirely inside ONE dir's range
-    v = t.upsert(_mkrows(spark, ["k0001", "k0002"], payload="u"))
-    live1 = t._read_commit(v)["live"]
-    assert len(live1) == 4
-    carried = [d for d in live1 if d in live0]
-    assert len(carried) == 3  # three dirs carried by reference, one rewritten
-    got = {r.key: r.payload for r in t.read().collect()}
-    assert got["k0001"] == got["k0002"] == "u" and len(got) == 400
-    assert got["k0399"] == "p"
 
 
-def test_range_layout_survives_wide_upsert(spark, tmp_path):
-    """A WIDE batch (touching every range) rewrites per-dir slices, so the
-    range structure — and the next narrow batch's pruning — survives. The
-    below-every-range insert is a pure-gap slice: it appends as its own
-    new dir instead of forcing a neighbor rewrite; the above-every-range
-    insert shares a slice with an in-range update and rides that dir's
-    rewrite, extending its range."""
-    path = str(tmp_path / "t")
-    keys = [f"k{i:04d}" for i in range(400)]
-    t = TxnTable.create(spark, path, _mkrows(spark, keys), n_dirs=4)
-    # wide: updates in every range + a below-all key + an above-all key
-    batch = ["a0000", "k0001", "k0150", "k0250", "k0350", "z9999"]
-    v = t.upsert(_mkrows(spark, batch, payload="w"))
-    live = t._read_commit(v)["live"]
-    assert len(live) == 5 and t._disjoint_ranges(live)
-    assert sum(d["n"] for d in live) == 402
-    got = {r.key: r.payload for r in t.read().collect()}
-    assert all(got[k] == "w" for k in batch) and got["k0399"] == "p"
-
-    # the layout still prunes: a narrow follow-up carries 4 of 5 dirs
-    v2 = t.upsert(_mkrows(spark, ["k0200"], payload="n"))
-    live2 = t._read_commit(v2)["live"]
-    assert len([d for d in live2 if d in live]) == 4
-
-
-def test_range_layout_delete_and_vacuum(spark, tmp_path):
-    """delete_where rewrites hit range dirs per-dir (layout survives), and
-    vacuum only reclaims containers with NO live subdir reference."""
-    path = str(tmp_path / "t")
-    keys = [f"k{i:04d}" for i in range(400)]
-    t = TxnTable.create(spark, path, _mkrows(spark, keys), n_dirs=4)
-    v, n = t.delete_where(F.col("key") < "k0100")
-    assert n == 100
-    live = t._read_commit(v)["live"]
-    # the emptied first range drops out; the other three survive per-dir
-    assert sum(d["n"] for d in live) == 300
-    assert {r.key for r in t.read().collect()} == set(keys[100:])
-
-    # vacuum at the latest version keeps every container a live subdir
-    # references; the superseded create-container is NOT removed while the
-    # delete's carry entries still point into it
-    removed = t.vacuum(keep_from_version=v)
-    assert {r.key for r in t.read().collect()} == set(keys[100:])
-
-    # after compact (fresh container), the old containers are reclaimable
-    cv = t.compact()
-    removed = t.vacuum(keep_from_version=cv)
-    assert removed  # old containers gone
-    assert {r.key for r in t.read().collect()} == set(keys[100:])
-
-
-def test_put_if_absent_then_upsert_falls_back_and_compact_restores(spark, tmp_path):
-    """put_if_absent appends an arbitrary-range dir; an upsert overlapping
-    BOTH that dir and a range dir must detect the non-disjoint layout and
-    fall back to merge-into-one (correctness over pruning). compact()
-    re-splits to the auto range layout."""
-    path = str(tmp_path / "t")
-    keys = [f"k{i:04d}" for i in range(200)]
-    t = TxnTable.create(spark, path, _mkrows(spark, keys), n_dirs=2)
-    # spans both ranges -> appended dir overlaps both range dirs
-    _, ins = t.put_if_absent(_mkrows(spark, ["k0050x", "k0150x"], payload="i"))
-    assert {r.key for r in ins.collect()} == {"k0050x", "k0150x"}
-    v = t.upsert(_mkrows(spark, ["k0050x", "k0150x"], payload="u"))
-    got = {r.key: r.payload for r in t.read().collect()}
-    assert got["k0050x"] == got["k0150x"] == "u" and len(got) == 202
-    # every key exactly once despite the fallback merge
-    assert t.read().groupBy("key").count().where(F.col("count") > 1).count() == 0
-    cv = t.compact()
-    assert t._disjoint_ranges(t._read_commit(cv)["live"])
-    assert {r.key for r in t.read().collect()} == set(keys) | {"k0050x", "k0150x"}
-
-
-def test_mor_upsert_lww_read_resolution(spark, tmp_path):
-    """r15: upsert(mode="mor") lands the batch as one delta dir — no base
-    read, no rewrite — and read() resolves last-writer-wins by commit
-    sequence: later deltas shadow earlier deltas shadow the CoW base.
-    Snapshot isolation holds per version."""
-    path = str(tmp_path / "t")
-    keys = [f"k{i:03d}" for i in range(100)]
-    t = TxnTable.create(spark, path, _mkrows(spark, keys), n_dirs=2)
-    live0 = t._read_commit(0)["live"]
-
-    v1 = t.upsert(_mkrows(spark, ["k001", "k050"], payload="m1"), mode="mor")
-    live1 = t._read_commit(v1)["live"]
-    # every base dir carried by reference; exactly one delta appended
-    assert [d for d in live1 if d in live0] == live0
-    assert sum(1 for d in live1 if d.get("delta")) == 1
-
-    v2 = t.upsert(_mkrows(spark, ["k050", "k999x"], payload="m2"), mode="mor")
-    got = {r.key: r.payload for r in t.read().collect()}
-    assert len(got) == 101
-    assert got["k001"] == "m1" and got["k050"] == "m2" and got["k999x"] == "m2"
-    assert got["k000"] == "p"
-    # no duplicate keys surface through the resolution window
-    assert t.read().groupBy("key").count().where(F.col("count") > 1).count() == 0
-    # snapshots: v1 still sees m1 on k050 and no k999x
-    got1 = {r.key: r.payload for r in t.read(v1).collect()}
-    assert got1["k050"] == "m1" and "k999x" not in got1
-
-    # compact folds the deltas away: window-free reads, same state
-    cv = t.compact()
-    live_c = t._read_commit(cv)["live"]
-    assert not any(d.get("delta") for d in live_c)
-    assert {r.key: r.payload for r in t.read().collect()} == got
-
-
-def test_mor_delete_where_absorbs_deltas_first(spark, tmp_path):
-    """A delete on a delta-bearing table must not resurrect shadowed rows:
-    delete_where auto-compacts first, then deletes — the matching NEWEST
-    values disappear and the old CoW copies do not come back."""
-    path = str(tmp_path / "t")
-    t = TxnTable.create(spark, path, _mkrows(spark, ["a", "b", "c"]))
-    t.upsert(_mkrows(spark, ["b"], payload="new"), mode="mor")
-    # delete rows with payload "new": only the delta copy of b matches; a
-    # naive per-dir delete would drop it and re-expose b="p"
-    v, n = t.delete_where(F.col("payload") == "new")
-    assert n == 1
-    got = {r.key: r.payload for r in t.read().collect()}
-    assert got == {"a": "p", "c": "p"}
-
-
-def test_mor_put_if_absent_sees_shadowed_keys(spark, tmp_path):
-    """put_if_absent arbitration counts a key as taken if ANY copy exists —
-    shadowed or not."""
-    path = str(tmp_path / "t")
-    t = TxnTable.create(spark, path, _mkrows(spark, ["a"]))
-    t.upsert(_mkrows(spark, ["a"], payload="v2"), mode="mor")
-    _, ins = t.put_if_absent(_mkrows(spark, ["a", "b"], payload="i"))
-    assert {r.key for r in ins.collect()} == {"b"}
-    got = {r.key: r.payload for r in t.read().collect()}
-    assert got == {"a": "v2", "b": "i"}
-
-
-def test_cow_exact_ownership_prunes_scattered_batch(spark, tmp_path):
-    """r15: CoW hit detection is exact key ownership, not [min, max]
-    interval overlap — a batch with two extreme keys (whose interval spans
-    the whole table) rewrites only the two dirs that own them."""
-    path = str(tmp_path / "t")
-    keys = [f"k{i:04d}" for i in range(400)]
-    t = TxnTable.create(spark, path, _mkrows(spark, keys), n_dirs=4)
-    live0 = t._read_commit(0)["live"]
-    # first key and last key: interval covers all four dirs, ownership two
-    v = t.upsert(_mkrows(spark, ["k0000", "k0399"], payload="x"))
-    live1 = t._read_commit(v)["live"]
-    assert len([d for d in live1 if d in live0]) == 2
-    got = {r.key: r.payload for r in t.read().collect()}
-    assert got["k0000"] == got["k0399"] == "x" and len(got) == 400
-
-
-def test_cow_upsert_after_mor_absorbs_deltas(spark, tmp_path):
-    """A CoW upsert on a delta-bearing table absorbs the deltas first
-    (commit-order LWW is exact even when the shadowed delta row carries
-    the same updated_at), then proceeds on pure-CoW dirs."""
-    path = str(tmp_path / "t")
-    t = TxnTable.create(spark, path, _mkrows(spark, ["a", "b"]))
-    t.upsert(_mkrows(spark, ["a"], payload="mor1"), mode="mor")
-    v = t.upsert(_mkrows(spark, ["b"], payload="cow1"))
-    live = t._read_commit(v)["live"]
-    assert not any(d.get("delta") for d in live)
-    got = {r.key: r.payload for r in t.read().collect()}
-    assert got == {"a": "mor1", "b": "cow1"}
-
-
-def test_mor_read_uses_broadcast_fast_path(spark, tmp_path):
-    """The O(delta) resolution: under the broadcast bound the read plan
-    screens the base with a broadcast anti-join (the big side never
-    shuffles into the resolution window)."""
-    path = str(tmp_path / "t")
-    t = TxnTable.create(spark, path, _mkrows(spark, [f"k{i}" for i in range(50)]))
-    t.upsert(_mkrows(spark, ["k1"], payload="m"), mode="mor")
-    plan = t.read()._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+def _deltas(t, version=None):
+    """Delta entries (upserts and tombstones) live at ``version``."""
+    v = t.version() if version is None else version
+    return [d for d in t._read_commit(v)["live"] if "keys" in d]
 
 
 def _jobs_of(spark, fn):
@@ -808,7 +634,7 @@ def test_read_reuses_snapshot_frame_until_live_set_changes(spark, tmp_path):
     assert got == {"a": "p", "b": "u", "c": "p", "d": "other"}
     assert {r.key: r.payload for r in t.read(0).collect()} == {"a": "p", "b": "p", "c": "p"}
 
-    t.upsert(_mkrows(spark, ["a"], payload="m"), mode="mor")
+    t.upsert(_mkrows(spark, ["a"], payload="m"))
     mor, _ = _jobs_of(spark, t.read)
     again, n = _jobs_of(spark, t.read)
     assert again is mor and n == 0
@@ -821,10 +647,10 @@ def test_read_reuses_snapshot_frame_until_live_set_changes(spark, tmp_path):
 
 
 def test_upsert_evaluates_its_batch_once(spark, tmp_path):
-    """upsert persists the caller's batch, so its plan runs once per call —
-    not once each for the lo/hi agg, the routing groupBy and the write —
-    on the range layout, a single-directory table and merge-on-read. A
-    batch the caller cached stays cached; upsert's own cache is dropped."""
+    """upsert's plan runs the caller's batch once per call — the write —
+    and takes keys and stats from the written files, also when the batch
+    repeats a key. upsert caches nothing, and a batch the caller cached
+    stays cached."""
     evals = spark.sparkContext.accumulator(0)
 
     @F.udf("string")
@@ -835,19 +661,412 @@ def test_upsert_evaluates_its_batch_once(spark, tmp_path):
     def one_row(key):
         return _mkrows(spark, [key], payload="u").withColumn("key", counted("key"))
 
-    ranged = TxnTable.create(
-        spark, str(tmp_path / "r"), _mkrows(spark, [f"k{i:04d}" for i in range(400)]), n_dirs=4
+    big = TxnTable.create(
+        spark, str(tmp_path / "r"), _mkrows(spark, [f"k{i:04d}" for i in range(400)])
     )
     flat = TxnTable.create(spark, str(tmp_path / "f"), _mkrows(spark, ["a", "b"]))
-    for table, key, mode in ((ranged, "k0001", "cow"), (flat, "b", "cow"), (flat, "c", "mor")):
+    for table, key in ((big, "k0001"), (flat, "b"), (flat, "c")):
         batch = one_row(key)
         before = evals.value
-        table.upsert(batch, mode=mode)
-        assert evals.value - before == 1, (key, mode)
+        table.upsert(batch)
+        assert evals.value - before == 1, key
         assert batch.storageLevel == StorageLevel.NONE
         assert {r.key: r.payload for r in table.read().collect()}[key] == "u"
+    twice = one_row("d").unionByName(one_row("d"))
+    before = evals.value
+    flat.upsert(twice)
+    assert evals.value - before == 2  # each of the batch's two rows, once
 
     cached = one_row("e").cache()
     flat.upsert(cached)
     assert cached.storageLevel != StorageLevel.NONE
     cached.unpersist()
+
+
+def test_range_layout_narrow_upsert_prunes(spark, tmp_path):
+    """A narrow batch on a 400-row table: the base directory carries over
+    by reference (same entry, same files on disk), the batch is one delta,
+    and the table reads the batch's rows over the base's."""
+    path = str(tmp_path / "t")
+    keys = [f"k{i:04d}" for i in range(400)]
+    t = TxnTable.create(spark, path, _mkrows(spark, keys))
+    live0 = t._read_commit(0)["live"]
+    assert len(live0) == 1 and live0[0]["n"] == 400
+
+    v = t.upsert(_mkrows(spark, ["k0001", "k0002"], payload="u"))
+    live1 = t._read_commit(v)["live"]
+    assert live1[0] == live0[0] and len(live1) == 2
+    assert sorted(live1[1]["keys"]) == ["k0001", "k0002"] and live1[1]["n"] == 2
+    got = {r.key: r.payload for r in t.read().collect()}
+    assert got["k0001"] == got["k0002"] == "u" and len(got) == 400
+    assert got["k0399"] == "p"
+
+
+def test_range_layout_survives_wide_upsert(spark, tmp_path):
+    """A wide batch (updates spread over the whole key range, plus a key
+    below and one above every existing key) is one O(batch) delta like any
+    other; a narrow follow-up adds one more and shadows its key."""
+    path = str(tmp_path / "t")
+    keys = [f"k{i:04d}" for i in range(400)]
+    t = TxnTable.create(spark, path, _mkrows(spark, keys))
+    batch = ["a0000", "k0001", "k0150", "k0250", "k0350", "z9999"]
+    v = t.upsert(_mkrows(spark, batch, payload="w"))
+    assert [d["n"] for d in t._read_commit(v)["live"]] == [400, 6]
+    got = {r.key: r.payload for r in t.read().collect()}
+    assert len(got) == 402
+    assert all(got[k] == "w" for k in batch) and got["k0399"] == "p"
+
+    t.upsert(_mkrows(spark, ["k0150"], payload="n"))
+    got = {r.key: r.payload for r in t.read().collect()}
+    assert len(got) == 402 and got["k0150"] == "n" and got["k0250"] == "w"
+
+
+def test_range_layout_delete_and_vacuum(spark, tmp_path):
+    """delete_where commits the matched keys as one tombstone (no data
+    directory), vacuum keeps every directory the latest version reads, and
+    after compact() the superseded directories are reclaimable."""
+    path = str(tmp_path / "t")
+    keys = [f"k{i:04d}" for i in range(400)]
+    t = TxnTable.create(spark, path, _mkrows(spark, keys))
+    v, n = t.delete_where(F.col("key") < "k0100")
+    assert n == 100
+    [tomb] = _deltas(t, v)
+    assert "dir" not in tomb and sorted(tomb["keys"]) == keys[:100]
+    assert {r.key for r in t.read().collect()} == set(keys[100:])
+
+    assert t.vacuum(keep_from_version=v) == []
+    assert {r.key for r in t.read().collect()} == set(keys[100:])
+
+    cv = t.compact()
+    assert t._read_commit(cv)["live"][0]["n"] == 300
+    removed = t.vacuum(keep_from_version=cv)
+    assert removed  # the create-time directory is gone
+    assert {r.key for r in t.read().collect()} == set(keys[100:])
+
+
+def test_put_if_absent_then_upsert_falls_back_and_compact_restores(spark, tmp_path):
+    """put_if_absent appends a delta; an upsert of the same keys shadows it
+    (every key still exactly once), and compact() folds both deltas into
+    one base directory with the same rows."""
+    path = str(tmp_path / "t")
+    keys = [f"k{i:04d}" for i in range(200)]
+    t = TxnTable.create(spark, path, _mkrows(spark, keys))
+    _, ins = t.put_if_absent(_mkrows(spark, ["k0050x", "k0150x"], payload="i"))
+    assert {r.key for r in ins.collect()} == {"k0050x", "k0150x"}
+    t.upsert(_mkrows(spark, ["k0050x", "k0150x"], payload="u"))
+    got = {r.key: r.payload for r in t.read().collect()}
+    assert got["k0050x"] == got["k0150x"] == "u" and len(got) == 202
+    assert t.read().groupBy("key").count().where(F.col("count") > 1).count() == 0
+    cv = t.compact()
+    assert len(t._read_commit(cv)["live"]) == 1
+    assert {r.key: r.payload for r in t.read().collect()} == got
+
+
+def test_mor_upsert_lww_read_resolution(spark, tmp_path):
+    """An upsert lands the batch as one delta dir — no base read, no
+    rewrite — and read() resolves last-writer-wins by commit order: later
+    deltas shadow earlier deltas shadow the base. Snapshot isolation holds
+    per version."""
+    path = str(tmp_path / "t")
+    keys = [f"k{i:03d}" for i in range(100)]
+    t = TxnTable.create(spark, path, _mkrows(spark, keys))
+    live0 = t._read_commit(0)["live"]
+
+    v1 = t.upsert(_mkrows(spark, ["k001", "k050"], payload="m1"))
+    live1 = t._read_commit(v1)["live"]
+    # the base dir carried by reference; exactly one delta appended
+    assert live1[:1] == live0 and len(_deltas(t, v1)) == 1
+
+    t.upsert(_mkrows(spark, ["k050", "k999x"], payload="m2"))
+    got = {r.key: r.payload for r in t.read().collect()}
+    assert len(got) == 101
+    assert got["k001"] == "m1" and got["k050"] == "m2" and got["k999x"] == "m2"
+    assert got["k000"] == "p"
+    # no duplicate keys surface through the resolution
+    assert t.read().groupBy("key").count().where(F.col("count") > 1).count() == 0
+    # snapshots: v1 still sees m1 on k050 and no k999x
+    got1 = {r.key: r.payload for r in t.read(v1).collect()}
+    assert got1["k050"] == "m1" and "k999x" not in got1
+
+    # compact folds the deltas away: one plain base, same state
+    cv = t.compact()
+    assert t._read_commit(cv)["live"][0].keys() == {"dir", "n"}
+    assert not _deltas(t, cv)
+    assert {r.key: r.payload for r in t.read().collect()} == got
+
+
+def test_mor_delete_where_absorbs_deltas_first(spark, tmp_path):
+    """A delete on a delta-bearing table must not resurrect shadowed rows:
+    the tombstone names the key, so the base copy beneath the deleted delta
+    copy stays hidden."""
+    path = str(tmp_path / "t")
+    t = TxnTable.create(spark, path, _mkrows(spark, ["a", "b", "c"]))
+    t.upsert(_mkrows(spark, ["b"], payload="new"))
+    # delete rows with payload "new": only the delta copy of b matches; a
+    # naive per-dir delete would drop it and re-expose b="p"
+    v, n = t.delete_where(F.col("payload") == "new")
+    assert n == 1
+    got = {r.key: r.payload for r in t.read().collect()}
+    assert got == {"a": "p", "c": "p"}
+    # and still after the deltas fold into a new base
+    t.compact()
+    assert {r.key: r.payload for r in t.read().collect()} == got
+
+
+def test_mor_put_if_absent_sees_shadowed_keys(spark, tmp_path):
+    """put_if_absent arbitration checks the resolved keys: a shadowed key is
+    still taken, a key a tombstone deleted can be inserted again."""
+    path = str(tmp_path / "t")
+    t = TxnTable.create(spark, path, _mkrows(spark, ["a", "c"]))
+    t.upsert(_mkrows(spark, ["a"], payload="v2"))
+    t.delete_where(F.col("key") == "c")
+    _, ins = t.put_if_absent(_mkrows(spark, ["a", "b", "c"], payload="i"))
+    assert {r.key for r in ins.collect()} == {"b", "c"}
+    got = {r.key: r.payload for r in t.read().collect()}
+    assert got == {"a": "v2", "b": "i", "c": "i"}
+
+
+def test_cow_exact_ownership_prunes_scattered_batch(spark, tmp_path):
+    """A batch with the first and the last key of the table (its key range
+    spans everything) writes only its two rows and updates only them."""
+    path = str(tmp_path / "t")
+    keys = [f"k{i:04d}" for i in range(400)]
+    t = TxnTable.create(spark, path, _mkrows(spark, keys))
+    v = t.upsert(_mkrows(spark, ["k0000", "k0399"], payload="x"))
+    assert [d["n"] for d in t._read_commit(v)["live"]] == [400, 2]
+    got = {r.key: r.payload for r in t.read().collect()}
+    assert got["k0000"] == got["k0399"] == "x" and len(got) == 400
+
+
+def test_cow_upsert_after_mor_absorbs_deltas(spark, tmp_path):
+    """Last-writer-wins across commits is commit order, not updated_at: a
+    later upsert wins even when its row carries an OLDER updated_at than
+    the copy it shadows (INSERT OR REPLACE semantics)."""
+    path = str(tmp_path / "t")
+    t = TxnTable.create(spark, path, _mkrows(spark, ["a", "b"]))
+    t.upsert(_mkrows(spark, ["a"], payload="first"))
+    t.upsert(_mkrows(spark, ["b"], payload="cow1"))
+    older = spark.createDataFrame(
+        [("a", datetime(2020, 1, 1, tzinfo=timezone.utc), None, "second")], SCHEMA
+    )
+    t.upsert(older)
+    got = {r.key: r.payload for r in t.read().collect()}
+    assert got == {"a": "second", "b": "cow1"}
+
+
+def test_upsert_batch_duplicate_keys_keep_latest_updated_at(spark, tmp_path):
+    """Two copies of one key in a batch: the copy with the latest
+    updated_at wins (upsert_by_key's rule), for a key the table holds and
+    for a new one, in either row order."""
+    def batch(key, first_newer):
+        rows = [
+            (key, datetime(2025, 1, 1, tzinfo=timezone.utc), None, "older"),
+            (key, datetime(2025, 1, 2, tzinfo=timezone.utc), None, "newer"),
+        ]
+        return spark.createDataFrame(rows[::-1] if first_newer else rows, SCHEMA)
+
+    t = TxnTable.create(spark, str(tmp_path / "t"), _mkrows(spark, ["k"]))
+    for key, first_newer in (("k", False), ("new", False), ("k", True), ("new2", True)):
+        v = t.upsert(batch(key, first_newer))
+        assert _deltas(t, v)[-1]["keys"] == [key]
+        got = {r.key: r.payload for r in t.read().collect()}
+        assert got[key] == "newer", (key, first_newer)
+    assert t.read().count() == 3
+    # the first, duplicated write of the batch never stays on disk
+    assert len([n for n in os.listdir(t.path) if n.startswith("d-")]) == 5
+
+
+def test_tombstone_only_commit_changes_read_memo(spark, tmp_path):
+    """A delete adds no directory, so the read() memo must not be keyed by
+    directory names alone: the next read drops the deleted key, and an
+    unchanged table still returns the memoized frame."""
+    t = TxnTable.create(spark, str(tmp_path / "t"), _mkrows(spark, ["a", "b", "c"]))
+    t.upsert(_mkrows(spark, ["b"], payload="u"))
+    before = t.read()
+    assert {r.key for r in before.collect()} == {"a", "b", "c"}
+    t.delete_where(F.col("key") == "b")
+    after = t.read()
+    assert after is not before
+    assert {r.key for r in after.collect()} == {"a", "c"}
+    assert t.read() is after
+    t.delete_where(F.col("key") == "a")
+    assert {r.key for r in t.read().collect()} == {"c"}
+
+
+def test_key_set_literal_escapes_keys(spark, tmp_path):
+    """Keys reach the key-set literal as SQL text, so quotes, backslashes
+    and non-ASCII characters must round-trip through upsert, delete and
+    put_if_absent exactly."""
+    odd = ["it's", "back\\slash", "\\'", "a'b\\c", "x') OR ('1'='1", "ключ", "日本語", "é", "tab\tnl\n"]
+    t = TxnTable.create(spark, str(tmp_path / "t"), _mkrows(spark, odd + ["plain"]))
+    t.upsert(_mkrows(spark, odd[:5], payload="u"))
+    t.delete_where(F.col("key").isin(odd[3:7]))
+    got = {r.key: r.payload for r in t.read().collect()}
+    assert got == {"it's": "u", "back\\slash": "u", "\\'": "u", "é": "p", "tab\tnl\n": "p", "plain": "p"}
+    _, ins = t.put_if_absent(_mkrows(spark, odd, payload="i"))
+    assert {r.key for r in ins.collect()} == set(odd[3:7])
+    assert {r.key: r.payload for r in t.read().collect()} == {**got, **{k: "i" for k in odd[3:7]}}
+    assert t.read().where(F.col("key") == "x') OR ('1'='1").count() == 1
+
+
+def test_get_plan_is_flat_in_the_delta_count(spark, tmp_path, monkeypatch):
+    """A keyed get runs the same number of jobs on a compacted table, on one
+    delta and on as many deltas as the compaction threshold lets live, and
+    its plan has no window, broadcast or shuffle — also when a key repeats
+    across deltas and when the deltas hold tombstones."""
+    monkeypatch.setattr(txn, "_MAX_DELTAS", 8)
+    keys = [f"k{i:03d}" for i in range(200)]
+
+    def get(t, key):
+        df = t.read().where(F.col("key") == key)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan and "Exchange" not in plan, plan
+        rows, jobs = _jobs_of(spark, df.collect)
+        return {r.key: r.payload for r in rows}, jobs
+
+    t = TxnTable.create(spark, str(tmp_path / "t"), _mkrows(spark, keys))
+    t.read()
+    assert get(t, "k001") == ({"k001": "p"}, 1)
+    t.upsert(_mkrows(spark, ["k001"], payload="d1"))
+    t.read()
+    assert get(t, "k001") == ({"k001": "d1"}, 1)
+    t.upsert(_mkrows(spark, ["k002", "k003"], payload="d2"))
+    t.delete_where(F.col("key") == "k003")
+    t.upsert(_mkrows(spark, ["k001"], payload="d3"))  # k001 repeats
+    t.put_if_absent(_mkrows(spark, ["k003", "new"], payload="d4"))
+    t.upsert(_mkrows(spark, ["k004"], payload="d5"))
+    t.delete_where(F.col("key") == "k009")
+    t.upsert(_mkrows(spark, ["k007"], payload="d6"))
+    assert len(_deltas(t)) == 8  # at the threshold, not past it
+    t.read()
+    for key, want in (("k001", "d3"), ("k002", "d2"), ("k003", "d4"), ("k005", "p"), ("k007", "d6")):
+        assert get(t, key) == ({key: want}, 1)
+    assert get(t, "k009") == ({}, 1)
+    t.upsert(_mkrows(spark, ["k006"], payload="d7"))  # the 9th delta compacts
+    assert not _deltas(t)
+    t.read()
+    assert get(t, "k001") == ({"k001": "d3"}, 1)
+
+
+def test_tombstone_crash_and_two_writers(spark, tmp_path):
+    """A delete that crashes before its publish leaves the table and the
+    event feed untouched (its events dir is an orphan vacuum reclaims);
+    two writers deleting the same key delete it once, and a concurrent
+    upsert of another key survives both."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    path = str(tmp_path / "t")
+    t = TxnTable.create(spark, path, _mkrows(spark, ["a", "b", "c"]))
+    real = t._try_publish
+
+    def crash(version, commit):
+        raise RuntimeError("crash before publish")
+
+    t._try_publish = crash
+    with pytest.raises(RuntimeError):
+        t.delete_where(F.col("key") == "a", events_of=lambda m: m.select("key"))
+    t._try_publish = real
+    assert t.version() == 0 and {r.key for r in t.read().collect()} == {"a", "b", "c"}
+    removed = t.vacuum()
+    assert len(removed) == 1 and removed[0].startswith("e-")
+
+    def work(i):
+        tbl = TxnTable(spark, path)
+        if i < 2:
+            return tbl.delete_where(F.col("key") == "a")[1]
+        tbl.upsert(_mkrows(spark, ["d"], payload="w"))
+        return 0
+
+    with ThreadPoolExecutor(max_workers=3) as ex:
+        deleted = list(ex.map(work, range(3)))
+    assert sum(deleted) == 1
+    assert {r.key: r.payload for r in t.read().collect()} == {"b": "p", "c": "p", "d": "w"}
+
+
+def test_threshold_compaction_crash_and_two_writers(spark, tmp_path, monkeypatch):
+    """Threshold compaction is an ordinary commit: a crash before its
+    publish leaves the triggering write committed and the table exact (the
+    half-written base is an orphan), the next winning write compacts, and
+    racing writers that both pass the threshold lose no update."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    monkeypatch.setattr(txn, "_MAX_DELTAS", 2)
+    path = str(tmp_path / "t")
+    t = TxnTable.create(spark, path, _mkrows(spark, ["seed"]))
+    t.upsert(_mkrows(spark, ["a"], payload="1"))
+    t.delete_where(F.col("key") == "seed")
+    real = t._try_publish
+
+    def crash_on_compact(version, commit):
+        if commit["op"] == "compact":
+            raise RuntimeError("crash before publish")
+        return real(version, commit)
+
+    t._try_publish = crash_on_compact
+    with pytest.raises(RuntimeError):
+        t.upsert(_mkrows(spark, ["b"], payload="2"))  # 3rd delta: compacts
+    t._try_publish = real
+    assert t.version() == 3 and len(_deltas(t)) == 3
+    assert {r.key: r.payload for r in t.read().collect()} == {"a": "1", "b": "2"}
+    assert len(t.vacuum()) == 1  # the compaction's orphan base
+
+    assert t.upsert(_mkrows(spark, ["c"], payload="3")) == 4
+    assert t.version() == 5 and not _deltas(t)
+    assert {r.key: r.payload for r in t.read().collect()} == {"a": "1", "b": "2", "c": "3"}
+
+    def write(i):
+        TxnTable(spark, path).upsert(_mkrows(spark, [f"k{i}"], payload=str(i)))
+
+    with ThreadPoolExecutor(max_workers=3) as ex:
+        list(ex.map(write, range(6)))
+    got = {r.key: r.payload for r in t.read().collect()}
+    assert got == {"a": "1", "b": "2", "c": "3", **{f"k{i}": str(i) for i in range(6)}}
+    assert len(_deltas(t)) <= 2
+    ops = [t._read_commit(v)["op"] for v in range(6, t.version() + 1)]
+    assert ops.count("upsert") == 6 and "compact" in ops
+
+
+def test_drain_events_probes_do_not_grow_with_history(spark, tmp_path, monkeypatch):
+    """drain_events finds its work from one listing of the log: on a table
+    whose log was cleaned to a checkpoint, the number of filesystem probes
+    is the same at version 1,000 as at version 100,000."""
+    import builtins
+
+    events_dir = str(tmp_path / "events")
+
+    def cleaned_table(version):
+        path = str(tmp_path / f"t{version}")
+        t = TxnTable.create(spark, path, _mkrows(spark, ["a"]))
+        log = os.path.join(path, "_txn")
+        commit = dict(t._read_commit(0), version=version)
+        for name in (f"{version:06d}.json", f"{version:06d}.checkpoint.json"):
+            with open(os.path.join(log, name), "w") as f:
+                json.dump(commit, f)
+        with open(os.path.join(log, "_last_checkpoint"), "w") as f:
+            json.dump({"version": version}, f)
+        assert t.clean_log() == [0] and t.version() == version
+        return t
+
+    def probes(t):
+        calls = []
+
+        def counted(mod, name):
+            fn = getattr(mod, name)
+
+            def wrapper(*a, **k):
+                calls.append(name)
+                return fn(*a, **k)
+
+            monkeypatch.setattr(mod, name, wrapper)
+
+        for mod, name in ((os.path, "exists"), (os.path, "isdir"), (os, "listdir"),
+                          (os, "stat"), (os, "link"), (builtins, "open")):
+            counted(mod, name)
+        try:
+            drain_events(t, events_dir)
+        finally:
+            monkeypatch.undo()
+        return len(calls)
+
+    short, long = cleaned_table(1_000), cleaned_table(100_000)
+    assert probes(short) == probes(long) < 50
