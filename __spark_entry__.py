@@ -690,9 +690,11 @@ def _q_memory_upsert_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the second SHADOWS the subset ending in 77 with newer data — and the
     returned frame is the resolved read: base rows screened by the delta
     key-set literal, each delta row kept only from its key's latest delta
-    (the 77 keys repeat, so the read matches rows to their directory; from
-    sf0.01 up the second batch passes the 1,000-key bound and its commit
-    compacts, writing that resolved read as the new base). A hash-green
+    (the 77 keys repeat, so the read matches rows to their directory; at
+    sf0.01 the second batch takes the deltas past the 1,000-key bound and
+    its commit compacts, writing that resolved read as the new base; from
+    sf0.1 up each batch alone passes the bound and folds into one rewrite
+    of the base). A hash-green
     row certifies commit-order LWW across generations end-to-end
     (the oracle is the pure prio-windowed transform — no row may differ).
     Table root recreated per call (temp-dir ETL; bench.py skips write-path
@@ -775,9 +777,10 @@ def _q_memory_upsert_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = TxnTable.create(spark, path, mem, checkpoint_interval=1)
     t.upsert(updates)        # v1 (+ checkpoint 1)
     # the same batch again: last-writer-wins over identical rows is a state
-    # no-op but advances the log — v2 (+ checkpoint 2). Both upserts are
-    # deltas; a batch past the compaction threshold (10k keys, sf0.1 and
-    # up) also makes the second one compact them into one base as v3.
+    # no-op but advances the log — v2 (+ checkpoint 2). At sf0.01 both
+    # upserts are deltas and the second takes them past the 1,000-key bound,
+    # so its writer compacts them into one base as v3; from sf0.1 up each
+    # batch alone passes the bound and folds into one rewrite of the base.
     t.upsert(updates)
     cleaned = t.clean_log()  # truncates every commit before the latest
     assert cleaned == list(range(t.version())), cleaned

@@ -31,16 +31,20 @@ delta directory holding only the batch (O(batch) bytes, no base read);
 ``delete_where`` appends a TOMBSTONE, the matched keys with no directory.
 ``read()`` resolves last-writer-wins from the commit alone, in one scan
 of the base and delta directories: a row is kept when no delta names its
-key, or when its file lies in the delta that last wrote its key. The key
-sets are JSON string literals the optimizer folds to constants, so plan
-building stays cheap as they grow and a commit never changes the plan's
-shape; no broadcast, no window, no per-directory union. Once the deltas
-pass ``_MAX_DELTAS`` entries or ``_MAX_DELTA_KEYS`` keys the winning writer
-``compact()``s them into a new base. Extra ``stat_cols`` (e.g. expires_at)
-record per-directory min/max so ``delete_where`` can skip directories a
-range predicate provably misses (zone maps on the sweep column); the skip
-stays exact on deltas because key exclusion comes from the commit, not
-from the directories scanned.
+key, or when its file lies in the delta that last wrote its key. The
+delta keys reach the plan as SQL literals (past ten keys an IN list the
+optimizer turns into a hash set): one lookup per row however many keys
+are live, and no broadcast, no window, no per-directory union. Once the deltas pass
+``_MAX_DELTAS`` entries or ``_key_bound()`` keys (which grows with the
+base) the winning writer ``compact()``s them into a new base; a single
+write past the key bound folds straight into a rewrite of the base, so no
+commit lists more keys than that bound. Extra ``stat_cols`` (e.g.
+expires_at) record per-directory min/max so ``delete_where`` can skip
+directories a range predicate provably misses (zone maps on the sweep
+column); the skip stays exact on deltas because key exclusion comes from
+the commit, not from the directories scanned. Tables whose deltas record
+no keys (written before deltas listed them) must be compacted by the
+release that wrote them: ``read()`` refuses them.
 
 Log compaction (new r8): every ``checkpoint_interval`` commits the winning
 writer also publishes ``_txn/NNNNNN.checkpoint.json`` — the full table
@@ -82,15 +86,21 @@ from pyspark.sql.types import StructType, TimestampNTZType, TimestampType
 
 _LOG_DIR = "_txn"
 
-#: compaction thresholds: a commit that leaves more delta entries or more
-#: delta keys than these live makes its writer compact(). Measured on the
+#: compaction thresholds: a commit that leaves more delta entries than
+#: _MAX_DELTAS, or more delta keys than _key_bound() allows, makes its writer
+#: compact(). The entry bound caps the small files each scan opens: on the
 #: 20k-row memory table (4-core VM, medians of interleaved reads; see
-#: CHANGES.md): a compaction costs about 1 s, and a get at 3-6 deltas costs
-#: within about 12 ms of the 100-130 ms it costs compacted, each delta
-#: adding a file to the scan; every commit carries the delta keys, so the
-#: key bound also caps the commit JSON.
+#: CHANGES.md) a get at 3-6 deltas costs within about 12 ms of the 100-130 ms
+#: it costs compacted. The key bound caps the commit JSON, which carries
+#: every delta key, and the key-set literal each snapshot parses; it grows
+#: with the base (one key per _BASE_ROWS_PER_KEY base rows), because a
+#: compaction rewrites the whole base and must stay rare at scale.
 _MAX_DELTAS = 8
 _MAX_DELTA_KEYS = 1_000
+_BASE_ROWS_PER_KEY = 1_000
+#: Spark's default spark.sql.optimizer.inSetConversionThreshold: an IN list
+#: longer than this becomes a hash set (InSet)
+_IN_SET_MIN_KEYS = 10
 
 
 def _commit_path(table_path: str, version: int) -> str:
@@ -99,6 +109,14 @@ def _commit_path(table_path: str, version: int) -> str:
 
 def _checkpoint_path(table_path: str, version: int) -> str:
     return os.path.join(table_path, _LOG_DIR, f"{version:06d}.checkpoint.json")
+
+
+def _key_bound(live: list[dict]) -> int:
+    """Most delta keys ``live`` may carry before a compaction, and the most
+    keys one write may list in its commit entry: _MAX_DELTA_KEYS, or one
+    key per _BASE_ROWS_PER_KEY base rows when the base is larger."""
+    base_rows = sum(d.get("n", 0) for d in live if "keys" not in d)
+    return max(_MAX_DELTA_KEYS, base_rows // _BASE_ROWS_PER_KEY)
 
 
 def _commit_versions(names) -> list[int]:
@@ -239,11 +257,12 @@ class TxnTable:
 
     # --------------------------------------------------------------- data
 
-    def _write_data_dir(self, df: DataFrame, *, keys: bool = False) -> tuple[str, dict]:
+    def _write_data_dir(self, df: DataFrame, *, keys: int = 0) -> tuple[str, dict]:
         """Write one immutable data directory; returns (dir_name, stats):
         row count ``n``, a min/max zone map per configured stat column and,
-        with ``keys``, the key list of a delta — all from one agg over the
-        freshly-written files."""
+        when the directory holds at most ``keys`` rows, the key list of a
+        delta — all from one agg over the freshly-written files. At most
+        ``keys + 1`` keys reach the driver whatever the directory holds."""
         name = f"d-{uuid.uuid4().hex}"
         df.write.parquet(os.path.join(self.path, name))
         self._schemas[name] = df.schema
@@ -264,7 +283,7 @@ class TxnTable:
                 col = F.unix_micros(col)
             aggs += [F.min(col).alias(f"_lo_{c}"), F.max(col).alias(f"_hi_{c}")]
         if keys:
-            aggs.append(F.collect_list(self.key_col).alias("keys"))
+            aggs.append(F.slice(F.collect_list(self.key_col), 1, keys + 1).alias("keys"))
         aggs.append(F.collect_set("_metadata.file_name").alias("_files"))
         row = self._read_dirs([name]).agg(*aggs).first()
         if row["_files"]:
@@ -281,7 +300,7 @@ class TxnTable:
                 c: {"lo": _portable_stat(row[f"_lo_{c}"]), "hi": _portable_stat(row[f"_hi_{c}"])}
                 for c in self.stat_cols
             }
-        if keys:
+        if keys and row["n"] <= keys:
             stats["keys"] = list(row["keys"])
         return name, stats
 
@@ -324,6 +343,12 @@ class TxnTable:
         The key exclusion still comes from every delta, so a skipped
         directory never re-exposes an older copy. The schema record keeps
         only ``live``'s directories."""
+        if any(d.get("delta") and "keys" not in d for d in live):
+            raise ValueError(
+                f"{self.path} holds merge-on-read deltas that record no keys "
+                "(written before deltas listed them): compact() it with the "
+                "release that wrote it first"
+            )
         names = {d["dir"] for d in live if "dir" in d}
         self._schemas = {n: s for n, s in self._schemas.items() if n in names}
         skip = skip_dir or (lambda d: False)
@@ -341,18 +366,23 @@ class TxnTable:
         rows = self._read_dirs(base + list(owned))
         if not latest:
             return rows
-        # The key sets are two JSON string literals that the optimizer folds
-        # to constants: parsing stays cheap however many keys there are (a
-        # Column.isin tree holds one node per key), and a commit changes
-        # only literal values, never the plan's shape, so its generated
-        # code is compiled once and reused by every later snapshot.
+        # Both key tests are SQL text (a Column.isin tree costs a Python-to-
+        # JVM call per key), and for string keys neither's generated code
+        # depends on the keys, so a commit recompiles nothing. A few delta
+        # keys are a JSON array literal the optimizer folds to a constant;
+        # past _IN_SET_MIN_KEYS they are an IN list, which the optimizer
+        # turns into a hash set: one lookup per row however many keys are
+        # live, where array_contains would cost rows x keys. Only rows whose
+        # key some delta names reach the ownership test, a folded JSON map.
         key, kt = f"`{self.key_col}`", rows.schema[self.key_col].dataType.simpleString()
-        named = f"from_json({_sql_string(json.dumps(list(latest)))}, 'array<{kt}>')"
+        if len(latest) > _IN_SET_MIN_KEYS:
+            named = f"{key} IN ({', '.join(_sql_literal(k) for k in latest)})"
+        else:
+            named = f"array_contains(from_json({_sql_string(json.dumps(list(latest)))}, 'array<{kt}>'), {key})"
         won = f"from_json({_sql_string(json.dumps(owned))}, 'map<string,array<{kt}>>')"
         own_dir = "element_at(split(_metadata.file_path, '/'), -2)"
         return rows.where(F.expr(
-            f"NOT array_contains({named}, {key}) "
-            f"OR array_contains(try_element_at({won}, {own_dir}), {key})"
+            f"NOT {named} OR array_contains(try_element_at({won}, {own_dir}), {key})"
         ))
 
     # ------------------------------------------------------------- writes
@@ -369,56 +399,90 @@ class TxnTable:
         checkpoint_interval: int = 10,
     ) -> "TxnTable":
         """Create the table as version 0: one base directory. Fails if
-        version 0 already exists."""
+        version 0 already exists. The base is written rebalanced, as a
+        compaction writes it, so its files follow its size rather than the
+        input's partitioning (one large input file would otherwise leave a
+        base every later scan reads in one task)."""
         t = cls(spark, path, key_col, stat_cols=stat_cols, checkpoint_interval=checkpoint_interval)
         os.makedirs(path, exist_ok=True)
-        name, stats = t._write_data_dir(df.where(F.col(key_col).isNotNull()))
+        name, stats = t._write_data_dir(df.where(F.col(key_col).isNotNull()).hint("rebalance"))
         if not t._try_publish(0, {"version": 0, "op": "create", "live": [{"dir": name, **stats}]}):
             raise FileExistsError(f"table already created at {path}")
         return t
 
-    def _commit_delta(self, v: int, live: list[dict], entry: dict, op: str, **extra) -> bool:
-        """Publish ``entry`` as the newest delta of version ``v + 1``; the
-        winner compacts when the deltas now pass a threshold. False when a
-        concurrent writer owns ``v + 1``."""
-        live = live + [dict(entry, v=v + 1)]
+    def _commit_write(self, v: int, live: list[dict], entry: dict, op: str, fold, **extra) -> bool:
+        """Publish version ``v + 1``; False when a concurrent writer owns it.
+
+        An ``entry`` that lists its keys is appended as the newest delta. A
+        write past the key bound lists none: ``fold`` (``snapshot ->
+        frame``) then gives the table's new content, written as ONE plain
+        base directory, so the commit JSON never carries more keys than
+        _key_bound() allows. The winner compacts when the deltas now pass a
+        threshold — after the publish, so an exception from that compaction
+        leaves the write committed."""
+        if "keys" in entry:
+            live = live + [dict(entry, v=v + 1)]
+        else:
+            # rebalance: AQE sizes the output files, so the union of base
+            # and delta scans does not leave one small file per partition
+            name, stats = self._write_data_dir(fold(self._snapshot(live)).hint("rebalance"))
+            live = [{"dir": name, **stats}]
         if not self._try_publish(v + 1, {"version": v + 1, "op": op, "live": live, **extra}):
             return False
         deltas = [d for d in live if "keys" in d]
-        if len(deltas) > _MAX_DELTAS or sum(len(d["keys"]) for d in deltas) > _MAX_DELTA_KEYS:
+        if len(deltas) > _MAX_DELTAS or sum(len(d["keys"]) for d in deltas) > _key_bound(live):
             self.compact()
         return True
+
+    def _latest_per_key(self, df: DataFrame) -> DataFrame:
+        """``df`` without NULL keys, one row per key: the copy with the
+        latest ``updated_at`` (operators/memory.py:upsert_by_key's rule)."""
+        order = F.col("updated_at").desc() if "updated_at" in df.columns else F.lit(0)
+        w = Window.partitionBy(self.key_col).orderBy(order)
+        return (
+            df.where(F.col(self.key_col).isNotNull())
+            .withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1).drop("_rn")
+        )
 
     def upsert(self, updates: DataFrame) -> int:
         """Last-writer-wins keyed upsert as one ACID commit; returns its
         version. The batch lands as ONE delta directory — O(batch) bytes,
         no base read, no rewrite — whose keys ride the commit entry. When
         a key repeats inside the batch, the copy with the latest
-        ``updated_at`` wins (operators/memory.py:upsert_by_key's rule).
+        ``updated_at`` wins (operators/memory.py:upsert_by_key's rule). A
+        batch of more rows than _key_bound() allows is instead folded into
+        the table with one rewrite of the base, so its keys never enter the
+        commit log.
 
         The directory is written once, before the publish loop: a conflict
         retries at the next version with the same directory, so no update
-        is lost and nothing is rewritten. An empty batch commits nothing."""
-        name, stats = self._write_data_dir(updates, keys=True)
-        if len(set(stats["keys"])) < stats["n"]:
+        is lost and nothing is rewritten. An empty batch commits nothing.
+        A compaction the commit triggers runs after the publish: an
+        exception raised there leaves this upsert committed."""
+        bound = _key_bound(self._live(self.version()))
+        name, stats = self._write_data_dir(updates, keys=bound)
+        if "keys" in stats and len(set(stats["keys"])) < stats["n"]:
             # a NULL key (collect_list skips it) or a repeated one: rewrite
             # from the written files, so the batch is still evaluated once
             dup = name
-            order = F.col("updated_at").desc() if "updated_at" in updates.columns else F.lit(0)
-            w = Window.partitionBy(self.key_col).orderBy(order)
-            latest = (
-                self._read_dirs([dup]).where(F.col(self.key_col).isNotNull())
-                .withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1).drop("_rn")
-            )
-            name, stats = self._write_data_dir(latest, keys=True)
+            name, stats = self._write_data_dir(self._latest_per_key(self._read_dirs([dup])), keys=bound)
             shutil.rmtree(os.path.join(self.path, dup), ignore_errors=True)
-        if not stats["keys"]:
+        if stats.get("keys") == []:
             shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
             return self.version()
+
+        def fold(snap: DataFrame) -> DataFrame:
+            batch = self._read_dirs([name])
+            kept = snap.join(batch.select(self.key_col), self.key_col, "left_anti")
+            return kept.unionByName(self._latest_per_key(batch))
+
         while True:
             v = self.version()
-            if self._commit_delta(v, self._live(v), {"dir": name, **stats}, "upsert"):
+            if self._commit_write(v, self._live(v), {"dir": name, **stats}, "upsert", fold):
+                if "keys" not in stats:
+                    # folded into the new base: the batch directory is spent
+                    shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
                 return v + 1
             # conflict: a concurrent writer won this version; append again
 
@@ -435,13 +499,18 @@ class TxnTable:
 
         Existence is checked against the RESOLVED keys: a key a tombstone
         deleted can be inserted again, a shadowed one is still taken. The
-        insert is a delta like an upsert's. Optimistic retry on version
-        conflict: the retry re-filters against the winner's state, so the
-        check-then-insert is atomic at commit granularity. Batch-internal
-        duplicate keys are collapsed arbitrarily (dropDuplicates) — pre-dedup
-        the batch when which-copy-wins matters. NULL-key rows are DROPPED,
-        never inserted (a NULL can't be arbitrated: the anti-join existence
-        check never matches it, so it would re-insert on every call)."""
+        insert is a delta like an upsert's; past _key_bound() rows it is
+        folded into a rewrite of the base instead, and ``inserted_df`` then
+        reads a directory no commit references (vacuum() reclaims it).
+        Optimistic retry on version conflict: the retry re-filters against
+        the winner's state, so the check-then-insert is atomic at commit
+        granularity. Batch-internal duplicate keys are collapsed arbitrarily
+        (dropDuplicates) — pre-dedup the batch when which-copy-wins matters.
+        NULL-key rows are DROPPED, never inserted (a NULL can't be
+        arbitrated: the anti-join existence check never matches it, so it
+        would re-insert on every call). A compaction the commit triggers
+        runs after the publish: an exception raised there leaves the insert
+        committed."""
         fresh = updates.where(F.col(self.key_col).isNotNull()).dropDuplicates([self.key_col])
         while True:
             v = self.version()
@@ -451,14 +520,20 @@ class TxnTable:
                 )
             live = self._live(v)
             taken = self._snapshot(live).select(self.key_col)
-            name, stats = self._write_data_dir(fresh.join(taken, self.key_col, "left_anti"), keys=True)
-            if not stats["keys"]:
+            name, stats = self._write_data_dir(
+                fresh.join(taken, self.key_col, "left_anti"), keys=_key_bound(live)
+            )
+            if stats["n"] == 0:
                 # nothing new to insert — drop the empty uncommitted dir
                 # (ours alone, never referenced) and report version v
                 shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
                 return v, updates.limit(0)
-            if self._commit_delta(v, live, {"dir": name, **stats}, "insert_if_absent"):
-                return v + 1, self._read_dirs([name])
+            inserted = self._read_dirs([name])
+            if self._commit_write(
+                v, live, {"dir": name, **stats}, "insert_if_absent",
+                lambda snap: snap.unionByName(inserted),
+            ):
+                return v + 1, inserted
             # conflict: orphan dir (vacuum reclaims); recompute and retry
 
     def delete_where(self, condition: Column | str, events_of=None, skip_dir=None) -> tuple[int, int]:
@@ -470,7 +545,8 @@ class TxnTable:
         commit appends them as a TOMBSTONE: a delta with keys and no data
         directory. No directory is rewritten, and a shadowed older copy of a
         deleted key stays hidden, because the base filter excludes every
-        delta key.
+        delta key. At most _key_bound() + 1 keys reach the driver: a delete
+        that matches more rewrites the base without its rows instead.
 
         ``events_of`` (optional, ``matching_rows_df -> events_df``) builds an
         events frame that rides the SAME commit in an events directory — the
@@ -479,7 +555,9 @@ class TxnTable:
         commit deletes from, so events always agree with the deleted rows
         even when a concurrent writer forces a retry. A crash before publish
         shows neither the delete nor the events; after publish, both.
-        drain_events() delivers them exactly-once downstream.
+        drain_events() delivers them exactly-once downstream. A compaction
+        the commit triggers runs after the publish: an exception raised
+        there leaves the delete and its events committed.
 
         ``skip_dir`` (optional, ``dir_commit_entry -> bool``) is the zone-map
         fast path: return True when the directory's recorded stats PROVE no
@@ -495,37 +573,40 @@ class TxnTable:
             if snap is None:
                 return v, 0
             matched = snap.where(cond)
-            keys = [r[0] for r in matched.select(self.key_col).collect()]
-            if not keys:
+            bound = _key_bound(live)
+            n, keys = matched.agg(
+                F.count("*"), F.slice(F.collect_list(self.key_col), 1, bound + 1)
+            ).first()
+            if not n:
                 return v, 0
             extra = {}
             if events_of is not None:
                 extra["events"] = f"e-{uuid.uuid4().hex}"
                 events_of(matched).write.parquet(os.path.join(self.path, extra["events"]))
-            if self._commit_delta(v, live, {"keys": keys}, "delete", **extra):
-                return v + 1, len(keys)
+            entry = {"keys": list(keys)} if n <= bound else {}
+            kept = lambda snap: snap.where(~F.coalesce(cond, F.lit(False)))  # noqa: E731
+            if self._commit_write(v, live, entry, "delete", kept, **extra):
+                return v + 1, n
 
     def compact(self) -> int:
         """Fold the deltas into ONE plain base directory — the OPTIMIZE step
         of the lifecycle, which the winning writer of a commit runs once the
-        deltas pass ``_MAX_DELTAS`` or ``_MAX_DELTA_KEYS``. It writes the
-        resolved snapshot, so reads of the result filter nothing and the
-        base's zone maps describe only live rows. Compaction is an ordinary
-        commit (op="compact", same optimistic publish), so it coexists
-        safely with concurrent writers — a conflict just retries — and
-        superseded dirs stay on disk for snapshot readers until
-        vacuum(keep_from_version=...) reclaims them. No-op on a table that
-        is already one directory.
+        deltas pass ``_MAX_DELTAS`` or _key_bound(). It writes the resolved
+        snapshot, whose key exclusion past ten keys is one hash-set lookup
+        per row, so its cost grows with the rows, not rows x keys; reads of
+        the result filter nothing and the base's zone maps describe only
+        live rows. Compaction is an ordinary commit (op="compact", same
+        optimistic publish), so it coexists safely with concurrent writers
+        — a conflict just retries — and superseded dirs stay on disk for
+        snapshot readers until vacuum(keep_from_version=...) reclaims them.
+        No-op on a table that is already one directory.
         """
         while True:
             v = self.version()
             live = self._live(v)
             if len(live) <= 1:
                 return v
-            # rebalance: AQE sizes the output files, so the union of base
-            # and delta scans does not leave one small file per partition
-            name, stats = self._write_data_dir(self.read(v).hint("rebalance"))
-            if self._try_publish(v + 1, {"version": v + 1, "op": "compact", "live": [{"dir": name, **stats}]}):
+            if self._commit_write(v, live, {}, "compact", lambda snap: snap):
                 return v + 1
 
     # ------------------------------------------------------------ hygiene
@@ -594,6 +675,11 @@ def _sql_string(text: str) -> str:
     literal syntax (backslash escapes): keys inside it come from callers, so
     every backslash and quote is backslash-escaped, anything else is kept."""
     return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_literal(key) -> str:
+    """SQL literal of one string or integer key."""
+    return str(int(key)) if isinstance(key, int) else _sql_string(key)
 
 
 def _portable_stat(value):

@@ -258,16 +258,20 @@ def test_sweep_once_txn_matches_cleanup_expired(spark, tmp_path):
 
 
 @pytest.mark.volume
-@pytest.mark.parametrize("max_deltas", [None, 2])
+@pytest.mark.parametrize("max_deltas", [None, 2, "fold"])
 def test_txn_random_op_sequences_match_dict_model(spark, tmp_path, monkeypatch, max_deltas):
     """Model-based check: random interleaved upsert/put_if_absent/delete
     sequences applied to a TxnTable must match a plain dict model applying
     the same ops — deltas, tombstones and compaction may not change
-    keyed-store semantics. Runs at the default compaction threshold and at
-    one low enough to compact mid-sequence. Deterministic seed; ~40 commits
-    across 4 scenarios."""
+    keyed-store semantics. Runs at the default compaction threshold, at
+    one low enough to compact mid-sequence, and with a key bound of 2, so
+    most writes fold into a rewrite of the base. Deterministic seed; ~40
+    commits across 4 scenarios."""
     import random
 
+    if max_deltas == "fold":
+        max_deltas = 2
+        monkeypatch.setattr(txn, "_MAX_DELTA_KEYS", 2)
     if max_deltas is not None:
         monkeypatch.setattr(txn, "_MAX_DELTAS", max_deltas)
     rng = random.Random(1234)
@@ -590,8 +594,6 @@ def _mkrows(spark, keys, payload="p"):
     return _rows(spark, *[(k, None, payload) for k in keys])
 
 
-
-
 def _deltas(t, version=None):
     """Delta entries (upserts and tombstones) live at ``version``."""
     v = t.version() if version is None else version
@@ -896,7 +898,8 @@ def test_tombstone_only_commit_changes_read_memo(spark, tmp_path):
 def test_key_set_literal_escapes_keys(spark, tmp_path):
     """Keys reach the key-set literal as SQL text, so quotes, backslashes
     and non-ASCII characters must round-trip through upsert, delete and
-    put_if_absent exactly."""
+    put_if_absent exactly, in the folded JSON array a few keys use and in
+    the IN list of more."""
     odd = ["it's", "back\\slash", "\\'", "a'b\\c", "x') OR ('1'='1", "ключ", "日本語", "é", "tab\tnl\n"]
     t = TxnTable.create(spark, str(tmp_path / "t"), _mkrows(spark, odd + ["plain"]))
     t.upsert(_mkrows(spark, odd[:5], payload="u"))
@@ -907,6 +910,14 @@ def test_key_set_literal_escapes_keys(spark, tmp_path):
     assert {r.key for r in ins.collect()} == set(odd[3:7])
     assert {r.key: r.payload for r in t.read().collect()} == {**got, **{k: "i" for k in odd[3:7]}}
     assert t.read().where(F.col("key") == "x') OR ('1'='1").count() == 1
+    assert "INSET" not in t.read()._jdf.queryExecution().optimizedPlan().toString().upper()
+    # past _IN_SET_MIN_KEYS the same keys reach the plan as an IN list
+    zs = [f"z{i}" for i in range(txn._IN_SET_MIN_KEYS)]
+    t.upsert(_mkrows(spark, zs, payload="z"))
+    read = t.read()
+    assert "INSET" in read._jdf.queryExecution().optimizedPlan().toString().upper()
+    assert {r.key: r.payload for r in read.collect()} == {
+        **got, **{k: "i" for k in odd[3:7]}, **{z: "z" for z in zs}}
 
 
 def test_get_plan_is_flat_in_the_delta_count(spark, tmp_path, monkeypatch):
@@ -1070,3 +1081,100 @@ def test_drain_events_probes_do_not_grow_with_history(spark, tmp_path, monkeypat
 
     short, long = cleaned_table(1_000), cleaned_table(100_000)
     assert probes(short) == probes(long) < 50
+
+
+def test_write_past_key_bound_folds_into_base(spark, tmp_path, monkeypatch):
+    """Writes of about 50k keys on a 50k-row table stay O(bound) on the
+    driver and in the log: an upsert, a put_if_absent and a delete past the
+    key bound each fold into one rewrite of the base, so no commit lists
+    more keys than the bound, no commit file grows with the batch, and the
+    frame each rewrite writes never carries a per-key literal. Last-writer-
+    wins, first-writer-wins and the deleted count stay exact."""
+    n = 50_000
+    written = []
+    real_write = TxnTable._write_data_dir
+
+    def spy(self, df, **kw):
+        written.append(len(df._jdf.queryExecution().optimizedPlan().toString()))
+        return real_write(self, df, **kw)
+
+    monkeypatch.setattr(TxnTable, "_write_data_dir", spy)
+    keys = F.format_string("k%06d", F.col("id"))
+    ts = F.lit(datetime(2025, 1, 1, tzinfo=timezone.utc))
+    table = spark.range(n).select(keys.alias("key"), ts.alias("updated_at"),
+                                  F.lit(None).cast("timestamp").alias("expires_at"),
+                                  F.lit("p").alias("payload"))
+    t = TxnTable.create(spark, str(tmp_path / "t"), table)
+    t.upsert(_mkrows(spark, ["k000001"], payload="small"))  # one listed delta
+    # 25k existing keys and 25k new ones, one of them twice: the later copy wins
+    batch = spark.range(n // 2, n // 2 + n).select(
+        keys.alias("key"), ts.alias("updated_at"),
+        F.lit(None).cast("timestamp").alias("expires_at"), F.lit("u").alias("payload"))
+    late = _rows(spark, ("k070000", None, "late")).withColumn(
+        "updated_at", F.lit(datetime(2025, 1, 2, tzinfo=timezone.utc)))
+    v = t.upsert(batch.unionByName(late))
+    assert _deltas(t, v) == [] and len(t._read_commit(v)["live"]) == 1
+    got = t.read()
+    assert got.count() == n + n // 2
+    assert {r.key: r.payload for r in got.where(F.col("key").isin(
+        "k000001", "k024999", "k025000", "k070000", "k074999")).collect()} == {
+        "k000001": "small", "k024999": "p", "k025000": "u", "k070000": "late", "k074999": "u"}
+
+    events = []
+    vd, n_del = t.delete_where(F.col("key") >= "k040000", events_of=lambda m: events.append(1) or m.select("key"))
+    assert n_del == 35_000 and events == [1] and _deltas(t, vd) == []
+    assert t.read().count() == 40_000
+    assert spark.read.parquet(os.path.join(t.path, t._read_commit(vd)["events"])).count() == 35_000
+
+    vi, ins = t.put_if_absent(spark.range(30_000, 90_000).select(
+        keys.alias("key"), ts.alias("updated_at"),
+        F.lit(None).cast("timestamp").alias("expires_at"), F.lit("i").alias("payload")))
+    assert ins.count() == 50_000 and _deltas(t, vi) == []
+    assert t.read().count() == 90_000
+    assert t.read().where(F.col("payload") == "i").count() == 50_000
+
+    bound = txn._key_bound(t._read_commit(vi)["live"])
+    for version in range(vi + 1):
+        commit = t._read_commit(version)
+        assert sum(len(d.get("keys", [])) for d in commit["live"]) <= bound
+        assert os.path.getsize(txn._commit_path(t.path, version)) < 4_096
+    assert max(written) < 20_000, written  # a 50k-key literal would be ~500k chars
+
+
+def test_key_bound_grows_with_the_base(spark, tmp_path, monkeypatch):
+    """The delta key bound is _MAX_DELTA_KEYS until the base holds more
+    than _BASE_ROWS_PER_KEY rows per key, then one key per that many base
+    rows; tombstones and deltas never count as base."""
+    base = {"dir": "d-b", "n": 10_000_000}
+    assert txn._key_bound([{"dir": "d-b", "n": 20_000}]) == txn._MAX_DELTA_KEYS
+    assert txn._key_bound([base]) == 10_000_000 // txn._BASE_ROWS_PER_KEY
+    assert txn._key_bound([base, {"keys": ["a"] * 5}, {"dir": "d-x", "n": 10**9, "keys": []}]) == 10_000
+
+    monkeypatch.setattr(txn, "_MAX_DELTA_KEYS", 2)
+    monkeypatch.setattr(txn, "_BASE_ROWS_PER_KEY", 10)
+    t = TxnTable.create(spark, str(tmp_path / "t"), _mkrows(spark, [f"b{i:03d}" for i in range(100)]))
+    for i in range(3):  # 9 keys live: within the bound of 100 // 10
+        t.upsert(_mkrows(spark, [f"n{i}{j}" for j in range(3)], payload=str(i)))
+    assert len(_deltas(t)) == 3
+    t.upsert(_mkrows(spark, ["n30", "n31"], payload="3"))  # 11 keys: compacts
+    assert not _deltas(t) and t.read().count() == 111
+    v = t.upsert(_mkrows(spark, [f"w{i:02d}" for i in range(12)], payload="w"))  # past 111 // 10
+    assert not _deltas(t, v) and t.read().count() == 123
+
+
+def test_delta_without_keys_is_refused(spark, tmp_path):
+    """A delta entry that records no keys (the shape an older merge-on-read
+    upsert committed) cannot be resolved from the commit: read() fails with
+    a clear error instead of returning shadowed copies as live rows."""
+    t = TxnTable.create(spark, str(tmp_path / "t"), _mkrows(spark, ["a"]))
+    v = t.upsert(_mkrows(spark, ["a"], payload="new"))
+    commit = t._read_commit(v)
+    for d in commit["live"]:
+        if "keys" in d:
+            del d["keys"]
+            d["delta"] = True
+    with open(txn._commit_path(t.path, v + 1), "w") as f:
+        json.dump(dict(commit, version=v + 1), f)
+    with pytest.raises(ValueError, match="record no keys"):
+        t.read()
+    assert [r.payload for r in t.read(v).collect()] == ["new"]

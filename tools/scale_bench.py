@@ -966,10 +966,11 @@ def main() -> None:
         lambda: t_mor.read().groupBy("key").count().where(F.col("count") > 1).count(),
     )
     checks["txn_mor_state_ok"] = bool(n_mor == n_mem and n_dup_keys == 0)
-    deltas = [d for d in t_mor._read_commit(t_mor.version())["live"] if "keys" in d]
+    live = t_mor._read_commit(t_mor.version())["live"]
+    deltas = [d for d in live if "keys" in d]
     checks["txn_deltas_within_threshold"] = bool(
         len(deltas) <= txn_mod._MAX_DELTAS
-        and sum(len(d["keys"]) for d in deltas) <= txn_mod._MAX_DELTA_KEYS
+        and sum(len(d["keys"]) for d in deltas) <= txn_mod._key_bound(live)
     )
 
     # --- temporal + profile tier (new r9): events replicated with offset ----
