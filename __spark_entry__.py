@@ -47,6 +47,11 @@ from mcp_synaptic_spark.sources.memories import (
 )
 
 
+#: the checkout this module lives in: root of the committed index caches
+#: and fixtures
+_CHECKOUT = os.path.dirname(os.path.abspath(__file__))
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
@@ -88,10 +93,9 @@ def _with_query_vec(emb: DataFrame, qid: int) -> DataFrame:
     fixed-dim cosine is ~320 unrolled terms (dot + two norms, norms twice
     via the zero-guard CASE) and exceeds what HotSpot will JIT, while the
     pairwise dedup paths that DO win with unrolled code use the bare
-    64-term dot_fixed against precomputed norms (dedup.py). Passing the
-    query vector as the NAME "qv" (not F.col) keeps the plan-build cheap
-    and leaves the compiled path one keyword away (dim=64) if a future
-    box JITs it."""
+    64-term dot_fixed against precomputed norms (dedup.py). The query
+    vector goes to rag_search as the NAME "qv", a plain column reference
+    in its one SQL statement."""
     # The key must be NON-FOLDABLE on both sides: lit(0) keys get
     # constant-propagated, the equality folds to true, and the planner is
     # back to a BNLJ. vec_id is nullable in the parquet schema, so the
@@ -1591,7 +1595,7 @@ SELECT * FROM ranked WHERE rank <= {_ANN_K}
 _ORACLE_ANN_LSH = _mk_oracle_ann_lsh()
 
 
-_IVF_CACHE_ROOT = "/root/repo/.ivf_cache"
+_IVF_CACHE_ROOT = os.path.join(_CHECKOUT, ".ivf_cache")
 
 
 def _ivf_index(spark: SparkSession, sf_dir: str):
@@ -2471,7 +2475,7 @@ ORDER BY bm25 DESC, doc_id ASC LIMIT {limit}
 
 _ORACLE_BM25 = _mk_oracle_bm25()
 
-_BM25_CACHE_ROOT = "/root/repo/.bm25_cache"
+_BM25_CACHE_ROOT = os.path.join(_CHECKOUT, ".bm25_cache")
 
 
 def _bm25_index(spark: SparkSession, sf_dir: str) -> str:
@@ -2673,7 +2677,8 @@ FROM kept WHERE rn = 1
 """
 
 
-_BRP_FIXTURE = "/root/repo/.brp_cache/brp_seed42_d64_t3.json"
+_BRP_CACHE_ROOT = os.path.join(_CHECKOUT, ".brp_cache")
+_BRP_FIXTURE = os.path.join(_BRP_CACHE_ROOT, "brp_seed42_d64_t3.json")
 
 
 def _mllib_lsh_index(spark: SparkSession, sf_dir: str):
@@ -2691,7 +2696,7 @@ def _mllib_lsh_index(spark: SparkSession, sf_dir: str):
 
     with open(_BRP_FIXTURE) as f:
         planes = _json.load(f)
-    path = os.path.join("/root/repo/.brp_cache", "index_" + sf_dir.strip("/").replace("/", "_"))
+    path = os.path.join(_BRP_CACHE_ROOT, "index_" + sf_dir.strip("/").replace("/", "_"))
     mllib_lsh_index_write(_t(spark, sf_dir, "embeddings"), path, planes, id_col="vec_id")
     return mllib_lsh_index_load(spark, path)
 
@@ -2739,7 +2744,7 @@ def _mllib_lsh_append_index(spark: SparkSession, sf_dir: str):
     with open(_BRP_FIXTURE) as f:
         planes = _json.load(f)
     path = os.path.join(
-        "/root/repo/.brp_cache",
+        _BRP_CACHE_ROOT,
         "index_" + sf_dir.strip("/").replace("/", "_") + "_append",
     )
     emb = _t(spark, sf_dir, "embeddings")
@@ -4747,6 +4752,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     take the five advisory-refresh slots; repetition_stats,
     search_by_metadata, token_stats, corpus_summary and events_anomaly
     rotate to the tail with their r16 grades standing (files untouched).
+
+    Exact search as one SQL statement (round 17): operators/rag.py and
+    functions/vector.py change, which stales the nine RAG rows in the tail
+    (rag_search, rag_search_filtered, find_similar, batch_topk,
+    pairwise_similarity, knn_classify, hybrid_search, assemble_context and
+    max_score, whose score_against call now counts as RAG evidence). They
+    take the slots of nine pipeline.py rows (chunk_documents ..
+    pack_sequences), which rotate to the tail with their r16 grades
+    standing (pipeline.py and text.py untouched).
     """
     return {
         # --- graded window (50): see docstring for the rotation logic
@@ -4779,19 +4793,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_clusters_twostar": _q_dedup_clusters_twostar,
         "dedup_apply_clusters": _q_dedup_apply_clusters,
         "dedup_apply_fused": _q_dedup_apply_fused,
-        "chunk_documents": _q_chunk_documents,
-        "decontaminate": _q_decontaminate,
-        "dedup_within_doc": _q_dedup_within_doc,
+        "rag_search": _q_rag_search,
+        "rag_search_filtered": _q_rag_search_filtered,
+        "find_similar": _q_find_similar,
         "embed_texts": _q_embed_texts,
         "frame_sample": _q_frame_sample,
         "doc_add": _q_doc_add,
         "doc_update": _q_doc_update,
-        "train_test_split": _q_train_test_split,
-        "pii_redact": _q_pii_redact,
-        "stratified_sample": _q_stratified_sample,
-        "source_cap": _q_source_cap,
-        "source_mix": _q_source_mix,
-        "pack_sequences": _q_pack_sequences,
+        "batch_topk": _q_batch_topk,
+        "pairwise_similarity": _q_pairwise_similarity,
+        "knn_classify": _q_knn_classify,
+        "hybrid_search": _q_hybrid_search,
+        "assemble_context": _q_assemble_context,
+        "max_score": _q_max_score,
         "token_budget_select": _q_token_budget_select,
         "multimodal_features": _q_multimodal_features,
         "memory_access_replay": _q_memory_access_replay,
@@ -4804,6 +4818,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # tail: every entry below is green in a prior CORRECTNESS_r* with
         # operator files unchanged since (EVIDENCE.json + tools/evidence.py
         # enforce it).
+        "chunk_documents": _q_chunk_documents,
+        "decontaminate": _q_decontaminate,
+        "dedup_within_doc": _q_dedup_within_doc,
+        "train_test_split": _q_train_test_split,
+        "pii_redact": _q_pii_redact,
+        "stratified_sample": _q_stratified_sample,
+        "source_cap": _q_source_cap,
+        "source_mix": _q_source_mix,
+        "pack_sequences": _q_pack_sequences,
         "repetition_stats": _q_repetition_stats,
         "search_by_metadata": _q_search_by_metadata,
         "token_stats": _q_token_stats,
@@ -4814,10 +4837,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_summary": _q_doc_summary,
         "events_json": _q_events_json,
         "fingerprint": _q_fingerprint,
-        "hybrid_search": _q_hybrid_search,
         "lang_distribution": _q_lang_distribution,
         "lang_id": _q_lang_id,
-        "max_score": _q_max_score,
         "memory_report": _q_memory_report,
         "orders_page": _q_orders_page,
         "props_keys": _q_props_keys,
@@ -4852,14 +4873,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_retention": _q_events_retention,
         "events_retention_weekly": _q_events_retention_weekly,
         "events_active_users": _q_events_active_users,
-        "assemble_context": _q_assemble_context,
         "bm25_search": _q_bm25_search,
-        "rag_search": _q_rag_search,
-        "rag_search_filtered": _q_rag_search_filtered,
-        "find_similar": _q_find_similar,
-        "batch_topk": _q_batch_topk,
-        "pairwise_similarity": _q_pairwise_similarity,
-        "knn_classify": _q_knn_classify,
         "events_conversion_lag": _q_events_conversion_lag,
         "tpch_q1": _q_tpch_q1,
         "tpch_q3": _q_tpch_q3,

@@ -46,8 +46,16 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.when((na == 0.0) | (nb == 0.0), F.lit(0.0)).otherwise(dot(a, b) / (na * nb))
 
 
-def cosine_distance(a: Column, b: Column) -> Column:
-    return F.lit(1.0) - cosine_similarity(a, b)
+def cosine_sql(a: str, b: str) -> str:
+    """SQL text of `cosine_similarity(a, b)` over SQL expressions `a`, `b`,
+    term for term, so the two agree on every input, null included (a test
+    pins them), built as one parsed string instead of ~20 py4j Column
+    calls. Lambda variables start with `_` so they do not shadow columns."""
+    def dot(x: str, y: str) -> str:
+        return f"aggregate(zip_with({x}, {y}, (_x, _y) -> CAST(_x AS DOUBLE) * CAST(_y AS DOUBLE)), 0.0D, (_s, _v) -> _s + _v)"
+
+    na, nb = f"sqrt({dot(a, a)})", f"sqrt({dot(b, b)})"
+    return f"CASE WHEN {na} = 0.0D OR {nb} = 0.0D THEN 0.0D ELSE {dot(a, b)} / ({na} * {nb}) END"
 
 
 # --- fixed-dimension variants (hot-path codegen) ---------------------------

@@ -3,10 +3,13 @@
 The reference delegates k-NN to an in-process ChromaDB HNSW index
 (rag/database/search.py:21-101). Spark-first re-expression: exact brute-force
 cosine as a one-pass scan + ``TakeOrderedAndProject`` (per-partition top-k
-heaps, driver merge — no shuffle of the corpus), with the query vector folded
-into the plan as a literal (broadcast to every task). At 100 TB this is the
-exact baseline; `operators/similarity.py` adds the LSH-bucketed approximate
-path for latency-sensitive scale.
+heaps, driver merge — no shuffle of the corpus). The single-query path
+(`score_against`, `rag_search`, `find_similar`) is one ``spark.sql``
+statement over the caller's frame, analyzed once: the query vector is one
+``from_json`` literal (or a column), and the cosine is the SQL text of
+`functions.vector.cosine_similarity`, computed once per row. At 100 TB this
+is the exact baseline; `operators/similarity.py` adds the approximate tiers
+for latency-sensitive scale.
 
 Determinism contract (for the DuckDB oracle): scores are computed in fp64,
 ordering uses ``round(score, 9)`` with the id as tiebreak, and emitted scores
@@ -16,71 +19,87 @@ engines.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity, cosine_similarity_fixed, distance_to_score
+from ..functions.vector import cosine_similarity, cosine_similarity_fixed, cosine_sql, distance_to_score
 from ..schemas import DEFAULT_SIMILARITY_THRESHOLD, MAX_RAG_RESULTS
 
 ROUND_DP = 6  # emitted float precision
 ORDER_DP = 9  # precision used for ordering / ranking
+_QUERY = "_rag_query"  # the query vector's column in the one statement
 
 
-def query_vector_lit(vec: Sequence[float]) -> Column:
-    """Embed the query vector into the plan as an ARRAY<DOUBLE> literal.
+def _bind_query(frame: DataFrame, query: Column | str | Sequence[float]) -> tuple[DataFrame, str]:
+    """`frame` and the SQL source over it that carries the query vector as
+    column `_rag_query`: a column name is referenced, a Column is bound
+    once as a column of the frame, and a sequence is ONE `from_json`
+    literal the optimizer folds to a constant: one string node to analyze
+    at any dimension, and JSON carries each double's round-trip repr, so
+    values are exact."""
+    if isinstance(query, Column):
+        return frame.withColumn(_QUERY, query), "{frame}"
+    q = f"`{query}`" if isinstance(query, str) else (
+        f"from_json('{json.dumps([float(x) for x in query])}', 'array<double>')"
+    )
+    return frame, f"(SELECT *, {q} AS {_QUERY} FROM {{frame}})"
 
-    A literal reaches every task with the plan itself — the moral equivalent
-    of a broadcast variable, with zero extra shuffle.
-    """
-    return F.array(*[F.lit(float(x)) for x in vec])
+
+def _scored_sql(cols: Sequence[str], vec_col: str, source: str, tail: Sequence[str] = ()) -> str:
+    """SELECT of `cols`, distance, score, `tail` over `source`; a subquery
+    computes the cosine `_sim` once per row and both outputs read it. The
+    cosine is clamped into [-1, 1] before 1 - cos: fp error on a
+    self-match can give cos = 1 + 2e-16, whose distance rounds to -0.0,
+    bit-different from 0.0 under value-hash comparison (the oracle SQL
+    applies the identical clamp). score is `distance_to_score(1 - sim)`."""
+    sim = f"least(1.0D, greatest(-1.0D, {cosine_sql(f'`{vec_col}`', _QUERY)}))"
+    return (
+        f"SELECT {', '.join(f'`{c}`' for c in cols)}, round(1.0D - _sim, {ROUND_DP}) AS distance, "
+        f"round(least(1.0D, greatest(0.0D, 1.0D - (1.0D - _sim))), {ROUND_DP}) AS score"
+        f"{''.join(f', `{c}`' for c in tail)} FROM (SELECT *, {sim} AS _sim FROM {source})"
+    )
 
 
-def _sim(a: Column | str, b: Column | str, dim: int | None) -> Column:
-    """Cosine: unrolled codegen form when the dimension is known (hot paths),
-    interpreted HOF fold otherwise — identical fold order, identical values
-    (functions/vector.py:dot_fixed). Accepts column names (preferred on hot
-    paths: one parsed SQL expression instead of ~6·dim py4j calls) or Column
-    objects (computed/literal vectors)."""
-    if dim:
-        return cosine_similarity_fixed(a, b, dim)
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return cosine_similarity(a, b)
+def _top_k(spark, scored: str, k: int, threshold: float, id_col: str, args: dict | None = None, **frames) -> DataFrame:
+    """The one statement: `scored` cut to the k best by (round(score, 9)
+    desc, id) — per-partition heaps and a driver merge, no shuffle of the
+    corpus — then the threshold, then the 1-based rank over the ≤ k
+    survivors (a window on the single-partition result)."""
+    order = f"round(score, {ORDER_DP}) DESC, `{id_col}`"
+    return spark.sql(
+        f"SELECT *, row_number() OVER (ORDER BY {order}) AS rank "
+        f"FROM ({scored} ORDER BY {order} LIMIT {int(k)}) WHERE score >= :threshold",
+        args={"threshold": threshold, **(args or {})},
+        **frames,
+    )
+
+
+def _join_documents(frame: DataFrame, documents: DataFrame | None, id_col: str, doc_id_col: str):
+    """`frame` inner-joined to `documents` on id, and the document columns
+    the output carries after distance and score."""
+    if documents is None:
+        return frame, []
+    joined = frame.join(documents, frame[id_col] == documents[doc_id_col]).drop(documents[doc_id_col])
+    return joined, [c for c in documents.columns if c != doc_id_col]
 
 
 def score_against(
     embeddings: DataFrame,
-    query: Column | str,
+    query: Column | str | Sequence[float],
     vec_col: str = "embedding",
-    *,
-    dim: int | None = None,
 ) -> DataFrame:
-    """Append distance/score columns for one query vector (X17 + X18).
-
-    The cosine is clamped into [-1, 1] before 1 - cos: fp error on a
-    self-match can give cos = 1 + 2e-16, whose distance rounds to -0.0 —
-    bit-different from 0.0 under value-hash comparison. The oracle SQL
-    applies the identical clamp.
-
-    ``query`` may be a column NAME (preferred on hot paths with ``dim``
-    set: the whole unrolled cosine is then built as ONE parsed SQL
-    expression — see functions/vector.py:dot_fixed) or a Column
-    (computed/literal vectors). The textual duplication of the cosine in
-    distance + score is erased at runtime by whole-stage codegen's
-    subexpression elimination — both columns read one evaluated slot.
-    """
-    a: Column | str = vec_col if isinstance(query, str) else F.col(vec_col)
-    sim = F.least(F.lit(1.0), F.greatest(F.lit(-1.0), _sim(a, query, dim)))
-    return embeddings.withColumn("distance", F.round(F.lit(1.0) - sim, ROUND_DP)).withColumn(
-        "score", F.round(distance_to_score(F.lit(1.0) - sim), ROUND_DP)
-    )
+    """Append distance/score columns for one query vector (X17 + X18): one
+    `spark.sql` statement over `embeddings`, one cosine per row."""
+    frame, source = _bind_query(embeddings, query)
+    return embeddings.sparkSession.sql(_scored_sql(embeddings.columns, vec_col, source), frame=frame)
 
 
 def rag_search(
     embeddings: DataFrame,
-    query: Column | Sequence[float],
+    query: Column | str | Sequence[float],
     documents: DataFrame | None = None,
     *,
     limit: int = MAX_RAG_RESULTS,
@@ -90,13 +109,19 @@ def rag_search(
     vec_col: str = "embedding",
     doc_id_col: str = "id",
     metadata_predicate: Column | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """Q13 — the flagship pipeline (reference rag/database/search.py:21-101).
 
-    embed query → (optional metadata pre-filter) → cosine → score=max(0,1−d)
-    → top-k (k = min(limit, max_results), reference search.py:38) →
-    threshold filter → 1-based rank (search.py:89-98).
+    embed query → (optional documents join and metadata pre-filter) →
+    cosine → score=max(0,1−d) → top-k (k = min(limit, max_results),
+    reference search.py:38) → threshold filter → 1-based rank
+    (search.py:89-98).
+
+    One `spark.sql` statement over the caller's frame: `documents` and
+    `metadata_predicate` apply to the frame first (join on id, then
+    filter); the cosine runs once per row in a subquery, and distance,
+    score, the top-k (`TakeOrderedAndProject`), the threshold and the
+    rank all read that value.
 
     The threshold is applied AFTER the top-k limit — set-identical to the
     reference's filter-then-top-k at any threshold: if ≥ k rows clear the
@@ -104,38 +129,15 @@ def rag_search(
     if fewer do, the overall top-k contains every clearing row (they are
     the global head) and the post-filter keeps exactly those. Rank is
     assigned after the filter either way, over the same rows in the same
-    total order. The placement matters physically (r9-r10 measurement,
-    PLANS): a pre-top-k threshold referencing the scored corpus gets
-    pushed into the broadcast join's condition, where the cosine evaluates
-    INTERPRETED per corpus row and a third textual copy of it overflows
-    the JVM's 64 KB codegen budget in unrolled form; post-limit it touches
-    ≤ k rows and the scan pipeline keeps one codegen'd cosine (CSE merges
-    the distance/score pair).
-
-    Physical shape: corpus scan with the projection pushed to parquet;
-    per-partition top-k heap (TakeOrderedAndProject) — the corpus is never
-    shuffled; the k surviving rows then join `documents` (broadcast — k ≤
-    100 rows).
+    total order. Post-limit the threshold touches ≤ k rows and is never
+    pushed below the top-k into the scan.
     """
-    if not isinstance(query, (Column, str)):
-        query = query_vector_lit(query)
-    k = min(limit, max_results)
-
-    scored = score_against(embeddings, query, vec_col, dim=dim)
-    if documents is not None:
-        scored = scored.join(documents, scored[id_col] == documents[doc_id_col]).drop(documents[doc_id_col])
+    frame, source = _bind_query(embeddings, query)
+    frame, tail = _join_documents(frame, documents, id_col, doc_id_col)
     if metadata_predicate is not None:
-        scored = scored.where(metadata_predicate)
-
-    topk = (
-        scored.orderBy(F.round(F.col("score"), ORDER_DP).desc(), F.col(id_col).asc())
-        .limit(k)
-        .where(F.col("score") >= threshold)
-    )
-    # rank over ≤k rows — the single-partition window is on the tiny result set,
-    # never on the corpus.
-    w = Window.orderBy(F.round(F.col("score"), ORDER_DP).desc(), F.col(id_col).asc())
-    return topk.withColumn("rank", F.row_number().over(w))
+        frame = frame.where(metadata_predicate)
+    scored = _scored_sql(embeddings.columns, vec_col, source, tail)
+    return _top_k(embeddings.sparkSession, scored, min(limit, max_results), threshold, id_col, frame=frame)
 
 
 def find_similar(
@@ -148,34 +150,28 @@ def find_similar(
     id_col: str = "id",
     vec_col: str = "embedding",
     doc_id_col: str = "id",
-    dim: int | None = None,
 ) -> DataFrame:
     """Q16 — docs similar to a given doc, excluding itself
     (reference rag/retrieval.py:100-136: fetch k+1 then filter id ≠ target).
 
-    The similarity threshold moves after the top-k limit — set-identical
-    (the rag_search argument); the self-exclusion stays BEFORE the top-k,
-    it shapes the candidate set.
+    The rag_search statement with the target's vector as the query: a
+    one-row `first()` aggregate broadcast across the corpus, so the vector
+    rides along with every task. The self-exclusion stays BEFORE the top-k
+    (it shapes the candidate set); the similarity threshold moves after it
+    (set-identical, the rag_search argument).
     """
-    target_vec = F.first(F.col(vec_col))
-    qrow = embeddings.where(F.col(id_col) == target_id).agg(target_vec.alias("qv"))
-    # single-row broadcast cross join — the query vector rides along with every task
-    scored = score_against(
-        embeddings.crossJoin(F.broadcast(qrow)),
-        "qv",
-        vec_col,
-        dim=dim,
-    ).drop("qv")
-    scored = scored.where(F.col(id_col) != target_id)
-    if documents is not None:
-        scored = scored.join(documents, scored[id_col] == documents[doc_id_col]).drop(documents[doc_id_col])
-    topk = (
-        scored.orderBy(F.round(F.col("score"), ORDER_DP).desc(), F.col(id_col).asc())
-        .limit(limit)
-        .where(F.col("score") >= threshold)
+    frame, tail = _join_documents(embeddings, documents, id_col, doc_id_col)
+    i = f"`{id_col}`"
+    source = (
+        f"(SELECT /*+ BROADCAST(t) */ * FROM {{frame}} CROSS JOIN "
+        f"(SELECT first(`{vec_col}`) AS {_QUERY} FROM {{embeddings}} WHERE {i} = :target) t "
+        f"WHERE {i} != :target)"
     )
-    w = Window.orderBy(F.round(F.col("score"), ORDER_DP).desc(), F.col(id_col).asc())
-    return topk.withColumn("rank", F.row_number().over(w))
+    scored = _scored_sql(embeddings.columns, vec_col, source, tail)
+    return _top_k(
+        embeddings.sparkSession, scored, limit, threshold, id_col,
+        args={"target": target_id}, frame=frame, embeddings=embeddings,
+    )
 
 
 def pairwise_similarity(embeddings: DataFrame, id_a, id_b, *, id_col: str = "id", vec_col: str = "embedding") -> DataFrame:
@@ -212,7 +208,10 @@ def batch_topk_join(
     sort).
     """
     q = F.broadcast(queries) if broadcast_queries else queries
-    sim = _sim(vec_col, query_vec_col, dim)
+    sim = (
+        cosine_similarity_fixed(vec_col, query_vec_col, dim) if dim
+        else F.expr(cosine_sql(f"`{vec_col}`", f"`{query_vec_col}`"))
+    )
     scored = (
         corpus.crossJoin(q)
         .select(

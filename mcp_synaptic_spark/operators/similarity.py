@@ -30,7 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import as_double, cosine_similarity, dot, dot_fixed, l2_normalize, norm
+from ..functions.vector import as_double, cosine_similarity, cosine_sql, dot, dot_fixed, l2_normalize, norm
 from .rag import ORDER_DP, ROUND_DP
 
 
@@ -1205,18 +1205,6 @@ def ivf_index_append(
     }
 
 
-def _cosine_sql(a: str, b: str) -> str:
-    """SQL text of `functions.vector.cosine_similarity(a, b)` term for term,
-    so the two agree on every input, null included (a test pins them),
-    built as one parsed string instead of ~20 py4j Column calls. Lambda
-    variables start with `_` so they do not shadow columns."""
-    def dot(x: str, y: str) -> str:
-        return f"aggregate(zip_with({x}, {y}, (_x, _y) -> CAST(_x AS DOUBLE) * CAST(_y AS DOUBLE)), 0.0D, (_s, _v) -> _s + _v)"
-
-    na, nb = f"sqrt({dot(a, a)})", f"sqrt({dot(b, b)})"
-    return f"CASE WHEN {na} = 0.0D OR {nb} = 0.0D THEN 0.0D ELSE {dot(a, b)} / ({na} * {nb}) END"
-
-
 def ivf_topk(
     queries: DataFrame,
     indexed_corpus: DataFrame,
@@ -1242,11 +1230,11 @@ def ivf_topk(
     """
     nearest = (
         f"transform(slice(array_sort(transform({_centroid_literal_sql(centroids)}, (_c, _i) -> "
-        f"named_struct('d', 1.0D - {_cosine_sql(f'`{query_vec_col}`', '_c')}, 'cell', _i))), "
+        f"named_struct('d', 1.0D - {cosine_sql(f'`{query_vec_col}`', '_c')}, 'cell', _i))), "
         f"1, {int(nprobe)}), _p -> _p.cell)"
     )
     q, i = f"`{query_id_col}`", f"`{id_col}`"
-    cos = _cosine_sql(f"c.`{vec_col}`", f"p.`{query_vec_col}`")
+    cos = cosine_sql(f"c.`{vec_col}`", f"p.`{query_vec_col}`")
     # r13 rep grain: a persisted index carries `ids array<long>` per distinct
     # vector — the cosine runs once per (distinct vector × probe) and member
     # ids explode back in before the rank window (identical vectors score

@@ -53,6 +53,111 @@ def test_find_similar_excludes_self(spark):
     assert out[0].id == 2  # nearest neighbor of [1,0,0]
 
 
+# --- exact search as one SQL statement: fp64 reference and plan shape -------
+
+def _half_up(x: float, dp: int) -> float:
+    """Spark's round(x, dp): HALF_UP on the double's shortest decimal."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-dp), rounding=ROUND_HALF_UP))
+
+
+def _ref_cos(v, q):
+    """cosine_similarity in fp64 with the engine's sequential fold, under
+    SQL's three-valued logic: a NULL vector or element makes its dot NULL
+    (None), and so do mismatched lengths (zip_with pads the shorter side
+    with NULL); a zero norm on either side still gives 0.0."""
+    def dot(a, b):
+        if a is None or len(a) != len(b) or any(x is None for x in a + b):
+            return None
+        return sum((float(x) * float(y) for x, y in zip(a, b)), 0.0)
+
+    na, nb = (None if d is None else d ** 0.5 for d in (dot(v, v), dot(q, q)))
+    if na == 0.0 or nb == 0.0:
+        return 0.0
+    return None if na is None or dot(v, q) is None else dot(v, q) / (na * nb)
+
+
+def _reference(corpus, q, k, threshold, keep=lambda i: True):
+    """rag_search's rows from numpy fp64 inputs: a NULL cosine clamps to -1
+    (greatest() skips NULL), 6-dp distance/score, top-k by (score desc, id),
+    threshold after the cut, then the 1-based rank."""
+    rows = []
+    for i, v in corpus:
+        if not keep(i):
+            continue
+        cos = _ref_cos(v, q)
+        sim = -1.0 if cos is None else min(1.0, max(-1.0, cos))
+        rows.append((i, _half_up(1.0 - sim, 6), _half_up(min(1.0, max(0.0, 1.0 - (1.0 - sim))), 6)))
+    rows.sort(key=lambda r: (-r[2], r[0]))
+    kept = [r for r in rows[:k] if r[2] >= threshold]
+    return [(i, d, s, n) for n, (i, d, s) in enumerate(kept, 1)]
+
+
+def _edge_corpus():
+    """Random 8-d float vectors plus every edge the statement must keep:
+    a zero vector, a NULL element, a shorter vector, a NULL vector, and
+    score ties at round(score, 9) (an exact duplicate and a scaled copy)."""
+    import numpy as np
+
+    rng = np.random.default_rng(17)
+    f32 = lambda v: [float(np.float32(x)) for x in v]  # noqa: E731  (array<float> storage)
+    corpus = [(i, f32(rng.normal(size=8))) for i in range(1, 31)]
+    corpus += [(40, [0.0] * 8), (41, f32(rng.normal(size=4)) + [None] + [0.5] * 3),
+               (42, f32(rng.normal(size=5))), (43, None)]
+    corpus += [(50, corpus[2][1]), (51, corpus[2][1]), (52, [2.0 * x for x in corpus[2][1]])]
+    return corpus
+
+
+def test_exact_search_matches_fp64_reference(spark):
+    """rag_search and find_similar return the reference's rows exactly —
+    for a sequence, a column-name and a Column-expression query, a zero
+    query vector, a threshold that cuts inside the top-k, limit above
+    max_results, and documents= plus metadata_predicate=."""
+    corpus = _edge_corpus()
+    q = [0.3, -1.2, 0.8, 0.05, 2.0, -0.4, 1.1, 0.0]
+    emb = spark.createDataFrame(corpus, "id long, embedding array<float>")
+    with_q = emb.withColumn("qv", F.array(*[F.lit(x) for x in q]))
+    got = lambda df: [(r.id, r.distance, r.score, r.rank) for r in df.collect()]  # noqa: E731
+
+    full = _reference(corpus, q, 100, -1.0)
+    cut = full[5][2]  # a threshold that keeps 6 of a top-10
+    for query, frame in ((q, emb), ("qv", with_q), (F.transform("qv", lambda x: x * 1.0), with_q)):
+        assert got(R.rag_search(frame, query, threshold=0.0, limit=40, max_results=40)) == _reference(corpus, q, 40, 0.0)
+        assert got(R.rag_search(frame, query, threshold=cut, limit=10)) == _reference(corpus, q, 10, cut)
+    zero = [0.0] * 8
+    assert got(R.rag_search(emb, zero, threshold=0.0, limit=40, max_results=40)) == _reference(corpus, zero, 40, 0.0)
+    assert got(R.rag_search(emb, q, threshold=0.0, limit=50, max_results=7)) == _reference(corpus, q, 7, 0.0)
+    # the tie case is in the data: four ids share one rounded score
+    assert len({r[2] for r in full if r[0] in (3, 50, 51, 52)}) == 1
+
+    docs = spark.createDataFrame([(i, "en" if i % 3 else "fr") for i, _ in corpus], "doc_id long, lang string")
+    filtered = R.rag_search(
+        emb, q, docs, threshold=0.0, limit=10, doc_id_col="doc_id",
+        metadata_predicate=F.col("lang") == "en",
+    )
+    assert filtered.columns == ["id", "embedding", "distance", "score", "lang", "rank"]
+    assert got(filtered) == _reference(corpus, q, 10, 0.0, keep=lambda i: i % 3 != 0)
+
+    vecs = dict(corpus)
+    for target, threshold in ((3, 0.0), (7, 0.4)):
+        want = _reference(corpus, vecs[target], 10, threshold, keep=lambda i: i != target)
+        assert got(R.find_similar(emb, target, threshold=threshold, limit=10)) == want
+
+
+def test_exact_search_is_one_statement_plan(spark):
+    """A sequence query is one from_json literal in the analyzed plan (not a
+    CreateArray of per-element literals), and the executed plan cuts the
+    top-k with one TakeOrderedAndProject and shuffles nothing."""
+    out = R.rag_search(_emb(spark), [1.0, 0.25, 0.0], threshold=0.0, limit=3)
+    qe = out._jdf.queryExecution()
+    analyzed, executed = qe.analyzed().toString(), qe.executedPlan().toString()
+    assert analyzed.count("from_json(") == 1, analyzed
+    assert "array(" not in analyzed, analyzed
+    assert executed.count("TakeOrderedAndProject") == 1, executed
+    assert "Exchange" not in executed, executed
+
+
 def test_batch_topk_per_query(spark):
     emb = _emb(spark)
     queries = emb.where(F.col("id") <= 2).select(F.col("id").alias("qid"), F.col("embedding").alias("qvec"))

@@ -3,6 +3,8 @@ exact brute-force baseline (operators/rag.py) on the driver's embeddings."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from mcp_synaptic_spark.operators import rag as R
@@ -11,6 +13,9 @@ from mcp_synaptic_spark.sources.tables import load_table
 import pytest
 
 K = 5
+_BRP_FIXTURE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".brp_cache", "brp_seed42_d64_t3.json"
+)
 
 
 def _corpus_and_queries(spark, sf_dir):
@@ -76,7 +81,7 @@ def test_brp_plane_fixture_matches_live_model(spark):
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.linalg import Vectors
 
-    with open("/root/repo/.brp_cache/brp_seed42_d64_t3.json") as f:
+    with open(_BRP_FIXTURE) as f:
         fixture = json.load(f)
 
     df = spark.createDataFrame(
@@ -151,7 +156,7 @@ def test_mllib_lsh_indexed_matches_fit_path(spark, sf_dir, tmp_path):
     build/probe split may not change a single (qid, id, score, rank)."""
     import json
 
-    with open("/root/repo/.brp_cache/brp_seed42_d64_t3.json") as f:
+    with open(_BRP_FIXTURE) as f:
         planes = json.load(f)
 
     emb, queries = _corpus_and_queries(spark, sf_dir)
@@ -193,7 +198,7 @@ def test_rep_grain_index_byte_identical_on_dup_heavy_corpus(spark, sf_dir, tmp_p
 
     from pyspark.sql import functions as F
 
-    with open("/root/repo/.brp_cache/brp_seed42_d64_t3.json") as f:
+    with open(_BRP_FIXTURE) as f:
         planes = json.load(f)
 
     base = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(300)
@@ -639,14 +644,15 @@ def test_ivf_probe_plan_shape_and_cells_match_numpy_oracle(spark, tmp_path):
 
 
 def test_ivf_cosine_sql_equals_cosine_similarity(spark):
-    """The IVF probe's SQL-text cosine returns exactly what
+    """`functions.vector.cosine_sql`, the SQL-text cosine the IVF probe and
+    the exact rag_search statement use, returns exactly what
     `functions.vector.cosine_similarity` returns, null included: random
     float and double vectors, duplicated vectors, zero vectors on either
     side, a zero vector against a longer or shorter one, and null
     elements."""
     import numpy as np
 
-    from mcp_synaptic_spark.functions.vector import cosine_similarity
+    from mcp_synaptic_spark.functions.vector import cosine_similarity, cosine_sql
 
     rng = np.random.default_rng(5)
     rand = lambda n: [float(x) for x in rng.normal(size=n)]  # noqa: E731
@@ -658,7 +664,7 @@ def test_ivf_cosine_sql_equals_cosine_similarity(spark):
     for dtype in ("float", "double"):
         df = spark.createDataFrame(pairs, f"a array<{dtype}>, b array<{dtype}>")
         rows = df.select(
-            F.expr(S._cosine_sql("a", "b")).alias("sql"),
+            F.expr(cosine_sql("a", "b")).alias("sql"),
             cosine_similarity(F.col("a"), F.col("b")).alias("ref"),
         ).collect()
         assert [r.sql for r in rows] == [r.ref for r in rows], dtype
@@ -958,7 +964,7 @@ def test_mllib_lsh_index_append_probe_equals_rebuild(spark, sf_dir, tmp_path):
 
     from mcp_synaptic_spark.operators import similarity as S
 
-    with open("/root/repo/.brp_cache/brp_seed42_d64_t3.json") as f:
+    with open(_BRP_FIXTURE) as f:
         planes = json.load(f)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
@@ -1026,7 +1032,7 @@ def test_mllib_lsh_index_append_overlap_merge(spark, sf_dir, tmp_path):
 
     from mcp_synaptic_spark.operators import similarity as S
 
-    with open("/root/repo/.brp_cache/brp_seed42_d64_t3.json") as f:
+    with open(_BRP_FIXTURE) as f:
         planes = json.load(f)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")

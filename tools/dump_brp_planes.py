@@ -16,7 +16,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _CHECKOUT)
 
 
 def main() -> None:
@@ -58,7 +59,7 @@ def main() -> None:
     v2 = fit_on([[float((i * j + 7) % 5) for i in range(dim)] for j in range(1, 9)])
     assert v1 == v2, "randUnitVectors must be data-independent (seed+dim only)"
 
-    out_dir = "/root/repo/.brp_cache"
+    out_dir = os.path.join(_CHECKOUT, ".brp_cache")
     os.makedirs(out_dir, exist_ok=True)
     path = os.path.join(out_dir, f"brp_seed{seed}_d{dim}_t{tables}.json")
     with open(path, "w") as f:

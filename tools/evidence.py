@@ -76,7 +76,8 @@ QUERY_FILES: dict[str, tuple[str, ...]] = {
     "orders_page": TBL,
     "props_keys": TBL,
     "events_json": TBL,
-    "max_score": TBL,
+    # the query scores through rag.score_against (RAG) over a loaded table
+    "max_score": RAG + TBL,
     "parse_ttl": TTLF,
     "time_until_expiry": TTLF,
     "ts_parse_multi": TTLF,
