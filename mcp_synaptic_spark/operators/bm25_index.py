@@ -11,8 +11,11 @@ gives the lexical tier the same shape:
 
 - ``bm25_index_write``: one corpus pass materializes the classic inverted
   index — postings (term, id, tf, dl), hash-bucketed by term for partition
-  pruning — plus the corpus stats (N, avgdl) in a manifest. Build cost is a
+  pruning — plus the corpus stats (N, avgdl) in the index manifest
+  (state/manifest.py, shared by every persisted index). Build cost is a
   single explode + groupBy((term, id)) shuffle, amortized over every query.
+- ``bm25_index_append``: a batch lands as one more generation, exactly as
+  a rebuild over base ∪ batch would score it.
 - ``bm25_search_indexed``: a probe touches ONLY the |Q| term-hash partitions
   (directory-level partition pruning; the term equality filter then pushes
   into the parquet scan), derives per-term df by counting the pruned postings,
@@ -37,11 +40,12 @@ bit-for-bit.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..state import manifest as M
 
 __all__ = [
     "bm25_index_write",
@@ -50,7 +54,10 @@ __all__ = [
     "bm25_search_indexed",
 ]
 
-_META = "_meta.json"
+#: the index's manifest identity (state/manifest.py): parts postings,
+#: termdf and docs, one directory each per build or append generation
+_BM25 = M.Family("bm25", "df-sidecar-v1", "bm25_index_write")
+_PARTS = ("postings", "termdf", "docs")
 
 #: postings rows are (term, id, tf, dl) under a bucket= partition dir; the
 #: schema is fixed by construction, so probes pass it explicitly and skip
@@ -120,24 +127,6 @@ def _source_snapshot(df: DataFrame, salt: str = "") -> str | None:
         return None
 
 
-def _refresh_snapshot(meta_path: str, have: dict, snap: str | None) -> None:
-    """Record the corpus snapshot that the exact fingerprint check just
-    certified, so the NEXT idempotent call takes the zero-job path. A
-    bounded LIST: the base frame and the full-union frame of an appended
-    index are distinct frames that both legitimately no-op against it.
-    Atomic replace; best-effort (a failure just means the next call scans)."""
-    if snap is None or snap in have.get("src_snapshots", []):
-        return
-    have = {**have, "src_snapshots": (have.get("src_snapshots", []) + [snap])[-8:]}
-    tmp = meta_path + f".tmp-{os.getpid()}"
-    try:
-        with open(tmp, "w") as f:
-            json.dump(have, f)
-        os.replace(tmp, meta_path)
-    except OSError:
-        pass
-
-
 def _tokens_expr(content_col: str):
     """The EXACT tokenizer expression of retrieval.bm25_search (whitespace
     split over trim(lower(text)), empty text -> empty array) — duplicated
@@ -176,6 +165,65 @@ def _term_buckets(spark: SparkSession, terms: list[str], n_buckets: int) -> dict
     return {t: _BUCKET_MEMO[(n_buckets, t)] for t in terms}
 
 
+def _corpus_fp(id_col: str, content_col: str):
+    """Order-independent content fingerprint: sum of xxhash64(id, content)."""
+    return F.sum(F.xxhash64(F.col(id_col), F.col(content_col)).cast("decimal(38,0)")).alias("fp")
+
+
+def _write_generation(
+    c: M.Commit, per_doc: DataFrame, doc_dl: DataFrame, n_buckets: int
+) -> dict[str, str]:
+    """Write one generation of the three parts from ``per_doc`` (id, dl,
+    toks) and ``doc_dl`` (id, dl) into fresh directories of commit ``c``;
+    returns part -> directory name.
+
+    - postings (term, id, tf, dl) under bucket= partitions: dl rides every
+      posting so the probe never joins a doc-length table.
+    - termdf (term, df) under the same buckets: df per term, counted from
+      the WRITTEN postings (term column only, no re-tokenize), so a probe
+      looks up |Q| integers instead of re-aggregating the pruned postings.
+      Generations are id-disjoint (the append's overlap guard), so the
+      probe-time df is the sum over generations.
+    - docs (id, dl): the append's overlap guard semi-joins against these
+      n_docs rows instead of the postings; never read by the probe.
+    """
+    from ..util import sized_for_write
+
+    spark = per_doc.sparkSession
+    dirs = {p: c.new_dir() for p in _PARTS}
+    postings = (
+        per_doc.select("id", "dl", F.explode("toks").alias("term"))
+        .groupBy("term", "id", "dl")  # dl is functionally dependent on id
+        .agg(F.count("*").cast("int").alias("tf"))
+        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
+    )
+    # file sizing (r16, guide §6): hash-repartition by bucket so each bucket
+    # directory gets one file per ~_MIN_FILE_BYTES, not one per shuffle task
+    sized_for_write(postings, by="bucket").write.partitionBy("bucket").parquet(dirs["postings"][1])
+    (
+        spark.read.schema(_POSTINGS_SCHEMA)
+        .parquet(dirs["postings"][1])
+        .groupBy("bucket", "term")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .write.partitionBy("bucket")
+        .parquet(dirs["termdf"][1])
+    )
+    doc_dl.write.parquet(dirs["docs"][1])
+    return {p: name for p, (name, _abs) in dirs.items()}
+
+
+def _record(path: str, certified: dict, key: str, item) -> None:
+    """Metadata-only commit: add ``item`` to the manifest's bounded ``key``
+    list, provided the live index is still the one ``certified`` (the
+    manifest the caller's fingerprint check read): a snapshot recorded
+    against an index another writer has since changed could certify the
+    wrong corpus. Skipping only costs the next call its fingerprint scan."""
+    with _BM25.commit(path) as c:
+        m = c.require()
+        if m["parts"] == certified["parts"] and item not in m[key]:
+            c.publish({**m, key: M.remember(m[key], item)})
+
+
 def bm25_index_write(
     docs: DataFrame,
     path: str,
@@ -187,81 +235,55 @@ def bm25_index_write(
 ) -> None:
     """Build the persisted BM25 index at ``path``.
 
-    Layout: {path}/postings/bucket=B/*.parquet rows (term, id, tf, dl) —
-    one row per (document, distinct term), dl denormalized onto each posting
-    so the probe never joins a doclen table (an int per row buys away a
-    per-query shuffle join on id) — plus {path}/_meta.json holding
-    {n_docs, avgdl, n_buckets, id_col}: the corpus-global stats every query
-    needs, computed ONCE here with the same F.avg the per-query form uses
-    (Python float JSON round-trip is exact, so re-injecting them as literals
+    Parts (state/manifest.py names their live directories in
+    ``{path}/_index.json``): postings (term, id, tf, dl) bucketed by term
+    hash, the per-term df sidecar and the (id, dl) doc table — see
+    `_write_generation`. The manifest holds {n_docs, avgdl, sum_dl,
+    n_buckets, id_col}: the corpus-global stats every query needs,
+    computed ONCE here with the same F.avg the per-query form uses (Python
+    float JSON round-trip is exact, so re-injecting them as literals
     reproduces bm25_search's arithmetic bit-for-bit).
 
     Idempotent with a staleness guard (the mllib_lsh_index_write contract):
-    an existing index is reused only while its recorded (n_docs, n_buckets,
-    corpus fingerprint) still match the corpus — serving a stale index
-    against a regenerated dataset is the silent divergence the guard exists
-    to catch. The fingerprint is an order-independent SUM of
-    xxhash64(id, content) folded into the SAME one-pass agg as the doc
-    count (ADVICE r9: a regenerated corpus with an unchanged doc count
-    previously slipped the guard), so the guard costs one narrow scan
-    either way. Sum, not bit_xor (ADVICE r10): xor is a weak multiset
-    hash — any row occurring an even number of times cancels out (a fully
-    doubled corpus xors to 0), while a sum carries duplicate multiplicity;
-    it runs in DECIMAL(38,0) so ANSI mode can't overflow-error and the
-    fold is exact (|corpus| · 2^63 < 10^38 up to ~5·10^18 rows).
+    an existing index is reused only while its recorded (n_docs, corpus
+    fingerprint) still match the corpus — serving a stale index against a
+    regenerated dataset is the silent divergence the guard exists to
+    catch. The fingerprint is an order-independent SUM of xxhash64(id,
+    content) folded into the SAME one-pass agg as the doc count (ADVICE r9:
+    a regenerated corpus with an unchanged doc count previously slipped the
+    guard). Sum, not bit_xor (ADVICE r10): xor is a weak multiset hash —
+    any row occurring an even number of times cancels out, while a sum
+    carries duplicate multiplicity; it runs in DECIMAL(38,0) so ANSI mode
+    can't overflow-error and the fold is exact. After appends the manifest
+    records both the base build's and the union's (n_docs, fingerprint),
+    and a write of either is a no-op. A rebuild replaces every generation
+    with one, so it is also the compaction path for appends.
+
+    Metadata-only short-circuit (r16): the driver-side snapshot of the
+    corpus frame (`_source_snapshot`: input files + canonical plan) is
+    recorded once the exact fingerprint has certified it, and a repeat
+    write with a recorded snapshot returns with ZERO Spark jobs and no
+    lock taken — the declared probe query calls this writer every time.
     """
-    meta_path = os.path.join(path, _META)
-    have = None
-    if not overwrite and os.path.exists(meta_path):
-        with open(meta_path) as f:
-            have = json.load(f)
-    # format compatibility of an existing manifest: sum_dl (append format)
-    # and df_sidecar (r16 per-term df sidecar) presence checks rebuild
-    # pre-format indexes once — the established sum_dl precedent.
-    have_compat = (
-        have is not None and have.get("n_buckets") == n_buckets
-        and "sum_dl" in have and have.get("df_sidecar") == 1
-    )
-    # metadata-only staleness short-circuit (r16): if the corpus frame's
-    # driver-side snapshot (input files + canonical plan) matches the one
-    # the last exact fingerprint check certified, the index is current and
-    # the no-op costs ZERO Spark jobs — the declared probe query used to
-    # pay a full corpus content scan here on every call. Any mismatch (or
-    # uncertifiable frame) falls through to the exact fingerprint below.
+    have = None if overwrite else _BM25.read(path)
+    if have is not None and have["n_buckets"] != n_buckets:
+        have = None
     snap = _source_snapshot(docs, salt=f"{id_col}|{content_col}")
-    if have_compat and snap is not None and snap in have.get("src_snapshots", []):
+    if have is not None and snap is not None and snap in have["src_snapshots"]:
         return
-    stats = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.xxhash64(F.col(id_col), F.col(content_col)).cast("decimal(38,0)")
-        ).alias("fp"),
-    ).first()
+    stats = docs.agg(F.count(F.lit(1)).alias("n"), _corpus_fp(id_col, content_col)).first()
     n_docs, corpus_fp = int(stats["n"]), int(stats["fp"] or 0)
-    if have_compat:
-        # append-aware guard (the mllib_lsh_index_write subset-compare
-        # precedent): after bm25_index_append the meta's n_docs/corpus_fp
-        # are the APPENDED totals while base_n_docs/base_corpus_fp record
-        # the original build — an idempotent re-run of the BASE write must
-        # not rebuild over the appends, and a write of the full UNION
-        # corpus is equally a no-op (the additive fingerprint makes the
-        # two states distinguishable exactly).
-        matches = {
-            (have.get("base_n_docs", have.get("n_docs")),
-             have.get("base_corpus_fp", have.get("corpus_fp"))),
-            (have.get("n_docs"), have.get("corpus_fp")),
-        }
-        if (n_docs, corpus_fp) in matches:
-            _refresh_snapshot(meta_path, have, snap)
-            return
+    if have is not None and (n_docs, corpus_fp) in {
+        (have["base_n_docs"], have["base_corpus_fp"]), (have["n_docs"], have["corpus_fp"]),
+    }:
+        if snap is not None:
+            _record(path, have, "src_snapshots", snap)
+        return
     # Materialize the NARROW doc-length table once (two longs per doc) and
-    # feed the stats aggregate AND the docs/ sidecar write from it: the old
-    # shape referenced `per_doc` three times, and with no common-subtree
-    # reuse each reference re-scanned and RE-TOKENIZED the corpus — a build
-    # paid 3 tokenize passes + the fingerprint scan (r15 plan audit; the
-    # append path below already checkpointed its bounded per_doc for the
-    # same reason). Only (id, dl) is checkpointed — never toks, which would
-    # re-materialize the corpus — so the build is now exactly 2 tokenize
+    # feed the stats aggregate from it: with no common-subtree reuse each
+    # reference to the token arrays re-scanned and RE-TOKENIZED the corpus
+    # (r15 plan audit). Only (id, dl) is checkpointed — never toks, which
+    # would re-materialize the corpus — so the build is exactly 2 tokenize
     # passes: this one and the postings explode.
     doc_dl = docs.select(
         F.col(id_col).alias("id"),
@@ -270,79 +292,28 @@ def bm25_index_write(
     # avgdl over ALL docs (empty ones included) — bm25_search's F.avg("dl").
     # sum_dl rides the same agg: dl are ints summed exactly (≪ 2^53), so
     # avgdl ≡ sum_dl / n_docs bit-for-bit, which is what lets the APPEND
-    # path update avgdl incrementally without a corpus rescan. (avg of an
-    # int column is an exact long sum + one final division, so the value is
-    # partitioning-independent — checkpointing changes nothing.)
-    stats_row = doc_dl.agg(
-        F.avg("dl").alias("avgdl"), F.sum("dl").alias("sum_dl")
-    ).first()
+    # path update avgdl incrementally without a corpus rescan.
+    stats_row = doc_dl.agg(F.avg("dl").alias("avgdl"), F.sum("dl").alias("sum_dl")).first()
     per_doc = docs.select(
         F.col(id_col).alias("id"), _tokens_expr(content_col).alias("toks")
     ).select("id", F.size("toks").alias("dl"), "toks")
-    postings = (
-        per_doc.select("id", "dl", F.explode("toks").alias("term"))
-        .groupBy("term", "id", "dl")  # dl is functionally dependent on id
-        .agg(F.count("*").cast("int").alias("tf"))
-        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
-    )
-    from ..util import sized_for_write
-
-    # file sizing (r16, guide §6): hash-repartition by bucket so each bucket
-    # directory gets one file per ~_MIN_FILE_BYTES instead of one per
-    # shuffle task that happens to hold the bucket
-    sized_for_write(postings, by="bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(os.path.join(path, "postings"))
-    # per-term df sidecar (r16): df(term) = count of (term, id) postings,
-    # materialized ONCE at build so the probe looks up |Q| integers from a
-    # bucket-pruned vocab-sized table instead of re-aggregating the pruned
-    # postings per query — the probe used to evaluate the postings scan
-    # TWICE (df broadcast subtree + scoring), i.e. 2× Σ df(term) rows per
-    # query at any scale. Computed from the WRITTEN postings files (term
-    # column only — columnar, no re-tokenize), so the build cost is one
-    # narrow scan of what was just written.
-    spark = docs.sparkSession
-    (
-        spark.read.schema(_POSTINGS_SCHEMA)
-        .parquet(os.path.join(path, "postings"))
-        .groupBy("bucket", "term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "termdf"))
-    )
-    # doc-grain sidecar table (id, dl): the append path's overlap guard
-    # semi-joins against THIS — n_docs rows of two longs — instead of the
-    # full postings table; never read by the probe
-    doc_dl.write.mode("overwrite").parquet(
-        os.path.join(path, "docs")
-    )
-    # a rebuild IS the generation compaction: the full corpus just landed in
-    # the base roots, so prior append generations (and their manifest list,
-    # reset in the fresh meta below) are folded away
-    import shutil
-
-    shutil.rmtree(os.path.join(path, "postings_gen"), ignore_errors=True)
-    shutil.rmtree(os.path.join(path, "docs_gen"), ignore_errors=True)
-    shutil.rmtree(os.path.join(path, "termdf_gen"), ignore_errors=True)
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "n_docs": n_docs,
-                "avgdl": float(stats_row["avgdl"]) if stats_row["avgdl"] is not None else 0.0,
-                "sum_dl": int(stats_row["sum_dl"] or 0),
-                "n_buckets": n_buckets,
-                "corpus_fp": corpus_fp,
-                "base_n_docs": n_docs,
-                "base_corpus_fp": corpus_fp,
-                "id_col": id_col,
-                "df_sidecar": 1,
-                "src_snapshots": [snap] if snap is not None else [],
-            },
-            f,
-        )
-    os.replace(tmp, meta_path)  # atomic: a concurrent load never sees a partial manifest
+    with _BM25.commit(path) as c:
+        dirs = _write_generation(c, per_doc, doc_dl, n_buckets)
+        c.publish({
+            "n_docs": n_docs,
+            "avgdl": float(stats_row["avgdl"]) if stats_row["avgdl"] is not None else 0.0,
+            "sum_dl": int(stats_row["sum_dl"] or 0),
+            "n_buckets": n_buckets,
+            "corpus_fp": corpus_fp,
+            "base_n_docs": n_docs,
+            "base_corpus_fp": corpus_fp,
+            "id_col": id_col,
+            "src_snapshots": [snap] if snap is not None else [],
+            "parts": {p: [d] for p, d in dirs.items()},
+            "gens": [],
+            "appended_fps": [],
+            "appended_src_snapshots": [],
+        })
 
 
 def bm25_index_append(
@@ -351,56 +322,45 @@ def bm25_index_append(
     *,
     content_col: str = "text",
 ) -> dict:
-    """Append a batch of documents into a persisted BM25 index — the third
-    and last persisted index gains incremental growth (VERDICT r14
-    next-round #5; reference parity: incremental `add_document`,
-    rag/database/documents.py:22-64). The inverted index is ADDITIVE by
-    construction: a new document's postings rows (term, id, tf, dl) are
-    exactly what a full rebuild would compute for it (tf/dl are per-doc;
-    the term→bucket hash is corpus-independent), df is derived at probe
-    time by counting pruned postings so it updates for free, and the
-    corpus-global stats update exactly — n_docs' = n_docs + n_batch,
+    """Append a batch of documents into a persisted BM25 index (reference
+    parity: incremental `add_document`, rag/database/documents.py:22-64).
+    The inverted index is ADDITIVE by construction: a new document's
+    postings rows (term, id, tf, dl) are exactly what a full rebuild would
+    compute for it (tf/dl are per-doc; the term→bucket hash is
+    corpus-independent), the batch's per-term df adds to the base's, and
+    the corpus-global stats update exactly — n_docs' = n_docs + n_batch,
     sum_dl' = sum_dl + Σdl_batch (ints, exact in the manifest), and
     avgdl' = sum_dl'/n_docs' reproduces F.avg over the union corpus
-    bit-for-bit (integer sums ≪ 2^53 are exact in double; one final fp
-    division either way). So an appended index probes BYTE-IDENTICAL to a
-    rebuild over base ∪ batch — pinned in tests and at the scale tiers.
-    Cost: O(batch tokens) — one explode+groupBy over the batch, one
-    parquet append into the affected bucket partitions, no base re-scan.
+    bit-for-bit. So an appended index probes BYTE-IDENTICAL to a rebuild
+    over base ∪ batch — pinned in tests and at the scale tiers. Cost:
+    O(batch tokens) — one explode+groupBy over the batch, written as one
+    new generation (a fresh directory per part), no base re-scan.
 
     A batch that re-adds an ALREADY-INDEXED doc id would double that id's
-    postings and silently inflate every shared term's probe-time df, so
-    the append drops those ids first via one scan of the doc-grain
-    `docs/` sidecar (n_docs rows of (id, dl) — never the postings table;
-    the bounded batch id set broadcasts into the semi-join). Re-adding an
-    id with CHANGED content is an update, which this index does not
-    support incrementally — rebuild via
-    ``bm25_index_write(..., overwrite=True)``, which is also the
-    compaction path for small append-generation files.
+    postings and silently inflate every shared term's df, so the append
+    drops those ids first via one scan of the doc-grain `docs` part
+    (n_docs rows of (id, dl) — never the postings; the bounded batch id
+    set broadcasts into the semi-join). Re-adding an id with CHANGED
+    content is an update, which this index does not support incrementally
+    — rebuild via ``bm25_index_write(..., overwrite=True)``, which is also
+    the compaction path for small append generations.
 
-    Idempotent via the bounded batch fingerprint (`appended_fps`, last 64)
-    shared with the ANN appends; the write guard's subset compare means a
-    later idempotent base write never rebuilds over appends. Returns
-    {"skipped", "n_batch", "n_appended", "n_overlap"}.
+    The generation goes live when the manifest naming it is published
+    under the index's writer lock (state/manifest.py), which also orders
+    concurrent appends: each reads the manifest its predecessor published,
+    so no generation or stats update is lost, and a crash before the
+    publish leaves the index as it was. Idempotent via the bounded batch
+    fingerprint (`appended_fps`) shared with the ANN appends, checked
+    before the lock and again under it; a replay takes no lock and writes
+    nothing. Returns {"skipped", "n_batch", "n_appended", "n_overlap"}.
     """
-    meta_path = os.path.join(path, _META)
-    with open(meta_path) as f:
-        meta = json.load(f)
-    if "sum_dl" not in meta:
-        raise ValueError(
-            f"BM25 index at {path!r} predates the append format (no sum_dl "
-            "in its manifest) — rebuild once via bm25_index_write(..., "
-            "overwrite=True) to enable incremental appends"
-        )
-    if meta.get("df_sidecar") != 1:
-        raise ValueError(
-            f"BM25 index at {path!r} predates the per-term df sidecar "
-            "format — rebuild once via bm25_index_write(..., "
-            "overwrite=True) before appending (the sum_dl precedent)"
-        )
-    id_col = meta.get("id_col", "doc_id")
+    meta = _BM25.load(path)
+    id_col = meta["id_col"]
     n_buckets = int(meta["n_buckets"])
     spark = new_docs.sparkSession
+
+    def skipped(n_batch: int) -> dict:
+        return {"skipped": True, "n_batch": n_batch, "n_appended": 0, "n_overlap": 0}
 
     # metadata-only idempotence short-circuit (r16, the bm25_index_write
     # src_snapshots discipline): a batch frame whose driver-side snapshot
@@ -408,196 +368,98 @@ def bm25_index_append(
     # applied is a repeat — skip without the content scan. Mismatch or
     # uncertifiable frame falls through to the exact fingerprint.
     snap = _source_snapshot(new_docs, salt=f"{id_col}|{content_col}")
-    if snap is not None:
-        for rec in meta.get("appended_src_snapshots", []):
-            if rec.get("snap") == snap:
-                return {
-                    "skipped": True, "n_batch": int(rec.get("n_batch", 0)),
-                    "n_appended": 0, "n_overlap": 0,
-                }
+    for rec in meta["appended_src_snapshots"]:
+        if snap is not None and rec["snap"] == snap:
+            return skipped(int(rec["n_batch"]))
 
-    stats = new_docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.xxhash64(F.col(id_col), F.col(content_col)).cast("decimal(38,0)")
-        ).alias("fp"),
-    ).first()
+    stats = new_docs.agg(F.count(F.lit(1)).alias("n"), _corpus_fp(id_col, content_col)).first()
     n_batch, fp = int(stats["n"]), int(stats["fp"] or 0)
     batch_fp = f"{n_batch}:{fp}"
-    if n_batch == 0 or batch_fp in meta.get("appended_fps", []):
+    if n_batch == 0 or batch_fp in meta["appended_fps"]:
         if n_batch and snap is not None:
-            meta["appended_src_snapshots"] = (
-                meta.get("appended_src_snapshots", [])
-                + [{"snap": snap, "n_batch": n_batch}]
-            )[-64:]
-            tmp = meta_path + f".tmp-{os.getpid()}"
-            try:
-                with open(tmp, "w") as f:
-                    json.dump(meta, f)
-                os.replace(tmp, meta_path)
-            except OSError:
-                pass
-        return {"skipped": True, "n_batch": n_batch, "n_appended": 0, "n_overlap": 0}
+            _record(path, meta, "appended_src_snapshots", {"snap": snap, "n_batch": n_batch})
+        return skipped(n_batch)
 
-    batch = new_docs
-    indexed_ids = _union_roots(spark, _gen_roots(path, "docs", meta)).select("id")
-    batch_ids = new_docs.select(F.col(id_col).alias("id")).distinct()
-    overlap = (
-        indexed_ids.join(F.broadcast(batch_ids), "id", "left_semi")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_overlap = overlap.count()
-    if n_overlap:
-        batch = new_docs.join(
-            F.broadcast(overlap.withColumnRenamed("id", id_col)),
-            id_col,
-            "left_anti",
+    with _BM25.commit(path) as c:
+        meta = c.require()
+        if batch_fp in meta["appended_fps"]:
+            return skipped(n_batch)
+        batch = new_docs
+        indexed_ids = M.frame(spark, path, meta["parts"]["docs"]).select("id")
+        batch_ids = new_docs.select(F.col(id_col).alias("id")).distinct()
+        overlap = (
+            indexed_ids.join(F.broadcast(batch_ids), "id", "left_semi")
+            .distinct()
+            .localCheckpoint(eager=True)
         )
-
-    # r16 examined-and-rejected (VERDICT r15 #7): the narrow (id, dl)-only
-    # checkpoint + postings re-tokenize A/B'd a WASH at the 10× batch
-    # (wide min 14.27 s vs narrow 14.38, medians 16.1 vs 19.2) — the extra
-    # tokenize pass cancels the smaller checkpoint, so the token arrays
-    # stay checkpointed for the three consumers below.
-    per_doc = batch.select(
-        F.col(id_col).alias("id"), _tokens_expr(content_col).alias("toks")
-    ).select("id", F.size("toks").alias("dl"), "toks")
-    per_doc = per_doc.localCheckpoint(eager=True)  # three consumers below
-    row = per_doc.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
-    ).first()
-    n_appended, sum_dl_batch = int(row["n"]), int(row["sum_dl"] or 0)
-    # crash-safe visibility gate: the batch's postings and doc rows land in
-    # DETERMINISTICALLY-NAMED generation directories (a pure function of the
-    # batch fingerprint) that probes and the overlap guard ignore until the
-    # manifest commits them into `gens`. A crash anywhere before the
-    # manifest replace leaves the half-written generation INVISIBLE, and the
-    # retry's mode="overwrite" rewrites the same directory cleanly — without
-    # this, a crash between a plain postings append and the fingerprint
-    # record would let the retry double-append and silently inflate every
-    # shared term's probe-time df (the ANN appends are retry-idempotent by
-    # construction; this gate is the BM25 equivalent).
-    import hashlib
-
-    gen = "g-" + hashlib.sha1(batch_fp.encode()).hexdigest()[:16]
-    if n_appended:
-        postings = (
-            per_doc.select("id", "dl", F.explode("toks").alias("term"))
-            .groupBy("term", "id", "dl")
-            .agg(F.count("*").cast("int").alias("tf"))
-            .withColumn(
-                "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
+        n_overlap = overlap.count()
+        if n_overlap:
+            batch = new_docs.join(
+                F.broadcast(overlap.withColumnRenamed("id", id_col)), id_col, "left_anti"
             )
-        )
-        postings.write.mode("overwrite").partitionBy("bucket").parquet(
-            os.path.join(path, "postings_gen", gen)
-        )
-        # per-generation df sidecar (r16): postings roots are id-disjoint
-        # (overlap guard above), so probe-time df = Σ df across roots —
-        # exact integers. Same narrow read-back-of-what-was-written recipe
-        # as the base build (no extra tokenize pass).
-        (
-            spark.read.schema(_POSTINGS_SCHEMA)
-            .parquet(os.path.join(path, "postings_gen", gen))
-            .groupBy("bucket", "term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(path, "termdf_gen", gen))
-        )
-        per_doc.select("id", "dl").write.mode("overwrite").parquet(
-            os.path.join(path, "docs_gen", gen)
-        )
-        meta["gens"] = meta.get("gens", []) + [gen]
-    # surviving-batch fingerprint keeps corpus_fp ≡ fingerprint of the
-    # UNION corpus (the sum is additive and overlap rows never landed), so
-    # the write guard recognizes a full-union rebuild request as a no-op
-    if n_overlap:
-        surv = batch.agg(
-            F.sum(
-                F.xxhash64(F.col(id_col), F.col(content_col)).cast("decimal(38,0)")
-            ).alias("fp")
-        ).first()
-        fp = int(surv["fp"] or 0)
-    meta["n_docs"] = int(meta["n_docs"]) + n_appended
-    meta["sum_dl"] = int(meta["sum_dl"]) + sum_dl_batch
-    meta["avgdl"] = meta["sum_dl"] / meta["n_docs"] if meta["n_docs"] else 0.0
-    meta["corpus_fp"] = int(meta["corpus_fp"]) + fp
-    meta["appended_docs"] = meta.get("appended_docs", 0) + n_appended
-    meta["appended_fps"] = (meta.get("appended_fps", []) + [batch_fp])[-64:]
-    if snap is not None:
-        meta["appended_src_snapshots"] = (
-            meta.get("appended_src_snapshots", [])
-            + [{"snap": snap, "n_batch": n_batch}]
-        )[-64:]
-    tmp = meta_path + f".tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, meta_path)  # atomic: loads see the old or new manifest, whole
+        # r16 examined-and-rejected (VERDICT r15 #7): the narrow (id, dl)-only
+        # checkpoint + postings re-tokenize A/B'd a WASH at the 10× batch —
+        # the extra tokenize pass cancels the smaller checkpoint, so the
+        # token arrays stay checkpointed for the three consumers below.
+        per_doc = batch.select(
+            F.col(id_col).alias("id"), _tokens_expr(content_col).alias("toks")
+        ).select("id", F.size("toks").alias("dl"), "toks").localCheckpoint(eager=True)
+        row = per_doc.agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")).first()
+        n_appended, sum_dl_batch = int(row["n"]), int(row["sum_dl"] or 0)
+        parts, gens = meta["parts"], meta["gens"]
+        if n_appended:
+            dirs = _write_generation(c, per_doc, per_doc.select("id", "dl"), n_buckets)
+            parts = {p: parts[p] + [dirs[p]] for p in _PARTS}
+            gens = gens + [dirs["postings"]]
+        # surviving-batch fingerprint keeps corpus_fp ≡ fingerprint of the
+        # UNION corpus (the sum is additive and overlap rows never landed),
+        # so the write guard recognizes a full-union rebuild request as a
+        # no-op
+        if n_overlap:
+            fp = int(batch.agg(_corpus_fp(id_col, content_col)).first()["fp"] or 0)
+        n_docs = int(meta["n_docs"]) + n_appended
+        sum_dl = int(meta["sum_dl"]) + sum_dl_batch
+        c.publish({
+            **meta,
+            "n_docs": n_docs,
+            "sum_dl": sum_dl,
+            "avgdl": sum_dl / n_docs if n_docs else 0.0,
+            "corpus_fp": int(meta["corpus_fp"]) + fp,
+            "parts": parts,
+            "gens": gens,
+            "appended_fps": M.remember(meta["appended_fps"], batch_fp),
+            "appended_src_snapshots": (
+                M.remember(meta["appended_src_snapshots"], {"snap": snap, "n_batch": n_batch})
+                if snap is not None else meta["appended_src_snapshots"]
+            ),
+        })
     return {
         "skipped": False, "n_batch": n_batch,
         "n_appended": n_appended, "n_overlap": n_overlap,
     }
 
 
-def _union_roots(spark: SparkSession, roots: list[str], schema: str | None = None) -> DataFrame:
-    """Union several independently bucket-partitioned parquet roots. Each
-    root is read separately so its `bucket=` layout is discovered relative
-    to ITS OWN base path (one shared read would need a common basePath the
-    generation layout doesn't have); Catalyst pushes the probe's bucket/term
-    predicates through the Union into every scan, so partition pruning is
-    per-root and intact (plan-pinned). An explicit `schema` (the layouts are
-    fixed by construction) skips per-read footer schema inference — probes
-    used to pay a driver-side footer read per root per call (r16)."""
-    reader = spark.read.schema(schema) if schema else spark.read
-    frames = [reader.parquet(r) for r in roots]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+#: (appId, path, manifest stat) -> (postings frame, termdf frame, meta).
+#: The frames are LAZY plans over the index files — no data is memoized;
+#: every probe still reads the parquet. The manifest's mtime_ns/size change
+#: on every publish, so a stale plan is never served (the _BUCKET_MEMO
+#: precedent: what's cached is per-session driver work — file listing +
+#: plan analysis — not results).
+_LOAD_MEMO: dict[tuple, tuple[DataFrame, DataFrame, dict]] = {}
 
 
-def _gen_roots(path: str, sub: str, meta: dict) -> list[str]:
-    """Base root + the COMMITTED append-generation roots, in commit order.
-    Generations not listed in the manifest are invisible — the crash-safety
-    gate (see bm25_index_append)."""
-    return [os.path.join(path, sub)] + [
-        os.path.join(path, f"{sub}_gen", g) for g in meta.get("gens", [])
-    ]
-
-
-#: (appId, path, manifest stat) -> (postings frame, termdf frame | None,
-#: meta). The frames are LAZY plans over the index files — no data is
-#: memoized; every probe still reads the parquet. The key's mtime_ns/size
-#: of the manifest changes on every rebuild/append/snapshot-refresh, so a
-#: stale plan is never served (the _BUCKET_MEMO precedent: what's cached is
-#: per-session driver work — file listing + plan analysis — not results).
-_LOAD_MEMO: dict[tuple, tuple[DataFrame, DataFrame | None, dict]] = {}
-
-
-def _load_full(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame | None, dict]:
-    meta_path = os.path.join(path, _META)
+def _load_full(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame, dict]:
+    meta_path = os.path.join(path, M.MANIFEST)
+    if not os.path.exists(meta_path):
+        _BM25.load(path)  # raises the missing-index error
     st = os.stat(meta_path)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(path),
-        st.st_mtime_ns,
-        st.st_size,
-    )
+    key = (spark.sparkContext.applicationId, os.path.abspath(path), st.st_mtime_ns, st.st_size)
     hit = _LOAD_MEMO.get(key)
     if hit is not None:
         return hit
-    with open(meta_path) as f:
-        meta = json.load(f)
-    postings = _union_roots(
-        spark, _gen_roots(path, "postings", meta), schema=_POSTINGS_SCHEMA
-    )
-    termdf = (
-        _union_roots(spark, _gen_roots(path, "termdf", meta), schema=_TERMDF_SCHEMA)
-        if meta.get("df_sidecar") == 1
-        else None
-    )
+    meta = _BM25.load(path)
+    postings = M.frame(spark, path, meta["parts"]["postings"], schema=_POSTINGS_SCHEMA)
+    termdf = M.frame(spark, path, meta["parts"]["termdf"], schema=_TERMDF_SCHEMA)
     if len(_LOAD_MEMO) > 32:
         _LOAD_MEMO.clear()
     _LOAD_MEMO[key] = (postings, termdf, meta)
@@ -605,8 +467,8 @@ def _load_full(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame | N
 
 
 def bm25_index_load(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
-    """(postings_df, meta) for ``bm25_search_indexed``. The frame unions the
-    base postings with every manifest-committed append generation."""
+    """(postings_df, meta) for ``bm25_search_indexed``: the postings of
+    every live generation; ``meta["gens"]`` lists the append generations."""
     postings, _termdf, meta = _load_full(spark, path)
     return postings, meta
 
@@ -628,9 +490,9 @@ def bm25_search_indexed(
 
     Physical shape: the postings scan is pruned to the |Q| term-hash
     partitions (directory pruning on `bucket`) and filtered to the query
-    terms (parquet pushdown); df per term is a count over those pruned rows
-    (collected driver-side — ≤ |Q| values, the accepted tiny-stats pattern);
-    scoring pivots tf per term inside ONE groupBy(id) over only the matched
+    terms (parquet pushdown); df per term comes from the termdf part,
+    pruned the same way (≤ |Q| rows per generation, collected driver-side —
+    the accepted tiny-stats pattern); scoring pivots tf per term inside ONE groupBy(id) over only the matched
     postings (each per-term pivot cell aggregates a single row, so the sum
     over terms stays in FIXED index order — deterministic fp, same order as
     bm25_search and the oracle); top-k compiles to TakeOrderedAndProject.
@@ -640,60 +502,41 @@ def bm25_search_indexed(
     if not terms:
         raise ValueError("bm25_search_indexed requires a non-empty query")
     postings, termdf, meta = _load_full(spark, path)
-    id_col = meta.get("id_col", "doc_id")
+    id_col = meta["id_col"]
     buckets = _term_buckets(spark, terms, int(meta["n_buckets"]))
     p = postings.where(
         F.col("bucket").isin(sorted(set(buckets.values()))) & F.col("term").isin(terms)
     )
     n_docs = float(meta["n_docs"])
     avgdl = float(meta["avgdl"])
-    if termdf is not None:
-        # df per term from the build-time sidecar (r16): a bucket-pruned
-        # lookup of ≤ |Q| rows per root, collected driver-side (the accepted
-        # tiny-stats pattern — n_docs/avgdl already ride the manifest the
-        # same way) and injected as LITERALS. The old shape re-aggregated
-        # the pruned postings in a broadcast subtree, so every query
-        # evaluated the Σ df(term)-row scan TWICE; this reads it once and
-        # drops the crossJoin/BroadcastExchange from the plan. Roots are
-        # id-disjoint, so summing integer dfs across them equals counting
-        # the unioned postings — same doubles, same idf, bit-identical
-        # scores (test-pinned vs bm25_search).
-        df_rows = (
-            termdf.where(
-                F.col("bucket").isin(sorted(set(buckets.values())))
-                & F.col("term").isin(terms)
-            )
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .collect()
+    # df per term from the build-time sidecar (r16): a bucket-pruned
+    # lookup of ≤ |Q| rows per generation, collected driver-side (the accepted
+    # tiny-stats pattern — n_docs/avgdl already ride the manifest the
+    # same way) and injected as LITERALS. The old shape re-aggregated
+    # the pruned postings in a broadcast subtree, so every query
+    # evaluated the Σ df(term)-row scan TWICE; this reads it once and
+    # drops the crossJoin/BroadcastExchange from the plan. Generations are
+    # id-disjoint, so summing integer dfs across them equals counting
+    # the unioned postings — same doubles, same idf, bit-identical
+    # scores (test-pinned vs bm25_search).
+    df_rows = (
+        termdf.where(
+            F.col("bucket").isin(sorted(set(buckets.values())))
+            & F.col("term").isin(terms)
         )
-        df_by_term = {r["term"]: float(r["df"]) for r in df_rows}
-        df_col = [F.lit(df_by_term.get(t, 0.0)) for t in terms]
-        pivoted = p.groupBy("id").agg(
-            F.first("dl").alias("dl"),
-            *[
-                F.coalesce(F.max(F.when(F.col("term") == t, F.col("tf"))), F.lit(0)).alias(f"_tf_{i}")
-                for i, t in enumerate(terms)
-            ],
-        )
-    else:
-        # pre-sidecar index layout: df per term rides the SAME plan as
-        # scoring (a 1-row broadcast pivot of the pruned postings — the
-        # bm25_search stats shape).
-        dfs = p.groupBy().agg(
-            *[
-                F.sum(F.when(F.col("term") == t, 1).otherwise(0)).cast("double").alias(f"_df_{i}")
-                for i, t in enumerate(terms)
-            ]
-        )
-        pivoted = p.groupBy("id").agg(
-            F.first("dl").alias("dl"),
-            *[
-                F.coalesce(F.max(F.when(F.col("term") == t, F.col("tf"))), F.lit(0)).alias(f"_tf_{i}")
-                for i, t in enumerate(terms)
-            ],
-        ).crossJoin(F.broadcast(dfs))
-        df_col = [F.col(f"_df_{i}") for i in range(len(terms))]
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"))
+        .collect()
+    )
+    df_by_term = {r["term"]: float(r["df"]) for r in df_rows}
+    df_col = [F.lit(df_by_term.get(t, 0.0)) for t in terms]
+    pivoted = p.groupBy("id").agg(
+        F.first("dl").alias("dl"),
+        *[
+            F.coalesce(F.max(F.when(F.col("term") == t, F.col("tf"))), F.lit(0)).alias(f"_tf_{i}")
+            for i, t in enumerate(terms)
+        ],
+    )
     tf = [F.col(f"_tf_{i}").cast("double") for i in range(len(terms))]
     idf = [
         F.log(F.lit(1.0) + (F.lit(n_docs) - df_col[i] + 0.5) / (df_col[i] + 0.5))

@@ -61,9 +61,10 @@ Physical shape — designed against the 100 TB questions:
   corpus-wide tokenize+aggregate; Spark plans no exchange reuse across
   aggregation grains, the r9 tfidf lesson).  That is the honest cost of a
   single declarative query; the production shape is
-  train-once/score-many: persist the three ``train_bigram_lm`` tables and
-  pass them via ``perplexity(..., lm=...)`` — scoring then reads the
-  corpus exactly ONCE (pinned in tests/test_plan_shapes.py).
+  train-once/score-many: persist the three ``train_bigram_lm`` tables
+  (``lm_write``, through the index protocol of state/manifest.py) and
+  pass them via ``perplexity(..., lm=lm_load(...))`` — scoring then reads
+  the corpus exactly ONCE (pinned in tests/test_plan_shapes.py).
 * The scoring DAG lifts onto ``readStream`` unchanged (stream-static
   joins + complete-mode aggregation) — the streaming admission scorer is
   the same function, pinned in tests/test_lm.py.
@@ -80,6 +81,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..state import manifest as M
 
 #: Jelinek-Mercer interpolation weight on the bigram MLE term.
 DEFAULT_LAMBDA = 0.7
@@ -269,9 +272,13 @@ def perplexity_buckets(
     )
 
 
-def lm_write(
-    lm: tuple[DataFrame, DataFrame, DataFrame], path: str, *, mode: str = "overwrite"
-) -> None:
+#: the persisted LM tables in the index protocol (state/manifest.py)
+LM_TABLES = M.Family("lm", "bigram-v1", "lm_write")
+_LM_PARTS = ("unigram", "bigram", "totals")
+_RECIPE = {"tokenizer": "whitespace-lower", "order": 2}
+
+
+def lm_write(lm: tuple[DataFrame, DataFrame, DataFrame], path: str) -> None:
     """Persist pre-fit LM tables (train_bigram_lm's (unigram, bigram+ctx,
     totals)) — the train-once/score-many production shape the module
     docstring promises, made concrete: fit on the reference slice once,
@@ -279,41 +286,26 @@ def lm_write(
     (streaming.ingest.quality_admit_stream) loads the tables instead of
     rescanning the training corpus.
 
-    Layout mirrors the dedup index discipline (dedup.dedup_index_write):
-    {path}/unigram, {path}/bigram, {path}/totals parquet dirs +
-    {path}/_meta.json (recipe marker; scoring MUST tokenize the same way —
-    whitespace on lower(text) — so the marker is checked at load). The
-    totals dir is |langs| rows; unigram/bigram are vocab-bounded, never
+    Parts unigram, bigram and totals, each written to a fresh directory
+    and made live together, with the recipe marker (scoring MUST tokenize
+    the same way — whitespace on lower(text) — so it is checked at load),
+    by one manifest publish (state/manifest.py): a concurrent load sees
+    the old tables or the new ones, never a mix. The totals part is
+    |langs| rows; unigram/bigram are vocab-bounded, never
     corpus-row-bounded, so the artifact is small at any corpus scale."""
-    import json
-    import os
-
-    uni, bi, totals = lm
-    uni.write.mode(mode).parquet(os.path.join(path, "unigram"))
-    bi.write.mode(mode).parquet(os.path.join(path, "bigram"))
-    totals.write.mode(mode).parquet(os.path.join(path, "totals"))
-    if mode != "append":
-        meta_path = os.path.join(path, "_meta.json")
-        tmp = meta_path + f".tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"tokenizer": "whitespace-lower", "order": 2}, f)
-        os.replace(tmp, meta_path)
+    with LM_TABLES.commit(path) as c:
+        dirs = {}
+        for part, table in zip(_LM_PARTS, lm):
+            dirs[part], data = c.new_dir()
+            table.write.parquet(data)
+        c.publish({**_RECIPE, "parts": {p: [d] for p, d in dirs.items()}})
 
 
 def lm_load(spark, path: str) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(unigram, bigram+ctx, totals) for `perplexity(lm=...)` /
     `quality_admit_stream`. Loud on a recipe mismatch — a LM scored with a
     different tokenizer is silently wrong, never approximately right."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_meta.json")) as f:
-        meta = json.load(f)
-    want = {"tokenizer": "whitespace-lower", "order": 2}
-    if {k: meta.get(k) for k in want} != want:
-        raise ValueError(f"LM table recipe {meta} != scorer recipe {want}")
-    return (
-        spark.read.parquet(os.path.join(path, "unigram")),
-        spark.read.parquet(os.path.join(path, "bigram")),
-        spark.read.parquet(os.path.join(path, "totals")),
-    )
+    meta = LM_TABLES.load(path)
+    if {k: meta.get(k) for k in _RECIPE} != _RECIPE:
+        raise ValueError(f"LM table recipe {meta} != scorer recipe {_RECIPE}")
+    return tuple(M.frame(spark, path, meta["parts"][p]) for p in _LM_PARTS)

@@ -49,17 +49,22 @@ def _bind_query(frame: DataFrame, query: Column | str | Sequence[float]) -> tupl
 
 
 def _scored_sql(cols: Sequence[str], vec_col: str, source: str, tail: Sequence[str] = ()) -> str:
-    """SELECT of `cols`, distance, score, `tail` over `source`; a subquery
-    computes the cosine `_sim` once per row and both outputs read it. The
-    cosine is clamped into [-1, 1] before 1 - cos: fp error on a
-    self-match can give cos = 1 + 2e-16, whose distance rounds to -0.0,
-    bit-different from 0.0 under value-hash comparison (the oracle SQL
-    applies the identical clamp). score is `distance_to_score(1 - sim)`."""
-    sim = f"least(1.0D, greatest(-1.0D, {cosine_sql(f'`{vec_col}`', _QUERY)}))"
+    """SELECT of `cols`, distance, score, `tail` over `source`; the
+    innermost subquery computes the cosine `_cos` once per row and both
+    outputs read it. The cosine is clamped into [-1, 1] before 1 - cos: fp
+    error on a self-match can give cos = 1 + 2e-16, whose distance rounds
+    to -0.0, bit-different from 0.0 under value-hash comparison (the oracle
+    SQL applies the identical clamp). score is `distance_to_score(1 - sim)`.
+    Both clamps keep a NULL cosine (a NULL vector or element, or a length
+    unlike the query's) NULL — `greatest`/`least` alone skip NULLs and
+    would rank a malformed vector at distance 2.0 — so such a row reports
+    NULL distance and score, sorts last and fails every threshold."""
+    clamp = lambda lo, x: f"IF({x} IS NULL, NULL, least(1.0D, greatest({lo}, {x})))"  # noqa: E731
     return (
         f"SELECT {', '.join(f'`{c}`' for c in cols)}, round(1.0D - _sim, {ROUND_DP}) AS distance, "
-        f"round(least(1.0D, greatest(0.0D, 1.0D - (1.0D - _sim))), {ROUND_DP}) AS score"
-        f"{''.join(f', `{c}`' for c in tail)} FROM (SELECT *, {sim} AS _sim FROM {source})"
+        f"round({clamp('0.0D', '1.0D - (1.0D - _sim)')}, {ROUND_DP}) AS score"
+        f"{''.join(f', `{c}`' for c in tail)} FROM (SELECT *, {clamp('-1.0D', '_cos')} AS _sim "
+        f"FROM (SELECT *, {cosine_sql(f'`{vec_col}`', _QUERY)} AS _cos FROM {source}))"
     )
 
 

@@ -20,6 +20,11 @@ oracle):
 
 At 100 TB: tier 1/3 candidate generation shuffles only (bucket_key, id)
 pairs; vectors are re-read only for the candidate set (semi-join pushdown).
+
+Tiers 2 and 3 persist their index (mllib_lsh_index_* / ivf_index_*)
+through the index protocol of state/manifest.py: a build or an append
+writes fresh data directories and publishes the manifest naming them
+under the index's writer lock; appends never rewrite indexed rows.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import as_double, cosine_similarity, cosine_sql, dot, dot_fixed, l2_normalize, norm
+from ..state import manifest as M
 from .rag import ORDER_DP, ROUND_DP
 
 
@@ -38,7 +44,7 @@ _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
 
 def _id_as_long(frame: DataFrame, id_col: str):
-    """`ids array<long>` is the declared index format (ANN_INDEX_FORMAT), so
+    """`ids array<long>` is the declared index format (rep-v2), so
     member ids are widened to long before they enter any rep frame. The
     widening is only DEFINED for integral types: a blind cast("long") turns
     a non-integral string id into NULL silently, every query collapses onto
@@ -88,11 +94,10 @@ def _collapse_to_reps(
 
     from .dedup import _collapse_stats, _should_collapse
 
-    # _id_as_long: `ids array<long>` is the DECLARED index format
-    # (ANN_INDEX_FORMAT), and an int-id caller would otherwise persist
-    # array<int> — then ivf_index_append's merge (whose empty-array literal
-    # and batch side are bigint) would rewrite only the affected cells as
-    # int64, mixing parquet physical types in one index dir: the same
+    # _id_as_long: `ids array<long>` is the DECLARED index format (rep-v2),
+    # and an int-id caller would otherwise persist array<int> — then an
+    # append (whose batch side is bigint) would mix parquet physical types
+    # across one index's directories: the same
     # PARQUET_COLUMN_DATA_TYPE_MISMATCH class as dedup's grp_n (note 135).
     # Both gate branches cast, so collapse on/off keeps one schema; the
     # dtype validation inside _id_as_long fails loudly on non-integral ids
@@ -175,24 +180,15 @@ def _expand_query_side(out: DataFrame, expand: DataFrame | None, query_id_col: s
     )
 
 
-#: On-disk layout version for the persisted ANN indexes (BRP + IVF). r13
-#: moved both to REP GRAIN: one row per distinct vector with `ids
-#: array<long>` (sorted member ids) instead of one row per document — at
-#: crawl-corpus duplication the index shrinks by the duplication factor and
-#: every probe scans/verifies distinct vectors only. Loaders REFUSE a legacy
-#: per-id layout (same rationale as dedup.INDEX_FORMAT: silently probing the
-#: wrong grain is worse than a rebuild error), and the writers' staleness
-#: manifests include the marker so stale layouts rebuild on the next write.
-ANN_INDEX_FORMAT = "rep-v2"
-
-
-def _check_ann_index_format(columns, path: str) -> None:
-    if "ids" not in columns:
-        raise ValueError(
-            f"ANN index at {path!r} uses the legacy per-id layout; this code "
-            f"reads {ANN_INDEX_FORMAT!r} (rep-grain, `ids array<long>`) — "
-            "rebuild it with the index writer (overwrite=True)"
-        )
+#: The persisted ANN indexes (BRP + IVF) in the index protocol
+#: (state/manifest.py). Format "rep-v2" is REP GRAIN (r13): one row per
+#: distinct vector with `ids array<long>` (sorted member ids) instead of one
+#: row per document — at crawl-corpus duplication the index shrinks by the
+#: duplication factor and every probe scans/verifies distinct vectors only.
+#: Loaders refuse any other kind or format: silently probing the wrong
+#: grain is worse than a rebuild error.
+BRP_INDEX = M.Family("brp", "rep-v2", "mllib_lsh_index_write")
+IVF_INDEX = M.Family("ivf", "rep-v2", "ivf_index_write")
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -403,94 +399,73 @@ def mllib_lsh_index_write(
     corpus per query; hashing it ONCE and persisting (vn + one bucket id per
     table) turns every subsequent query into a candidate equi-join against a
     parquet scan. `planes` are the projection unit-vectors (data-independent
-    given seed — FIXTURES.md §7), stored in a `_planes.json` sidecar so the
-    probe side reproduces the identical hash.
+    given seed — FIXTURES.md §7), stored in the index manifest
+    (state/manifest.py) so the probe side reproduces the identical hash.
 
     Idempotent with a staleness guard: an existing index at `path`
     (overwrite=False) is reused only while its recorded (row count, planes,
     bucket_length) still match — the planes are data-independent, but the
     hashed CORPUS isn't, and silently serving a stale index against a
     regenerated dataset is exactly the divergence the IVF tier's
-    _check_centroids_committed exists to prevent. The row-count probe is a
-    parquet-metadata read (no data scan).
+    _check_centroids_committed exists to prevent. The row count of an
+    appended index is its base build's, so an idempotent base write does
+    not rebuild over the appends.
     """
-    import json
-    import os
-
-    from ..util import ensure_parallelism
+    from ..util import ensure_parallelism, sized_for_write
 
     from .dedup import _collapse_stats
 
-    meta_static = {
-        "format": ANN_INDEX_FORMAT,
-        "planes": [[float(x) for x in p] for p in planes],
-        "bucket_length": bucket_length,
-    }
-    sidecar = os.path.join(path, "_planes.json")
-    if not overwrite and os.path.exists(sidecar):
-        with open(sidecar) as f:
-            stored = json.load(f)
-        # subset compare, not dict equality: an appended index carries extra
-        # bookkeeping keys (appended_rows/appended_fps) that must not read
-        # as staleness — a full-equality check would silently REBUILD the
-        # base corpus over the appends (r14, mllib_lsh_index_append).
-        # The row count runs as its own cheap job (count of the filter
-        # columns only — the vectors are never read) BEFORE the count+HLL
-        # collapse probe: the old merged-probe order scanned the vector
-        # column on every idempotent no-op call, a full corpus aggregate
-        # paid just to decide "nothing to do" (r15; at index scale the
-        # no-op must stay metadata-cheap).
-        if (
-            all(stored.get(k) == v for k, v in meta_static.items())
-            and stored.get("n_rows") == corpus.count()
-        ):
-            return
-    # ONE count+HLL aggregate serves both the staleness manifest's row count
-    # and the rep-collapse gate (note 120's merged-probe discipline) — only
-    # reached when the index is actually (re)built
+    planes = [[float(x) for x in p] for p in planes]
+    stored = None if overwrite else BRP_INDEX.read(path)
+    # The row count runs as its own cheap job (count of the filter columns
+    # only — the vectors are never read) BEFORE the count+HLL collapse
+    # probe: at index scale the no-op must stay metadata-cheap (r15).
+    if (
+        stored is not None
+        and (stored["planes"], stored["bucket_length"]) == (planes, bucket_length)
+        and stored["n_rows"] == corpus.count()
+    ):
+        return
+    # ONE count+HLL aggregate serves both the manifest's row count and the
+    # rep-collapse gate (note 120's merged-probe discipline)
     base = ensure_parallelism(corpus).select(
         F.col(id_col).alias("_mid"), F.col(vec_col).alias("v")
     )
     stats = _collapse_stats(base, "v")
-    meta = {**meta_static, "n_rows": stats[0]}
     # r13 rep grain: the hash+normalize stage is per-row and data-independent
     # (pure projection of the vector), so it runs once per DISTINCT vector;
-    # the written rows carry the member-id arrays. At crawl duplication the
-    # build hashes and writes 1/dup_factor of the rows; on a dup-free corpus
-    # the gate skips the groupBy and this is the old full-grain build with an
-    # ids=[id] wrapper. (The fan-out inside _collapse_to_reps replaces the
-    # ensure_parallelism that used to live here — r11: 148 s → ~11 s at the
-    # 200k-vector artifact tier.)
+    # the written rows carry the member-id arrays. On a dup-free corpus the
+    # gate skips the groupBy and this is the full-grain build with an
+    # ids=[id] wrapper.
     reps, _n, _did = _collapse_to_reps(corpus, id_col, vec_col, stats=stats)
+    hashed = _brp_hashed(reps, planes, bucket_length)
+    with BRP_INDEX.commit(path) as c:
+        name, data = c.new_dir()
+        # file sizing (r16, guide §6): one file per ~_MIN_FILE_BYTES instead
+        # of one per compute task — every probe re-opens all of them
+        sized_for_write(hashed).write.parquet(data)
+        c.publish({
+            "planes": planes, "bucket_length": bucket_length, "n_rows": stats[0],
+            "parts": {"data": [name]}, "appended_rows": 0, "appended_reps": 0,
+            "appended_fps": [],
+        })
+
+
+def _brp_hashed(reps: DataFrame, planes: Sequence[Sequence[float]], bucket_length: float) -> DataFrame:
+    """(ids, vn, h0..h{L-1}): rep rows l2-normalized and hashed per table."""
     normalized = reps.select("ids", l2_normalize(F.col("v")).alias("vn"))
-    hashed = normalized.select(
+    return normalized.select(
         "ids",
         "vn",
         *[_brp_hash_expr("vn", p, bucket_length).alias(f"h{i}") for i, p in enumerate(planes)],
     )
-    # file sizing (r16, guide §6): one file per ~_MIN_FILE_BYTES instead of
-    # one per compute task — the sf0.1 index was 1.3 MB in 32 files, and
-    # every probe re-opened all of them. The compute stages above keep
-    # their core-count fan-out; only the write stage coalesces.
-    from ..util import sized_for_write
-
-    sized_for_write(hashed).write.mode("overwrite").parquet(path)
-    with open(sidecar, "w") as f:
-        json.dump(meta, f)
 
 
 def mllib_lsh_index_load(spark, path: str) -> tuple[DataFrame, list[list[float]], float]:
     """Open a persisted BRP-LSH index → (rep-grain hashed corpus frame,
-    planes, bucket_length). Refuses a legacy per-id layout loudly."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_planes.json")) as f:
-        meta = json.load(f)
-    if meta.get("format") != ANN_INDEX_FORMAT:
-        _check_ann_index_format((), path)
-    frame = spark.read.parquet(path)
-    _check_ann_index_format(frame.columns, path)
+    planes, bucket_length)."""
+    meta = BRP_INDEX.load(path)
+    frame = M.frame(spark, path, meta["parts"]["data"])
     return frame, meta["planes"], float(meta["bucket_length"])
 
 
@@ -502,17 +477,15 @@ def mllib_lsh_index_append(
     vec_col: str = "embedding",
 ) -> dict:
     """Append a batch into a persisted BRP-LSH index — the second half of
-    the incremental-growth story beside `ivf_index_append`. STRICTLY
-    CHEAPER than the IVF append: the BRP hash of a vector is a pure
-    function of (vector, planes, bucket_length), all fixed at build time,
-    so an appended rep row carrying a vector that ALREADY exists in the
-    index is probe-equivalent to merging it — both rows hash identically,
-    survive the bucket prune together, score the same l2, and contribute
-    DISJOINT member ids to the same rank window. No rewrite, ever. (IVF
-    cannot relax this way: an unmerged duplicate could be ARGMIN-assigned
-    to a different cell than its indexed twin, and an nprobe scan would
-    then see only part of the member set.) The rep-grain invariant weakens
-    to one-row-per-distinct-vector PER APPEND GENERATION — probe-invisible,
+    the incremental-growth story beside `ivf_index_append`. The BRP hash of
+    a vector is a pure function of (vector, planes, bucket_length), all
+    fixed at build time, so an appended rep row carrying a vector that
+    ALREADY exists in the index is probe-equivalent to merging it — both
+    rows hash identically, survive the bucket prune together, score the
+    same l2, and contribute DISJOINT member ids to the same rank window.
+    The batch's rep rows go into one new data directory; nothing already
+    indexed is rewritten. The rep-grain invariant weakens to
+    one-row-per-distinct-vector PER APPEND GENERATION — probe-invisible,
     as argued above, and pinned byte-identical against a full rebuild in
     tests.
 
@@ -526,31 +499,22 @@ def mllib_lsh_index_append(
     a semi-join and the resulting overlap set, ⊆ batch, broadcasts back
     into the anti-join).
 
-    Idempotent via the same bounded batch fingerprint as ivf_index_append;
-    the sidecar gains `appended_rows`/`appended_reps`/`appended_fps`
-    bookkeeping keys that the writer's staleness check ignores (subset
-    compare), so a later idempotent base-corpus write does NOT rebuild
-    over the appends. `appended_reps` is the accreted-occupancy gauge: rep
-    rows for the same vector accumulate across generations (probe-correct
-    but never compacted here); when it grows large relative to `n_rows`,
-    a rebuild via ``mllib_lsh_index_write(..., overwrite=True)`` IS the
-    compaction — it re-collapses to true rep grain.
+    The new directory goes live when the manifest naming it is published
+    under the index's writer lock (state/manifest.py): concurrent appends
+    serialize, and a crash before the publish leaves the index as it was.
+    Idempotent via the bounded batch fingerprint (`appended_fps`), checked
+    before the lock and again under it. `appended_reps` is the
+    accreted-occupancy gauge: rep rows for the same vector accumulate
+    across generations (probe-correct but never compacted here); when it
+    grows large relative to `n_rows`, a rebuild via
+    ``mllib_lsh_index_write(..., overwrite=True)`` IS the compaction.
     Returns {"skipped", "n_batch", "appended_reps", "n_overlap"}.
     """
-    import json
-    import os
-
     from ..util import ensure_parallelism, sized_for_write
 
     from .dedup import _collapse_stat_cols, _should_collapse
 
-    sidecar = os.path.join(path, "_planes.json")
-    with open(sidecar) as f:
-        meta = json.load(f)
-    if meta.get("format") != ANN_INDEX_FORMAT:
-        _check_ann_index_format((), path)
-    planes, bucket_length = meta["planes"], float(meta["bucket_length"])
-
+    meta = BRP_INDEX.load(path)
     base = ensure_parallelism(new_corpus).select(
         _id_as_long(new_corpus, id_col).alias("_mid"), F.col(vec_col).alias("v")
     )
@@ -560,58 +524,62 @@ def mllib_lsh_index_append(
     ).first()
     n_batch, fp = int(probe["n"]), int(probe["fp"] or 0)
     batch_fp = f"{n_batch}:{fp}"
-    if n_batch == 0 or batch_fp in meta.get("appended_fps", []):
-        return {"skipped": True, "n_batch": n_batch, "appended_reps": 0, "n_overlap": 0}
+    skipped = {"skipped": True, "n_batch": n_batch, "appended_reps": 0, "n_overlap": 0}
+    if n_batch == 0 or batch_fp in meta["appended_fps"]:
+        return skipped
 
-    reps, _n, _did = _collapse_to_reps(
-        new_corpus, id_col, vec_col,
-        stats=(n_batch, int(probe["d"])),
-        collapse=_should_collapse(n_batch, int(probe["d"])),
-    )
-    normalized = reps.select("ids", l2_normalize(F.col("v")).alias("vn"))
-    h_cols = [f"h{i}" for i in range(len(planes))]
-    hashed = normalized.select(
-        "ids",
-        "vn",
-        *[_brp_hash_expr("vn", p, bucket_length).alias(f"h{i}") for i, p in enumerate(planes)],
-    )
     spark = new_corpus.sparkSession
-    members = hashed.select(F.explode("ids").alias("_mid"), "vn", *h_cols)
-    batch_keys = members.select("_mid", "vn").distinct()
-    # vn is the SAME l2_normalize expression the index writer ran, so an
-    # identical input vector reproduces bit-identical doubles and the
-    # equality join is exact; the index side is scanned narrow and never
-    # shuffled (broadcast semi, then broadcast anti on the overlap set)
-    idx_members = spark.read.parquet(path).select(
-        F.explode("ids").alias("_mid"), "vn"
-    )
-    overlaps = (
-        idx_members.join(F.broadcast(batch_keys), ["_mid", "vn"], "left_semi")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_overlap = overlaps.count()
-    if n_overlap:
-        # sized BEFORE the checkpoint (r16 file sizing): the checkpoint
-        # materializes the write layout, so this is what lands on disk
-        hashed = sized_for_write(
-            members.join(F.broadcast(overlaps), ["_mid", "vn"], "left_anti")
-            .groupBy("vn", *h_cols)
-            .agg(F.sort_array(F.collect_list("_mid")).alias("ids"))
-            .select("ids", "vn", *h_cols)
-        ).localCheckpoint(eager=True)
-    appended_reps = hashed.count()
-    if appended_reps:
-        # file sizing (r16, guide §6): an O(batch) append must not add one
-        # tiny file per compute task to the index every call
-        sized_for_write(hashed).write.mode("append").parquet(path)
-    meta["appended_rows"] = meta.get("appended_rows", 0) + n_batch
-    meta["appended_reps"] = meta.get("appended_reps", 0) + appended_reps
-    meta["appended_fps"] = (meta.get("appended_fps", []) + [batch_fp])[-64:]
-    tmp = sidecar + f".tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, sidecar)  # atomic: loads see the old or new sidecar, whole
+    with BRP_INDEX.commit(path) as c:
+        meta = c.require()
+        if batch_fp in meta["appended_fps"]:
+            return skipped
+        planes, bucket_length = meta["planes"], float(meta["bucket_length"])
+        reps, _n, _did = _collapse_to_reps(
+            new_corpus, id_col, vec_col,
+            stats=(n_batch, int(probe["d"])),
+            collapse=_should_collapse(n_batch, int(probe["d"])),
+        )
+        hashed = _brp_hashed(reps, planes, bucket_length)
+        h_cols = [f"h{i}" for i in range(len(planes))]
+        members = hashed.select(F.explode("ids").alias("_mid"), "vn", *h_cols)
+        batch_keys = members.select("_mid", "vn").distinct()
+        # vn is the SAME l2_normalize expression the index writer ran, so an
+        # identical input vector reproduces bit-identical doubles and the
+        # equality join is exact; the index side is scanned narrow and never
+        # shuffled (broadcast semi, then broadcast anti on the overlap set)
+        idx_members = M.frame(spark, path, meta["parts"]["data"]).select(
+            F.explode("ids").alias("_mid"), "vn"
+        )
+        overlaps = (
+            idx_members.join(F.broadcast(batch_keys), ["_mid", "vn"], "left_semi")
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        n_overlap = overlaps.count()
+        if n_overlap:
+            # sized BEFORE the checkpoint (r16 file sizing): the checkpoint
+            # materializes the write layout, so this is what lands on disk
+            hashed = sized_for_write(
+                members.join(F.broadcast(overlaps), ["_mid", "vn"], "left_anti")
+                .groupBy("vn", *h_cols)
+                .agg(F.sort_array(F.collect_list("_mid")).alias("ids"))
+                .select("ids", "vn", *h_cols)
+            ).localCheckpoint(eager=True)
+        appended_reps = hashed.count()
+        dirs = meta["parts"]["data"]
+        if appended_reps:
+            name, data = c.new_dir()
+            # file sizing (r16, guide §6): an O(batch) append must not add
+            # one tiny file per compute task to the index every call
+            sized_for_write(hashed).write.parquet(data)
+            dirs = dirs + [name]
+        c.publish({
+            **meta,
+            "parts": {"data": dirs},
+            "appended_rows": meta["appended_rows"] + n_batch,
+            "appended_reps": meta["appended_reps"] + appended_reps,
+            "appended_fps": M.remember(meta["appended_fps"], batch_fp),
+        })
     return {
         "skipped": False, "n_batch": n_batch,
         "appended_reps": appended_reps, "n_overlap": n_overlap,
@@ -693,8 +661,9 @@ def mllib_lsh_topk_indexed(
     # member competes for top-k exactly as before. A per-id frame (an
     # in-memory hashed corpus that never went through the rep-grain writer)
     # is wrapped into singleton `ids` here — the same 'ids'-presence
-    # tolerance the IVF probes have (ADVICE r13); only the LOADER refuses
-    # legacy on-disk layouts, where the wrong grain means a stale index.
+    # tolerance the IVF probes have (ADVICE r13); the loader refuses any
+    # on-disk index that is not rep grain, where the wrong grain means a
+    # stale index.
     if "ids" not in indexed_corpus.columns:
         rest = [c for c in indexed_corpus.columns if c != id_col]
         indexed_corpus = indexed_corpus.select(
@@ -808,7 +777,7 @@ def _ivf_build_reps(
     depends only on (row id, seed), never on the scan's split layout
     (ADVICE r13: `DataFrame.sample` is deterministic only for a fixed
     partitioning, which would let a repartitioned re-read feed a different
-    fit set into the persisted `_centroids.json` sidecar). The KMeans fit
+    fit set into the persisted centroids). The KMeans fit
     itself retains MLlib's inherent partitioning sensitivity (k-means||
     init draws and fp aggregation order), so full determinism is
     (corpus, layout, seed)-keyed — the predicate removes the sampling
@@ -871,11 +840,10 @@ def ivf_index_write(
     the build/probe split. Index construction NEVER belongs in the query path
     (it's ETL); queries read the partitioned layout and prune to nprobe cells.
 
-    Idempotent: if the index already exists at `path` (and overwrite=False)
-    the build is skipped and the stored centroids are returned. Centroids ride
-    along as an underscore-prefixed JSON sidecar (ignored by parquet readers,
-    like _SUCCESS). Local-FS sidecar I/O here; on a cluster the same pattern
-    targets the object store through its client.
+    Idempotent: if an index already exists at `path` (and overwrite=False)
+    the build is skipped and the stored centroids are returned, with no lock
+    taken and nothing written. The centroids ride in the index manifest
+    (state/manifest.py) beside the one data directory a build writes.
 
     cells_sidecar=True also writes `_cells.json` — the full (id → cell)
     assignment as the INDEX produced it, so a parity oracle can read the
@@ -884,25 +852,16 @@ def ivf_index_write(
     artifact: it collects O(N) ids to the driver, so it stays off by default
     and must never be enabled on a production-scale corpus.
     """
-    import json
     import os
 
-    sidecar = os.path.join(path, "_centroids.json")
+    spark = corpus.sparkSession
     cells_path = os.path.join(path, "_cells.json")
-    fmt_path = os.path.join(path, "_index_meta.json")
-    if not overwrite and os.path.exists(sidecar):
-        # a legacy per-id layout (no format marker) is STALE: rebuild rather
-        # than return centroids for parquet the loader will refuse
-        fmt_ok = False
-        if os.path.exists(fmt_path):
-            with open(fmt_path) as f:
-                fmt_ok = json.load(f).get("format") == ANN_INDEX_FORMAT
-        if fmt_ok:
-            with open(sidecar) as f:
-                stored = json.load(f)
-            if cells_sidecar and not os.path.exists(cells_path):
-                _write_cells_sidecar(corpus.sparkSession, path, cells_path, id_col)
-            return stored
+    stored = None if overwrite else IVF_INDEX.read(path)
+    if stored is not None:
+        if cells_sidecar and not os.path.exists(cells_path):
+            with IVF_INDEX.commit(path) as c:
+                _write_cells_sidecar(M.frame(spark, path, c.require()["parts"]["data"]), cells_path, id_col)
+        return stored["centroids"]
     assigned, centroids = _ivf_build_reps(
         corpus, n_cells=n_cells, seed=seed, max_iter=max_iter, id_col=id_col, vec_col=vec_col
     )
@@ -912,15 +871,12 @@ def ivf_index_write(
     # re-opened each of them
     from ..util import sized_for_write
 
-    sized_for_write(assigned, by="cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(path)
-    with open(sidecar, "w") as f:
-        json.dump(centroids, f)
-    with open(fmt_path, "w") as f:
-        json.dump({"format": ANN_INDEX_FORMAT}, f)
-    if cells_sidecar:
-        _write_cells_sidecar(corpus.sparkSession, path, cells_path, id_col)
+    with IVF_INDEX.commit(path) as c:
+        name, data = c.new_dir()
+        sized_for_write(assigned, by="cell").write.partitionBy("cell").parquet(data)
+        if cells_sidecar:
+            _write_cells_sidecar(spark.read.parquet(data), cells_path, id_col)
+        c.publish({"centroids": centroids, "parts": {"data": [name]}, "appended_fps": []})
     return centroids
 
 
@@ -932,18 +888,16 @@ def ivf_index_write(
 _CELLS_SIDECAR_MAX_ROWS = 10_000_000
 
 
-def _write_cells_sidecar(spark, index_path: str, cells_path: str, id_col: str) -> None:
-    """Dump the persisted index's (id, cell) assignment as a JSON sidecar,
+def _write_cells_sidecar(index: DataFrame, cells_path: str, id_col: str) -> None:
+    """Dump an index frame's (id, cell) assignment as a JSON sidecar,
     sorted by id for determinism — an ORACLE FIXTURE, not a production
-    artifact (gated behind cells_sidecar=False defaults). Reads the
-    committed parquet back, so the sidecar always reflects what the index
-    actually stores; refuses outright above _CELLS_SIDECAR_MAX_ROWS rather
-    than collect a corpus-sized assignment to the driver."""
-    import json
-
-    frame = spark.read.parquet(index_path)
-    _check_ann_index_format(frame.columns, index_path)
-    cells = frame.select(F.explode("ids").alias(id_col), "cell")
+    artifact (gated behind cells_sidecar=False defaults). Reads the written
+    parquet back, so the sidecar reflects what the index stores; it is
+    written before the manifest that makes those rows live, so a crash in
+    between is repaired by the retry. Refuses outright above
+    _CELLS_SIDECAR_MAX_ROWS rather than collect a corpus-sized assignment
+    to the driver."""
+    cells = index.select(F.explode("ids").alias(id_col), "cell")
     n = cells.count()
     if n > _CELLS_SIDECAR_MAX_ROWS:
         raise ValueError(
@@ -952,9 +906,7 @@ def _write_cells_sidecar(spark, index_path: str, cells_path: str, id_col: str) -
             f"(cap {_CELLS_SIDECAR_MAX_ROWS}); disable cells_sidecar for "
             f"production indexes"
         )
-    pairs = sorted((int(r[0]), int(r["cell"])) for r in cells.collect())
-    with open(cells_path, "w") as f:
-        json.dump(pairs, f)
+    M.write_json(cells_path, sorted((int(r[0]), int(r["cell"])) for r in cells.collect()))
 
 
 def ivf_index_load(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
@@ -962,14 +914,8 @@ def ivf_index_load(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
     centroids). The `cell` partition column comes back as part of the schema;
     joining on it against a broadcast probe list triggers dynamic partition
     pruning, so a probe touches nprobe directories, not the corpus."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_centroids.json")) as f:
-        centroids = json.load(f)
-    frame = spark.read.parquet(path)
-    _check_ann_index_format(frame.columns, path)
-    return frame, centroids
+    meta = IVF_INDEX.load(path)
+    return M.frame(spark, path, meta["parts"]["data"]), meta["centroids"]
 
 
 def _centroid_literal_sql(centroids: Sequence[Sequence[float]]) -> str:
@@ -1055,52 +1001,46 @@ def ivf_index_append(
     `add_document` write path (rag/database/documents.py:22-64) at index
     scale. Before this existed, any corpus growth forced a full index
     rebuild (KMeans fit + full write: ~50 s at the 100× artifact tier, hours
-    at 100 TB); an append touches only the cell partitions the batch lands
-    in.
+    at 100 TB).
 
-    Semantics (rep grain, byte-compatible with a fresh build's probe path):
-    - a batch vector IDENTICAL to an indexed vector merges its member ids
-      into the existing rep row — the cell is the INDEX's cell, never
-      reassigned, so one distinct vector can never occupy two cells (which
-      would duplicate ids in a probe's top-k);
+    Semantics (rep grain, probe-equivalent to a fresh build with the same
+    assignment), the same additive shape as `mllib_lsh_index_append`:
+    - a batch vector IDENTICAL to an indexed vector gets a row in THAT
+      vector's cell holding only the batch's ids — never reassigned, so one
+      distinct vector never spans two cells, and the rows' disjoint member
+      ids score identically in one rank window (the probe's dense_rank and
+      DISTINCT would hide a repeated (id, score) row too);
+    - a batch (id, vector) pair already indexed is dropped (a re-crawl; the
+      whole-batch fingerprint only catches exact replays);
     - a genuinely new vector is assigned under the STORED centroids
       (`_argmin_cell` — the coarse quantizer is fixed at build time, the
-      FAISS IVF add() contract) and written as a new rep row.
+      FAISS IVF add() contract).
 
-    Physical shape: ONE narrow scan of the index (broadcast hash join
-    against the collapsed batch — the batch is the small side by contract),
-    then a partition-pruned re-read of ONLY the affected cells, rewritten
-    in-place via dynamic partition overwrite. Per-append cost is one index
-    scan + |affected cells| of rewrite, so batch your appends — the scan
-    amortizes over the batch size, and the affected-cell count is bounded
-    by the batch's distinct-vector count.
+    Physical shape: ONE scan of the index joined against the broadcast
+    collapsed batch (the small side by contract) finds the batch vectors
+    already indexed, their cells and their ids; the batch's rows then go
+    into one new data directory partitioned by cell. Nothing indexed is
+    rewritten. The directory goes live when the manifest naming it is
+    published under the index's writer lock (state/manifest.py):
+    concurrent appends serialize, and a crash before the publish leaves the
+    index as it was. The `_cells.json` oracle sidecar, when present, is
+    rewritten to cover the appended ids before that publish.
 
-    Idempotent via a batch fingerprint in `_index_meta.json` (the
-    bm25_index staleness pattern): an order-independent sum of
-    xxhash64(id, vector) identifies the batch; re-appending an absorbed
-    batch is a metadata no-op — no scan, no rewrite, committed fixture
-    bytes stay stable. The `_cells.json` oracle sidecar, when present, is
-    refreshed to cover the appended ids.
+    Idempotent via the bounded batch fingerprint (`appended_fps`, an
+    order-independent sum of xxhash64(id, vector)), checked before the lock
+    and again under it: re-appending an absorbed batch takes no lock, scans
+    nothing and writes nothing, so committed fixture bytes stay stable.
 
-    Returns {"skipped", "n_batch", "fresh_reps", "merged_reps",
-    "cells_rewritten"}.
+    Returns {"skipped", "n_batch", "fresh_reps", "known_reps", "n_overlap"}.
     """
-    import json
     import os
 
-    from ..util import ensure_parallelism
+    from ..util import ensure_parallelism, sized_for_write
 
     from .dedup import _collapse_stat_cols, _should_collapse
 
     spark = new_corpus.sparkSession
-    fmt_path = os.path.join(path, "_index_meta.json")
-    with open(os.path.join(path, "_centroids.json")) as f:
-        centroids = json.load(f)
-    with open(fmt_path) as f:
-        meta = json.load(f)
-    if meta.get("format") != ANN_INDEX_FORMAT:
-        _check_ann_index_format((), path)
-
+    meta = IVF_INDEX.load(path)
     # ONE aggregate: batch count + HLL distinct (collapse gate) + fingerprint
     base = ensure_parallelism(new_corpus).select(
         F.col(id_col).alias("_mid"), F.col(vec_col).alias("v")
@@ -1111,97 +1051,69 @@ def ivf_index_append(
     ).first()
     n_batch, fp = int(probe["n"]), int(probe["fp"] or 0)
     batch_fp = f"{n_batch}:{fp}"
-    if batch_fp in meta.get("appended_fps", []):
-        return {
-            "skipped": True, "n_batch": n_batch, "fresh_reps": 0,
-            "merged_reps": 0, "cells_rewritten": 0,
-        }
-    if n_batch == 0:
-        return {
-            "skipped": True, "n_batch": 0, "fresh_reps": 0,
-            "merged_reps": 0, "cells_rewritten": 0,
-        }
+    skipped = {
+        "skipped": True, "n_batch": n_batch, "fresh_reps": 0, "known_reps": 0, "n_overlap": 0,
+    }
+    if n_batch == 0 or batch_fp in meta["appended_fps"]:
+        return skipped
 
-    new_reps, _n, _did = _collapse_to_reps(
-        new_corpus, id_col, vec_col,
-        stats=(n_batch, int(probe["d"])),
-        collapse=_should_collapse(n_batch, int(probe["d"])),
-    )
-    new_reps = new_reps.select(F.col("ids").alias("_nids"), F.col("v").alias(vec_col))
-
-    idx = spark.read.parquet(path)
-    _check_ann_index_format(idx.columns, path)
-    # scan 1: which batch vectors already live in the index, and where
-    hits = (
-        idx.select(vec_col, "cell")
-        .join(F.broadcast(new_reps), vec_col)
-        .persist()
-    )
-    hit_cells = {int(r["cell"]) for r in hits.select("cell").distinct().collect()}
-    fresh = new_reps.join(hits.select(vec_col), vec_col, "left_anti")
-    fresh_assigned = _argmin_cell(fresh, centroids, vec_col).select(
-        F.col("_nids").alias("ids"), F.col(vec_col), "cell"
-    ).persist()
-    fresh_cells = {int(r["cell"]) for r in fresh_assigned.select("cell").distinct().collect()}
-    affected = sorted(hit_cells | fresh_cells)
-    merged_reps = hits.count()
-    fresh_reps = fresh_assigned.count()
-
-    if affected:
-        empty = F.expr("CAST(array() AS ARRAY<BIGINT>)")
-        # scan 2: partition-pruned to the affected cells only; merge member
-        # ids where the batch matched, pass untouched same-cell rows through
-        rewritten = (
-            idx.where(F.col("cell").isin(affected))
-            .join(F.broadcast(new_reps), vec_col, "left")
-            .select(
-                F.sort_array(
-                    F.array_distinct(F.concat(F.col("ids"), F.coalesce(F.col("_nids"), empty)))
-                ).alias("ids"),
-                F.col(vec_col),
-                "cell",
-            )
-            .unionByName(fresh_assigned)
+    with IVF_INDEX.commit(path) as c:
+        meta = c.require()
+        if batch_fp in meta["appended_fps"]:
+            return skipped
+        centroids = meta["centroids"]
+        reps, _n, _did = _collapse_to_reps(
+            new_corpus, id_col, vec_col,
+            stats=(n_batch, int(probe["d"])),
+            collapse=_should_collapse(n_batch, int(probe["d"])),
         )
-        # the write targets the path the plan reads: materialize first
-        # (lineage truncation), then dynamic overwrite replaces ONLY the
-        # affected cell partitions. Sized BEFORE the checkpoint (r16 file
-        # sizing, guide §6) so each rewritten cell directory gets its rows
-        # from one task — the sf0.1 append index measured 2.3 MB in 503
-        # files, every probe re-opening all of them.
-        from ..util import sized_for_write
-
-        rewritten = sized_for_write(rewritten, by="cell").localCheckpoint(eager=True)
-        # per-write option, NOT a session-conf flip (ADVICE r14): mutating
-        # spark.sql.sources.partitionOverwriteMode would leak dynamic
-        # semantics into any concurrent overwrite in the same session, and
-        # the restore races if two appends interleave
-        rewritten.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("cell").parquet(path)
-    hits.unpersist()
-    fresh_assigned.unpersist()
-
-    # order matters: refresh the oracle sidecar BEFORE recording the
-    # fingerprint — a crash between the two then leaves the fingerprint
-    # absent, so the retry re-runs the (idempotent: array_distinct merge)
-    # append and repairs the sidecar; the reverse order would leave a
-    # permanently stale _cells.json behind a no-op fingerprint.
-    cells_path = os.path.join(path, "_cells.json")
-    if os.path.exists(cells_path):
-        _write_cells_sidecar(spark, path, cells_path, id_col)
-    # bounded: idempotency only needs to recognize RECENT re-applies
-    # (driver replays, crash retries, fixture stability) — an unbounded
-    # list would grow the manifest and its membership scan forever on a
-    # long-lived production index
-    meta["appended_fps"] = (meta.get("appended_fps", []) + [batch_fp])[-64:]
-    tmp = fmt_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, fmt_path)  # atomic: a concurrent load never sees a partial manifest
+        reps = reps.select("ids", F.col("v").alias(vec_col))
+        # the one index scan: indexed rows whose vector is in the batch
+        hits = (
+            M.frame(spark, path, meta["parts"]["data"])
+            .select("ids", vec_col, "cell")
+            .join(F.broadcast(reps.select(vec_col)), vec_col, "left_semi")
+            .localCheckpoint(eager=True)
+        )
+        members = reps.select(F.explode("ids").alias("_mid"), vec_col)
+        overlap = (
+            hits.select(F.explode("ids").alias("_mid"), vec_col)
+            .join(F.broadcast(members), ["_mid", vec_col], "left_semi")
+            .distinct()
+        )
+        n_overlap = overlap.count()
+        if n_overlap:
+            reps = (
+                members.join(F.broadcast(overlap), ["_mid", vec_col], "left_anti")
+                .groupBy(vec_col)
+                .agg(F.sort_array(F.collect_list("_mid")).alias("ids"))
+            )
+        cells = hits.select(vec_col, "cell").distinct()
+        known = reps.join(F.broadcast(cells), vec_col)
+        fresh = _argmin_cell(reps.join(F.broadcast(cells), vec_col, "left_anti"), centroids, vec_col)
+        # sized BEFORE the checkpoint (r16 file sizing, guide §6): each cell
+        # directory gets its rows from one task
+        rows = sized_for_write(
+            known.select("ids", vec_col, "cell").unionByName(fresh.select("ids", vec_col, "cell")),
+            by="cell",
+        ).localCheckpoint(eager=True)
+        known_reps = known.count()
+        n_rows = rows.count()
+        dirs = meta["parts"]["data"]
+        if n_rows:
+            name, data = c.new_dir()
+            rows.write.partitionBy("cell").parquet(data)
+            dirs = dirs + [name]
+            cells_path = os.path.join(path, "_cells.json")
+            if os.path.exists(cells_path):
+                _write_cells_sidecar(M.frame(spark, path, dirs), cells_path, id_col)
+        c.publish({
+            **meta, "parts": {"data": dirs},
+            "appended_fps": M.remember(meta["appended_fps"], batch_fp),
+        })
     return {
-        "skipped": False, "n_batch": n_batch, "fresh_reps": fresh_reps,
-        "merged_reps": merged_reps, "cells_rewritten": len(affected),
+        "skipped": False, "n_batch": n_batch, "fresh_reps": n_rows - known_reps,
+        "known_reps": known_reps, "n_overlap": n_overlap,
     }
 
 
@@ -1289,7 +1201,7 @@ def semantic_dedup(
     (EXISTS semi-join semantics), and — unlike the greedy sequential scan in
     the paper's pseudocode — independent of visit order.
 
-    Input is the ivf_index_load frame (id, vector, cell) + its sidecar
+    Input is the ivf_index_load frame (id, vector, cell) + its stored
     centroids, so no KMeans fit happens here (build/probe split, as for
     ann queries). Output: one row per vector — (id, cell, centroid_sim,
     removed). Comparisons use the ROUND_DP-rounded similarity on both the

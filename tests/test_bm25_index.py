@@ -16,6 +16,7 @@ from mcp_synaptic_spark.operators.bm25_index import (
     bm25_search_indexed,
 )
 from mcp_synaptic_spark.operators.retrieval import bm25_search
+from mcp_synaptic_spark.state import manifest as M
 
 QUERY = "dup hash join vector"
 
@@ -200,15 +201,15 @@ def test_append_probe_equals_rebuild(spark, docs, tmp_path):
     # the next call) — data files must stay untouched, and the
     # index-defining manifest fields must be unchanged.
     def _data_files(fs):
-        return {p: t for p, t in fs.items() if not p.endswith("_meta.json")}
+        return {p: t for p, t in fs.items() if not p.endswith(M.MANIFEST)}
 
-    with open(os.path.join(path, "_meta.json")) as f:
+    with open(os.path.join(path, M.MANIFEST)) as f:
         meta_before = json.load(f)
     bm25_index_write(docs, path)
     assert _data_files(_files(path)) == _data_files(snap)
-    with open(os.path.join(path, "_meta.json")) as f:
+    with open(os.path.join(path, M.MANIFEST)) as f:
         meta_after = json.load(f)
-    for k in ("n_docs", "sum_dl", "avgdl", "corpus_fp", "gens", "n_buckets"):
+    for k in ("n_docs", "sum_dl", "avgdl", "corpus_fp", "gens", "n_buckets", "parts"):
         assert meta_after.get(k) == meta_before.get(k), k
     # and the refreshed snapshot makes the NEXT identical call zero-touch
     snap2 = _files(path)
@@ -232,9 +233,10 @@ def test_append_overlap_drops_readded_ids(spark, docs, tmp_path):
     assert info["n_overlap"] == 15
     assert info["n_appended"] == fresh.count()
 
-    # no doc id occurs twice in the doc-grain sidecar
+    # no doc id occurs twice in the doc-grain part
+    _, meta = bm25_index_load(spark, path)
     dupes = (
-        spark.read.parquet(os.path.join(path, "docs"))
+        M.frame(spark, path, meta["parts"]["docs"])
         .groupBy("id").count().where(F.col("count") > 1).count()
     )
     assert dupes == 0
@@ -247,22 +249,21 @@ def test_append_overlap_drops_readded_ids(spark, docs, tmp_path):
 
 
 def test_append_requires_new_format_manifest(spark, docs, tmp_path):
-    """A pre-append-format index (no sum_dl) must fail loudly with the
-    rebuild instruction, not corrupt stats."""
-    import json
-
+    """A directory holding an index without the `_index.json` manifest (the
+    layout of an earlier release) is not an index: append, load and probe
+    fail loudly with the rebuild instruction instead of reading it."""
     from mcp_synaptic_spark.operators.bm25_index import bm25_index_append
 
     path = str(tmp_path / "idx_old")
     bm25_index_write(docs.where(F.col("doc_id") % 2 == 0), path)
-    meta_path = os.path.join(path, "_meta.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    del meta["sum_dl"]
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    with pytest.raises(ValueError, match="rebuild"):
-        bm25_index_append(docs.where(F.col("doc_id") % 2 == 1), path)
+    os.rename(os.path.join(path, M.MANIFEST), os.path.join(path, "_meta.json"))
+    for call in (
+        lambda: bm25_index_append(docs.where(F.col("doc_id") % 2 == 1), path),
+        lambda: bm25_index_load(spark, path),
+        lambda: bm25_search_indexed(spark, path, QUERY),
+    ):
+        with pytest.raises(FileNotFoundError, match="build it with bm25_index_write"):
+            call()
 
 
 def test_appended_index_probe_still_partition_prunes(spark, docs, tmp_path):
@@ -282,45 +283,46 @@ def test_appended_index_probe_still_partition_prunes(spark, docs, tmp_path):
 
 
 def test_append_crash_before_manifest_commit_is_invisible_and_retryable(
-    spark, docs, tmp_path
+    spark, docs, tmp_path, monkeypatch
 ):
-    """Crash-safety gate: a batch's generation dirs are invisible until the
-    manifest commits them, so a crash after the data writes but before the
-    manifest replace (simulated by restoring the pre-append manifest) leaves
-    probes and stats at the pre-append state, and the RETRY overwrites the
-    same deterministic generation cleanly — no double postings, no df
-    inflation."""
-    import json
-
+    """Crash-safety: a batch's generation directories are invisible until
+    the manifest naming them is published, so a crash after the data
+    writes but before the publish (raised inside the protocol) leaves the
+    manifest, probes and stats exactly as they were; the RETRY lands the
+    batch once (probe == full rebuild, no double postings, no df
+    inflation) and its publish removes the crashed run's orphan
+    directories."""
     from mcp_synaptic_spark.operators.bm25_index import bm25_index_append
 
     base = docs.where(F.col("doc_id") % 5 != 0)
     batch = docs.where(F.col("doc_id") % 5 == 0)
     path = str(tmp_path / "idx_crash")
     bm25_index_write(base, path)
-    meta_path = os.path.join(path, "_meta.json")
-    with open(meta_path) as f:
-        pre_append_meta = f.read()
+    with open(os.path.join(path, M.MANIFEST), "rb") as f:
+        pre_append = f.read()
+    before = _rows(bm25_search_indexed(spark, path, QUERY, k=10))
 
-    bm25_index_append(batch, path)
-    # simulate the crash window: generation dirs on disk, manifest never
-    # replaced
-    with open(meta_path, "w") as f:
-        f.write(pre_append_meta)
+    def crash(self, manifest):
+        raise RuntimeError("simulated crash before publish")
 
-    # the half-committed generation is invisible: probe == base-only build
-    base_only = str(tmp_path / "idx_base")
-    bm25_index_write(base, base_only)
-    assert _rows(bm25_search_indexed(spark, path, QUERY, k=10)) == _rows(
-        bm25_search_indexed(spark, base_only, QUERY, k=10)
-    )
+    monkeypatch.setattr(M.Commit, "publish", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        bm25_index_append(batch, path)
+    monkeypatch.undo()
+    with open(os.path.join(path, M.MANIFEST), "rb") as f:
+        assert f.read() == pre_append
+    _, meta = bm25_index_load(spark, path)
+    live = {d for dirs in meta["parts"].values() for d in dirs}
+    orphans = {d for d in os.listdir(path) if d.startswith("d-")} - live
+    assert len(orphans) == 3  # one per part, never named
+    assert _rows(bm25_search_indexed(spark, path, QUERY, k=10)) == before
 
-    # retry lands exactly once; probe == full rebuild
+    # retry lands exactly once; probe == full rebuild; orphans are gone
     info = bm25_index_append(batch, path)
     assert info["skipped"] is False and info["n_appended"] == batch.count()
-    with open(meta_path) as f:
-        meta = json.load(f)
-    assert len(meta["gens"]) == 1
+    _, meta = bm25_index_load(spark, path)
+    assert len(meta["gens"]) == 1 and meta["appended_fps"] and len(meta["appended_fps"]) == 1
+    assert not orphans & set(os.listdir(path))
     rebuilt = str(tmp_path / "idx_crash_full")
     bm25_index_write(docs, rebuilt)
     assert _rows(bm25_search_indexed(spark, path, QUERY, k=10)) == _rows(

@@ -629,11 +629,11 @@ def test_dedup_index_append_closes_the_lifecycle(spark, sf_dir, tmp_path):
                 out[fp] = os.path.getmtime(fp)
         return out
 
-    n_hashes = spark.read.parquet(os.path.join(path, "hashes")).count()
+    n_hashes = dedup_index_load(spark, path)[0].count()
     snap = _files(path)
     dedup_index_append(novel, path)
     assert _files(path) == snap
-    assert spark.read.parquet(os.path.join(path, "hashes")).count() == n_hashes
+    assert dedup_index_load(spark, path)[0].count() == n_hashes
 
 
 def test_index_append_merged_probe_gate_matches_inline(spark, tmp_path):
@@ -677,7 +677,7 @@ def test_index_append_merged_probe_gate_matches_inline(spark, tmp_path):
         # the threaded gate made the inline decision: grp_n on the appended rows
         grp_n = {
             r.grp_n
-            for r in spark.read.parquet(f"{path}/buckets").where(F.col("cid") >= 1000).collect()
+            for r in dedup_index_load(spark, path)[1].where(F.col("cid") >= 1000).collect()
         }
         assert (max(grp_n) > 1) if fires else (grp_n == {1}), (name, grp_n)
 
@@ -705,11 +705,11 @@ def test_index_append_merged_probe_gate_matches_inline(spark, tmp_path):
 
 
 def test_dedup_index_legacy_layout_rejected(spark, tmp_path):
-    """ADVICE r12: a pre-r12 index (shingles/ layout, no format marker) must
-    be REFUSED loudly by load and append — the new code reading a legacy
-    manifest used to silently drop every legacy corpus doc from the
-    near-dup screen (append) or fail with an opaque missing-path error
-    (load)."""
+    """ADVICE r12: an index in an earlier layout must be REFUSED loudly by
+    load and append — reading it used to silently drop every legacy corpus
+    doc from the near-dup screen. An index directory without the
+    `_index.json` manifest (a pre-protocol `_meta.json` index) or with a
+    different format marker is refused with the rebuild instruction."""
     import json
 
     import pytest
@@ -724,16 +724,18 @@ def test_dedup_index_legacy_layout_rejected(spark, tmp_path):
     path = str(tmp_path / "legacy_idx")
     corpus = spark.createDataFrame([(1, "a b c d e f")], "doc_id LONG, text STRING")
     dedup_index_write(corpus, path)
-    meta_path = tmp_path / "legacy_idx" / "_meta.json"
+    meta_path = tmp_path / "legacy_idx" / "_index.json"
     meta = json.loads(meta_path.read_text())
-    assert meta["index_format"] == INDEX_FORMAT
-    del meta["index_format"]  # what a pre-r12 manifest looks like
+    assert meta["format"] == INDEX_FORMAT
+    meta["format"] = "digest-v1"  # an older layout's marker
     meta_path.write_text(json.dumps(meta))
-
-    with pytest.raises(ValueError, match="legacy .*rebuild"):
-        dedup_index_load(spark, path)
-    with pytest.raises(ValueError, match="legacy .*rebuild"):
-        dedup_index_append(corpus, path)
+    for call in (lambda: dedup_index_load(spark, path), lambda: dedup_index_append(corpus, path)):
+        with pytest.raises(FileNotFoundError, match="build it with dedup_index_write"):
+            call()
+    meta_path.rename(tmp_path / "legacy_idx" / "_meta.json")  # the pre-protocol manifest name
+    for call in (lambda: dedup_index_load(spark, path), lambda: dedup_index_append(corpus, path)):
+        with pytest.raises(FileNotFoundError, match="no dedup index"):
+            call()
 
 
 def test_auto_max_bucket_sizing_and_default_equivalence(spark):
@@ -786,14 +788,12 @@ def test_auto_cap_bites_on_degenerate_corpus_above_floor(spark):
 
 
 def test_index_append_meta_write_is_atomic_and_replay_noop(spark, tmp_path):
-    """r9 (ADVICE r8), contract updated r14: every manifest write — the
-    overwrite-mode build AND the append's fingerprint record — goes through
-    temp+os.replace (no .tmp leftovers, a concurrent load never sees a
-    truncated/partial file; the r9 hazard was the truncating in-place
-    rewrite, not the rewrite itself). An append preserves the index
-    parameters verbatim and only extends `appended_fps`; replaying the
-    SAME batch is a fingerprint no-op that touches nothing, manifest
-    included."""
+    """Every manifest write — the build AND the append's publish — goes
+    through the protocol's uniquely named temp file + os.replace (no temp
+    leftovers; a concurrent load never sees a truncated or partial file).
+    An append preserves the index parameters verbatim, adds one directory
+    per part and one `appended_fps` entry; replaying the SAME batch is a
+    fingerprint no-op that touches nothing, manifest included."""
     import json
     import os
 
@@ -805,7 +805,7 @@ def test_index_append_meta_write_is_atomic_and_replay_noop(spark, tmp_path):
     )
     path = str(tmp_path / "idx")
     dedup_index_write(docs, path, shingle_n=2, num_hashes=8, bands=4)
-    meta_path = os.path.join(path, "_meta.json")
+    meta_path = os.path.join(path, "_index.json")
     with open(meta_path) as f:
         meta_before = json.load(f)
     batch = spark.createDataFrame(
@@ -814,10 +814,11 @@ def test_index_append_meta_write_is_atomic_and_replay_noop(spark, tmp_path):
     dedup_index_append(batch, path)
     with open(meta_path) as f:
         meta_after = json.load(f)
-    params = ("index_format", "shingle_n", "num_hashes", "bands")
+    params = ("kind", "format", "shingle_n", "num_hashes", "bands")
     assert {k: meta_after[k] for k in params} == {k: meta_before[k] for k in params}
     assert len(meta_after["appended_fps"]) == 1
-    assert not [p for p in os.listdir(path) if p.startswith("_meta.json.tmp")]
+    assert all(len(meta_after["parts"][p]) == 2 for p in ("hashes", "buckets", "digests"))
+    assert not [p for p in os.listdir(path) if ".tmp-" in p]
     # replay: same batch again → fingerprint no-op, manifest untouched
     before_ns = os.stat(meta_path).st_mtime_ns
     dedup_index_append(batch, path)
@@ -877,7 +878,7 @@ def test_index_append_txn_race_exactly_one_admission(spark, tmp_path):
         index=dedup_index_load(spark, path),
     ).collect()
     assert again[0].verdict == "exact_dup" and again[0].match_id == 100
-    hashes = spark.read.parquet(f"{path}/hashes")
+    hashes = dedup_index_load(spark, path)[0]
     assert hashes.where(F.col("cid") == 100).count() == 1
     assert hashes.count() == 2  # corpus doc + exactly one admitted copy
 
@@ -915,11 +916,11 @@ def test_index_append_txn_retry_after_crash_indexes_batch(spark, tmp_path, monke
         D.dedup_index_append_txn(batch, path)
     # the ledger is ahead of the artifacts
     assert TxnTable(spark, f"{path}/_admissions", key_col="ch").read().count() == 2
-    assert sorted(r.cid for r in spark.read.parquet(f"{path}/hashes").collect()) == [1, 2]
+    assert sorted(r.cid for r in D.dedup_index_load(spark, path)[0].collect()) == [1, 2]
 
     won = {r.id for r in D.dedup_index_append_txn(batch, path).collect()}
     assert won == {10, 11}
-    assert sorted(r.cid for r in spark.read.parquet(f"{path}/hashes").collect()) == [1, 2, 10, 11]
+    assert sorted(r.cid for r in D.dedup_index_load(spark, path)[0].collect()) == [1, 2, 10, 11]
     again = batch.select((F.col("doc_id") + 100).alias("doc_id"), "text")
     verdicts = {
         r.doc_id: (r.verdict, r.match_id)
@@ -929,7 +930,7 @@ def test_index_append_txn_retry_after_crash_indexes_batch(spark, tmp_path, monke
 
     # a replay of the repaired batch is a no-op
     assert D.dedup_index_append_txn(batch, path).count() == 0
-    assert spark.read.parquet(f"{path}/hashes").count() == 4
+    assert D.dedup_index_load(spark, path)[0].count() == 4
 
 
 def test_dedup_rate_by_group(spark):

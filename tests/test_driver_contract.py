@@ -42,7 +42,9 @@ def test_graded_window_holds_the_round_targets():
     refresh was graded in r16 and its files are untouched), and (d) the
     nine queries whose evidence covers operators/rag.py and
     functions/vector.py, in the slots of nine r16-graded pipeline.py rows
-    whose files are untouched."""
+    whose files are untouched, and (e) the two LM rows, whose
+    operators/lm.py the index persistence protocol edits, in the slots of
+    frame_sample and token_budget_select (r16-graded, files untouched)."""
     names = list(entry.queries())
     assert len(names) >= 96
     window = set(names[:50])
@@ -61,12 +63,10 @@ def test_graded_window_holds_the_round_targets():
         "dedup_substring", "dedup_substring_apply", "dedup_rate_by_source",
         "dedup_clusters", "dedup_clusters_twostar", "dedup_apply_clusters",
         "dedup_apply_fused",
-        # operators/pipeline.py (the rest of the r16 cohort rotated out
-        # for the RAG rows below, with their r16 grades standing)
-        "token_budget_select",
-        # sources/embedders.py + operators/multimodal.py
-        "embed_texts", "doc_add", "doc_update", "frame_sample",
-        "multimodal_features",
+        # sources/embedders.py + operators/multimodal.py (the pipeline.py
+        # rows and frame_sample rotated out for the RAG and LM rows below,
+        # with their r16 grades standing)
+        "embed_texts", "doc_add", "doc_update", "multimodal_features",
     )
     entry_restructured = ("memory_access_replay",)
     txn_expiry_touched = (
@@ -80,7 +80,9 @@ def test_graded_window_holds_the_round_targets():
         "pairwise_similarity", "knn_classify", "hybrid_search",
         "assemble_context", "max_score",
     )
-    for must_grade in r16_touched + entry_restructured + txn_expiry_touched + rag_touched:
+    # operators/lm.py (lm_write/lm_load through state/manifest.py)
+    lm_touched = ("lm_perplexity", "lm_ppl_buckets")
+    for must_grade in r16_touched + entry_restructured + txn_expiry_touched + rag_touched + lm_touched:
         assert must_grade in window, f"{must_grade} rotated out of the graded window"
 
 
@@ -219,3 +221,53 @@ def test_no_program_file_names_the_checkout_path():
         hits += [f"{os.path.relpath(path, REPO)}: {n}" for n in needles if n in text]
     assert len(files) > 50
     assert hits == [], "\n".join(hits)
+
+
+def test_no_operator_writes_files_outside_the_index_protocol():
+    """The persisted indexes write their manifests and sidecars through one
+    protocol (state/manifest.py: uniquely named fsynced temp file, then
+    os.replace, under the index's writer lock). No operator module may
+    replace a file or open one for writing itself — that is how five
+    hand-rolled manifest schemes with three temp-name conventions grew."""
+    import glob
+    import re
+
+    writes = re.compile(
+        r"os\.replace\(|os\.rename\(|\.write_(?:text|bytes)\(|os\.O_(?:WRONLY|RDWR|CREAT)"
+        r"|\bopen\((?:[^()]|\([^()]*\))*,\s*(?:mode\s*=\s*)?[fr]?['\"][rb]*[wax+]"
+    )
+    files = glob.glob(os.path.join(REPO, "mcp_synaptic_spark", "operators", "*.py"))
+    hits = []
+    for path in files:
+        with open(path, encoding="utf-8") as f:
+            for n, line in enumerate(f, 1):
+                if writes.search(line):
+                    hits.append(f"{os.path.relpath(path, REPO)}:{n}: {line.strip()}")
+    assert len(files) > 15
+    assert hits == [], "\n".join(hits)
+
+
+def test_update_restamps_a_row_rotated_out_of_the_window(tmp_path, monkeypatch):
+    """`update <R>` before round R's correctness file lands: a row stamped R
+    by an earlier update that has since rotated OUT of the window must get
+    its last real grade back (round and file hashes), not keep the
+    predicted stamp R for a grade the driver will not give."""
+    import json
+
+    from tools import evidence as ev
+
+    ledger = tmp_path / "EVIDENCE.json"
+    ledger.write_text(json.dumps({
+        "kept": {"window_round": 99, "files": {"ROADMAP.md": "x"}},
+        "rotated_out": {"window_round": 99, "files": {"ROADMAP.md": "x"}},
+    }))
+    monkeypatch.setattr(ev, "LEDGER", str(ledger))
+    monkeypatch.setattr(ev, "QUERY_FILES", {"kept": ("ROADMAP.md",), "rotated_out": ("ROADMAP.md",)})
+    monkeypatch.setattr(ev, "_window_names", lambda: (["kept", "rotated_out"], {"kept"}))
+    monkeypatch.setattr(ev, "_last_graded_round", lambda q, before: 98)
+    monkeypatch.setattr(ev, "_ledger_hashes_at_round", lambda q, r: {"ROADMAP.md": f"graded-r{r}"})
+    assert not os.path.exists(os.path.join(REPO, "CORRECTNESS_r99.json"))
+    ev.update(99)
+    rows = json.loads(ledger.read_text())
+    assert rows["kept"] == {"window_round": 99, "files": {"ROADMAP.md": ev._sha("ROADMAP.md")}}
+    assert rows["rotated_out"] == {"window_round": 98, "files": {"ROADMAP.md": "graded-r98"}}

@@ -210,8 +210,10 @@ def test_lm_write_load_roundtrip_scores_identically(spark, tmp_path):
     want = {(r.doc_id): (r.n_tokens, r.logppl) for r in LM.perplexity(docs, lm=tabs).collect()}
     got = {(r.doc_id): (r.n_tokens, r.logppl) for r in LM.perplexity(docs, lm=loaded).collect()}
     assert got == want
-    meta = json.load(open(f"{path}/_meta.json"))
+    with open(f"{path}/_index.json") as f:
+        meta = json.load(f)
     meta["tokenizer"] = "bpe"
-    json.dump(meta, open(f"{path}/_meta.json", "w"))
+    with open(f"{path}/_index.json", "w") as f:
+        json.dump(meta, f)
     with pytest.raises(ValueError, match="recipe"):
         LM.lm_load(spark, path)

@@ -79,15 +79,16 @@ def _ref_cos(v, q):
 
 
 def _reference(corpus, q, k, threshold, keep=lambda i: True):
-    """rag_search's rows from numpy fp64 inputs: a NULL cosine clamps to -1
-    (greatest() skips NULL), 6-dp distance/score, top-k by (score desc, id),
-    threshold after the cut, then the 1-based rank."""
+    """rag_search's rows from numpy fp64 inputs: a NULL cosine gives a NULL
+    score, which sorts last and fails every threshold, so its row never
+    ranks; 6-dp distance/score, top-k by (score desc, id), threshold after
+    the cut, then the 1-based rank."""
     rows = []
     for i, v in corpus:
-        if not keep(i):
-            continue
         cos = _ref_cos(v, q)
-        sim = -1.0 if cos is None else min(1.0, max(-1.0, cos))
+        if not keep(i) or cos is None:
+            continue
+        sim = min(1.0, max(-1.0, cos))
         rows.append((i, _half_up(1.0 - sim, 6), _half_up(min(1.0, max(0.0, 1.0 - (1.0 - sim))), 6)))
     rows.sort(key=lambda r: (-r[2], r[0]))
     kept = [r for r in rows[:k] if r[2] >= threshold]
@@ -130,6 +131,11 @@ def test_exact_search_matches_fp64_reference(spark):
     assert got(R.rag_search(emb, q, threshold=0.0, limit=50, max_results=7)) == _reference(corpus, q, 7, 0.0)
     # the tie case is in the data: four ids share one rounded score
     assert len({r[2] for r in full if r[0] in (3, 50, 51, 52)}) == 1
+    # malformed vectors (a NULL element, a short vector, a NULL vector)
+    # never rank; score_against reports their distance and score as NULL
+    assert not {41, 42, 43} & {r[0] for r in full}
+    nulls = R.score_against(emb, q).where(F.col("id").isin(41, 42, 43))
+    assert {(r.id, r.distance, r.score) for r in nulls.collect()} == {(i, None, None) for i in (41, 42, 43)}
 
     docs = spark.createDataFrame([(i, "en" if i % 3 else "fr") for i, _ in corpus], "doc_id long, lang string")
     filtered = R.rag_search(

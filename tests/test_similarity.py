@@ -292,12 +292,13 @@ def test_rep_grain_index_byte_identical_on_dup_heavy_corpus(spark, sf_dir, tmp_p
         for qid, rows in dup.items():
             assert sorted(rows) == sorted(single[qid // 100]), qid
 
-    # --- legacy layout refused loudly --------------------------------------
+    # --- an index of another kind is refused loudly -----------------------
     import pytest
 
-    legacy = full_grain  # per-id frame, no `ids` column
-    with pytest.raises(ValueError, match="legacy"):
-        S._check_ann_index_format(legacy.columns, "x")
+    with pytest.raises(FileNotFoundError, match="no ivf index .* build it with ivf_index_write"):
+        S.ivf_index_load(spark, brp_path)
+    with pytest.raises(FileNotFoundError, match="no brp index .* build it with mllib_lsh_index_write"):
+        S.mllib_lsh_index_load(spark, ivf_path)
 
 
 def test_ivf_sampled_fit_gate_and_determinism(spark, sf_dir, tmp_path, monkeypatch):
@@ -389,7 +390,7 @@ def test_semantic_dedup_tie_removes_larger_id(spark):
 
 def test_semantic_dedup_from_persisted_index(spark, sf_dir, tmp_path):
     """End-to-end from the real build/probe split: write an IVF index, load
-    it, and run SemDeDup off the loaded frame + sidecar centroids — removed
+    it, and run SemDeDup off the loaded frame + stored centroids — removed
     count is deterministic and the removal set is consistent (a removed
     vector's remover must itself exist)."""
     import mcp_synaptic_spark.operators.similarity as S
@@ -735,19 +736,22 @@ def _np_argmin_cells(vectors, centroids):
 
 @pytest.mark.volume
 def test_ivf_index_append_merges_dups_and_assigns_fresh(spark, sf_dir, tmp_path):
-    """VERDICT r13 next-round #3 ground truths: (a) a batch vector identical
-    to an indexed vector merges its member ids into the EXISTING rep row —
-    cell unchanged, so no distinct vector ever occupies two cells; (b) a
+    """VERDICT r13 next-round #3 ground truths, for the additive append:
+    (a) a batch vector identical to an indexed vector gets a row in THAT
+    vector's cell holding only the batch's ids — so no distinct vector ever
+    spans two cells, and its member ids stay disjoint across rows; (b) a
     genuinely new vector gets the exact-argmin cell under the STORED
-    centroids (verified against an independent numpy argmin); (c) base rows
-    the batch doesn't touch are bit-unchanged."""
+    centroids (verified against an independent numpy argmin); (c) base
+    rows are bit-unchanged: the append only adds one new data directory."""
+    import os
+
     from mcp_synaptic_spark.operators import similarity as S
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
     base = emb.where(F.col("vec_id") % 5 != 0)
     # batch: the held-out slice PLUS an exact duplicate of indexed vec_id=1
-    # under a fresh id — the merge path must fire even if testdata had no
-    # cross-slice duplicates
+    # under a fresh id — the known-vector path must fire even if testdata
+    # had no cross-slice duplicates
     dup_row = emb.where(F.col("vec_id") == 1).select(
         F.lit(900001).cast("long").alias("vec_id"), "embedding"
     )
@@ -756,51 +760,46 @@ def test_ivf_index_append_merges_dups_and_assigns_fresh(spark, sf_dir, tmp_path)
     path = str(tmp_path / "ivf_append")
     S.ivf_index_write(base, path, n_cells=4, id_col="vec_id")
     before, centroids = S.ivf_index_load(spark, path)
-    # snapshot BEFORE the append: the rewrite invalidates `before`'s file list
     before_rows = {
         tuple(r["ids"]): (tuple(r["embedding"]), r["cell"]) for r in before.collect()
     }
     base_vecs = {v for (v, _c) in before_rows.values()}
 
-    import os
+    def _files(p):
+        return {
+            os.path.join(root, nm): os.path.getmtime(os.path.join(root, nm))
+            for root, _dirs, names in os.walk(p)
+            for nm in names
+            if "cell=" in root
+        }
 
-    def _cell_files(p):
-        out = {}
-        for root, _dirs, names in os.walk(p):
-            if "cell=" not in root:
-                continue
-            for nm in names:
-                fp = os.path.join(root, nm)
-                out[fp] = os.path.getmtime(fp)
-        return out
-
-    pre_files = _cell_files(path)
+    pre_files = _files(path)
     info = S.ivf_index_append(batch, path, id_col="vec_id")
     assert info["skipped"] is False and info["n_batch"] == batch.count()
-    # the rewrite touches ONLY the affected cell partitions: the number of
-    # cell directories whose files changed equals cells_rewritten, and
-    # every other cell's parquet is bit-untouched on disk
-    post_files = _cell_files(path)
-    changed_dirs = {
-        os.path.dirname(fp)
-        for fp in set(pre_files) ^ set(post_files)
-        | {fp for fp in pre_files if fp in post_files and pre_files[fp] != post_files[fp]}
-    }
-    assert len({d.split("cell=")[1] for d in changed_dirs}) == info["cells_rewritten"]
+    assert info["known_reps"] >= 1 and info["fresh_reps"] >= 1
+    post_files = _files(path)
+    assert {f: t for f, t in post_files.items() if f in pre_files} == pre_files
+    new_dirs = {f.split(os.sep)[len(path.split(os.sep))] for f in set(post_files) - set(pre_files)}
+    assert len(new_dirs) == 1
     after, centroids2 = S.ivf_index_load(spark, path)
     assert centroids2 == centroids  # append never refits the quantizer
     rows = after.collect()
 
-    # (one-cell invariant) every distinct vector appears in exactly one rep row
-    vecs = [tuple(r["embedding"]) for r in rows]
-    assert len(vecs) == len(set(vecs))
+    # (one-cell invariant) every distinct vector lives in exactly one cell,
+    # and no id is listed twice
+    cells_of = {}
+    for r in rows:
+        cells_of.setdefault(tuple(r["embedding"]), set()).add(r["cell"])
+    assert all(len(c) == 1 for c in cells_of.values())
+    all_ids = [i for r in rows for i in r["ids"]]
+    assert len(all_ids) == len(set(all_ids)) == base.count() + batch.count()
 
-    # (a) the planted duplicate merged into vec_id=1's rep row, cell kept
-    host = [r for r in rows if 1 in r["ids"]]
-    assert len(host) == 1 and 900001 in host[0]["ids"]
+    # (a) the planted duplicate sits in vec_id=1's cell, in its own row
+    host = [r for r in rows if 900001 in r["ids"]]
+    assert len(host) == 1 and host[0]["ids"] == [900001]
     old_host = [(ids, vc) for ids, vc in before_rows.items() if 1 in ids]
     assert host[0]["cell"] == old_host[0][1][1]
-    assert host[0]["ids"] == sorted(host[0]["ids"])
+    assert tuple(host[0]["embedding"]) == old_host[0][1][0]
 
     # (b) fresh vectors carry the independent numpy argmin cell
     fresh = [
@@ -810,21 +809,13 @@ def test_ivf_index_append_merges_dups_and_assigns_fresh(spark, sf_dir, tmp_path)
     ]
     assert fresh, "test corpus left no fresh vectors"
     expect = _np_argmin_cells(fresh, centroids)
-    got = {}
-    for r in rows:
-        for vid in r["ids"]:
-            got[vid] = r["cell"]
+    got = {vid: r["cell"] for r in rows for vid in r["ids"]}
     for vid, cell in expect.items():
         assert got[vid] == cell, f"fresh vec {vid}: {got[vid]} != argmin {cell}"
 
-    # (c) untouched base reps are unchanged (ids and cell)
-    batch_vecs = {tuple(r["embedding"]) for r in batch.collect()}
-    for ids, (v, cell) in before_rows.items():
-        if v in batch_vecs:
-            continue
-        match = [r for r in rows if tuple(r["embedding"]) == v]
-        assert len(match) == 1
-        assert tuple(match[0]["ids"]) == ids and match[0]["cell"] == cell
+    # (c) every base rep row is still there, unchanged (ids and cell)
+    now = {tuple(r["ids"]): (tuple(r["embedding"]), r["cell"]) for r in rows}
+    assert all(now.get(ids) == vc for ids, vc in before_rows.items())
 
 
 @pytest.mark.volume
@@ -833,8 +824,8 @@ def test_ivf_index_append_idempotent_and_probe_equivalent(spark, sf_dir, tmp_pat
     fingerprint short-circuits before any scan, and the committed parquet
     bytes do not churn; (e) a probe over the appended index is byte-identical
     to the same probe over an independently-merged frame (probe semantics
-    can't tell an appended index from a natively-built one with the same
-    assignment)."""
+    can't tell an appended index, whose known vectors get extra rows in
+    their cells, from a natively-built one with the same assignment)."""
     import os
 
     from mcp_synaptic_spark.operators import similarity as S
@@ -860,8 +851,8 @@ def test_ivf_index_append_idempotent_and_probe_equivalent(spark, sf_dir, tmp_pat
 
     snap = _files(path)
     info2 = S.ivf_index_append(batch, path, id_col="vec_id")
-    assert info2["skipped"] is True and info2["cells_rewritten"] == 0
-    assert _files(path) == snap  # no parquet/sidecar churn on the no-op
+    assert info2["skipped"] is True and info2["known_reps"] == info2["fresh_reps"] == 0
+    assert _files(path) == snap  # no parquet/manifest churn on the no-op
 
     # independent merge: python-side union of member ids per distinct vector,
     # numpy argmin for fresh vectors
@@ -1013,7 +1004,7 @@ def test_mllib_lsh_index_append_probe_equals_rebuild(spark, sf_dir, tmp_path):
     assert again["skipped"] is True and _files(path) == snap
 
     # an idempotent re-run of the BASE write must not rebuild over appends
-    # (the sidecar's append bookkeeping is not staleness)
+    # (the manifest's append bookkeeping is not staleness)
     S.mllib_lsh_index_write(base, path, planes, id_col="vec_id")
     still, _, _ = S.mllib_lsh_index_load(spark, path)
     assert still.count() == got_idx.count()
@@ -1026,7 +1017,7 @@ def test_mllib_lsh_index_append_overlap_merge(spark, sf_dir, tmp_path):
     the same id occupies two top-k slots after explode. The append
     anti-joins those pairs out: the appended index probes
     byte-identical to a rebuild over the SET-union corpus, n_overlap
-    reports what was dropped, and the sidecar's appended_reps occupancy
+    reports what was dropped, and the manifest's appended_reps occupancy
     gauge tracks accretion."""
     import json
 
@@ -1073,8 +1064,8 @@ def test_mllib_lsh_index_append_overlap_merge(spark, sf_dir, tmp_path):
     ).collect()))
     assert got == want and got
 
-    # occupancy gauge: the sidecar records cumulative appended rep rows
-    with open(f"{path}/_planes.json") as f:
+    # occupancy gauge: the manifest records cumulative appended rep rows
+    with open(f"{path}/_index.json") as f:
         meta = json.load(f)
     assert meta["appended_reps"] == info["appended_reps"] > 0
 

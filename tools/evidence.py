@@ -53,6 +53,8 @@ DOCS = (f"{_PKG}/operators/documents.py",)
 EMB = (f"{_PKG}/sources/embedders.py",)
 RETR = (f"{_PKG}/operators/retrieval.py",)
 MM = (f"{_PKG}/operators/multimodal.py",)
+#: the index persistence protocol every persisted-index query reads through
+IDX = (f"{_PKG}/state/manifest.py",)
 
 #: query -> operator files whose content its correctness evidence covers.
 #: Entry-file-only queries (TPC-H suite etc.) list their table loader.
@@ -92,8 +94,8 @@ QUERY_FILES: dict[str, tuple[str, ...]] = {
     "search_by_metadata": RETR,
     "doc_summary": RETR,
     "bm25_search": RETR,
-    "bm25_search_indexed": (f"{_PKG}/operators/bm25_index.py",),
-    "bm25_index_append": (f"{_PKG}/operators/bm25_index.py",),
+    "bm25_search_indexed": (f"{_PKG}/operators/bm25_index.py",) + IDX,
+    "bm25_index_append": (f"{_PKG}/operators/bm25_index.py",) + IDX,
     "hybrid_search": RETR + RAG,
     "pairwise_similarity": RAG,
     "rag_search": RAG,
@@ -115,13 +117,13 @@ QUERY_FILES: dict[str, tuple[str, ...]] = {
     # txn.py edits stale this query's evidence too (r10)
     "dedup_incremental": DEDUP + (f"{_PKG}/state/txn.py",),
     "ann_lsh_topk": SIM,
-    "ann_mllib_lsh": SIM,
-    "ann_brp_append": SIM,
-    "ann_ivf_topk": SIM,
-    "ann_ivf_append": SIM,
-    "dedup_semantic": SIM + DEDUP,
+    "ann_mllib_lsh": SIM + IDX,
+    "ann_brp_append": SIM + IDX,
+    "ann_ivf_topk": SIM + IDX,
+    "ann_ivf_append": SIM + IDX,
+    "dedup_semantic": SIM + DEDUP + IDX,
     "ann_quantized_topk": SIM,
-    "ann_ivf_sq8_topk": SIM,
+    "ann_ivf_sq8_topk": SIM + IDX,
     "doc_change_feed": (f"{_PKG}/streaming/expiry.py",) + DOCS,
     "filter_tags_created": MEM,
     "memory_list": MEM,
@@ -274,9 +276,6 @@ def update(round_n: int) -> dict:
     names, window = _window_names()
     graded = _graded_set(round_n, window)
     ledger = _load()
-    correctness_landed = os.path.exists(
-        os.path.join(REPO, f"CORRECTNESS_r{round_n:02d}.json")
-    )
     for q in names:
         files = QUERY_FILES.get(q)
         if files is None:
@@ -286,17 +285,15 @@ def update(round_n: int) -> dict:
                 "window_round": round_n,
                 "files": {f: _sha(f) for f in files},
             }
-        elif (
-            correctness_landed
-            and q in ledger
-            and ledger[q].get("window_round") == round_n
-        ):
-            # VERDICT r14 What's-wrong #1: this row was stamped with the
-            # PREDICTED round-`round_n` window, but the driver's landed
-            # correctness file says it was not actually graded — a phantom
-            # stamp. Repair: revert to the most recent round that really
-            # graded it, restoring that era's hashes from the ledger's git
-            # history so drift since the true grade stays detectable.
+        elif q in ledger and ledger[q].get("window_round") == round_n:
+            # This row was stamped `round_n` by an earlier update, but round
+            # `round_n` does not grade it: the driver's landed correctness
+            # file says so (VERDICT r14 What's-wrong #1), or, before it
+            # lands, the row has since rotated out of the predicted window.
+            # Either way the stamp claims a grade that will not happen.
+            # Repair: revert to the most recent round that really graded
+            # it, restoring that era's hashes from the ledger's git history
+            # so drift since the true grade stays detectable.
             true_round = _last_graded_round(q, round_n)
             old_hashes = (
                 _ledger_hashes_at_round(q, true_round) if true_round else None
