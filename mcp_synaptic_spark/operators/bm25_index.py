@@ -139,32 +139,6 @@ def _tokens_expr(content_col: str):
     )
 
 
-#: (n_buckets, term) -> bucket memo. xxhash64(term) % n_buckets is corpus-
-#: independent, so a term's bucket never changes for a given index width —
-#: repeated probes skip the lookup job entirely (the job overhead, not the
-#: hash, is what floors small-corpus probe latency).
-_BUCKET_MEMO: dict[tuple[int, str], int] = {}
-
-
-def _term_buckets(spark: SparkSession, terms: list[str], n_buckets: int) -> dict[str, int]:
-    """term -> partition bucket, computed with the same JVM xxhash64 the
-    build used (one tiny 1-stage job over the not-yet-memoized terms —
-    hashing driver-side in Python would have to reimplement Spark's
-    seed/variant and silently break pruning the day they diverge)."""
-    missing = [t for t in terms if (n_buckets, t) not in _BUCKET_MEMO]
-    if missing:
-        rows = (
-            spark.createDataFrame([(t,) for t in missing], "term string")
-            .select(
-                "term", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("bucket")
-            )
-            .collect()
-        )
-        for r in rows:
-            _BUCKET_MEMO[(n_buckets, r["term"])] = r["bucket"]
-    return {t: _BUCKET_MEMO[(n_buckets, t)] for t in terms}
-
-
 def _corpus_fp(id_col: str, content_col: str):
     """Order-independent content fingerprint: sum of xxhash64(id, content)."""
     return F.sum(F.xxhash64(F.col(id_col), F.col(content_col)).cast("decimal(38,0)")).alias("fp")
@@ -442,9 +416,8 @@ def bm25_index_append(
 #: (appId, path, manifest stat) -> (postings frame, termdf frame, meta).
 #: The frames are LAZY plans over the index files — no data is memoized;
 #: every probe still reads the parquet. The manifest's mtime_ns/size change
-#: on every publish, so a stale plan is never served (the _BUCKET_MEMO
-#: precedent: what's cached is per-session driver work — file listing +
-#: plan analysis — not results).
+#: on every publish, so a stale plan is never served: what's cached is
+#: per-session driver work (file listing, plan analysis), not results.
 _LOAD_MEMO: dict[tuple, tuple[DataFrame, DataFrame, dict]] = {}
 
 
@@ -503,10 +476,15 @@ def bm25_search_indexed(
         raise ValueError("bm25_search_indexed requires a non-empty query")
     postings, termdf, meta = _load_full(spark, path)
     id_col = meta["id_col"]
-    buckets = _term_buckets(spark, terms, int(meta["n_buckets"]))
-    p = postings.where(
-        F.col("bucket").isin(sorted(set(buckets.values()))) & F.col("term").isin(terms)
+    # the query terms' buckets, spelled as the build's own JVM hash: each
+    # folds to a constant, so the scans prune to those bucket directories
+    # with no lookup job (hashing in Python would have to reimplement
+    # Spark's seed and variant)
+    n_buckets = F.lit(int(meta["n_buckets"]))
+    in_buckets = F.col("bucket").isin(
+        [F.pmod(F.xxhash64(F.lit(t)), n_buckets).cast("int") for t in terms]
     )
+    p = postings.where(in_buckets & F.col("term").isin(terms))
     n_docs = float(meta["n_docs"])
     avgdl = float(meta["avgdl"])
     # df per term from the build-time sidecar (r16): a bucket-pruned
@@ -520,10 +498,7 @@ def bm25_search_indexed(
     # the unioned postings — same doubles, same idf, bit-identical
     # scores (test-pinned vs bm25_search).
     df_rows = (
-        termdf.where(
-            F.col("bucket").isin(sorted(set(buckets.values())))
-            & F.col("term").isin(terms)
-        )
+        termdf.where(in_buckets & F.col("term").isin(terms))
         .groupBy("term")
         .agg(F.sum("df").alias("df"))
         .collect()

@@ -14,9 +14,11 @@ oracle):
 3. IVF (inverted file): KMeans coarse quantizer; queries probe the nprobe
    nearest centroids and re-rank exactly within those cells. The classic
    billion-scale layout: cells are Parquet partitions ⇒ partition pruning
-   turns a corpus scan into an nprobe-cell scan. A probe is one broadcast
-   (each query's cells, chosen by one expression over the centroid literal)
-   and one shuffle (the rank window); SQ8 reuses it over dequantized codes.
+   turns a corpus scan into an nprobe-cell scan. A batch probe is one
+   broadcast (each query's cells, chosen by one expression over the
+   centroid literal) and one shuffle (the rank window); a one-query probe
+   is one statement with the cells as a static partition filter and no
+   exchange. SQ8 reuses both over dequantized codes.
 
 At 100 TB: tier 1/3 candidate generation shuffles only (bucket_key, id)
 pairs; vectors are re-read only for the candidate set (semi-join pushdown).
@@ -1117,6 +1119,17 @@ def ivf_index_append(
     }
 
 
+def _nearest_cells_sql(centroids: Sequence[Sequence[float]], qvec: str, nprobe: int) -> str:
+    """SQL text of the query's nprobe nearest cells: sort the (1 − cos,
+    cell) structs over the constant centroid literal, keep the cells of the
+    first nprobe."""
+    return (
+        f"transform(slice(array_sort(transform({_centroid_literal_sql(centroids)}, (_c, _i) -> "
+        f"named_struct('d', 1.0D - {cosine_sql(qvec, '_c')}, 'cell', _i))), "
+        f"1, {int(nprobe)}), _p -> _p.cell)"
+    )
+
+
 def ivf_topk(
     queries: DataFrame,
     indexed_corpus: DataFrame,
@@ -1131,20 +1144,35 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF query: probe the nprobe nearest cells, exact cosine re-rank inside.
 
-    Each query row picks its cells with one expression: sort the (1 − cos,
-    cell) structs over the constant centroid literal, keep the first
-    nprobe. The (qid, cell) list is the one broadcast, and on a persisted
-    index it prunes the scan to the probed cell directories; the per-qid
-    rank window is the one shuffle. Qids sharing a vector get identical
-    rows by construction; a replayed (qid, vector) row scores each member
-    once per copy, so `dense_rank` ties the copies and `DISTINCT` keeps
-    one, on the window's qid partitioning (no exchange).
+    A `queries` frame that reads no files (rows the caller built, as a
+    query arrives) is read first, at most two rows in one job, and the plan
+    is picked from their count. One query row (the reference's one k-NN per
+    call, rag/database/search.py:21-101) is `_ivf_probe_one`: one statement
+    with the cells as a static partition filter and no exchange.
+
+    Any other row count, and any frame that reads files, runs the batch
+    plan: two rows of a file-read frame would cost one more scan job before
+    a plan that reads the files again. Each query row picks its cells with
+    one expression over the centroid literal (`_nearest_cells_sql`). The
+    (qid, cell) list is the one broadcast, and on a persisted index it
+    prunes the scan to the probed cell directories; the per-qid rank window
+    is the one shuffle. Qids sharing a vector get identical rows by
+    construction; a replayed (qid, vector) row scores each member once per
+    copy, so `dense_rank` ties the copies and `DISTINCT` keeps one, on the
+    window's qid partitioning (no exchange).
     """
-    nearest = (
-        f"transform(slice(array_sort(transform({_centroid_literal_sql(centroids)}, (_c, _i) -> "
-        f"named_struct('d', 1.0D - {cosine_sql(f'`{query_vec_col}`', '_c')}, 'cell', _i))), "
-        f"1, {int(nprobe)}), _p -> _p.cell)"
-    )
+    rows = []
+    if not queries.inputFiles():
+        # `.rdd.collect()` runs the limit as one job (its single-partition
+        # shuffle stays inside the RDD); `collect()` would scan the
+        # partitions in rounds, a job each, until it saw two rows or ran out.
+        rows = queries.select(query_id_col, query_vec_col).limit(2).rdd.collect()
+    if len(rows) == 1 and rows[0][1] is not None and None not in rows[0][1]:
+        return _ivf_probe_one(
+            rows[0], queries.schema[query_id_col].dataType.simpleString(), indexed_corpus,
+            centroids, k=k, nprobe=nprobe, query_id_col=query_id_col, id_col=id_col, vec_col=vec_col,
+        )
+    nearest = _nearest_cells_sql(centroids, f"`{query_vec_col}`", nprobe)
     q, i = f"`{query_id_col}`", f"`{id_col}`"
     cos = cosine_sql(f"c.`{vec_col}`", f"p.`{query_vec_col}`")
     # r13 rep grain: a persisted index carries `ids array<long>` per distinct
@@ -1165,7 +1193,7 @@ def ivf_topk(
             PARTITION BY {q} ORDER BY round(score, {ORDER_DP}) DESC, {i}) AS rank
           FROM (SELECT {q}, {member} AS {i}, score FROM (
             SELECT /*+ BROADCAST(p) */ p.{q}, c.{members},
-              round(greatest(0.0D, least(1.0D, {cos})), {ROUND_DP}) AS score
+              {_ivf_score_sql(cos)} AS score
             FROM {{corpus}} c JOIN (
               SELECT * FROM (
                 SELECT {q}, `{query_vec_col}`, explode({nearest}) AS cell FROM {{queries}})
@@ -1175,6 +1203,48 @@ def ivf_topk(
         corpus=indexed_corpus,
         queries=queries,
     )
+
+
+def _ivf_score_sql(cos: str) -> str:
+    """The IVF probes' score: the cosine clamped into [0, 1], at the
+    shared emitted precision."""
+    return f"round(greatest(0.0D, least(1.0D, {cos})), {ROUND_DP})"
+
+
+def _ivf_probe_one(
+    row, qid_type: str, indexed_corpus: DataFrame, centroids: Sequence[Sequence[float]], *,
+    k: int, nprobe: int, query_id_col: str, id_col: str, vec_col: str,
+) -> DataFrame:
+    """`ivf_topk` for one query row, read on the driver: one statement over
+    the index. The query vector is one `from_json` literal (`rag._bind_query`),
+    so the cell choice depends on constants only and `array_contains(<nearest>,
+    cell)` is a static partition filter: the scan reads the nprobe cell
+    directories. The top-k is `rag._top_k`'s tail (`TakeOrderedAndProject`,
+    then a `row_number` over at most k rows), with no exchange.
+
+    Columns, types and rows are the batch plan's for that qid, with one
+    exception the index protocol never writes: an (id, vector) pair held by
+    two rows of the frame (a per-id frame with a repeated row) ranks once in
+    the batch plan, which takes DISTINCT after its window, and once per row
+    here, where a DISTINCT would add an exchange. An append drops a
+    re-added pair, and a repeated id inside one row's `ids` is collapsed
+    here too.
+    """
+    from .rag import _QUERY, _bind_query, _top_k
+
+    frame, source = _bind_query(indexed_corpus, row[1])
+    i = f"`{id_col}`"
+    # ids within a rep are sorted and share its score, so only a rep's k
+    # smallest distinct ids can rank
+    members, member = "ids", f"explode(slice(array_distinct(ids), 1, {int(k)}))"
+    if "ids" not in indexed_corpus.columns:
+        members = member = i
+    scored = (
+        f"SELECT CAST(:qid AS {qid_type}) AS `{query_id_col}`, {member} AS {i}, score "
+        f"FROM (SELECT {members}, {_ivf_score_sql(cosine_sql(f'`{vec_col}`', _QUERY))} AS score "
+        f"FROM {source} WHERE array_contains({_nearest_cells_sql(centroids, _QUERY, nprobe)}, cell))"
+    )
+    return _top_k(indexed_corpus.sparkSession, scored, k, 0.0, id_col, args={"qid": row[0]}, frame=frame)
 
 
 def semantic_dedup(

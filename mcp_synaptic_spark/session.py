@@ -4,6 +4,15 @@ Local testing runs ``local[N]`` single-JVM; the config choices below are the
 ones that matter at cluster scale too (AQE, shuffle partitions, Arrow for the
 few pandas-UDF paths, broadcast threshold). Keep everything declarative so the
 same plans survive a 1000-executor deployment.
+
+Python workers start from `worker_daemon`, pyspark's daemon with one rule
+changed: a worker task no longer re-reads ``pyspark.zip``'s directory
+unless the archive changed. Every Python task paid that re-read, about
+140 ms of a reused worker's task before user code ran (the query frame of a
+single-query probe, the embedders' pandas UDFs, `createDataFrame` batches).
+It exists because CPython 3.11's ``zipimporter.invalidate_caches`` reloads
+eagerly; the module can go once workers run a CPython whose zip
+invalidation is lazy.
 """
 
 from __future__ import annotations
@@ -11,6 +20,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_memory() -> str:
@@ -55,6 +66,10 @@ def get_spark(app_name: str = "mcp-synaptic-spark", shuffle_partitions: int | No
     - session timezone pinned to UTC: the reference stores tz-aware UTC
       timestamps (models/base.py:33-40); pinning makes oracle comparison and
       cluster runs location-independent.
+    - Python workers fork from `worker_daemon` (module docstring). The
+      package's parent directory is put on the workers' PYTHONPATH from
+      ``__file__``, so the daemon imports whatever the caller's cwd and
+      PYTHONPATH are: a daemon that fails to import fails every Python task.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     n_shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
@@ -89,5 +104,7 @@ def get_spark(app_name: str = "mcp-synaptic-spark", shuffle_partitions: int | No
         # growing into the cgroup OOM killer; SPARK_DRIVER_MEMORY overrides.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "mcp_synaptic_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return builder.getOrCreate()

@@ -370,3 +370,29 @@ def test_df_sidecar_matches_postings_counts(spark, docs, index_path):
         for r in termdf.groupBy("term").agg(F.sum("df").alias("df")).collect()
     }
     assert got == want
+
+
+def test_bucket_choice_folds_into_the_scan_with_no_lookup_job(spark, index_path):
+    """Each query term's bucket is spelled pmod(xxhash64('<term>'), n), the
+    build's own JVM hash, and folds to an integer literal in the scans'
+    PartitionFilters: building a probe runs only the df lookup (an
+    aggregate: its shuffle stage and its result are a job each under
+    adaptive execution), never a bucket lookup, even for terms no probe
+    has seen."""
+    sc = spark.sparkContext
+    query = "qqbucketnever seenterm dup"
+    sc.setJobGroup("bm25-bucket-fold", "probe build")
+    try:
+        probe = bm25_search_indexed(spark, index_path, query, k=5)
+        jobs = sc.statusTracker().getJobIdsForGroup("bm25-bucket-fold")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 2
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    want = sorted({
+        r[0] for r in spark.createDataFrame([(t,) for t in query.split()], "term string")
+        .select(F.pmod(F.xxhash64("term"), F.lit(64)).cast("int")).collect()
+    })
+    pruned = plan[plan.index("PartitionFilters: ["):].split("]")[0]
+    assert "xxhash64" not in pruned and "bucket" in pruned, pruned
+    assert all(str(b) in pruned for b in want), (want, pruned)

@@ -597,10 +597,10 @@ def test_ivf_probe_plan_shape_and_cells_match_numpy_oracle(spark, tmp_path):
     zero-norm guard), so all distances tie and the lowest cell ids win;
     centroid 5 repeats centroid 2, so those two always tie too. The corpus
     holds one row per cell (id = cell), so the returned ids are exactly the
-    probed cells. The executed plan of a one-query probe on a persisted
-    index, float and SQ8 alike, has one broadcast (the probe list, which
-    also prunes the cell partitions), one hash exchange (the rank window)
-    and no posexplode."""
+    probed cells. The executed plan of a two-query (batch) probe on a
+    persisted index, float and SQ8 alike, has one broadcast (the probe
+    list, which also prunes the cell partitions), one hash exchange (the
+    rank window) and no posexplode."""
     import numpy as np
 
     rng = np.random.default_rng(11)
@@ -634,14 +634,148 @@ def test_ivf_probe_plan_shape_and_cells_match_numpy_oracle(spark, tmp_path):
 
     S.ivf_index_write(corpus.drop("cell"), str(tmp_path / "ivf"), n_cells=4)
     indexed, icents = S.ivf_index_load(spark, str(tmp_path / "ivf"))
-    one = spark.createDataFrame([(0, cents[0])], "qid long, qvec array<double>")
+    two = spark.createDataFrame([(0, cents[0]), (1, cents[1])], "qid long, qvec array<double>")
     for fn in (S.ivf_topk, S.ivf_quantized_topk):
-        probe = fn(one, indexed, icents, k=3, nprobe=2)
+        probe = fn(two, indexed, icents, k=3, nprobe=2)
         plan = probe._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange hashpartitioning") == 1, (fn.__name__, plan)
         assert plan.count("BroadcastExchange") == 1, (fn.__name__, plan)
         assert "posexplode" not in plan, (fn.__name__, plan)
         assert "dynamicpruningexpression(cell" in plan, (fn.__name__, plan)
+
+
+def _probe_rows(fn, queries, indexed, cents, **kw):
+    frame = fn(queries, indexed, cents, id_col="vec_id", **kw)
+    return frame.dtypes, sorted(tuple(r) for r in frame.collect())
+
+
+def test_ivf_one_row_probe_equals_the_batch_plan(spark, sf_dir, tmp_path):
+    """A one-row query frame takes the single-statement probe; its rows
+    and column types equal the batch plan's rows for that qid, for the
+    float and the SQ8 probe. The cases: exact score ties (a vector and its
+    double share every cosine, and one rep holds several ids), a vector
+    duplicated across two data directories by an additive append, a zero
+    query (every centroid equidistant), a query equal to a centroid that
+    another cell repeats, and nprobe = n_cells."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").where("vec_id < 300")
+    vecs = {r.vec_id: [float(x) for x in r.embedding] for r in emb.collect()}
+    base = spark.createDataFrame(
+        [(i, v) for i, v in vecs.items()] + [(1000 + i, [2.0 * x for x in vecs[i]]) for i in (3, 7)]
+        + [(2000, vecs[5]), (2001, vecs[5])],
+        "vec_id long, embedding array<double>",
+    )
+    path = str(tmp_path / "ivf")
+    S.ivf_index_write(base, path, n_cells=6, id_col="vec_id")
+    appended = spark.createDataFrame(
+        [(3000, vecs[5]), (3001, vecs[5]), (3002, [x + 0.01 for x in vecs[9]])],
+        "vec_id long, embedding array<double>",
+    )
+    assert not S.ivf_index_append(appended, path, id_col="vec_id")["skipped"]
+    indexed, cents = S.ivf_index_load(spark, path)
+    assert indexed.where(F.array_contains("ids", 3000)).count() == 1
+    assert indexed.where(F.array_contains("ids", 2000)).count() == 1
+
+    dim = len(vecs[0])
+    qvecs = [vecs[5], [2.0 * x for x in vecs[3]], [0.0] * dim, [x + 0.02 for x in vecs[40]], cents[1]]
+    batch = spark.createDataFrame(list(enumerate(qvecs)), "qid long, qvec array<double>")
+    for fn in (S.ivf_topk, S.ivf_quantized_topk):
+        for nprobe in (2, len(cents)):
+            kw = dict(k=6, nprobe=nprobe)
+            types, rows = _probe_rows(fn, batch, indexed, cents, **kw)
+            for q, v in enumerate(qvecs):
+                one = spark.createDataFrame([(q, v)], "qid long, qvec array<double>")
+                got_types, got = _probe_rows(fn, one, indexed, cents, **kw)
+                assert got_types == types, (fn.__name__, nprobe, q)
+                assert got == [r for r in rows if r[0] == q], (fn.__name__, nprobe, q)
+                assert sorted(r[3] for r in got) == list(range(1, 7)), (fn.__name__, nprobe, q)
+    # the duplicated vector's five ids (two directories) tie and rank by id
+    _, top = _probe_rows(S.ivf_topk, batch.limit(1), indexed, cents, k=6, nprobe=2)
+    assert [r[1] for r in sorted(top, key=lambda r: r[3])[:5]] == [5, 2000, 2001, 3000, 3001]
+
+    # a centroid repeated as another cell: the query is equidistant from
+    # both, and the lowest cell ids win the tie in both plans
+    rng = __import__("numpy").random.default_rng(4)
+    hand = [[float(x) for x in rng.normal(size=8)] for _ in range(5)]
+    hand[4] = hand[1]
+    corpus = spark.createDataFrame(
+        [([10 * c + j], [float(x) for x in rng.normal(size=8)], c) for c in range(5) for j in range(3)],
+        "ids array<bigint>, embedding array<double>, cell int",
+    )
+    pair = spark.createDataFrame([(0, hand[1]), (1, hand[0])], "qid long, qvec array<double>")
+    for fn in (S.ivf_topk, S.ivf_quantized_topk):
+        for nprobe in (1, 2, 5):
+            types, rows = _probe_rows(fn, pair, corpus, hand, k=4, nprobe=nprobe)
+            got_types, got = _probe_rows(fn, pair.limit(1), corpus, hand, k=4, nprobe=nprobe)
+            assert (got_types, got) == (types, [r for r in rows if r[0] == 0]), (fn.__name__, nprobe)
+    _, cells_1 = _probe_rows(S.ivf_topk, pair.limit(1), corpus, hand, k=3, nprobe=1)
+    assert {r[1] // 10 for r in cells_1} == {1}
+
+
+def _executed_leaves(node):
+    """The leaf nodes of an executed plan, through the adaptive wrapper
+    and its query stages."""
+    name = node.getClass().getName()
+    if name.endswith("AdaptiveSparkPlanExec"):
+        return _executed_leaves(node.executedPlan())
+    if "QueryStage" in name:
+        return _executed_leaves(node.plan())
+    kids = node.children()
+    if kids.length() == 0:
+        return [node]
+    return [leaf for j in range(kids.length()) for leaf in _executed_leaves(kids.apply(j))]
+
+
+def test_ivf_one_row_probe_is_one_pruned_job_with_no_exchange(spark, tmp_path):
+    """The one-row probe on a persisted index: the query frame is read in
+    one job, then the statement runs as one job whose plan has no
+    Exchange and no BroadcastExchange, and whose scan reads only the
+    nprobe probed cell directories (static partition filter), for the
+    float and the SQ8 probe. A one-row frame that reads files takes the
+    batch plan with no read, and gives the same rows."""
+    import numpy as np
+
+    rng = np.random.default_rng(8)
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=16)]) for i in range(400)],
+        "id long, embedding array<double>",
+    )
+    path = str(tmp_path / "ivf")
+    S.ivf_index_write(corpus, path, n_cells=8)
+    indexed, cents = S.ivf_index_load(spark, path)
+    one = spark.createDataFrame([(7, [float(x) for x in rng.normal(size=16)])], "qid long, qvec array<double>")
+    sc = spark.sparkContext
+    for fn in (S.ivf_topk, S.ivf_quantized_topk):
+        group = f"ivf-one-row-{fn.__name__}"
+        sc.setJobGroup(group, group)
+        try:
+            probe = fn(one, indexed, cents, k=5, nprobe=3)
+            read_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            rows = probe.collect()
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert (read_jobs, jobs) == (1, 2), fn.__name__
+        assert [r.rank for r in rows] == [1, 2, 3, 4, 5] and {r.qid for r in rows} == {7}
+        plan = probe._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, (fn.__name__, plan)
+        assert "TakeOrderedAndProject" in plan, (fn.__name__, plan)
+        assert "PartitionFilters: [isnotnull(cell" in plan and "array_contains(" in plan, plan
+        scans = _executed_leaves(probe._jdf.queryExecution().executedPlan())
+        assert [n.nodeName() for n in scans] == ["Scan parquet "], fn.__name__
+        assert scans[0].metrics().apply("numPartitions").value() == 3, fn.__name__
+
+    # a one-row frame that reads files runs the batch plan, with no read
+    one.write.parquet(str(tmp_path / "q"))
+    from_files = spark.read.parquet(str(tmp_path / "q"))
+    sc.setJobGroup("ivf-file-frame", "probe build")
+    try:
+        probe = S.ivf_topk(from_files, indexed, cents, k=5, nprobe=3)
+        jobs = sc.statusTracker().getJobIdsForGroup("ivf-file-frame")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert "BroadcastExchange" in probe._jdf.queryExecution().executedPlan().toString()
+    assert sorted(probe.collect()) == sorted(S.ivf_topk(one, indexed, cents, k=5, nprobe=3).collect())
 
 
 def test_ivf_cosine_sql_equals_cosine_similarity(spark):
